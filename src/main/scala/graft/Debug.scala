@@ -45,17 +45,6 @@ object Debug {
         .foreach(r => println(s"lang ${r.getString(0)}: ${r.getLong(1)}"))
       spark.stop(); return
     }
-    if (args.headOption.contains("pct")) {
-      import org.apache.spark.sql.functions._
-      spark.read.parquet("/root/testdata/sf0.01/orders.parquet")
-        .groupBy("o_orderstatus")
-        .agg(expr("percentile(o_totalprice, 0.5)").as("p50"),
-          expr("percentile(o_totalprice, 0.9)").as("p90"))
-        .orderBy("o_orderstatus")
-        .collect().foreach(r =>
-          println(s"PCT: ${r.getString(0)} ${r.getDouble(1)} ${r.getDouble(2)}"))
-      spark.stop(); return
-    }
     if (args.headOption.contains("q12ab")) {
       // interleaved A/B of q12's bucketed vs plain join (the layout is
       // prewarmed untimed, like Bench): Debug q12ab [n] [dir]

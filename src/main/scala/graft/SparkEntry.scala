@@ -36,7 +36,7 @@ object SparkEntry {
     // Independent build CHAINS run concurrently (Spark schedules their
     // jobs side by side — prewarm wall time drops to ~the longest chain);
     // within a chain the order respects data dependencies, and
-    // Tables.materializeShared's computeIfAbsent makes concurrent builds
+    // Tables.materializeSharedBy's per-key holder makes concurrent builds
     // of a shared prerequisite safe (one thread builds, others reuse).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration

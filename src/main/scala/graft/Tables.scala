@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Fixture-table loaders + shared numeric-parity helpers.
   *
@@ -24,6 +24,24 @@ import org.apache.spark.sql.types.DecimalType
   *     (a product of two 2-decimal quantities has <=4 decimals, of three
   *     has <=6) — the oracle SQL must mirror the same CAST scale.
   *  3. Every query ends in a total-order `ORDER BY` (callers' duty).
+  *
+  * Read path: every schema-less parquet read of this metadata layer (the
+  * fixture tables, `materialize` read-backs, shared materializations,
+  * corpus exports) goes through [[Tables.parquet]], which infers each
+  * schema once per session instead of launching a schema-inference job
+  * per read. Its cache invariants:
+  *  - An entry holds the schema as first inferred by a real read of the
+  *    path, never a written `df.schema`, so cached and uncached reads
+  *    have the same schema, nullability included.
+  *  - An entry serves a read only when the path, the fingerprint of its
+  *    leaf files (name, length, mtime from one Hadoop listing taken
+  *    BEFORE the inferring read) and the parquet-inference confs all
+  *    match. A rewritten path can't be served a stale schema: Spark part
+  *    files carry a per-write UUID in their names, and any other rewrite
+  *    changes a length or an mtime. A rewrite replaces the path's entry.
+  *  - Entries are dropped when `materialize`'s per-tag GC deletes a dir
+  *    and when `materializeSharedBy`'s dead-dir check fires, so
+  *    per-invocation materialize dirs don't grow the map.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -32,7 +50,7 @@ object Tables {
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else parquet(spark, s"$sfDir/$name.parquet")
 
   /** events.ts has shipped as both parquet TIMESTAMP(NANOS) (old fixture,
     * readable only as a nanosecond long via the legacy conf — a conf
@@ -44,7 +62,7 @@ object Tables {
     * the instant-typed TIMESTAMP the DuckDB oracle compares against
     * (DuckDB reads the same µs values into its native TIMESTAMP). */
   def events(spark: SparkSession, sfDir: String): DataFrame =
-    normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
+    normalizeTs(parquet(spark, s"$sfDir/events.parquet"))
 
   /** ts → instant-typed TIMESTAMP (µs) whatever the source surfaced. */
   private[graft] def normalizeTs(df: DataFrame): DataFrame =
@@ -65,7 +83,7 @@ object Tables {
     * ts type with a driver-side batch footer read, declare it verbatim,
     * then run the same normalization. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val tsDdl = spark.read.parquet(dir).schema("ts").dataType match {
+    val tsDdl = parquet(spark, dir).schema("ts").dataType match {
       case org.apache.spark.sql.types.TimestampNTZType => "TIMESTAMP_NTZ"
       case org.apache.spark.sql.types.TimestampType    => "TIMESTAMP"
       case _                                           => "BIGINT"
@@ -74,6 +92,65 @@ object Tables {
       "event_type STRING, value DOUBLE, props STRING"
     normalizeTs(spark.readStream.schema(schema).parquet(dir))
   }
+
+  // path → (inference confs, leaf-file fingerprint, inferred schema); at
+  // most one entry per path, see the read-path invariants above
+  private final case class SchemaEntry(confs: Seq[String],
+      files: Seq[(String, Long, Long)], schema: StructType)
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, SchemaEntry]()
+
+  /** Session confs the inferred parquet schema depends on. */
+  private val inferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  /** (name, length, mtime) of every leaf file under `path`, sorted; None
+    * when the path can't be listed (e.g. missing, or a glob). */
+  private def leafFiles(spark: SparkSession,
+      path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(p, true)
+      val b = Vector.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(b.result().sorted)
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** A schema-less parquet read with the schema inferred once per session
+    * (see the read-path invariants in the [[Tables]] doc). A hit reads
+    * with `.schema(cached)` and launches no inference job; a path that
+    * can't be listed is never cached, so Spark reports its own error. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val confs = inferenceConfs.map(k => spark.conf.getOption(k).getOrElse(""))
+    // list BEFORE reading: a rewrite racing the inferring read can only
+    // pair a newer schema with an older listing, which no later read
+    // lists again
+    val files = leafFiles(spark, path)
+    val hit = files.flatMap(f => Option(schemas.get(path))
+      .filter(e => e.confs == confs && e.files == f))
+    hit match {
+      case Some(e) => spark.read.schema(e.schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        files.foreach(f => schemas.put(path, SchemaEntry(confs, f, df.schema)))
+        df
+    }
+  }
+
+  /** Entries in the schema cache (specs pin that it stays bounded). */
+  private[graft] def schemaCacheSize: Int = schemas.size
 
   private def deleteRec(f: java.io.File): Unit = {
     val kids = f.listFiles()
@@ -139,12 +216,13 @@ object Tables {
     val dir = writeMat(df, tag)
     val prev = matDirs.put(tag, dir)
     if (prev != null) {
+      schemas.remove(prev)
       val p = new org.apache.hadoop.fs.Path(prev)
       try { p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(p, true); () }
       catch { case _: Throwable => () }
     }
-    spark.read.parquet(dir)
+    parquet(spark, dir)
   }
 
   /** Register a session-temp dir for deletion at JVM exit (the same hook
@@ -332,16 +410,13 @@ object Tables {
     * materialized, later callers read the existing parquet instead of
     * recomputing and rewriting it. The production-pipeline shape: derived
     * tables (normalized embeddings, shingle tables) are built once per
-    * corpus version and shared by every downstream job. */
-  def materializeShared(df: DataFrame, tag: String, key: String): DataFrame =
-    materializeSharedBy(df.sparkSession, tag, key)(df)
-
-  /** [[materializeShared]] with a BY-NAME builder: `build` is not touched
-    * when the share is already materialized. Required when constructing
-    * the DataFrame itself runs Spark jobs (the iterative
-    * [[graft.ops.Graph.connectedComponents]] loop executes actions per
-    * round during construction) — the strict variant would re-run those
-    * jobs on every reuse just to throw the result away. */
+    * corpus version and shared by every downstream job.
+    *
+    * `build` is BY-NAME and not touched when the share is already
+    * materialized: constructing the DataFrame may itself run Spark jobs
+    * (the iterative [[graft.ops.Graph.connectedComponents]] loop executes
+    * actions per round during construction), and even a plain builder
+    * would cost a re-analysis of its tree on every reuse. */
   def materializeSharedBy(spark: SparkSession, tag: String, key: String)(
       build: => DataFrame): DataFrame = {
     val mapKey = s"$tag:$key"
@@ -353,12 +428,14 @@ object Tables {
     // shared-storage dirs (spark.graft.materializeDir) are trusted.
     val prev = matShared.get(mapKey)
     if (prev != null) prev.dirIfBuilt.foreach { d =>
-      if (!d.contains("://") && !new java.io.File(d).exists())
+      if (!d.contains("://") && !new java.io.File(d).exists()) {
         matShared.remove(mapKey, prev)
+        schemas.remove(d)
+      }
     }
     val holder =
       matShared.computeIfAbsent(mapKey, _ => new SharedMat(tag, key, () => build))
-    spark.read.parquet(holder.dir(spark))
+    parquet(spark, holder.dir(spark))
   }
 
   /** Exact decimal view of a double measure column (2 fractional digits in
@@ -379,4 +456,25 @@ object Tables {
     * the non-null count (matches SQL AVG null semantics).
     * Oracle twin: CAST(SUM(CAST(c AS DECIMAL(18,2))) AS DOUBLE)/COUNT(c). */
   def davg(c: Column): Column = sum(dec(c)).cast("double") / count(c)
+
+  /** Exact interpolated percentile, bit-exact with DuckDB's
+    * `percentile_cont(q)`: over the sorted non-null values v with
+    * pos = (n−1)·q, lo = ⌊pos⌋, hi = ⌈pos⌉, it is v[lo] when lo = hi, else
+    * the weighted form (hi − pos)·v[lo] + (pos − lo)·v[hi], also when
+    * v[lo] = v[hi]. Spark's native `percentile` returns v[lo] uninterpolated
+    * when the two neighbours are equal, and the weighted form of a value
+    * with itself can miss it by an ulp (0.1·v + 0.9·v ≠ v), so the two
+    * differ in the last bit on groups with repeated values. NULL for a
+    * group with no non-null value (`get` is NULL out of bounds).
+    * Oracle twin: percentile_cont(q) WITHIN GROUP (ORDER BY c). */
+  def percentileCont(c: Column, q: Double): Column = {
+    // sort_array, not array_sort: array_sort's default comparator is an
+    // interpreted lambda
+    val v = sort_array(collect_list(c.cast("double")))
+    val pos = (size(v) - 1) * q
+    val lo = floor(pos).cast("int")
+    val hi = ceil(pos).cast("int")
+    when(lo === hi, get(v, lo))
+      .otherwise((hi - pos) * get(v, lo) + (pos - lo) * get(v, hi))
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.Tables.{dec, dec4, dec6, dsum, davg}
+import graft.Tables.{dec, dec4, dec6, dsum, davg, percentileCont}
 
 /** Layer-B relational query surface (SURVEY.md §2.4 categories C1–C6).
   *
@@ -481,17 +481,19 @@ object Relational {
         Array(col("F"), col("O"), col("P")), "status", "n")
       .orderBy("o_orderpriority", "status")
 
-  /** Exact percentiles (sort-based `percentile`, which interpolates
-    * identically to DuckDB's percentile_cont — verified to the last ulp
-    * on fixture data; the approx_percentile sketch would not oracle). */
+  /** Exact percentiles through [[graft.Tables.percentileCont]], which
+    * interpolates exactly as DuckDB's percentile_cont (Spark's native
+    * `percentile` skips the interpolation between equal neighbours and
+    * differs from it in the last ulp on groups with repeated values; the
+    * approx_percentile sketch would not oracle). */
   def qPercentile(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "orders")
       .groupBy("o_orderstatus")
       .agg(
-        expr("percentile(o_totalprice, 0.25)").as("p25"),
-        expr("percentile(o_totalprice, 0.5)").as("p50"),
-        expr("percentile(o_totalprice, 0.9)").as("p90"),
-        expr("percentile(o_totalprice, 0.99)").as("p99"))
+        percentileCont(col("o_totalprice"), 0.25).as("p25"),
+        percentileCont(col("o_totalprice"), 0.5).as("p50"),
+        percentileCont(col("o_totalprice"), 0.9).as("p90"),
+        percentileCont(col("o_totalprice"), 0.99).as("p99"))
       .orderBy("o_orderstatus")
 
   /** Approximate percentile sketch next to its exact twin — the quantile
@@ -515,9 +517,9 @@ object Relational {
     Tables(spark, dir, "orders")
       .groupBy("o_orderstatus")
       .agg(
-        expr("percentile(o_totalprice, 0.5)").as("exact_p50"),
+        percentileCont(col("o_totalprice"), 0.5).as("exact_p50"),
         expr("percentile_approx(o_totalprice, 0.5, 10000)").as("a50"),
-        expr("percentile(o_totalprice, 0.9)").as("exact_p90"),
+        percentileCont(col("o_totalprice"), 0.9).as("exact_p90"),
         expr("percentile_approx(o_totalprice, 0.9, 10000)").as("a90"))
       .select(col("o_orderstatus"), col("exact_p50"), col("exact_p90"),
         withinTol(col("a50"), col("exact_p50")).as("p50_within_tol"),

@@ -78,7 +78,7 @@ object Similarity {
 
   /** Shingle table of the exact-dedup SURVIVORS (= representatives: min
     * doc_id per md5(text) group), shared across the whole dedup family via
-    * [[graft.Tables.materializeShared]] — q_jaccard_pairs' reps and
+    * [[graft.Tables.materializeSharedBy]] — q_jaccard_pairs' reps and
     * q_dedup_pipeline's survivors are the same set, so the heavy
     * tokenize+explode runs once per session. */
   private[graft] def survivorShingles(spark: SparkSession, dir: String): DataFrame = {
@@ -102,7 +102,7 @@ object Similarity {
     * q_jaccard_pairs expands these rep pairs back to cluster members;
     * q_dedup_pipeline drops every doc_b. The full prefix-filter +
     * candidate-join + exact-verify pipeline runs once per session
-    * ([[graft.Tables.materializeShared]]); the result is tiny (pair rows),
+    * ([[graft.Tables.materializeSharedBy]]); the result is tiny (pair rows),
     * so the share costs one small parquet write. */
   /** Connected components of the verified near-dup pair graph — the
     * cluster labeling is a corpus-keyed derived table like the pairs it

@@ -777,8 +777,8 @@ object TextOps {
   /** Per-language corpus report — the summary a curation run prints:
     * docs, token volume, mean/median/p90 doc length, distinct sources.
     * One narrow map + one hash agg per language; exact interpolated
-    * percentiles (int inputs → both engines interpolate identically, the
-    * q_percentile parity discipline). */
+    * percentiles through [[graft.Tables.percentileCont]] (DuckDB's
+    * percentile_cont form, the q_percentile parity discipline). */
   def qCorpusStats(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "documents")
       .select(col("lang"), col("source"),
@@ -789,8 +789,8 @@ object TextOps {
         sum(col("n_tokens").cast("long")).as("total_tokens"),
         (sum(col("n_tokens").cast("long")).cast("double") / count(lit(1)))
           .as("mean_tokens"),
-        expr("percentile(n_tokens, 0.5)").as("median_tokens"),
-        expr("percentile(n_tokens, 0.9)").as("p90_tokens"),
+        Tables.percentileCont(col("n_tokens"), 0.5).as("median_tokens"),
+        Tables.percentileCont(col("n_tokens"), 0.9).as("p90_tokens"),
         countDistinct(col("source")).as("n_sources"))
       .orderBy("lang")
 

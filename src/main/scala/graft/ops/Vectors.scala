@@ -126,7 +126,7 @@ object Vectors {
   }
 
   /** (vec_id, embedding, norm2) projection of the embeddings table, shared
-    * across the whole ANN family via [[graft.Tables.materializeShared]] —
+    * across the whole ANN family via [[graft.Tables.materializeSharedBy]] —
     * the decimal norm2 computes once per session. */
   private[graft] def sharedEmb(spark: SparkSession, dir: String): DataFrame =
     Tables.materializeSharedBy(spark, "emb", dir)(
@@ -400,7 +400,7 @@ object Vectors {
   // The quantizer is DETERMINISTIC per (dir, nlist, iters) — init = first
   // nlist vectors by id, decimal-exact means — so the driver-side centroid
   // array is cached JVM-wide (bounded: nlist × 64 doubles per corpus),
-  // like the materializeShared map it parallels.
+  // like the shared-materialization map it parallels.
   private val ivfCentroidCache =
     new graft.Tables.KeyedOnce[Array[Array[Double]]]
 
@@ -1346,6 +1346,9 @@ object Vectors {
     * per-dimension sign-mismatch count). */
   def qRrfFusion(spark: SparkSession, dir: String): DataFrame = {
     val k = 60
+    val top = 3
+    // the pre-filter bound the proof below derives from k and top
+    val preBound = k + 2 * top - 1
     annCandidatesExported(spark, dir)
     // ONE shared frame carries both signals ([[hamSims]]), so both
     // per-ranker ranks are two window functions over the SAME child —
@@ -1360,32 +1363,36 @@ object Vectors {
       .withColumn("rk_cos", row_number().over(wA))
       .withColumn("rk_ham", row_number().over(wB))
       // PROVABLE top-3 pre-filter before the fusion window (r21, VERDICT
-      // r20 item 3): a row with BOTH ranks ≥ 66 can never reach the
-      // final top 3. Proof (exact in the integer surrogate): its score
-      // is ≤ 2·(10¹² div 126) = 15 873 015 872, while the three distinct
-      // rows at rk_cos ∈ {1,2,3} (they exist whenever the group has ≥ 66
-      // rows) each score ≥ 10¹² div 63 + 10¹² div (60+rk_ham) ≥
-      // 15 873 015 873 + 1 — STRICTLY larger, so at least three rows
-      // precede it under any tie-break. Dropping such rows changes no
+      // r20 item 3): a row with BOTH ranks > preBound = k + 2·top − 1
+      // (65 at k = 60, top = 3) can never reach the final top 3. Proof
+      // (exact in the integer surrogate, S = 10¹²): its score is
+      // ≤ 2·(S div (k + preBound + 1)) = 2·(S div (2·(k + top))) ≤
+      // S div (k + top) (2·⌊x/2⌋ ≤ ⌊x⌋; at k = 60: 15 873 015 872 vs
+      // 15 873 015 873), while the three distinct rows at rk_cos ∈
+      // {1,…,top} (they exist whenever the group has > preBound rows)
+      // each score ≥ S div (k + top) + S div (k + rk_ham), whose second
+      // term is ≥ 1 — STRICTLY larger, so at least three rows precede it
+      // under any tie-break. Dropping such rows changes no
       // surviving row's fused rank either: every row preceding a true
       // top-3 row is itself top-3 (≤ 2 precede it) and therefore kept.
       // The exact rk_cos/rk_ham of the kept rows are already computed
       // over the FULL candidate set above, so output values are
       // untouched — only the third sort's input shrinks from the full
       // symmetrized candidate set (2.06 M rows at sf0.1) to ≤ 130 rows
-      // per query. The predicate is least(a,b) <= 65, NOT
-      // a <= 65 OR b <= 65: the OR form over two window outputs measured
-      // +0.55 s of PER-RUN driver planning (interleaved A/B, stageprof —
-      // constraint/pushdown machinery on disjunctions over window
-      // attributes), swamping the execution saving; the single least()
-      // predicate plans cheaply and keeps the identical row set.
-      .filter(least(col("rk_cos"), col("rk_ham")) <= 65)
+      // per query. The predicate is least(a,b) <= preBound, NOT
+      // a <= preBound OR b <= preBound: the OR form over two window
+      // outputs measured +0.55 s of PER-RUN driver planning (interleaved
+      // A/B, stageprof — constraint/pushdown machinery on disjunctions
+      // over window attributes), swamping the execution saving; the
+      // single least() predicate plans cheaply and keeps the identical
+      // row set.
+      .filter(least(col("rk_cos"), col("rk_ham")) <= preBound)
       .withColumn("rrf", expr(
         s"cast(1000000000000L div (${k}L + rk_cos) " +
           s"+ 1000000000000L div (${k}L + rk_ham) as bigint)"))
     val wF = Window.partitionBy("qid").orderBy(desc("rrf"), asc("nid"))
     fused.withColumn("rank", row_number().over(wF))
-      .filter(col("rank") <= 3)
+      .filter(col("rank") <= top)
       .select(col("qid"), col("rank"), col("nid"), col("rrf"),
         col("rk_cos"), col("rk_ham"))
       .orderBy("qid", "rank")

@@ -34,7 +34,7 @@ object CorpusExport {
       .option("maxRecordsPerFile", maxPerFile.toLong)
       .mode(SaveMode.Overwrite)
       .parquet(outDir)
-    df.sparkSession.read.parquet(outDir)
+    Tables.parquet(df.sparkSession, outDir)
   }
 
   /** Per-partition manifest of an exported corpus dir: one row per
@@ -43,7 +43,7 @@ object CorpusExport {
     * out of the manifest and are spec-only). */
   def manifest(spark: SparkSession, outDir: String,
       partCols: Seq[String]): DataFrame =
-    spark.read.parquet(outDir)
+    Tables.parquet(spark, outDir)
       .groupBy(partCols.map(col): _*)
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(partCols.map(col): _*)
