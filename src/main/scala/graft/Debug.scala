@@ -195,7 +195,7 @@ object Debug {
       import org.apache.spark.sql.expressions.Window
       val dir = args.lift(1).getOrElse("/root/testdata/sf0.01")
       val emb = ops.Vectors.sharedEmb(spark, dir)
-      val dot2 = functions.FloatDotProduct.floatDot _
+      val dot2 = functions.MixedDotProduct.mixedDot _
       val brute = emb.as("q").join(emb.as("n"),
           col("q.vec_id") =!= col("n.vec_id"))
         .select(col("q.vec_id").as("qid"), col("n.vec_id").as("nid"),

@@ -42,7 +42,7 @@ object GraftExtensions {
       ("float_dot",
         info("float_dot",
           "float_dot(a, b) - double-precision dot product of float arrays"),
-        (args: Seq[Expression]) => FloatDotProduct(args(0), args(1))),
+        (args: Seq[Expression]) => MixedDotProduct(args(0), args(1))),
       ("winnow_fingerprints",
         info("winnow_fingerprints",
           "winnow_fingerprints(text, k, w) - SIGMOD'03 robust winnowing " +

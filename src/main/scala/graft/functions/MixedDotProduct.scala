@@ -8,65 +8,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
-/** Plain double-precision dot product of two float arrays — sequential
-  * left-to-right summation (same order as the equivalent
-  * aggregate/zip_with pipeline, so results are identical doubles), with
-  * none of the interpreted-lambda overhead. Used where exact-decimal
-  * oracle parity is NOT required (ANN re-ranking): ~50x lighter per row
-  * than the decimal path. Generates a tight Janino loop under
-  * whole-stage codegen (doGenCode), with the interpreted eval as the
-  * non-codegen fallback path. */
-case class FloatDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "float_dot"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $acc += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FloatDotProduct =
-    copy(left = newLeft, right = newRight)
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i) && !b.isNullAt(i)) {
-        acc += a.getFloat(i).toDouble * b.getFloat(i).toDouble
-      }
-      i += 1
-    }
-    acc
-  }
-}
-
-object FloatDotProduct {
-  def floatDot(a: Column, b: Column): Column =
-    ColumnBridge.column(FloatDotProduct(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-}
-
-/** [[FloatDotProduct]]'s mixed-width sibling: double-precision dot of
-  * two arrays whose elements may each be FLOAT or DOUBLE, reading every
+/** Double-precision dot of two arrays whose elements may each be FLOAT
+  * or DOUBLE (the `float_dot` SQL function: float × float), reading every
   * element at its declared width and accumulating sequentially
   * left-to-right — the bit-identical codegen replacement for
   * `aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * y), 0D,

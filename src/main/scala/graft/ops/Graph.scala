@@ -117,7 +117,9 @@ object Graph {
       // risking a forever-hang on a pruned CollectMetrics
       val row = scala.concurrent.Await.result(obs.future,
         scala.concurrent.duration.Duration(10, "s"))
-      Some(row.schema.fieldNames.zipWithIndex.map { case (n, i) =>
+      // a pruned subtree can also complete the observation with an
+      // empty, schema-less row (a graph peeled to zero edges): no metric
+      Option(row.schema).map(_.fieldNames.zipWithIndex.map { case (n, i) =>
         n -> row.get(i)
       }.toMap)
     } catch {
@@ -455,7 +457,8 @@ object Graph {
     * ROUND MATERIALIZATION IS SIZE-CONDITIONAL (r21, the pagerank
     * matMinEdges discipline): below spark.graft.kcore.lazyMaxEdges the
     * odd rounds stay LAZY and only every second round materializes, so
-    * six peel rounds cost three jobs instead of six. A lazy round's
+    * six peel rounds cost three jobs instead of six; 0 means never lazy
+    * (every round materializes, even once peeling reaches 0 edges). A lazy round's
     * subtree appears three times in its successor's plan (sym reads e
     * twice, the semi join once), but the expensive parts dedupe at
     * runtime — the degree aggregate is exchange-rooted and the keep
@@ -524,7 +527,7 @@ object Graph {
         .join(observed.withColumnRenamed("u", "b"), Seq("b"), "left_semi")
         .select("a", "b")
         .observe(obsE, count(lit(1)).as("n"))
-      val doLazy =
+      val doLazy = lazyMax > 0 &&
         lastEdges.exists(_ <= lazyMax) && r % 2 == 1 && r < rounds
       e = if (doLazy) next else Tables.materialize(next, s"kcore_e$r")
       pending ::= Pend(r, obs, obsE, keep, e)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
+import graft.functions.Codebook
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label). Brute-force cosine top-k is the correctness
@@ -154,20 +155,24 @@ object Vectors {
     * ~p^b + F·p^(b-1)(1-p) — the standard recall knob that does NOT
     * require more tables (hashing stays L×b dots per vector). */
   private[graft] def annTable(spark: SparkSession, dir: String): DataFrame = {
-    val dim = 64
     val (nT, nP, nF) = (annTablesN(spark), annPlanesN(spark), annFlipsN(spark))
-    val emb = sharedEmb(spark, dir)
-    val dotF = graft.functions.FloatDotProduct.floatDot _
-    val perTable = (0 until nT).map { t =>
-      struct(lit(t).as("t"),
-        array((0 until nP).map { p =>
-          val signs = array((0 until dim).map(d =>
-            lit(planeSign(t * 64 + p, d).toFloat)): _*)
-          dotF(col("embedding"), signs): Column
-        }: _*).as("dots"))
-    }
-    val withDots = emb.select(col("vec_id"), explode(array(perTable: _*)).as("td"))
-      .select(col("vec_id"), col("td.t").as("t"), col("td.dots").as("dots"))
+    Tables.materializeSharedBy(spark, "anntable", s"$dir#L${nT}b${nP}f$nF")(
+      annTableOf(sharedEmb(spark, dir), nT, nP, nF))
+  }
+
+  /** [[annTable]]'s build: ONE codebook_dot per vector over the
+    * (nT·nP)×64 sign matrix (row t·nP + p holds plane t·64 + p), sliced
+    * into each table's nP dots. */
+  private[graft] def annTableOf(emb: DataFrame, nT: Int, nP: Int,
+      nF: Int): DataFrame = {
+    val signs = typedLit(Array.tabulate(nT * nP, 64)((r, d) =>
+      planeSign(r / nP * 64 + r % nP, d).toFloat))
+    val withDots = emb
+      .select(col("vec_id"), Codebook.dot(col("embedding"), signs).as("all"))
+      .select(col("vec_id"), col("all"),
+        explode(sequence(lit(0), lit(nT - 1))).as("t"))
+      .select(col("vec_id"), col("t"),
+        slice(col("all"), col("t") * nP + 1, lit(nP)).as("dots"))
     val bucketExpr = (0 until nP).map(p =>
       when(col("dots").getItem(p) >= 0, lit(1 << p)).otherwise(lit(0)): Column)
       .reduce(_ + _)
@@ -176,9 +181,8 @@ object Vectors {
       s"""concat(array(bucket), transform(
          |  slice(array_sort(transform(dots, (d, p) -> struct(abs(d) AS m, p AS p))), 1, $nF),
          |  s -> cast(bucket ^ shiftleft(1, s.p) AS INT)))""".stripMargin)
-    Tables.materializeSharedBy(spark,
-      "anntable", s"$dir#L${nT}b${nP}f$nF")(withDots.select(col("vec_id"), col("t"), bucketExpr.as("bucket"), col("dots"))
-        .select(col("vec_id"), col("t"), col("bucket"), probesExpr.as("probes")))
+    withDots.select(col("vec_id"), col("t"), bucketExpr.as("bucket"), col("dots"))
+      .select(col("vec_id"), col("t"), col("bucket"), probesExpr.as("probes"))
   }
 
   /** Exact-bucket view of [[annTable]] (the join build side). */
@@ -238,7 +242,7 @@ object Vectors {
     Tables.materializeSharedBy(spark, "annsims",
       s"$dir#${annKey(spark)}") {
       val emb = sharedEmb(spark, dir)
-      val dot2 = graft.functions.FloatDotProduct.floatDot _
+      val dot2 = graft.functions.MixedDotProduct.mixedDot _
       annCandidates(spark, dir)
         .join(emb.select(col("vec_id").as("qid"), col("embedding").as("qe"),
           col("norm2").as("qn")), "qid")
@@ -262,15 +266,6 @@ object Vectors {
   }
 
   private def ivfListsN(spark: SparkSession) = intConf(spark, "spark.graft.ivf.nlist", 16)
-  /** Assignment/probe strategy: `auto` (default) inlines the centroids as
-    * literal chunked expressions while they're plan-sized and switches to
-    * the broadcast-join path past [[LiteralCentroidMax]]; `literal` /
-    * `join` force a path (the equivalence spec + A/B runs). NOT part of
-    * the oracle-export knob key: the two paths are bit-identical by
-    * construction (same float kernel, same (d, cid) tie-break — asserted
-    * in SimilaritySpec). */
-  private def ivfAssignPath(spark: SparkSession): String =
-    spark.conf.get("spark.graft.ivf.assignPath", "auto")
   // nprobe=6 default: measured top-3 recall on the near-orthogonal sf0.01
   // fixture (the WORST case for a coarse quantizer — no cluster structure)
   // is 0.605 / 0.756 / 0.847 at nprobe 4 / 6 / 8; 6 clears the family's
@@ -278,94 +273,24 @@ object Vectors {
   private def ivfProbesN(spark: SparkSession) = intConf(spark, "spark.graft.ivf.nprobe", 6)
   private def ivfItersN(spark: SparkSession) = intConf(spark, "spark.graft.ivf.iters", 3)
 
-  /** Squared L2 to a constant centroid as norm2 + |c|^2 - 2<x,c> with the
-    * native float_dot — one expression eval per centroid instead of a
-    * 64-element interpreted lambda (measured ~3x on the whole query). */
-  private def l2ToCentroid(c: Array[Double]): Column = {
-    val cNorm2 = c.map(v => v * v).sum
-    val cFloat = array(c.toIndexedSeq.map(v => lit(v.toFloat)): _*)
-    col("norm2") + lit(cNorm2) -
-      lit(2.0) * graft.functions.FloatDotProduct.floatDot(col("embedding"), cFloat)
+  /** The centroids as IVF distances see them: ONE float-cast matrix
+    * literal and the driver-summed double norms |c|². */
+  private def centroidLits(cs: Array[Array[Double]]): (Column, Column) =
+    (typedLit(cs.map(_.map(_.toFloat))), typedLit(cs.map(c => c.map(v => v * v).sum)))
+
+  /** The k nearest centroids of each row's `embedding` (ids, ascending
+    * (d, cid)), with d = (norm2 + |c|²) − 2·float_dot(x, float(c)), at
+    * any nlist (SCALE.md §IVF). */
+  private[graft] def ivfNearest(cs: Array[Array[Double]], k: Int): Column = {
+    val (m, n2) = centroidLits(cs)
+    Codebook.nearest(col("embedding"), col("norm2"), m, n2, k)
   }
 
-  /** Argmin via array_min over (dist, cid) structs: each distance is
-    * evaluated ONCE. (A when(a.d<=b.d, a) reduce would re-expand each
-    * operand subtree at every level — 3^nlist expression nodes.)
-    *
-    * CHUNKED at 16 centroids per array literal: the centroids are inlined
-    * as `lit` floats (nlist × 64 of them), and one flat array of
-    * nlist=1024 structs is a single ~256 KB expression that blows past
-    * janino's 64 KB method limit and falls back to interpreted eval.
-    * Chunk minima are independent bounded subexpressions (codegen splits
-    * at expression boundaries), combined with `least` — structs compare
-    * by (d, cid) natural order, so ties still break to the lowest cid
-    * deterministically. Above [[LiteralCentroidMax]] lists the literal
-    * strategy itself is wrong (a megabyte of plan per query) — `auto`
-    * selects the broadcast-join path ([[withCid]] / [[probesViaJoin]])
-    * instead. SCALE.md §IVF has the 100 TB knob table. */
-  private val AssignChunk = 16
-  /** Above this many centroids the literal-inlined expressions are the
-    * wrong strategy (a megabyte of plan per query) and `auto` switches to
-    * the broadcast-join path ([[withCid]] / [[probesViaJoin]]). */
-  private val LiteralCentroidMax = 1024
-  private def useJoinPath(spark: SparkSession, nCentroids: Int): Boolean =
-    ivfAssignPath(spark) match {
-      case "join" => true
-      case "literal" =>
-        // forcing literal past the plan-size bound is a user error
-        require(nCentroids <= LiteralCentroidMax,
-          s"$nCentroids centroids exceed the literal-expression bound " +
-            s"($LiteralCentroidMax); unset spark.graft.ivf.assignPath so " +
-            "the broadcast-join path is selected (SCALE.md)")
-        false
-      case _ => nCentroids > LiteralCentroidMax
-    }
-
-  /** The centroid table as a (tiny) DataFrame — the broadcast build side
-    * of the join assignment path. cemb/cnorm2 are prepared EXACTLY like
-    * the literal path's `lit` arrays ([[l2ToCentroid]]): float elements,
-    * driver-summed double norm — so both paths run the identical float
-    * kernel on identical inputs and assign bit-identically. */
-  private def centroidDf(spark: SparkSession, cs: Array[Array[Double]]): DataFrame = {
-    import spark.implicits._
-    cs.toIndexedSeq.zipWithIndex.map { case (c, i) =>
-      (i, c.toIndexedSeq.map(_.toFloat), c.map(v => v * v).sum)
-    }.toDF("cid", "cemb", "cnorm2")
-  }
-
-  private def l2ToCentroidCol: Column =
-    col("norm2") + col("cnorm2") -
-      lit(2.0) * graft.functions.FloatDotProduct.floatDot(col("embedding"), col("cemb"))
-
-  /** emb + nearest-centroid `cid`, path-selected. The join path is the
-    * 100 TB shape for nlist≈√n (SemDeDup's regime — SCALE.md §IVF):
-    * corpus ⨯ broadcast(centroids) (a BroadcastNestedLoopJoin that never
-    * shuffles the corpus), argmin folded by the PARTIAL aggregate — each
-    * vector's nlist candidate rows are contiguous in its input partition,
-    * so the map-side combine collapses them to one row per vector before
-    * the (narrow) final shuffle. Requires emb's columns to include
-    * vec_id/embedding/norm2 (the [[sharedEmb]] shape). */
+  /** emb + nearest-centroid `cid` — a narrow map at any corpus size.
+    * Requires emb's columns to include embedding/norm2 (the [[sharedEmb]]
+    * shape). */
   private[graft] def withCid(emb: DataFrame, cs: Array[Array[Double]]): DataFrame =
-    if (!useJoinPath(emb.sparkSession, cs.length))
-      emb.withColumn("cid", ivfAssignExpr(cs))
-    else {
-      val embCols = emb.columns.toIndexedSeq.map(col)
-      emb.crossJoin(broadcast(centroidDf(emb.sparkSession, cs)))
-        .groupBy(embCols: _*)
-        .agg(min(struct(l2ToCentroidCol.as("d"), col("cid").as("cid"))).as("best"))
-        .select(embCols :+ col("best.cid").as("cid"): _*)
-    }
-
-  private[graft] def ivfAssignExpr(cs: Array[Array[Double]]): Column = {
-    val chunkMins = cs.toIndexedSeq.zipWithIndex.grouped(AssignChunk).map { chunk =>
-      array_min(array(chunk.map { case (c, i) =>
-        struct(l2ToCentroid(c).as("d"), lit(i).as("cid"))
-      }: _*))
-    }.toSeq
-    val best =
-      if (chunkMins.sizeIs == 1) chunkMins.head else least(chunkMins: _*)
-    best.getField("cid")
-  }
+    emb.withColumn("cid", ivfNearest(cs, 1).getItem(0))
 
   /** Quantizer-training sample cap (IVF centroids and PQ codebooks):
     * above this many vectors, Lloyd rounds aggregate a deterministic
@@ -455,55 +380,18 @@ object Vectors {
     * each query probes its nprobe=6 nearest lists and exact-reranks only
     * those candidates (~nprobe/nlist of the corpus; recall floor asserted
     * in SimilaritySpec). Hash-gated via the exported candidate set. */
-  /** nProbe nearest centroids as a sorted (d, cid) struct array —
-    * CHUNKED like [[ivfAssignExpr]] (top-k of the union of per-chunk
-    * top-ks IS the global top-k, since anything outside a chunk's top-k
-    * is dominated within its own chunk): each 16-centroid chunk sorts
-    * and keeps its own nProbe, the concatenated survivors re-sort once.
-    * One chunk (nlist <= 16) degenerates to the previous flat plan. */
-  private[graft] def ivfRankExpr(cs: Array[Array[Double]], nProbe: Int): Column = {
-    val chunkTops = cs.toIndexedSeq.zipWithIndex.grouped(AssignChunk).map { chunk =>
-      val arr = array_sort(array(chunk.map { case (c, i) =>
-        struct(l2ToCentroid(c).as("d"), lit(i).as("cid"))
-      }: _*))
-      if (chunk.sizeIs <= nProbe) arr else slice(arr, 1, nProbe)
-    }.toSeq
-    val all =
-      if (chunkTops.sizeIs == 1) chunkTops.head
-      else array_sort(concat(chunkTops: _*))
-    slice(all, 1, nProbe)
-  }
-
-  /** Join-path twin of `explode(ivfRankExpr(...))`: corpus ⨯ broadcast
-    * centroids → bounded-heap top-nprobe per query (TopKPerKeyExec — no
-    * window sort over the n×nlist distance rows). Same (d, cid)
-    * ascending tie-break as the literal expression, so the probed list
-    * set is identical (asserted in SimilaritySpec). */
-  private[graft] def probesViaJoin(emb: DataFrame, cs: Array[Array[Double]],
-      nProbe: Int): DataFrame = {
-    val dists = emb.crossJoin(broadcast(centroidDf(emb.sparkSession, cs)))
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("norm2").as("qn"), l2ToCentroidCol.as("d"), col("cid"))
-    graft.plans.TopKPerKey.topKPerKey(dists, Seq(col("qid")),
-        Seq(col("d").asc, col("cid").asc), nProbe)
-      .select(col("qid"), col("qe"), col("qn"), col("cid"))
-  }
-
   /** Per-query coarse-probe set (qid, qe, qn, cid) — IVF stage 1, shared
     * by [[qCosineIvf]] and [[qIvfAdc]]: identical probe selection means
     * both queries derive the SAME candidate pair set, so both can export
     * the one ivfcand table their oracles replay from. */
-  private[graft] def ivfProbes(spark: SparkSession, dir: String): DataFrame = {
-    val emb = sharedEmb(spark, dir)
-    val nProbe = ivfProbesN(spark)
-    val centroids = ivfCentroids(spark, dir)
-    if (useJoinPath(spark, centroids.length))
-      probesViaJoin(emb, centroids, nProbe)
-    else emb.select(col("vec_id").as("qid"),
-        col("embedding").as("qe"), col("norm2").as("qn"),
-        explode(ivfRankExpr(centroids, nProbe)).as("probe"))
-      .select(col("qid"), col("qe"), col("qn"), col("probe.cid").as("cid"))
-  }
+  private[graft] def ivfProbes(spark: SparkSession, dir: String): DataFrame =
+    probesOf(sharedEmb(spark, dir), ivfCentroids(spark, dir), ivfProbesN(spark))
+
+  /** [[ivfProbes]]'s build over any emb frame and centroid set. */
+  private[graft] def probesOf(emb: DataFrame, cs: Array[Array[Double]],
+      nProbe: Int): DataFrame =
+    emb.select(col("vec_id").as("qid"), col("embedding").as("qe"),
+      col("norm2").as("qn"), explode(ivfNearest(cs, nProbe)).as("cid"))
 
   /** Session-shared IVF probe-scored cosine frame (qid, nid, sim) —
     * [[qCosineIvf]]'s probe + scoring pass as a corpus-version artifact
@@ -516,7 +404,7 @@ object Vectors {
   private[graft] def ivfSims(spark: SparkSession, dir: String): DataFrame =
     Tables.materializeSharedBy(spark, "ivfsims",
         s"$dir#${ivfKey(spark)}") {
-      val dot2 = graft.functions.FloatDotProduct.floatDot _
+      val dot2 = graft.functions.MixedDotProduct.mixedDot _
       val cands = ivfProbes(spark, dir).join(
           ivfAssigned(spark, dir).select(col("cid"),
             col("vec_id").as("nid"), col("embedding").as("ne"),
@@ -563,8 +451,8 @@ object Vectors {
     * |batch| rows only (batch-probes-index — cost ∝ arrival rate, never
     * the corpus); the base side re-reads the session-shared
     * [[ivfAssigned]] table. One tagged union → ONE hash aggregate on the
-    * nlist cids; per-vector residuals are a broadcast-equi-join narrow
-    * map (cid → centroid row). Per-vector quantized residuals are
+    * nlist cids; per-vector residuals are a narrow map (cid → centroid
+    * row of the centroid literal). Per-vector quantized residuals are
     * CLAMPED at ≥ 0 (floor of a ~−1e-9 rounding artifact would be −1,
     * and negative integer division truncates in Spark but floors in
     * DuckDB — the q_zipf_fit trap); data-sized error sums run in
@@ -572,7 +460,7 @@ object Vectors {
     * are exact decimal cross-products, integer-divided then cast.
     *
     * Parity: residual d2 = (norm2 + ‖c‖²) − 2·float_dot(e, c_float) is
-    * the exact [[l2ToCentroidCol]] chain, and the oracle replays the
+    * the exact [[ivfNearest]] distance, and the oracle replays the
     * ARGMIN itself from the ivfcent export (row_number over (d2, cid)
     * ascending = the struct ordering's tie-break), so assignment,
     * residuals, and rollup are all independently re-derived — no
@@ -585,15 +473,17 @@ object Vectors {
     val isBatch =
       conv(substring(md5(concat(lit("ivfinc:"), col("vec_id").cast("string"))),
         1, 15), 16, 10).cast("long") % 5 === 0
-    val cdf = broadcast(centroidDf(spark, cents))
     val base = ivfAssigned(spark, dir).filter(!isBatch)
       .select(col("cid"), col("embedding"), col("norm2"), lit(0L).as("isb"))
     val batch = withCid(emb.filter(isBatch), cents)
       .select(col("cid"), col("embedding"), col("norm2"), lit(1L).as("isb"))
     val dec0 = DecimalType(38, 0)
-    val qe2 = greatest(
-      floor(l2ToCentroidCol * lit(1048576.0d)).cast("long"), lit(0L))
-    base.unionByName(batch).join(cdf, "cid")
+    def ofCid(m: Column) = element_at(m, col("cid") + 1)
+    val (cm, cn2) = centroidLits(cents)
+    val d2 = col("norm2") + ofCid(cn2) -
+      lit(2.0) * graft.functions.MixedDotProduct.mixedDot(col("embedding"), ofCid(cm))
+    val qe2 = greatest(floor(d2 * lit(1048576.0d)).cast("long"), lit(0L))
+    base.unionByName(batch)
       .select(col("cid"), col("isb"), qe2.as("qe2"))
       .groupBy("cid")
       .agg(
@@ -784,7 +674,7 @@ object Vectors {
     * embeddings table. SimilaritySpec pins pre ≥ post and the collapse
     * mechanism on a label-correlated candidate fixture. */
   def qAnnFiltered(spark: SparkSession, dir: String): DataFrame = {
-    val dot2 = graft.functions.FloatDotProduct.floatDot _
+    val dot2 = graft.functions.MixedDotProduct.mixedDot _
     val (k, overK, predLabel, nEval) = (3, 10, 3, 64L)
     val emb = sharedEmb(spark, dir)
     val labels = Tables(spark, dir, "embeddings")
@@ -1105,7 +995,7 @@ object Vectors {
   private[graft] def semanticPairs(spark: SparkSession, dir: String): DataFrame = {
     val tau = spark.conf.get("spark.graft.semdedup.tau", "0.25").toDouble
     val assigned = ivfAssigned(spark, dir)
-    val dot2 = graft.functions.FloatDotProduct.floatDot _
+    val dot2 = graft.functions.MixedDotProduct.mixedDot _
     val a = assigned.select(col("cid"), col("vec_id").as("a"),
       col("embedding").as("ae"), col("norm2").as("an"))
     val b = assigned.select(col("cid"), col("vec_id").as("b"),
@@ -1179,8 +1069,7 @@ object Vectors {
     val signs = jlSigns(spark)
     val D128 = DecimalType(12, 8)
     val D2416 = DecimalType(24, 16)
-    val signsLit = array(signs.map(row =>
-      array(row.map(v => lit(v)): _*)): _*)
+    val signsLit = typedLit(signs)
     val esc = transform(col("embedding"),
       v => v.cast("double").cast(DecimalType(9, 8)))
     Tables(spark, dir, "embeddings")
@@ -1304,7 +1193,7 @@ object Vectors {
       val shortlist = scored.withColumn("rk", row_number().over(wh))
         .filter(col("rk") <= 10).select(col("qid"), col("nid"))
       // stage 2: float-cosine rerank of the 10-row-per-query shortlist
-      val dot2 = graft.functions.FloatDotProduct.floatDot _
+      val dot2 = graft.functions.MixedDotProduct.mixedDot _
       shortlist
         .join(emb.select(col("vec_id").as("qid"), col("embedding").as("ea"),
           col("norm2").as("na")), "qid")
@@ -1423,7 +1312,7 @@ object Vectors {
     Tables.materializeSharedBy(spark, "colmaxsim", dir) {
       val slices = colbertSlices(spark, dir)
       val sym = symPairs(annCandidatesExported(spark, dir))
-      val dotF = graft.functions.FloatDotProduct.floatDot _
+      val dotF = graft.functions.MixedDotProduct.mixedDot _
       sym
         .join(slices.toDF(slices.columns.map(c =>
           if (c == "vec_id") "qid" else s"q_$c"): _*), "qid")
@@ -1610,11 +1499,10 @@ object Vectors {
       val sym = symPairs(annCandidatesExported(spark, dir))
       // both dots run as fused codegen loops, not interpreted HOF folds
       // (the MixedDotProduct lesson — q_pq_recall halved): the integer
-      // dot rides FloatDotProduct on a float view of the codes, EXACT
+      // dot rides MixedDotProduct on a float view of the codes, EXACT
       // because codes ≤ 255 ⇒ products ≤ 65025 and the sum ≤ 64·65025
       // ≪ 2⁵³ in the double accumulator; the dequantized dot is the
       // same ascending-index double fold the oracle's list_sum replays
-      val dotF = graft.functions.FloatDotProduct.floatDot _
       val dotM = graft.functions.MixedDotProduct.mixedDot _
       sym
         .join(codes.select(col("vec_id").as("qid"),
@@ -1624,7 +1512,7 @@ object Vectors {
           col("codes").cast("array<float>").as("cb"),
           col("recon").as("rb"), col("rn2").as("nb")), "nid")
         .select(col("qid"), col("nid"),
-          dotF(col("ca"), col("cb")).cast("long").as("idot"),
+          dotM(col("ca"), col("cb")).cast("long").as("idot"),
           (dotM(col("ra"), col("rb"))
             / (sqrt(col("na")) * sqrt(col("nb")))).as("dsim"))
     }
@@ -1710,7 +1598,7 @@ object Vectors {
   // Codebooks train like the IVF quantizer (deterministic init = first
   // 16 residuals by vec_id, 2 Lloyd rounds with decimal-exact means,
   // driver-held bounded state); codes assign distributed via the same
-  // literal-inlined argmin expressions. The oracle gates the ADC scoring
+  // codebook_nearest kernel. The oracle gates the ADC scoring
   // + recall replay from the EXPORTED codes/codebooks/centroids (the
   // IVF-candidate convention: training is pinned by determinism + spec,
   // the gate pins everything after it).
@@ -1723,40 +1611,27 @@ object Vectors {
     s"m$PqSubs.k$PqK.i$PqIters.res.k${ivfListsN(spark)}" +
       s".i${ivfItersN(spark)}.t${trainMaxN(spark)}"
 
-  /** Centroid matrix as a (foldable) nested array literal — element_at
-    * by cid+1 gives the 64-double centroid row. All children are
-    * literals, so constant folding collapses the whole thing into one
-    * ArrayData before codegen sees it. */
-  private def centArrLit(cs: Array[Array[Double]]): Column =
-    array(cs.toIndexedSeq.map(c => array(c.toIndexedSeq.map(lit): _*)): _*)
+  /** `assigned` + the residual column `res` = x − centroid(cid),
+    * element-wise double subtraction (float widens exactly; one IEEE op
+    * per element — deterministic), the centroid row looked up in one
+    * matrix literal. Requires `embedding` and `cid` columns. */
+  private[graft] def withResidual(assigned: DataFrame,
+      cs: Array[Array[Double]]): DataFrame =
+    assigned.withColumn("res", zip_with(col("embedding"),
+      element_at(typedLit(cs), col("cid") + 1), (x, c) => x.cast("double") - c))
 
-  /** Residual r = x − centroid(cid), element-wise double subtraction
-    * (float widens exactly; one IEEE op per element — deterministic).
-    * Requires `embedding` and `cid` columns. */
-  private def residualCol(cs: Array[Array[Double]]): Column =
-    zip_with(col("embedding"), element_at(centArrLit(cs), col("cid") + 1),
-      (x, c) => x.cast("double") - c)
-
-  /** Squared L2 from a residual's `sub`-th 8-dim slice to codeword `c`
-    * (same |r|² + |c|² − 2r·c shape as the IVF assign distance; the
-    * mixed kernel reads the residual's doubles at full width). */
-  private def pqSubDist(sub: Int, c: Array[Double]): Column = {
-    val md = graft.functions.MixedDotProduct.mixedDot _
+  /** Nearest codeword to the residual's `sub`-th 8-dim slice: the same
+    * (|r|² + |c|²) − 2r·c distance as the IVF assignment, every term at
+    * full double width. */
+  private def pqAssignExpr(sub: Int, book: Array[Array[Double]]): Column = {
     val rsub = slice(col("res"), sub * 8 + 1, 8)
-    val cArr = array(c.toIndexedSeq.map(lit): _*)
-    md(rsub, rsub) + lit(c.map(v => v * v).sum) -
-      lit(2.0) * md(rsub, cArr)
+    Codebook.nearest(rsub, graft.functions.MixedDotProduct.mixedDot(rsub, rsub),
+      typedLit(book), typedLit(book.map(c => c.map(v => v * v).sum)), 1).getItem(0)
   }
-
-  private def pqAssignExpr(sub: Int, book: Array[Array[Double]]): Column =
-    array_min(array(book.toIndexedSeq.zipWithIndex.map { case (c, i) =>
-      struct(pqSubDist(sub, c).as("d"), lit(i).as("cid"))
-    }: _*)).getField("cid")
 
   /** ivfAssigned + the residual column — the PQ training/encode input. */
   private def pqResiduals(spark: SparkSession, dir: String): DataFrame =
-    ivfAssigned(spark, dir)
-      .withColumn("res", residualCol(ivfCentroids(spark, dir)))
+    withResidual(ivfAssigned(spark, dir), ivfCentroids(spark, dir))
 
   private val pqBookCache =
     new graft.Tables.KeyedOnce[Array[Array[Array[Double]]]]
@@ -1773,7 +1648,7 @@ object Vectors {
       val res = pqResiduals(spark, dir)
       // deterministic init: residuals of the first PqK vectors by id,
       // subtracted driver-side with the same double arithmetic as
-      // [[residualCol]]
+      // [[withResidual]]
       val cents = ivfCentroids(spark, dir)
       val init = res.orderBy("vec_id").limit(PqK)
         .select(col("embedding"), col("cid")).collect()
@@ -1813,10 +1688,15 @@ object Vectors {
     * payload per vector; the cid doubles as the inverted-list key). */
   private[graft] def pqCodes(spark: SparkSession, dir: String): DataFrame = {
     val books = pqBooks(spark, dir)
-    Tables.materializeSharedBy(spark,
-      "pqcodes", s"$dir#${pqKey(spark)}")(pqResiduals(spark, dir).select(col("vec_id") +: col("cid") +:
-        (0 until PqSubs).map(s => pqAssignExpr(s, books(s)).as(s"c$s")): _*))
+    Tables.materializeSharedBy(spark, "pqcodes", s"$dir#${pqKey(spark)}")(
+      pqEncode(pqResiduals(spark, dir), books))
   }
+
+  /** [[pqCodes]]'s build over any residual frame ([[withResidual]]). */
+  private[graft] def pqEncode(res: DataFrame,
+      books: Array[Array[Array[Double]]]): DataFrame =
+    res.select(col("vec_id") +: col("cid") +:
+      (0 until PqSubs).map(s => pqAssignExpr(s, books(s)).as(s"c$s")): _*)
 
   /** Codebooks as a 128-row frame (sub, cid, vals) — the oracle's
     * reconstruction table; written once per corpus via OracleExport. */
@@ -1836,21 +1716,20 @@ object Vectors {
       .toDF("cid", "vals")
   }
 
-  /** Reconstructed RESIDUAL from the 8 nibble codes — 64 doubles via
-    * literal codebook lookup (8·16·8 = 1024 literals, all foldable). */
-  private def pqResReconExpr(books: Array[Array[Array[Double]]]): Column =
-    concat((0 until PqSubs).map { s =>
-      element_at(array(books(s).toIndexedSeq.map(cw =>
-        array(cw.toIndexedSeq.map(lit): _*)): _*), col(s"c$s") + 1)
-    }: _*)
-
-  /** Full decoded vector x̂ = centroid(cid) + residual recon — the §IV
-    * decode: element-wise double addition, mirroring the oracle's
-    * list_transform(list_zip(cent, resrecon), z -> z[1] + z[2]). */
-  private def pqReconExpr(books: Array[Array[Array[Double]]],
-      cs: Array[Array[Double]]): Column =
-    zip_with(element_at(centArrLit(cs), col("cid") + 1),
-      pqResReconExpr(books), (a, b) => a + b)
+  /** (nid, recon, rn2) — every vector's decode x̂ = centroid(cid) +
+    * the 8 residual codewords (the §IV decode: element-wise double
+    * addition, mirroring the oracle's list_transform(list_zip(cent,
+    * resrecon), z -> z[1] + z[2]); each row looked up in its matrix
+    * literal) and its squared norm as a sequential MixedDotProduct fold. */
+  private def pqDecoded(spark: SparkSession, dir: String): DataFrame = {
+    val books = pqBooks(spark, dir)
+    val resRecon = concat((0 until PqSubs).map(s =>
+      element_at(typedLit(books(s)), col(s"c$s") + 1)): _*)
+    pqCodes(spark, dir).select(col("vec_id").as("nid"),
+        zip_with(element_at(typedLit(ivfCentroids(spark, dir)), col("cid") + 1),
+          resRecon, (a, b) => a + b).as("recon"))
+      .withColumn("rn2", graft.functions.MixedDotProduct.mixedDot(col("recon"), col("recon")))
+  }
 
   /** PQ COMPRESSION-RECALL audit: every LSH candidate is scored by the
     * asymmetric distance computation — exact float query × DECODED
@@ -1890,21 +1769,14 @@ object Vectors {
   private[graft] def pqSims(spark: SparkSession, dir: String): DataFrame =
     Tables.materializeSharedBy(spark, "pqsims", s"$dir#${pqKey(spark)}") {
       val emb = sharedEmb(spark, dir)
-      val books = pqBooks(spark, dir)
-      val cents = ivfCentroids(spark, dir)
-      val codes = pqCodes(spark, dir)
       val cand = annCandidatesExported(spark, dir)
       val sym = cand.select(col("qid"), col("nid"))
         .unionByName(cand.select(col("nid").as("qid"), col("qid").as("nid")))
-      val md = graft.functions.MixedDotProduct.mixedDot _
-      val decoded = codes.withColumn("recon", pqReconExpr(books, cents))
-        .select(col("vec_id").as("nid"), col("recon"),
-          md(col("recon"), col("recon")).as("rn2"))
       sym
         .join(emb.select(col("vec_id").as("qid"), col("embedding").as("qe"),
           col("norm2").as("qn")), "qid")
-        .join(decoded, "nid")
-        .withColumn("dot", md(col("qe"), col("recon")))
+        .join(pqDecoded(spark, dir), "nid")
+        .withColumn("dot", graft.functions.MixedDotProduct.mixedDot(col("qe"), col("recon")))
         .withColumn("sim", col("dot") / (sqrt(col("qn")) * sqrt(col("rn2"))))
         .select(col("qid"), col("nid"), col("sim"))
     }
@@ -1979,7 +1851,6 @@ object Vectors {
     val books = pqBooks(spark, dir)
     val cents = ivfCentroids(spark, dir)
     val codes = pqCodes(spark, dir)
-    val md = graft.functions.MixedDotProduct.mixedDot _
     // inverted lists carrying ONLY the coarse id + nibble codes
     val lists = codes.select(col("cid") +: col("vec_id").as("nid") +:
       (0 until PqSubs).map(s => col(s"c$s")): _*)
@@ -1993,26 +1864,25 @@ object Vectors {
     // re-evaluated the 1024-multiply lut expression per candidate PAIR
     // instead of per query (206M × 1024 multiplies); as a build side it
     // runs once per query row.
-    val lutCol = array((for (s <- 0 until PqSubs; c <- 0 until PqK) yield
-      md(slice(col("embedding"), s * 8 + 1, 8),
-        array(books(s)(c).toIndexedSeq.map(lit): _*))): _*)
-    val qcentCol = array(cents.toIndexedSeq.map(c =>
-      md(col("embedding"), array(c.toIndexedSeq.map(lit): _*))): _*)
+    val lutCol = concat((0 until PqSubs).map(s =>
+      Codebook.dot(slice(col("embedding"), s * 8 + 1, 8), typedLit(books(s)))): _*)
+    val qcentCol = Codebook.dot(col("embedding"), typedLit(cents))
     val qlut = emb.select(col("vec_id").as("qid"),
       col("norm2").as("qn"), lutCol.as("lut"), qcentCol.as("qcent"))
     // candidate-norm literals per (cid, sub, code): ‖c_slice + cw‖² —
     // an 8-term sequential fold per entry, matching the oracle's
-    // per-slice list_sum over (c+r)²; nested array folds to one literal
-    val wnLit = array(cents.toIndexedSeq.map { cent =>
-      array((for (s <- 0 until PqSubs; c <- 0 until PqK) yield {
+    // per-slice list_sum over (c+r)², as one matrix literal
+    val wnLit = typedLit(cents.map { cent =>
+      Array.tabulate(PqSubs * PqK) { sc =>
+        val (s, c) = (sc / PqK, sc % PqK)
         var acc = 0.0
         var d = 0
         while (d < 8) {
           val v = cent(s * 8 + d) + books(s)(c)(d); acc += v * v; d += 1
         }
-        lit(acc)
-      }): _*)
-    }: _*)
+        acc
+      }
+    })
     // lut/qcent/qn attach to the 140k probe rows BEFORE the fan-out (one
     // hash lookup per probe instead of one per pair); as JOIN columns
     // they are stored-row reads in codegen, not re-evaluated
@@ -2059,7 +1929,7 @@ object Vectors {
       pqKey(spark))
     graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir,
       pqKey(spark))
-    val fd = graft.functions.FloatDotProduct.floatDot _
+    val fd = graft.functions.MixedDotProduct.mixedDot _
     // ADC top-10 per query — session-shared + prewarmed; BOTH stages
     // below consume it
     val adcTop = adcTopShared(spark, dir)
@@ -2172,7 +2042,7 @@ object Vectors {
     * and takes the penalized argmax) — no driver loop, no typed lambda,
     * and the per-query work is bounded by the shortlist (10), so the
     * whole rerank is three windows + two 9-rows-per-query joins
-    * regardless of corpus size. All sims ride the proven FloatDotProduct
+    * regardless of corpus size. All sims ride the proven MixedDotProduct
     * arithmetic; scores are bit-identical double expressions on both
     * engines, so the greedy argmax (score DESC, nid ASC) is
     * hash-gatable. */
@@ -2190,7 +2060,7 @@ object Vectors {
       dir: String): DataFrame =
     Tables.materializeSharedBy(spark, "mmrcandsims", dir) {
       val emb = sharedEmb(spark, dir)
-      val dot2 = graft.functions.FloatDotProduct.floatDot _
+      val dot2 = graft.functions.MixedDotProduct.mixedDot _
       val t = symTop10(spark, dir).select(col("qid"), col("nid"))
       t.join(t.select(col("qid"), col("nid").as("sid")), "qid")
         .filter(col("nid") =!= col("sid"))
@@ -2387,33 +2257,16 @@ object Vectors {
     * fixture (qid, nid, sim) — [[qPqPlanted]]'s decode + brute scoring
     * pass as a fixture-version artifact (the pqSims precedent), so the
     * timed run pays the rank window + recall join only. Decode is
-    * driver-side: the fixture is constant-size, and the 1024-literal
-    * distributed recon projection costs a ~17 s Janino compile for 2048
-    * rows of work (see qOpqRecall's decode note; the distributed path
-    * stays gated by q_pq_recall). Arithmetic is the oracle's recon CTE
-    * verbatim: cent[d] + codeword[d] double adds. */
+    * [[pqDecoded]] (the oracle's recon CTE verbatim: cent[d] +
+    * codeword[d] double adds) on the broadcast side. */
   private[graft] def plantedAdcSims(spark: SparkSession): DataFrame =
     Tables.materializeSharedBy(spark, "pqpadc",
         s"$PlantedDir#${pqKey(spark)}") {
-      val p = PlantedDir
-      val emb = sharedEmb(spark, p)
-      val books = pqBooks(spark, p)
-      val cents = ivfCentroids(spark, p)
-      val codes = pqCodes(spark, p)
       val md = graft.functions.MixedDotProduct.mixedDot _
-      val queries = emb.filter(col("vec_id") % 8 === 0)
+      val queries = sharedEmb(spark, PlantedDir).filter(col("vec_id") % 8 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
           col("norm2").as("qn"))
-      val decoded = broadcast(spark.createDataFrame(
-        codes.collect().toIndexedSeq.map { r =>
-          val cid = r.getInt(1)
-          val recon = Array.tabulate(64) { d =>
-            cents(cid)(d) + books(d / 8)(r.getInt(2 + d / 8))(d % 8)
-          }
-          (r.getLong(0), recon.toSeq)
-        }).toDF("nid", "recon")
-        .withColumn("rn2", md(col("recon"), col("recon"))))
-      queries.crossJoin(decoded)
+      queries.crossJoin(broadcast(pqDecoded(spark, PlantedDir)))
         .filter(col("nid") =!= col("qid"))
         .withColumn("sim",
           md(col("qe"), col("recon")) / (sqrt(col("qn")) * sqrt(col("rn2"))))
@@ -2896,38 +2749,21 @@ object Vectors {
     * Plain side reuses the standard residual-PQ pipeline's codes/books;
     * OPQ codes quantize R·r and decode as centroid + Rᵀ·ŷ.
     *
-    * DECODE RUNS DRIVER-SIDE on this query (r16): the fixture is a
-    * CONSTANT 2048 rows, and the distributed decode alternative — a
-    * 64×64 rotation as an array-of-dots projection, the annTable
-    * plane-dot shape — costs a ~29 s Janino compile of the largest
-    * generated method in the repo for 2048 rows of work; it poisoned
-    * the bench's early pass-1 window badly enough to trip the weather
-    * escalator. The distributed decode path stays gated at corpus
-    * scale by q_pq_recall/q_ivfadc; here the decoded table is a
-    * bounded-scalar driver artifact (IVF-centroid pattern) with
-    * arithmetic identical to the oracle's (elementwise adds and
-    * ascending-index dot folds over the same exported doubles). */
+    * The plain side decodes distributed ([[pqDecoded]], as in
+    * q_pq_recall). The OPQ side's decode runs DRIVER-SIDE (r16): the
+    * fixture is a CONSTANT 2048 rows and OPQ training is already
+    * driver-local, so the decoded table is a bounded-scalar driver
+    * artifact (IVF-centroid pattern) with arithmetic identical to the
+    * oracle's (elementwise adds and ascending-index dot folds over the
+    * same exported doubles). */
   /** Session-shared PLAIN-PQ decoded recon frame of the OPQ fixture
-    * (nid, recon, rn2) — x̂ = centroid(cid) + codeword concat, the same
-    * elementwise double adds as the oracle's recon CTE. A
-    * fixture-version artifact ([[qOpqRecall]]'s broadcast side),
-    * prewarmed on the "planted" chain so the timed run pays scoring
-    * only — the r19 VERDICT trim. */
+    * (nid, recon, rn2) — [[pqDecoded]], the same elementwise double adds
+    * as the oracle's recon CTE. A fixture-version artifact
+    * ([[qOpqRecall]]'s broadcast side), prewarmed on the "planted" chain
+    * so the timed run pays scoring only — the r19 VERDICT trim. */
   private[graft] def opqPlainDecoded(spark: SparkSession): DataFrame =
-    Tables.materializeSharedBy(spark, "opqdecp", s"$OpqDir#${pqKey(spark)}") {
-      val cents = ivfCentroids(spark, OpqDir)
-      val plainBooks = pqBooks(spark, OpqDir)
-      val md = graft.functions.MixedDotProduct.mixedDot _
-      spark.createDataFrame(
-        pqCodes(spark, OpqDir).collect().toIndexedSeq.map { r =>
-          val cid = r.getInt(1)
-          val recon = Array.tabulate(64) { d =>
-            cents(cid)(d) + plainBooks(d / 8)(r.getInt(2 + d / 8))(d % 8)
-          }
-          (r.getLong(0), recon.toSeq)
-        }).toDF("nid", "recon")
-        .withColumn("rn2", md(col("recon"), col("recon")))
-    }
+    Tables.materializeSharedBy(spark, "opqdecp", s"$OpqDir#${pqKey(spark)}")(
+      pqDecoded(spark, OpqDir))
 
   /** Session-shared OPQ decoded recon frame (nid, recon, rn2) —
     * x̂ = centroid(cid) + Rᵀ·ŷ, rr[j] = Σᵢ R[i][j]·ŷ[i] ascending i (the
@@ -3089,7 +2925,7 @@ object Vectors {
   /** Shared oracle fragment: per-vector norm2 (the decimal-exact dotSql
     * twin of [[sharedEmb]]'s norm2) and the float-dot cosine between two
     * embedding lists — list_sum over doubles is sequential left-to-right
-    * in DuckDB, bit-identical to FloatDotProduct's loop (verified
+    * in DuckDB, bit-identical to MixedDotProduct's loop (verified
     * pairwise on the fixture candidate set). */
   private[ops] def simOracle(candCte: String, qidCol: String, nidCol: String,
       body: String): String =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import graft.SparkSpec
-import FloatDotProduct.floatDot
+import MixedDotProduct.mixedDot
 
 class FloatDotProductSpec extends SparkSpec {
 
@@ -26,13 +26,12 @@ class FloatDotProductSpec extends SparkSpec {
         lit(0.0), (acc, x) => acc + x)
     val bad = randomPairs(500)
       .select(hof(col("a"), col("b")).as("ref"),
-        floatDot(col("a"), col("b")).as("fast"))
+        mixedDot(col("a"), col("b")).as("fast"))
       .filter(col("ref") =!= col("fast")).count()
     assert(bad === 0L)
   }
 
   test("MixedDotProduct rejects non-float/double arrays at analysis time") {
-    import graft.functions.MixedDotProduct.mixedDot
     // an ARRAY<INT> child used to slip through and be READ at float
     // width (garbage values, no error) — must now fail analysis
     val ints = spark.range(4)
@@ -60,7 +59,7 @@ class FloatDotProductSpec extends SparkSpec {
   }
 
   test("codegen and interpreted eval agree (fallback parity)") {
-    val df = randomPairs(200).select(floatDot(col("a"), col("b")).as("d"))
+    val df = randomPairs(200).select(mixedDot(col("a"), col("b")).as("d"))
     val withCodegen = df.collect().map(_.getDouble(0)).toSeq
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")

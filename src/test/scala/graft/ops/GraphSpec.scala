@@ -224,14 +224,35 @@ class GraphSpec extends SparkSpec {
   test("k-core lazy rounds are value-identical to per-round materialize") {
     import spark.implicits._
     // r21: below spark.graft.kcore.lazyMaxEdges the odd rounds stay lazy
-    // (three jobs for six rounds). Pin lazy ≡ eager on random graphs by
-    // forcing the threshold to 0 (every round materializes — the old
-    // behavior) and comparing trajectories.
+    // (three jobs for six rounds). Pin lazy ≡ eager by forcing the
+    // threshold to 0 (every round materializes — the old behavior) and
+    // comparing trajectories, on random graphs and on a star that peels
+    // to zero edges in round 1 (0 edges must not re-enable lazy rounds).
     val rng = new scala.util.Random(23)
-    for (trial <- 1 to 2) {
-      val edges =
-        Seq.fill(80)((rng.nextInt(20).toLong, rng.nextInt(20).toLong))
-          .filter(p => p._1 != p._2).distinct
+    val random = Seq.fill(2)(
+      Seq.fill(80)((rng.nextInt(20).toLong, rng.nextInt(20).toLong))
+        .filter(p => p._1 != p._2).distinct)
+    val star = (1L to 10L).map(i => (0L, i))
+    // rounds r whose edges went through Tables.materialize (kcore_e<r>)
+    def materializedRounds(run: => Unit): Set[Int] = {
+      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          "graft-mat-kcore_e(\\d+)-".r.findAllMatchIn(qe.logical.toString)
+            .foreach(m => seen.add(m.group(1).toInt))
+        def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        run
+        org.apache.spark.graftbridge.TestBus.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(l)
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSet - 0
+    }
+    for ((edges, trial) <- (random :+ star).zipWithIndex) {
       val df = edges.toDF("x", "y")
       def traj(): Seq[(Int, Long, Long)] =
         Graph.kcorePeel(df, k = 2, rounds = 6).collect()
@@ -239,10 +260,15 @@ class GraphSpec extends SparkSpec {
       val lazyT = traj() // lastEdges learned in round 1 → rounds 3,5 lazy
       spark.conf.set("spark.graft.kcore.lazyMaxEdges", "0")
       try {
-        val eagerT = traj()
+        var eagerT = Seq.empty[(Int, Long, Long)]
+        val rounds = materializedRounds { eagerT = traj() }
         assert(lazyT === eagerT, s"trial $trial: $edges")
+        assert(rounds === (1 to 6).toSet,
+          s"trial $trial: lazyMaxEdges=0 must materialize every round")
       } finally spark.conf.unset("spark.graft.kcore.lazyMaxEdges")
     }
+    assert(Graph.kcorePeel(star.toDF("x", "y"), k = 2, rounds = 6)
+      .collect().map(_.getLong(2)).toSeq === Seq.fill(6)(0L))
   }
 
   test("k-truss peel: hand graph trajectory and random-graph brute force") {

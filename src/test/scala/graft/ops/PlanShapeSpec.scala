@@ -53,7 +53,7 @@ class PlanShapeSpec extends SparkSpec {
     // the r14 deferred-eval trap, pinned: whole-stage codegen evaluates
     // projected columns at point of USE, so the 1024-multiply per-query
     // LUT fused into the probe→lists fan-out re-evaluates PER OUTPUT
-    // PAIR (measured 120 s). The plan contract is that every mixed_dot
+    // PAIR (measured 120 s). The plan contract is that every codebook_dot
     // projection (the LUT + query⋅centroid tables) sits BENEATH a
     // broadcast exchange — a hash relation materializes its rows once at
     // build time. An AQE decision or a hint flip that moves it onto the
@@ -64,7 +64,7 @@ class PlanShapeSpec extends SparkSpec {
     val df = Vectors.adcScored(spark, sf("sf0.001"))
     df.collect() // finalize AQE so the walked plan is the executed one
     // (node, inside-a-broadcast-exchange-subtree) pairs for every node
-    // whose OWN expressions mention the mixed_dot kernel
+    // whose OWN expressions mention the codebook_dot kernel
     def bearers(p: SparkPlan, inside: Boolean): Seq[(String, Boolean)] = {
       val in = inside || p.isInstanceOf[BroadcastExchangeLike]
       val kids = p match {
@@ -75,14 +75,14 @@ class PlanShapeSpec extends SparkSpec {
       val self =
         if (p.isInstanceOf[org.apache.spark.sql.execution.ProjectExec] &&
             p.asInstanceOf[org.apache.spark.sql.execution.ProjectExec]
-              .projectList.exists(_.toString.contains("mixed_dot")))
+              .projectList.exists(_.toString.contains("codebook_dot")))
           Seq((p.nodeName, in))
         else Seq.empty
       self ++ kids.flatMap(bearers(_, in))
     }
     val found = bearers(df.queryExecution.executedPlan, inside = false)
     assert(found.nonEmpty,
-      "no mixed_dot projection found — the LUT pipeline changed shape; " +
+      "no codebook_dot projection found — the LUT pipeline changed shape; " +
         "update this pin alongside it:\n" +
         df.queryExecution.executedPlan.toString)
     val escaped = found.filterNot(_._2)

@@ -77,7 +77,7 @@ class SimilaritySpec extends SparkSpec {
   private lazy val bruteTop3 = {
     import org.apache.spark.sql.expressions.Window
     val emb = Vectors.sharedEmb(spark, sf("sf0.01"))
-    val dot2 = graft.functions.FloatDotProduct.floatDot _
+    val dot2 = graft.functions.MixedDotProduct.mixedDot _
     val brute = emb.as("q").join(emb.as("n"),
         col("q.vec_id") =!= col("n.vec_id"))
       .select(col("q.vec_id").as("qid"), col("n.vec_id").as("nid"),
@@ -138,161 +138,83 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  /** Driver-side (d, cid) for every centroid, d = (norm2 + |c|²) − 2<x, float(c)>
+    * in the kernel's float-to-double arithmetic order. */
+  private def centroidDists(e: Seq[Float], n2: Double,
+      cs: Array[Array[Double]]): Array[(Double, Int)] =
+    cs.zipWithIndex.map { case (c, i) =>
+      val cn = c.map(v => v * v).sum
+      var dot = 0.0
+      var k = 0
+      val n = math.min(e.length, c.length)
+      while (k < n) { dot += e(k).toDouble * c(k).toFloat.toDouble; k += 1 }
+      (n2 + cn - 2.0 * dot, i)
+    }
+
   test("IVF assignment at nlist=64 is exact argmin (chunked literal expression)") {
-    // 64 centroids = 4 expression chunks + a least() combine: pins that
-    // the chunked codegen path (Vectors.ivfAssignExpr) still computes the
-    // exact argmin the flat nlist=16 expression did — every vector's cid
-    // must equal a driver-side recomputation of min (norm2+|c|^2-2<x,c>,
-    // cid) using the same float-to-double arithmetic order
+    // every vector's cid must equal a driver-side recomputation of
+    // min (norm2+|c|^2-2<x,c>, cid): at nlist=64 over the trained
+    // quantizer, and over 1030 synthetic centroids (past the old
+    // 1024-centroid literal bound — one codebook_nearest at any nlist)
+    def check(rows: Array[org.apache.spark.sql.Row],
+        cs: Array[Array[Double]]): Unit = {
+      assert(rows.nonEmpty)
+      rows.foreach { r =>
+        val best = centroidDists(r.getSeq[Float](1), r.getDouble(2), cs).min
+        assert(r.getInt(3) == best._2, s"vec ${r.getLong(0)}")
+      }
+    }
     spark.conf.set("spark.graft.ivf.nlist", "64")
     try {
       val rows = Vectors.ivfAssigned(spark, sf("sf0.01"))
         .select("vec_id", "embedding", "norm2", "cid").collect()
       val cs = Vectors.ivfCentroids(spark, sf("sf0.01"))
       assert(cs.length == 64)
-      assert(rows.nonEmpty)
       val used = rows.map(_.getInt(3)).distinct
       assert(used.length > 4, s"degenerate quantizer: ${used.length} cells used")
-      rows.foreach { r =>
-        val e = r.getSeq[Float](1)
-        val n2 = r.getDouble(2)
-        val best = cs.zipWithIndex.map { case (c, i) =>
-          val cn = c.map(v => v * v).sum
-          var dot = 0.0
-          var k = 0
-          val n = math.min(e.length, c.length)
-          while (k < n) { dot += e(k).toDouble * c(k).toFloat.toDouble; k += 1 }
-          (n2 + cn - 2.0 * dot, i)
-        }.min
-        assert(r.getInt(3) == best._2, s"vec ${r.getLong(0)}")
-      }
+      check(rows, cs)
     } finally spark.conf.unset("spark.graft.ivf.nlist")
+    val syn = Array.tabulate(1030, 64)((i, d) =>
+      Vectors.planeSign(i, d).toDouble * ((i % 7) + 1) / 7.0)
+    check(Vectors.withCid(Vectors.sharedEmb(spark, dir), syn)
+      .select("vec_id", "embedding", "norm2", "cid").collect(), syn)
   }
 
   test("IVF probe ranking at nlist=64 is the exact top-nprobe (chunked top-k expression)") {
-    // 64 centroids = 4 chunks, each keeping its own top-nprobe before the
-    // union re-sort — pins that chunked top-k == flat top-k (dominance:
-    // any global top-k element is in its chunk's top-k)
-    spark.conf.set("spark.graft.ivf.nlist", "64")
-    try {
-      val cs = Vectors.ivfCentroids(spark, sf("sf0.01"))
+    // each vector's nprobe cids, in order, must equal the driver-side
+    // (d, cid) sort's first six: at nlist=64, and at nlist=2048 (the
+    // 500-vector fixture's deterministic init caps it at 500 centroids),
+    // which then serves end to end through qCosineIvf. Export is off:
+    // non-default knobs would desync the gate's candidate export.
+    val emb = Vectors.sharedEmb(spark, sf("sf0.01"))
+    val byId = emb.select("vec_id", "embedding", "norm2").collect()
+      .map(r => r.getLong(0) -> ((r.getSeq[Float](1), r.getDouble(2))))
+      .toMap
+    def check(cs: Array[Array[Double]]): Unit = {
       val nProbe = 6
-      val got = Vectors.sharedEmb(spark, sf("sf0.01"))
-        .select(org.apache.spark.sql.functions.col("vec_id"),
-          Vectors.ivfRankExpr(cs, nProbe).as("probes"))
-        .collect()
-        .map(r => (r.getLong(0),
-          r.getSeq[org.apache.spark.sql.Row](1).map(_.getInt(1))))
-      val emb = Vectors.sharedEmb(spark, sf("sf0.01"))
-        .select("vec_id", "embedding", "norm2").collect()
-        .map(r => r.getLong(0) -> ((r.getSeq[Float](1), r.getDouble(2))))
-        .toMap
+      val got = emb.select(col("vec_id"), Vectors.ivfNearest(cs, nProbe))
+        .collect().map(r => (r.getLong(0), r.getSeq[Int](1)))
       got.foreach { case (id, cids) =>
-        val (e, n2) = emb(id)
-        val want = cs.zipWithIndex.map { case (c, i) =>
-          val cn = c.map(v => v * v).sum
-          var dot = 0.0
-          var k = 0
-          val n = math.min(e.length, c.length)
-          while (k < n) { dot += e(k).toDouble * c(k).toFloat.toDouble; k += 1 }
-          (n2 + cn - 2.0 * dot, i)
-        }.sorted.take(nProbe).map(_._2).toSeq
+        val (e, n2) = byId(id)
+        val want = centroidDists(e, n2, cs).sorted.take(nProbe).map(_._2).toSeq
         assert(cids == want, s"vec $id")
       }
-    } finally spark.conf.unset("spark.graft.ivf.nlist")
-  }
-
-  test("IVF broadcast-join assignment equals the literal path bit-for-bit") {
-    spark.conf.set("spark.graft.ivf.nlist", "64")
-    try {
-      val cs = Vectors.ivfCentroids(spark, sf("sf0.01"))
-      val emb = Vectors.sharedEmb(spark, sf("sf0.01"))
-      def cids(path: String) = {
-        spark.conf.set("spark.graft.ivf.assignPath", path)
-        try Vectors.withCid(emb, cs).select("vec_id", "cid").collect()
-          .map(r => r.getLong(0) -> r.getInt(1)).toMap
-        finally spark.conf.unset("spark.graft.ivf.assignPath")
-      }
-      assert(cids("join") === cids("literal"))
-      // plan shape: centroid side broadcast, corpus never shuffled
-      // before the argmin's partial aggregate
-      spark.conf.set("spark.graft.ivf.assignPath", "join")
-      val plan =
-        try Vectors.withCid(emb, cs).queryExecution.executedPlan.toString
-        finally spark.conf.unset("spark.graft.ivf.assignPath")
-      assert(plan.contains("BroadcastNestedLoopJoin"), plan.take(1500))
-    } finally spark.conf.unset("spark.graft.ivf.nlist")
-  }
-
-  test("IVF join-path probe sets equal the literal top-nprobe") {
-    spark.conf.set("spark.graft.ivf.nlist", "64")
-    try {
-      val cs = Vectors.ivfCentroids(spark, sf("sf0.01"))
-      val emb = Vectors.sharedEmb(spark, sf("sf0.01"))
-      val viaExpr = emb.select(col("vec_id").as("qid"),
-          explode(Vectors.ivfRankExpr(cs, 6)).as("p"))
-        .select(col("qid"), col("p.cid").as("cid")).collect()
-        .map(r => (r.getLong(0), r.getInt(1))).toSet
-      val viaJoin = Vectors.probesViaJoin(emb, cs, 6)
-        .select("qid", "cid").collect()
-        .map(r => (r.getLong(0), r.getInt(1))).toSet
-      assert(viaJoin === viaExpr)
-      assert(viaJoin.size === 500 * 6)
-    } finally spark.conf.unset("spark.graft.ivf.nlist")
-  }
-
-  test("auto assignment path switches to the broadcast join past the literal bound") {
-    // >1024 synthetic centroids: auto must select the join path (literal
-    // would be a megabyte of plan) and still compute the exact argmin
-    val cs = Array.tabulate(1030, 64)((i, d) =>
-      Vectors.planeSign(i, d).toDouble * ((i % 7) + 1) / 7.0)
-    val emb = Vectors.sharedEmb(spark, dir)
-    val df = Vectors.withCid(emb, cs)
-    assert(df.queryExecution.executedPlan.toString
-      .contains("BroadcastNestedLoopJoin"))
-    val rows = df.select("vec_id", "embedding", "norm2", "cid").collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val e = r.getSeq[Float](1)
-      val n2 = r.getDouble(2)
-      val best = cs.zipWithIndex.map { case (c, i) =>
-        val cn = c.map(v => v * v).sum
-        var dot = 0.0
-        var k = 0
-        val n = math.min(e.length, c.length)
-        while (k < n) { dot += e(k).toDouble * c(k).toFloat.toDouble; k += 1 }
-        (n2 + cn - 2.0 * dot, i)
-      }.min
-      assert(r.getInt(3) == best._2, s"vec ${r.getLong(0)}")
+      val probes = Vectors.probesOf(emb, cs, nProbe).select("qid", "cid")
+        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+      assert(probes === got.flatMap { case (id, cids) => cids.map((id, _)) }.toSet)
+      assert(probes.size === 500 * nProbe)
     }
-  }
-
-  test("nlist=2048 trains and serves through the broadcast-join path") {
-    // 2048 exceeds the old hard reject; on the 500-vector fixture the
-    // deterministic init caps effective centroids at 500, so the join
-    // path is FORCED (auto selects on actual centroid count). Export is
-    // disabled: non-default knobs would desync the gate's fixed-path
-    // candidate export. The assertion is path equivalence end-to-end —
-    // the literal plan at the same knobs must produce identical rows
-    // (so recall is identical too, and the old require() is now a path
-    // selection, not a rejection).
-    spark.conf.set("spark.graft.ivf.nlist", "2048")
     spark.conf.set("spark.graft.oracleExport", "false")
-    spark.conf.set("spark.graft.ivf.assignPath", "join")
     try {
-      val cs = Vectors.ivfCentroids(spark, sf("sf0.01"))
-      assert(cs.length === 500)
-      val viaJoin = Vectors.qCosineIvf(spark, sf("sf0.01")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-      spark.conf.set("spark.graft.ivf.assignPath", "literal")
-      val viaLit = Vectors.qCosineIvf(spark, sf("sf0.01")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-      assert(viaJoin.nonEmpty)
-      assert(viaJoin === viaLit)
+      for (nlist <- Seq("64", "2048")) {
+        spark.conf.set("spark.graft.ivf.nlist", nlist)
+        check(Vectors.ivfCentroids(spark, sf("sf0.01")))
+      }
+      assert(Vectors.ivfCentroids(spark, sf("sf0.01")).length === 500)
+      assert(Vectors.qCosineIvf(spark, sf("sf0.01")).collect().nonEmpty)
     } finally {
       spark.conf.unset("spark.graft.ivf.nlist")
       spark.conf.unset("spark.graft.oracleExport")
-      spark.conf.unset("spark.graft.ivf.assignPath")
     }
   }
 
@@ -510,9 +432,17 @@ class SimilaritySpec extends SparkSpec {
     val wA = Window.partitionBy("qid").orderBy(desc("sim"), asc("nid"))
     val wB = Window.partitionBy("qid").orderBy(asc("ham"), asc("nid"))
     val wF = Window.partitionBy("qid").orderBy(desc("rrf"), asc("nid"))
-    val unfiltered = base
+    val ranked = base
       .withColumn("rk_cos", row_number().over(wA))
       .withColumn("rk_ham", row_number().over(wB))
+    // non-vacuous: some qid group is larger than the bound (65 = k +
+    // 2·top − 1 at k = 60, top = 3) and the filter really drops rows
+    val preBound = 65
+    val maxGroup = base.groupBy("qid").count().agg(max("count")).head().getLong(0)
+    assert(maxGroup > preBound, s"largest qid group has $maxGroup rows")
+    assert(ranked.filter(least(col("rk_cos"), col("rk_ham")) > preBound)
+      .count() > 0, "the pre-filter drops no row")
+    val unfiltered = ranked
       .withColumn("rrf", expr(
         "cast(1000000000000L div (60L + rk_cos) " +
           "+ 1000000000000L div (60L + rk_ham) as bigint)"))
