@@ -105,28 +105,6 @@ object Debug {
       }
       spark.stop(); return
     }
-    if (args.headOption.contains("mrprof")) {
-      // stage-by-stage cost of the pipe MapReduce path:
-      // Debug mrprof <inDir> <mapper> <reducer> <nm> <nr>
-      val Seq(in, m, r, nm, nr) = args.slice(1, 6).toSeq
-      def t(label: String)(body: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = body
-        println(f"[mrprof] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs (n=$n)")
-      }
-      val lines = mr.MapReduceJob.inputLines(spark, in, wholeFiles = false,
-        nm.toInt)
-      println(s"[mrprof] input partitions: ${lines.getNumPartitions}")
-      t("scan only")(lines.count())
-      t("scan+pipe(map)")(lines.pipe(Seq(m)).count())
-      t("scan+map(native tokenize)")(lines.flatMap(
-        _.split("\\s+").filter(_.nonEmpty).map(_ + "\t1")).count())
-      val mapped = lines.pipe(Seq(m))
-      t("...+shuffle")(mr.MapReduceJob.shuffle(mapped, nr.toInt).count())
-      t("...+shuffle+pipe(reduce)")(
-        mr.MapReduceJob.shuffle(mapped, nr.toInt).pipe(Seq(r)).count())
-      spark.stop(); return
-    }
     if (args.headOption.contains("pwtimeq")) {
       // reproduce the bench condition: full prewarm, then time the FIRST
       // run of each query (is the shared-table steady state actually

@@ -404,6 +404,17 @@ object Tables {
       holders.computeIfAbsent(key, _ => new Holder).get(() => build)
   }
 
+  private val counts = new KeyedOnce[Long]
+
+  /** The session's one scalar cache: `df.count()` once per `key`, for
+    * driver-side count jobs a registered query would otherwise re-run on
+    * every invocation over input whose row count cannot change within a
+    * session (prewarmed graph artifacts, a table dir's filtered subset).
+    * A bounded scalar, never a result memo; keys carry the dir so
+    * concurrent dirs never collide. */
+  def cachedCount(key: String)(df: => DataFrame): Long =
+    counts(key)(df.count())
+
   /** Like [[materialize]], but REUSED across queries in the session: when
     * the same `key` (caller's promise that the content is identical —
     * e.g. "same projection of the same table dir") was already

@@ -1,6 +1,6 @@
 package graft.mr
 
-import java.net.{DatagramPacket, DatagramSocket, InetSocketAddress, ServerSocket, Socket, SocketTimeoutException}
+import java.net.{DatagramPacket, DatagramSocket, InetSocketAddress, SocketTimeoutException}
 import java.util.concurrent.LinkedBlockingQueue
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -140,10 +140,7 @@ final class ManagerServer(spark: SparkSession, host: String = "localhost",
   private val workers =
     new java.util.concurrent.CopyOnWriteArrayList[WorkerEntry]()
 
-  private val server = new ServerSocket()
-  server.setReuseAddress(true)
-  server.bind(new InetSocketAddress(host, port))
-  server.setSoTimeout(1000)
+  private val server = WireDispatch.bindServer(host, port)
 
   // UDP heartbeat listener on the SAME host:port as the TCP server
   // (reference UDP_server, manager/__main__.py:106-127)
@@ -166,39 +163,34 @@ final class ManagerServer(spark: SparkSession, host: String = "localhost",
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
+  /** Mark `w` dead under its entry lock (paired with dispatchTask's
+    * claim, r15 ADVICE); a busy worker's in-flight task goes back on the
+    * failed queue for re-dispatch first (ref :62-64, :426-438). Returns
+    * false when `w` was already dead. */
+  private def markDead(w: WorkerEntry): Boolean = w.synchronized {
+    if (w.state == "dead") false
+    else {
+      if (w.state == "busy" && w.currentTask >= 0)
+        failedTasks.add(w.currentTask)
+      w.state = "dead"
+      true
+    }
+  }
+
   /** The reference's connection_refused (manager/__main__.py:57-66):
     * every live worker on that HOST is marked dead (host-only match —
     * reference quirk), a busy one's task is abandoned. */
   private def connectionRefused(workerHost: String): Unit = {
     import scala.jdk.CollectionConverters._
     for (w <- workers.asScala if w.host == workerHost && w.state != "dead")
-      w.synchronized {
-        if (w.state != "dead") {
-          // a busy worker's in-flight task goes back on the failed queue
-          // for re-dispatch (ref :62-64)
-          if (w.state == "busy" && w.currentTask >= 0)
-            failedTasks.add(w.currentTask)
-          println("worker died") // ref :64
-          w.state = "dead"
-        }
-      }
+      if (markDead(w)) println("worker died") // ref :64
   }
 
-  /** Connect back to the worker and send one JSON message, closing after
-    * (the reference's with-socket sendall pattern). */
-  private def sendToWorker(wHost: String, wPort: Int, json: String): Unit = {
-    val s = new Socket()
-    try {
-      s.connect(new InetSocketAddress(wHost, wPort), 1000)
-      s.getOutputStream.write(json.getBytes("UTF-8"))
-      s.getOutputStream.flush()
-    } catch {
-      case _: java.net.ConnectException => connectionRefused(wHost)
-      case _: Exception => connectionRefused(wHost)
-    } finally {
-      try s.close() catch { case _: Exception => () }
-    }
-  }
+  /** Connect back to the worker and send one JSON message; any failure
+    * to reach it is a refused connection. */
+  private def sendToWorker(wHost: String, wPort: Int, json: String): Unit =
+    try WireDispatch.send(wHost, wPort, json)
+    catch { case _: Exception => connectionRefused(wHost) }
 
   private def handleRegister(dict: java.util.Map[String, Object]): Unit = {
     import scala.jdk.CollectionConverters._
@@ -269,12 +261,7 @@ final class ManagerServer(spark: SparkSession, host: String = "localhost",
         // delete + recreate the output dir on receipt (ref :95-101)
         Option(dict.get("output_directory")).map(_.toString).foreach { od =>
           val f = new java.io.File(od)
-          if (f.isDirectory) {
-            def rm(x: java.io.File): Unit = {
-              Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-            }
-            rm(f)
-          }
+          if (f.isDirectory) WireDispatch.deleteRecursive(f)
           f.mkdirs()
         }
         queue.put(dict)
@@ -282,35 +269,9 @@ final class ManagerServer(spark: SparkSession, host: String = "localhost",
     }
   }
 
-  private val acceptThread = new Thread(() => {
-    while (!shutdownFlag) {
-      val client: Socket =
-        try server.accept()
-        catch {
-          case _: SocketTimeoutException => null
-          case _: Exception => null // closed under us during shutdown
-        }
-      if (client != null) {
-        try {
-          client.setSoTimeout(1000)
-          val buf = new java.io.ByteArrayOutputStream()
-          val in = client.getInputStream
-          val chunk = new Array[Byte](4096)
-          var open = true
-          while (open && !shutdownFlag) {
-            val n =
-              try in.read(chunk)
-              catch { case _: SocketTimeoutException => 0 }
-            if (n < 0) open = false
-            else if (n > 0) buf.write(chunk, 0, n)
-          }
-          handleMessage(buf.toString("UTF-8"))
-        } catch { case _: Exception => () }
-        finally client.close()
-      }
-    }
-    server.close()
-  }, "graft-manager-tcp")
+  private val acceptThread = new Thread(
+    () => WireDispatch.acceptLoop(server, shutdownFlag)(handleMessage),
+    "graft-manager-tcp")
 
   private val udpThread = new Thread(() => {
     val buf = new Array[Byte](4096)
@@ -337,17 +298,10 @@ final class ManagerServer(spark: SparkSession, host: String = "localhost",
     import scala.jdk.CollectionConverters._
     while (!shutdownFlag) {
       val now = System.currentTimeMillis()
+      // reference fault_tolerance (ref :426-438)
       for (w <- workers.asScala
            if now - w.lastHeartbeat > heartbeatTimeoutMs && w.state != "dead")
-        w.synchronized { // paired with dispatchTask's claim (r15 ADVICE)
-          if (w.state != "dead") {
-            // reference fault_tolerance (ref :426-438): a silent busy
-            // worker's task is queued for re-dispatch before it dies
-            if (w.state == "busy" && w.currentTask >= 0)
-              failedTasks.add(w.currentTask)
-            w.state = "dead"
-          }
-        }
+        markDead(w)
       try Thread.sleep(faultPollMs)
       catch { case _: InterruptedException => () }
     }
@@ -461,12 +415,7 @@ final class ManagerServer(spark: SparkSession, host: String = "localhost",
       for (i <- 0 until nr if !shutdownFlag) dispatchTask(i, redMsg(i))
       awaitPhase(nr, redMsg)
       if (!shutdownFlag) Thread.sleep(1000) // ref :421
-    } finally {
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-      }
-      rm(tmpdir)
-    }
+    } finally WireDispatch.deleteRecursive(tmpdir)
   }
 
   private val runnerThread = new Thread(() => {
@@ -583,13 +532,7 @@ object ManagerServer {
       case other =>
         throw new IllegalArgumentException(s"unknown option: ${other.head}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = WireDispatch.localSession()
     val srv = new ManagerServer(spark, host, port,
       strictShutdown = strict, dispatchToWorkers = dispatch,
       sharedDir = shared).start()

@@ -24,6 +24,14 @@ import org.apache.spark.sql.SparkSession
   *   - O6 k-way merge → shuffle-read merge (same algorithm as the
   *     reference's `heapq.merge(*files)` at worker/__main__.py:201)
   *
+  * The map and reduce steps are [[MapReduceJob.Stage]]s around that one
+  * shuffle, in any mix: native functions (`_.flatMap(mapper)`,
+  * `_.mapPartitions(reducer)`) or the reference's executables
+  * (`_.pipe(cmd)`: the streaming stdin/stdout contract of
+  * worker/__main__.py:104-125 map, :194-202 reduce — one process per
+  * partition, line-streamed, reduce input sorted with equal keys
+  * contiguous).
+  *
   * Line/key contract is the reference's exactly: a record is one text
   * line; key = substring before the first tab (worker/__main__.py:115);
   * the framework never parses values. Sort order is (key, wholeLine) —
@@ -37,18 +45,24 @@ import org.apache.spark.sql.SparkSession
 final case class MapReduceJob(
     inputDir: String,
     outputDir: String,
-    mapper: String => IterableOnce[String],
-    reducer: Iterator[String] => Iterator[String],
+    mapStage: MapReduceJob.Stage,
+    reduceStage: MapReduceJob.Stage,
     numReducers: Int = 2,
+    numMappers: Int = 2,
     wholeFiles: Boolean = false) {
 
   /** The full dataflow as an RDD of output lines, partitioned exactly as
-    * the reference's reduce tasks would be (partition i = part-{i:05d}). */
+    * the reference's reduce tasks would be (partition i = part-{i:05d}).
+    * `numMappers` is a MINIMUM split count (Hadoop minPartitions): the
+    * reference assigns whole files round-robin to exactly N map tasks
+    * (manager/__main__.py:440-455); byte-based splitting is deliberately
+    * finer (SURVEY.md §7.4) but honors the requested parallelism floor.
+    * `wholeFiles = true` restores the reference's granularity exactly —
+    * see [[MapReduceJob.inputLines]]. */
   def transform(spark: SparkSession): RDD[String] =
-    MapReduceJob.shuffle(
-      MapReduceJob.inputLines(spark, inputDir, wholeFiles).flatMap(mapper),
-      numReducers)
-      .mapPartitions(reducer)
+    MapReduceJob.dataflow(
+      MapReduceJob.inputLines(spark, inputDir, wholeFiles, numMappers),
+      mapStage, reduceStage, numReducers)
 
   /** Run the job: overwrite outputDir with part-{i:05d} text files (the
     * reference deletes + recreates the output dir at job submission,
@@ -66,41 +80,15 @@ final case class MapReduceJob(
   }
 }
 
-/** Executable-compat variant: mapper/reducer are external commands with the
-  * reference's streaming stdin/stdout contract (worker/__main__.py:104-125
-  * map, :194-202 reduce) — one process per partition, line-streamed, reduce
-  * input sorted with equal keys contiguous. */
-final case class PipeMapReduceJob(
-    inputDir: String,
-    outputDir: String,
-    mapperCmd: Seq[String],
-    reducerCmd: Seq[String],
-    numReducers: Int = 2,
-    numMappers: Int = 2,
-    wholeFiles: Boolean = false) {
-
-  /** `numMappers` is a MINIMUM split count (Hadoop minPartitions): the
-    * reference assigns whole files round-robin to exactly N map tasks
-    * (manager/__main__.py:440-455); byte-based splitting is deliberately
-    * finer (SURVEY.md §7.4) but honors the requested parallelism floor.
-    * `wholeFiles = true` restores the reference's granularity exactly —
-    * see [[MapReduceJob.inputLines]]. */
-  def transform(spark: SparkSession): RDD[String] =
-    MapReduceJob.shuffle(
-      MapReduceJob.inputLines(spark, inputDir, wholeFiles, numMappers)
-        .pipe(mapperCmd),
-      numReducers)
-      .pipe(reducerCmd)
-
-  /** See [[MapReduceJob.run]] for `exactPartNames`. */
-  def run(spark: SparkSession, exactPartNames: Boolean = false): Unit = {
-    MapReduceJob.clearDir(spark, outputDir)
-    transform(spark).saveAsTextFile(outputDir)
-    if (exactPartNames) MapReduceJob.normalizePartNames(spark, outputDir)
-  }
-}
-
 object MapReduceJob {
+
+  /** A map or reduce step: lines in, lines out. */
+  type Stage = RDD[String] => RDD[String]
+
+  /** The one dataflow: map stage → [[shuffle]] → reduce stage. */
+  def dataflow(lines: RDD[String], mapStage: Stage, reduceStage: Stage,
+      numReducers: Int): RDD[String] =
+    reduceStage(shuffle(mapStage(lines), numReducers))
 
   /** O4+O5+O6 in one shuffle: MD5-mod partition on the tab key, sort by
     * WHOLE LINE within each partition (the reference's own
@@ -112,7 +100,7 @@ object MapReduceJob {
     * partitioner rework, tools/ref_throughput.py). */
   def shuffle(mapped: RDD[String], numReducers: Int): RDD[String] =
     mapped.map(line => (line, null))
-      .repartitionAndSortWithinPartitions(new Md5LinePartitioner(numReducers))
+      .repartitionAndSortWithinPartitions(new Md5Partitioner(numReducers))
       .mapPartitions(_.map(_._1), preservesPartitioning = true)
 
   /** O1/O2 input scan. Default: byte-split text lines (Hadoop splits —
@@ -124,7 +112,7 @@ object MapReduceJob {
     * order. Costs memory proportional to the largest file (wholeTextFiles
     * materializes each file), which is exactly why byte-splitting is the
     * default at 100 TB. */
-  private[graft] def inputLines(spark: SparkSession, inputDir: String,
+  private[mr] def inputLines(spark: SparkSession, inputDir: String,
       wholeFiles: Boolean, minPartitions: Int = 2): RDD[String] =
     if (wholeFiles)
       spark.sparkContext.wholeTextFiles(inputDir, minPartitions)

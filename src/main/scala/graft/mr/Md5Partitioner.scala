@@ -9,42 +9,24 @@ import org.apache.spark.Partitioner
   * Spark's default [[org.apache.spark.HashPartitioner]] gives the same
   * *semantics* (equal keys co-located); this partitioner additionally gives
   * the same *placement* as the reference, so part-file contents match
-  * byte-for-byte. Keys are the (tabKey, wholeLine) pairs produced by
-  * [[MapReduceJob]]; only the tab key feeds the hash, exactly as the
-  * reference hashes `line.split("\t")[0]`.
-  */
+  * byte-for-byte. Keys are WHOLE LINES (the plain String records
+  * [[MapReduceJob.shuffle]] carries); only the tab key feeds the hash,
+  * exactly as the reference hashes `line.split("\t")[0]`. Plain line
+  * records instead of ((key, line), unit) tuples: the tuple wrapping
+  * tripled per-record shuffle serialization (measured in the
+  * tools/ref_throughput.py head-to-head). */
 class Md5Partitioner(override val numPartitions: Int) extends Partitioner {
   require(numPartitions > 0, s"numPartitions must be positive: $numPartitions")
 
-  override def getPartition(key: Any): Int = key match {
-    case (tabKey: String, _) => Md5Partitioner.partition(tabKey, numPartitions)
-    case k => Md5Partitioner.partition(String.valueOf(k), numPartitions)
-  }
+  override def getPartition(key: Any): Int =
+    Md5Partitioner.partition(
+      MapReduceJob.tabKey(String.valueOf(key)), numPartitions)
 
   override def equals(other: Any): Boolean = other match {
     case p: Md5Partitioner => p.numPartitions == numPartitions
     case _ => false
   }
   override def hashCode: Int = numPartitions
-}
-
-/** [[Md5Partitioner]] over WHOLE LINES: extracts the tab key itself, so
-  * the shuffle can carry plain String records (one line each) instead of
-  * ((key, line), unit) tuples — the tuple wrapping tripled per-record
-  * serialization cost on the shuffle path (measured in the
-  * tools/ref_throughput.py head-to-head). Placement is byte-identical:
-  * same MD5-mod of the same tab key. */
-class Md5LinePartitioner(override val numPartitions: Int)
-    extends Partitioner {
-  require(numPartitions > 0, s"numPartitions must be positive: $numPartitions")
-  override def getPartition(key: Any): Int =
-    Md5Partitioner.partition(
-      MapReduceJob.tabKey(String.valueOf(key)), numPartitions)
-  override def equals(other: Any): Boolean = other match {
-    case p: Md5LinePartitioner => p.numPartitions == numPartitions
-    case _ => false
-  }
-  override def hashCode: Int = ~numPartitions
 }
 
 object Md5Partitioner {

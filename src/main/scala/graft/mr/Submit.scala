@@ -41,10 +41,10 @@ object Submit {
   // executables run DIRECTLY (shebang honored), exactly like the
   // reference workers exec them — wrapping in /bin/sh would break any
   // non-shell mapper (e.g. a python script)
-  private def job(a: Args): PipeMapReduceJob = PipeMapReduceJob(
+  private def job(a: Args): MapReduceJob = MapReduceJob(
     inputDir = a.input, outputDir = a.output,
-    mapperCmd = Seq(new java.io.File(a.mapper).getAbsolutePath),
-    reducerCmd = Seq(new java.io.File(a.reducer).getAbsolutePath),
+    mapStage = _.pipe(Seq(new java.io.File(a.mapper).getAbsolutePath)),
+    reduceStage = _.pipe(Seq(new java.io.File(a.reducer).getAbsolutePath)),
     numReducers = a.numReducers, numMappers = a.numMappers)
 
   /** Cluster-lifecycle subcommands mirroring the reference's
@@ -97,13 +97,6 @@ object Submit {
       println(s"unknown lifecycle command: $other"); 1
   }
 
-  /** Multi-job FIFO submission mirroring the reference manager's queue
-    * (reference manager/__main__.py:104,215-222: submitted jobs append to
-    * a FIFO queue and run strictly one at a time, each under an
-    * incrementing job id): argv groups separated by `--then` run
-    * sequentially in submission order. Under Spark the in-session
-    * equivalent is the FIFO scheduler; this surfaces the reference's
-    * multi-job CLI semantics over it. Returns each job's output dir. */
   private def splitQueue(argv: Seq[String]): Vector[Vector[String]] = {
     val jobs = argv.foldLeft(Vector(Vector.empty[String])) {
       case (acc, "--then") => acc :+ Vector.empty
@@ -118,18 +111,18 @@ object Submit {
     jobs
   }
 
-  def runQueue(spark: SparkSession, argv: Seq[String]): Seq[String] =
-    splitQueue(argv).zipWithIndex.map { case (jargv, i) =>
-      println(s"running job $i") // mirrors manager/__main__.py:216
-      run(spark, jargv)
-    }
-
-  /** main's queue path: like the reference manager, a failed job doesn't
-    * stop the FIFO — later jobs still run — but the process exit code
-    * reports the failure (1 if any queued job failed). */
+  /** Multi-job FIFO submission mirroring the reference manager's queue
+    * (reference manager/__main__.py:104,215-222: submitted jobs append to
+    * a FIFO queue and run strictly one at a time, each under an
+    * incrementing job id): argv groups separated by `--then` run
+    * sequentially in submission order. Under Spark the in-session
+    * equivalent is the FIFO scheduler; this surfaces the reference's
+    * multi-job CLI semantics over it. Like the reference manager, a failed
+    * job doesn't stop the FIFO — later jobs still run — but the returned
+    * exit code reports the failure (1 if any queued job failed). */
   private[mr] def runQueueCli(spark: SparkSession, argv: Seq[String]): Int =
     splitQueue(argv).zipWithIndex.map { case (jargv, i) =>
-      println(s"running job $i")
+      println(s"running job $i") // mirrors manager/__main__.py:216
       // NonFatal only: a fatal JVM error (OOM, thread death) must abort the
       // queue, not keep scheduling jobs into a possibly corrupted JVM.
       // e.toString, not getMessage — getMessage is null for e.g. bare NPEs.
@@ -154,13 +147,7 @@ object Submit {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = WireDispatch.localSession()
     val code =
       try {
         if (args.headOption.exists(Set("start", "stop", "status", "restart")))

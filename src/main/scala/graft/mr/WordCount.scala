@@ -23,13 +23,19 @@ object WordCount {
     }
 
   def job(inputDir: String, outputDir: String, numReducers: Int = 2): MapReduceJob =
-    MapReduceJob(inputDir, outputDir, mapper, reducer, numReducers)
+    MapReduceJob(inputDir, outputDir, _.flatMap(mapper),
+      _.mapPartitions(reducer), numReducers)
 
-  /** Word count over an already-loaded RDD of text lines (same dataflow as
-    * [[job]] minus the directory scan) surfaced as a (word, n) DataFrame. */
-  def countWords(spark: SparkSession, lines: RDD[String], numReducers: Int): DataFrame = {
-    val reduced = MapReduceJob.shuffle(lines.flatMap(mapper), numReducers)
-      .mapPartitions(reducer)
+  /** Word count over an already-loaded RDD of text lines (the same
+    * [[MapReduceJob.dataflow]] as [[job]] minus the directory scan)
+    * surfaced as a (word, n) DataFrame. The stages default to the native
+    * mapper/reducer; the executable twin passes `_.pipe(cmd)` stages. */
+  def countWords(spark: SparkSession, lines: RDD[String], numReducers: Int,
+      mapStage: MapReduceJob.Stage = _.flatMap(mapper),
+      reduceStage: MapReduceJob.Stage = _.mapPartitions(reducer))
+      : DataFrame = {
+    val reduced =
+      MapReduceJob.dataflow(lines, mapStage, reduceStage, numReducers)
     import spark.implicits._
     reduced.map { l =>
       val k = MapReduceJob.tabKey(l)
@@ -92,14 +98,10 @@ object MrQueries {
     val reduceSh = execScript(spark, "wc_reduce.sh")
     val lines = graft.Tables(spark, dir, "documents")
       .select("text").rdd.map(_.getString(0))
-    val reduced = MapReduceJob.shuffle(
-        lines.pipe(Seq("/bin/sh", mapSh.getAbsolutePath)), 32)
-      .pipe(Seq("/bin/sh", reduceSh.getAbsolutePath))
-    import spark.implicits._
-    reduced.map { l =>
-      val k = MapReduceJob.tabKey(l)
-      (k, l.substring(k.length + 1).toLong)
-    }.toDF("word", "n").orderBy("word")
+    WordCount.countWords(spark, lines, numReducers = 32,
+        _.pipe(Seq("/bin/sh", mapSh.getAbsolutePath)),
+        _.pipe(Seq("/bin/sh", reduceSh.getAbsolutePath)))
+      .orderBy("word")
   }
 
   /** Word count through the SQL `TRANSFORM ... USING` surface — the

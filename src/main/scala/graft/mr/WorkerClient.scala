@@ -1,9 +1,10 @@
 package graft.mr
 
 import java.io.{BufferedReader, BufferedWriter, File, InputStreamReader, OutputStreamWriter}
-import java.net.{DatagramPacket, DatagramSocket, InetAddress, InetSocketAddress, ServerSocket, Socket, SocketTimeoutException}
+import java.net.{DatagramPacket, DatagramSocket, InetAddress}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
 
 /** Worker-side wire client: the inverse of [[ManagerServer]]'s dispatch
@@ -54,7 +55,8 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
   @volatile private var shutdownFlag = false
   @volatile private var killed = false
   private val inflight = new AtomicReference[Process](null)
-  private val receivedCount = new AtomicInteger(0)
+  // (message_type, task_id) of every task message, in arrival order
+  private val received = new ConcurrentLinkedQueue[(String, String)]()
   private val heartbeatsStarted = new AtomicBoolean(false)
   private val mapSlot =
     new AtomicReference[java.util.Map[String, Object]](null)
@@ -62,15 +64,17 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
     new AtomicReference[java.util.Map[String, Object]](null)
   private val tasksDone = new AtomicInteger(0)
 
-  private val server = new ServerSocket()
-  server.setReuseAddress(true)
-  server.bind(new InetSocketAddress(host, port))
-  server.setSoTimeout(1000)
+  private val server = WireDispatch.bindServer(host, port)
 
   def boundPort: Int = server.getLocalPort
   def isShutdown: Boolean = shutdownFlag
   def completedTasks: Int = tasksDone.get
-  def receivedTasks: Int = receivedCount.get
+  def receivedTasks: Int = received.size
+  /** (message_type, task_id) of every task received — test probe. */
+  def receivedTaskLog: Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    received.asScala.toSeq
+  }
   def heartbeating: Boolean = heartbeatsStarted.get
 
   private def checkKilled(): Unit =
@@ -78,14 +82,8 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
 
   // ---- outbound messages ----
 
-  private def sendToManager(json: String): Unit = {
-    val s = new Socket()
-    try {
-      s.connect(new InetSocketAddress(managerHost, managerPort), 1000)
-      s.getOutputStream.write(json.getBytes(UTF_8))
-      s.getOutputStream.flush()
-    } finally { try s.close() catch { case _: Exception => () } }
-  }
+  private def sendToManager(json: String): Unit =
+    WireDispatch.send(managerHost, managerPort, json)
 
   private def idMsg(msgType: String): String =
     mapper.writeValueAsString(java.util.Map.of(
@@ -163,7 +161,7 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
         Files.move(f.toPath, Paths.get(outDir, f.getName),
           StandardCopyOption.REPLACE_EXISTING)
       }
-    } finally deleteRecursive(tmpdir.toFile)
+    } finally WireDispatch.deleteRecursive(tmpdir.toFile)
     sendFinished(taskId)
   }
 
@@ -196,7 +194,7 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
       checkKilled()
       Files.move(outFile.toPath, Paths.get(outDir, outFile.getName),
         StandardCopyOption.REPLACE_EXISTING)
-    } finally deleteRecursive(tmpdir.toFile)
+    } finally WireDispatch.deleteRecursive(tmpdir.toFile)
     sendFinished(taskId)
   }
 
@@ -237,11 +235,6 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
     out.toArray
   }
 
-  private def deleteRecursive(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursive))
-    f.delete(); ()
-  }
-
   // ---- threads ----
 
   private val heartbeatThread = new Thread(() => {
@@ -255,6 +248,13 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
     finally sock.close()
   }, "graft-worker-heartbeat")
 
+  private def queueTask(msgType: String,
+      slot: AtomicReference[java.util.Map[String, Object]],
+      dict: java.util.Map[String, Object]): Unit = {
+    slot.set(dict)
+    received.add((msgType, String.valueOf(dict.get("task_id")))); ()
+  }
+
   private def handleMessage(text: String): Unit = {
     val dict =
       try mapper.readValue(text, classOf[java.util.Map[String, Object]])
@@ -266,40 +266,15 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
           heartbeatThread.setDaemon(true)
           heartbeatThread.start()
         }
-      case "new_map_task" =>
-        mapSlot.set(dict); receivedCount.incrementAndGet(); ()
-      case "new_reduce_task" =>
-        reduceSlot.set(dict); receivedCount.incrementAndGet(); ()
+      case "new_map_task" => queueTask("new_map_task", mapSlot, dict)
+      case "new_reduce_task" => queueTask("new_reduce_task", reduceSlot, dict)
       case _ => ()
     }
   }
 
   private val acceptThread = new Thread(() => {
     sendRegistration() // after bind+listen, before the accept loop (ref :327)
-    while (!shutdownFlag) {
-      val client: Socket =
-        try server.accept()
-        catch { case _: Exception => null }
-      if (client != null) {
-        try {
-          client.setSoTimeout(1000)
-          val buf = new java.io.ByteArrayOutputStream()
-          val in = client.getInputStream
-          val chunk = new Array[Byte](4096)
-          var open = true
-          while (open && !shutdownFlag) {
-            val n =
-              try in.read(chunk)
-              catch { case _: SocketTimeoutException => 0 }
-            if (n < 0) open = false
-            else if (n > 0) buf.write(chunk, 0, n)
-          }
-          handleMessage(buf.toString("UTF-8"))
-        } catch { case _: Exception => () }
-        finally client.close()
-      }
-    }
-    server.close()
+    WireDispatch.acceptLoop(server, shutdownFlag)(handleMessage)
   }, "graft-worker-tcp")
 
   private val runJobThread = new Thread(() => {

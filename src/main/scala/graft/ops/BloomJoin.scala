@@ -78,9 +78,10 @@ object BloomJoin {
     // Count-scaled, the sketch is a few KB at sf0.1 and grows exactly
     // with the subset at 100 TB. The floor keeps fpp sane on tiny SFs;
     // the final exact join makes the filter semantically transparent at
-    // ANY sizing, so results are unchanged.
+    // ANY sizing, so results are unchanged. The count is session-cached
+    // per dir: only the first invocation pays its scan.
     val bloom = bloomOf(sel, "o_orderkey",
-      math.max(sel.count(), 1024L))
+      math.max(Tables.cachedCount(s"bloom-sel:$dir")(sel), 1024L))
     Tables(spark, dir, "lineitem")
       .select("l_orderkey", "l_returnflag", "l_extendedprice", "l_discount")
       .filter(mightContain(bloom, "l_orderkey"))

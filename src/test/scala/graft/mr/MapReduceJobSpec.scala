@@ -81,8 +81,8 @@ class MapReduceJobSpec extends SparkSpec {
     val reduceSh = Paths.get(getClass.getResource("/mr/exec/wc_reduce.sh").toURI).toString
 
     val nativeOut = WordCount.job(in, tmpDir("mr-nat") + "/o", 3)
-    val pipeOut = PipeMapReduceJob(in, tmpDir("mr-pipe") + "/o",
-      Seq("/bin/sh", mapSh), Seq("/bin/sh", reduceSh), 3)
+    val pipeOut = MapReduceJob(in, tmpDir("mr-pipe") + "/o",
+      _.pipe(Seq("/bin/sh", mapSh)), _.pipe(Seq("/bin/sh", reduceSh)), 3)
 
     val nativeLines = nativeOut.transform(spark).collect().sorted
     val pipeLines = pipeOut.transform(spark).collect().sorted

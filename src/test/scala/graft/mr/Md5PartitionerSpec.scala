@@ -35,11 +35,19 @@ class Md5PartitionerSpec extends AnyFunSuite {
     assert(result.passed, result.status.toString)
   }
 
-  test("pair keys hash only the tab key") {
+  test("line records hash only the tab key; equal R means equal partitioners") {
     val part = new Md5Partitioner(16)
-    assert(part.getPartition(("hello", "hello\tanything")) ===
+    assert(part.getPartition("hello\tanything") ===
       Md5Partitioner.partition("hello", 16))
-    assert(part.getPartition(("hello", "hello\tother")) ===
-      part.getPartition(("hello", "hello\tanything")))
+    assert(part.getPartition("hello\tother") ===
+      Md5Partitioner.partition("hello", 16))
+    // a line with no tab is its own key
+    assert(part.getPartition("hello world") ===
+      Md5Partitioner.partition("hello world", 16))
+    // Spark compares partitioners to skip re-shuffles: same R, same one
+    val twin = new Md5Partitioner(16)
+    assert(part === twin)
+    assert(part.hashCode === twin.hashCode)
+    assert(part !== new Md5Partitioner(8))
   }
 }

@@ -89,9 +89,19 @@ class SubmitSpec extends SparkSpec {
     val mapSh = stageExecutable("/mr/exec/wc_map.sh")
     val reduceSh = stageExecutable("/mr/exec/wc_reduce.sh")
     val job = Seq("-i", in, "-m", mapSh, "-r", reduceSh, "--nreducers", "1")
-    val outs = Submit.runQueue(spark,
-      (job ++ Seq("-o", out1)) ++ Seq("--then") ++ (job ++ Seq("-o", out2)))
-    assert(outs === Seq(out1, out2)) // FIFO: submission order preserved
+    val log = new java.io.ByteArrayOutputStream()
+    val code = Console.withOut(log) {
+      Submit.runQueueCli(spark,
+        (job ++ Seq("-o", out1)) ++ Seq("--then") ++ (job ++ Seq("-o", out2)))
+    }
+    assert(code === 0)
+    // FIFO: submission order preserved, one job's summary after another
+    val lines = log.toString("UTF-8").linesIterator.toSeq
+    assert(lines.filter(_.startsWith("running job")) ===
+      Seq("running job 0", "running job 1"))
+    val outs = lines.filter(_.startsWith("output directory"))
+      .map(_.stripPrefix("output directory").trim)
+    assert(outs === Seq(out1, out2))
     Seq(out1, out2).foreach { o =>
       val counts = readAll(o).map { l =>
         val Array(k, v) = l.split("\t", 2); (k, v.toLong)
@@ -170,12 +180,12 @@ class SubmitSpec extends SparkSpec {
 
   test("--then with an empty job group is rejected up front") {
     val e = intercept[IllegalArgumentException](
-      Submit.runQueue(spark, Seq("--then")))
+      Submit.runQueueCli(spark, Seq("--then")))
     assert(e.getMessage.contains("empty job group"))
     intercept[IllegalArgumentException](
-      Submit.runQueue(spark, Seq("-i", "x", "--then")))
+      Submit.runQueueCli(spark, Seq("-i", "x", "--then")))
     intercept[IllegalArgumentException](
-      Submit.runQueue(spark, Seq("--then", "-i", "x")))
+      Submit.runQueueCli(spark, Seq("--then", "-i", "x")))
   }
 
   test("queue CLI exits nonzero on a failed job but still runs later jobs") {

@@ -341,4 +341,73 @@ class WorkerClientSpec extends SparkSpec {
         "our manager's forwarded shutdown never reached the workers")
     }
   }
+
+  test("own manager, own workers: a worker killed mid-map hands its task_id to the survivor; output byte-identical to Submit") {
+    val mapSh = stageExecutable("/mr/exec/wc_map.sh")
+    val reduceSh = stageExecutable("/mr/exec/wc_reduce.sh")
+    // the same map output as wc_map.sh, late enough to kill mid-task
+    val mapSlow = {
+      val f = Files.createTempFile("wc-slow-map", ".sh")
+      Files.writeString(f, s"#!/bin/sh\nsleep 3\nexec /bin/sh $mapSh\n")
+      f.toFile.setExecutable(true)
+      f.toString
+    }
+    val in = tmpDir("wkr-own-kill-in")
+    Files.writeString(Paths.get(in, "f1.txt"),
+      "the quick brown fox\nthe lazy dog\n")
+    Files.writeString(Paths.get(in, "f2.txt"), "the dog barks\nquick quick fox\n")
+    Files.writeString(Paths.get(in, "f3.txt"), "lazy lazy lazy\n")
+    val expectOut = tmpDir("wkr-own-kill-exp") + "/exp"
+    Submit.run(spark, Seq("-i", in, "-o", expectOut, "-m", mapSh,
+      "-r", reduceSh, "--nmappers", "2", "--nreducers", "2"))
+    val out = tmpDir("wkr-own-kill-out") + "/got"
+    // workers heartbeat every 200 ms; 1.5 s of silence is death
+    val srv = new ManagerServer(spark, port = 0, dispatchToWorkers = true,
+      heartbeatTimeoutMs = 1500, faultPollMs = 100, workerPollMs = 100,
+      sharedDir = Some(System.getProperty("java.io.tmpdir"))).start()
+    val ws = Seq.fill(2)(new WorkerClient(port = 0,
+      managerPort = srv.boundPort, heartbeatMs = 200).start())
+    try {
+      val t0 = System.currentTimeMillis()
+      while (!ws.forall(_.heartbeating) &&
+        System.currentTimeMillis() - t0 < 20000) Thread.sleep(100)
+      assert(ws.forall(_.heartbeating))
+      send(srv.boundPort, s"""{"message_type": "new_manager_job",
+        "input_directory": "$in", "output_directory": "$out",
+        "mapper_executable": "$mapSlow", "reducer_executable": "$reduceSh",
+        "num_mappers": 2, "num_reducers": 2}""")
+      // both workers get one map task each; kill one mid-executable
+      val t1 = System.currentTimeMillis()
+      while (!ws.forall(_.receivedTasks >= 1) &&
+        System.currentTimeMillis() - t1 < 20000) Thread.sleep(50)
+      assert(ws.forall(_.receivedTasks >= 1), "map tasks never dispatched")
+      val Seq(victim, survivor) = ws
+      val killedTask = victim.receivedTaskLog.head
+      assert(killedTask._1 === "new_map_task")
+      Thread.sleep(300) // let the slow mapper start
+      victim.kill()
+      assert(victim.completedTasks === 0, "kill was not mid-task")
+      val expect = (0 to 1).map { i =>
+        Files.readAllBytes(Paths.get(expectOut, f"part-$i%05d")).toSeq
+      }
+      def gotEqual: Boolean = (0 to 1).forall { i =>
+        val p = Paths.get(out, f"part-$i%05d")
+        Files.exists(p) && Files.readAllBytes(p).toSeq == expect(i)
+      }
+      val t2 = System.currentTimeMillis()
+      while (!gotEqual && System.currentTimeMillis() - t2 < 60000)
+        Thread.sleep(200)
+      assert(gotEqual, "output after the re-dispatch differs from Submit's")
+      // the survivor inherited the SAME map task_id, then ran both reduces
+      val survivorMaps = survivor.receivedTaskLog.filter(_._1 == "new_map_task")
+      assert(survivorMaps.size === 2, survivor.receivedTaskLog)
+      assert(survivorMaps.last === killedTask, survivor.receivedTaskLog)
+      assert(srv.workerStates.map(_._3).count(_ == "dead") === 1)
+      assert(srv.failedJobCount === 0)
+    } finally {
+      send(srv.boundPort, """{"message_type": "shutdown"}""")
+      srv.awaitTermination()
+      ws.foreach(_.kill())
+    }
+  }
 }
