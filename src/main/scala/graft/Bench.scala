@@ -190,21 +190,16 @@ object Bench {
     * q_stream_join): latency-bound — micro-batch planning, state-store
     * commits, trigger drains — so under escalation they run as a
     * parallel latency group whose wall-clock is ~the slowest gate, not
-    * the sum. Each is self-contained: UUID-named memory sink, own
-    * checkpoint dir, shared staging dirs are read-only after prewarm. */
+    * the sum. Each is self-contained: its stream runs through
+    * `EventsStream.drain` in a child session (its confs never touch the
+    * shared session's), with its own checkpoint dir; the shared staging
+    * dirs are read-only after prewarm. */
   private[graft] val streamGates = Set(
     "q_stream_dedup", "q_stream_restart", "q_stream_incremental",
     "q_stream_tws", "q_stream_join_live", "q_stream_topk",
     "q_stream_late", "q_stream_sink", "q_stream_state_metrics",
     "q_stream_static_join", "q_stream_outer_join", "q_stream_session",
     "q_stream_dim_refresh", "q_stream_cdc_apply", "q_stream_phash")
-
-  /** Queries that mutate session-global conf during execution
-    * (q_autosalt_agg toggles the optimizer-rule gate): excluded from
-    * lane parallelism — they run sequentially even under escalation so
-    * a concurrent query can never be optimized inside their conf
-    * scope. */
-  private[graft] val laneSolo = Set("q_autosalt_agg", "q_autosalt_avg")
 
   /** Codegen/JIT warmup targets, run at the TINY sf in the background
     * pool (a first execution pays Janino compilation + JIT — measured
@@ -617,27 +612,6 @@ object Bench {
     @volatile var stop = false
 
     type Fn = (SparkSession, String) => org.apache.spark.sql.DataFrame
-    // Session-conf scope fence (found by the r16 2.9× burner drill):
-    // q_autosalt_agg/avg enable an OPTIMIZER RULE session-wide for
-    // their scope. laneSolo keeps them out of lane concurrency, but
-    // the EARLY-LAUNCHED stream-gate thread still overlapped them — a
-    // gate stream whose run 1 PLANNED inside the AutoSalt scope
-    // checkpointed a salted TWO-stage aggregate, and its restart
-    // (outside the scope) planned one stage: Spark 4 fails the restart
-    // with STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA.
-    // (Batch queries are safe — AutoSalt is result-identical — only
-    // cross-restart streaming plans are scope-sensitive.) Fence:
-    // conf-toggling queries take the WRITE lock, stream gates the READ
-    // lock (gates stay mutually concurrent under escalation).
-    val confScope = new java.util.concurrent.locks.ReentrantReadWriteLock()
-    def withConfScope[A](name: String)(body: => A): A = {
-      val l: java.util.concurrent.locks.Lock =
-        if (laneSolo(name)) confScope.writeLock()
-        else if (streamGates(name)) confScope.readLock()
-        else null
-      if (l == null) body
-      else { l.lock(); try body finally l.unlock() }
-    }
     // inflation samples and escalation decisions only count once the
     // background chains are DONE: while they run, the cheap pure prefix
     // is self-contended ~2x its committed anchors (measured: a quiet run
@@ -667,16 +641,14 @@ object Bench {
       }
       val cleanSample = chainsDone
       var ok = true
-      // the scope fence is taken OUTSIDE the timer so a gate that waits
-      // out an in-flight autosalt scope isn't charged the wait
-      val sec = withConfScope(name) { timed {
+      val sec = timed {
         try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         catch { case e: Throwable =>
           lock.synchronized { failed += name }
           ok = false
           System.err.println(s"[bench] $name failed (pass $p): ${e.getMessage}")
         }
-      } }
+      }
       // A failed run's duration is the time-to-crash, not the query's
       // cost — letting it into samples deflates the median AND the
       // pass-2+ budget estimate (1.5× of ~0 never triggers the stop).
@@ -722,8 +694,7 @@ object Bench {
 
     /** Two-lane runner for the escalated pass-1 tail: both lanes pull
       * from one queue; per-query wall times stay real (self-contention
-      * included — flagged via lanes_n). Lane-solo queries were peeled
-      * off by the caller. */
+      * included — flagged via lanes_n). */
     def runLanes(queue: Seq[(String, Fn)], p: Int): Unit = {
       val it = new java.util.concurrent.ConcurrentLinkedQueue[(String, Fn)]
       queue.foreach(it.add)
@@ -751,11 +722,10 @@ object Bench {
 
     /** Stream-gate latency group: sequential when on-budget (headline
       * medians stay directly comparable to the committed anchors);
-      * parallel under escalation — q_stream_tws runs first ALONE (it
-      * swaps the session state-store provider conf), then the rest
-      * concurrently under a group-scoped state-partition conf so the
-      * gates' own set/restore of spark.sql.shuffle.partitions is a
-      * no-op (set 4 → restore 4) instead of a restore race. */
+      * parallel under escalation — every gate on a 4-thread pool, each
+      * sample flagged contended. No gate writes the shared session's
+      * conf (each drains in its own child session), so the group needs
+      * no ordering and no conf of its own. */
     def runGates(gates: Seq[(String, Fn)], parallel: Boolean, p: Int): Unit = {
       if (!parallel) {
         for ((n, fn) <- gates if !stop) {
@@ -764,36 +734,20 @@ object Bench {
         }
       } else {
         streamPar = true
-        val key = "spark.sql.shuffle.partitions"
-        val orig = spark.conf.get(key)
-        spark.conf.set(key, spark.conf.get("spark.graft.stream.parts", "4"))
-        // gates that swap the session-global state-store provider run
-        // solo, before the concurrent rest
-        val providerSolo = Set("q_stream_tws", "q_stream_state_metrics")
-        try {
-          // the whole parallel group runs under the group-scoped conf
-          // (and possibly concurrent with the lane tail) — every sample
-          // in it is contended, including the provider-solo prefix
-          gates.filter(g => providerSolo(g._1)).foreach { case (n, fn) =>
-            if (!stop && elapsedSec < hardFuseSec)
-              runOne(n, fn, p, contended = true)
-          }
-          val rest = gates.filterNot(g => providerSolo(g._1))
-          val gatePool = Executors.newFixedThreadPool(4)
-          val fs = rest.map { case (n, fn) =>
-            gatePool.submit(new Runnable {
-              def run(): Unit = {
-                spark.sparkContext.setLocalProperty(
-                  "spark.scheduler.pool", "bench")
-                if (!stop && elapsedSec < hardFuseSec)
-                  runOne(n, fn, p, contended = true)
-                else stop = true
-              }
-            })
-          }
-          fs.foreach(_.get())
-          gatePool.shutdown()
-        } finally spark.conf.set(key, orig)
+        val gatePool = Executors.newFixedThreadPool(4)
+        val fs = gates.map { case (n, fn) =>
+          gatePool.submit(new Runnable {
+            def run(): Unit = {
+              spark.sparkContext.setLocalProperty(
+                "spark.scheduler.pool", "bench")
+              if (!stop && elapsedSec < hardFuseSec)
+                runOne(n, fn, p, contended = true)
+              else stop = true
+            }
+          })
+        }
+        fs.foreach(_.get())
+        gatePool.shutdown()
       }
     }
 
@@ -884,14 +838,7 @@ object Bench {
             queue = maybeEscalate(queue.tail, depOrd)
           }
         }
-        if (!stop && escalated && queue.nonEmpty) {
-          val (solo, laned) = queue.partition(q => laneSolo(q._1))
-          solo.foreach { case (n, fn) =>
-            // sequential, but possibly concurrent with the early gate
-            // thread — contended whenever that thread is live
-            if (!stop) runOne(n, fn, p, contended = gatesLaunched.get) }
-          runLanes(laned, p)
-        }
+        if (!stop && escalated && queue.nonEmpty) runLanes(queue, p)
         // --- chain barrier (the only time pass 1 waits on prewarm) ---
         if (!stop) {
           val tb = System.nanoTime()
@@ -912,14 +859,7 @@ object Bench {
               queue = maybeEscalate(queue.tail, Nil)
             }
           }
-          if (!stop && escalated && queue.nonEmpty) {
-            val (solo, laned) = queue.partition(q => laneSolo(q._1))
-            solo.foreach { case (n, fn) =>
-            // sequential, but possibly concurrent with the early gate
-            // thread — contended whenever that thread is live
-            if (!stop) runOne(n, fn, p, contended = gatesLaunched.get) }
-            runLanes(laned, p)
-          }
+          if (!stop && escalated && queue.nonEmpty) runLanes(queue, p)
         }
         // --- stream gates (joined if already launched early) ---
         if (gatesLaunched.get) {

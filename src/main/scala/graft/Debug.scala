@@ -229,22 +229,22 @@ object Debug {
       java.nio.file.Files.copy(
         java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
         dir.resolve("events.parquet"))
-      val agg = streaming.EventsStream.fromParquetDir(spark, dir.toString)
-      streaming.EventsStream.runToMemory(agg, "drive_out",
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      val rows = spark.sql(
-        "SELECT * FROM drive_out ORDER BY bucket, event_type LIMIT 5").collect()
-      println(s"stream rows: ${spark.table("drive_out").count()}")
-      rows.foreach(println)
+      import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+      val drive = streaming.EventsStream.drain(spark, OutputMode.Update,
+        Trigger.ProcessingTime(0)) { s =>
+        streaming.EventsStream.fromParquetDir(s, dir.toString)
+      }.rows
+      println(s"stream rows: ${drive.count()}")
+      drive.orderBy("bucket", "event_type").limit(5).collect().foreach(println)
       // session-window flavor over the same file source (complete mode so
       // open sessions surface without a watermark-advancing second file)
-      val raw = Tables.eventsStream(spark, dir.toString)
-      streaming.EventsStream.runToMemory(
-        streaming.EventsStream.sessionAgg(raw), "sess_drive",
-        org.apache.spark.sql.streaming.OutputMode.Complete)
-      println(s"session rows: ${spark.table("sess_drive").count()}")
-      spark.sql("SELECT * FROM sess_drive ORDER BY user_id, session_start LIMIT 3")
-        .collect().foreach(println)
+      val sess = streaming.EventsStream.drain(spark, OutputMode.Complete,
+        Trigger.ProcessingTime(0)) { s =>
+        streaming.EventsStream.sessionAgg(Tables.eventsStream(s, dir.toString))
+      }.rows
+      println(s"session rows: ${sess.count()}")
+      sess.orderBy("user_id", "session_start").limit(3).collect()
+        .foreach(println)
       spark.stop(); return
     }
     if (args.headOption.contains("streamfloor")) {

@@ -1465,19 +1465,18 @@ object Multimodal {
     * re-derived from blobs, cut + band join + Hamming in SQL). */
   def qStreamPhash(spark: SparkSession, dir: String): DataFrame = {
     graft.OracleExport.export(mediaTable(spark, dir), "media", dir)
-    val name = "streamphash_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val codes = phashCodes(spark, dir)
-    val cut = codes.agg(expr("max(doc_id) * 4 div 5")).head.getLong(0)
-    val hist = fpBands(codes.filter(col("doc_id") <= cut)
-      .select("doc_id", "c0", "c1", "c2", "c3"))
-    graft.streaming.EventsStream.withStatePartitions(spark,
-        graft.streaming.EventsStream.statePartitions(spark)) {
-      val src = spark.readStream
-        .schema("doc_id BIGINT, c0 INT, c1 INT, c2 INT, c3 INT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(phashBatchDir(spark, dir))
-      val hits = fpBands(src).as("a")
+    val staged = phashBatchDir(spark, dir)
+    graft.streaming.EventsStream.drain(spark,
+        org.apache.spark.sql.streaming.OutputMode.Append,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow()) { s =>
+      val codes = phashCodes(s, dir)
+      val cut = codes.agg(expr("max(doc_id) * 4 div 5")).head.getLong(0)
+      val hist = fpBands(codes.filter(col("doc_id") <= cut)
+        .select("doc_id", "c0", "c1", "c2", "c3"))
+      fpBands(s.readStream
+          .schema("doc_id BIGINT, c0 INT, c1 INT, c2 INT, c3 INT")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(staged)).as("a")
         .join(broadcast(hist).as("b"),
           col("a.c") === col("b.c") && col("a.chunk") === col("b.chunk"))
         .select(col("a.doc_id").as("batch_doc"),
@@ -1487,22 +1486,10 @@ object Multimodal {
             .as("hamming"))
         .filter(col("hamming") <= 3)
         .dropDuplicates("batch_doc", "index_doc")
-      val q = hits.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
-      q.awaitTermination()
-    }
-    lastPhashSink.getAndSet(name) match {
-      case null => ()
-      case prev => spark.catalog.dropTempView(prev)
-    }
-    spark.table(name)
+    }.rows
       .select(col("batch_doc"), col("index_doc"), col("hamming"))
       .orderBy("batch_doc", "index_doc")
   }
-  private val lastPhashSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Media duplicate clusters with a KEEP-BEST survivor policy over the
     * audio AND video fingerprint pair graphs — the asset-pipeline

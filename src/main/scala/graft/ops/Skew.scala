@@ -111,35 +111,45 @@ object Skew {
       .limit(50)
   }
 
+  /** Run `body` in the caller's [[graft.Scoped]] child with
+    * `spark.graft.autosalt.enabled=true` and the rule registered, and
+    * return its result as a DataFrame of the caller. `body` must
+    * [[Tables.materialize]] its query: plans are optimized at ACTION
+    * time, so a plan handed back unexecuted would be optimized under the
+    * caller's conf, without the salt. The caller's conf is never
+    * written, so concurrent queries never plan salted. */
+  private def autoSalted(spark: SparkSession)(
+      body: SparkSession => DataFrame): DataFrame = {
+    val s = graft.Scoped.session(spark,
+      Map("spark.graft.autosalt.enabled" -> "true"))
+    graft.plans.AutoSalt.ensureRegistered(s)
+    graft.Scoped.rebind(spark, body(s))
+  }
+
+  /** Documents exploded to (doc_id, lang, n_chars, token). */
+  private def langTokens(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("n_chars"),
+        explode(TextOps.tokens(col("text"))).as("token"))
+
   /** The [[graft.plans.AutoSalt]] OPTIMIZER rule end-to-end: the query
     * is written as a PLAIN groupBy — no salting in user code — and
-    * executed with `spark.graft.autosalt.enabled=true`, so the
-    * optimizer itself plants the two-stage salted shape (AutoSaltSpec
-    * asserts the plan). Executed inside the conf scope via
-    * [[Tables.materialize]] (plans are optimized at ACTION time; just
-    * returning the DataFrame would let the driver run it after the
-    * conf is restored), then re-ordered for the gate. The oracle is
-    * the plain aggregation — the rewrite must be result-invisible. */
-  def qAutoSaltAgg(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.AutoSalt.ensureRegistered(spark)
-    val key = "spark.graft.autosalt.enabled"
-    spark.conf.set(key, "true")
-    val mat = try {
-      val toks = Tables(spark, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          explode(TextOps.tokens(col("text"))).as("token"))
+    * executed under [[autoSalted]], so the optimizer itself plants the
+    * two-stage salted shape (AutoSaltSpec asserts the plan), then
+    * re-ordered for the gate. The oracle is the plain aggregation — the
+    * rewrite must be result-invisible. */
+  def qAutoSaltAgg(spark: SparkSession, dir: String): DataFrame =
+    autoSalted(spark) { s =>
       Tables.materialize(
-        toks.groupBy("lang", "token")
+        langTokens(s, dir).groupBy("lang", "token")
           .agg(count(lit(1)).as("n"),
             sum(Tables.dec(col("n_chars"))).as("chars"),
             max(col("doc_id")).as("last_doc"))
           .orderBy(desc("n"), asc("lang"), asc("token"))
           .limit(100), "autosalt")
-    } finally spark.conf.unset(key)
-    mat.select(col("lang"), col("token"), col("n"),
+    }.select(col("lang"), col("token"), col("n"),
         col("chars").cast("double").as("chars"), col("last_doc"))
       .orderBy(desc("n"), asc("lang"), asc("token"))
-  }
 
   /** The r14 AutoSalt coverage growth driver-gated: a plain groupBy
     * whose aggregates are integral AVERAGES (plus a count), rewritten by
@@ -151,25 +161,17 @@ object Skew {
     * plain aggregation with the division written out explicitly
     * (SUM::DOUBLE / COUNT::DOUBLE — the exact arithmetic both the plain
     * and the salted engine paths perform on integral input). */
-  def qAutoSaltAvg(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.AutoSalt.ensureRegistered(spark)
-    val key = "spark.graft.autosalt.enabled"
-    spark.conf.set(key, "true")
-    val mat = try {
-      val toks = Tables(spark, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          explode(TextOps.tokens(col("text"))).as("token"))
+  def qAutoSaltAvg(spark: SparkSession, dir: String): DataFrame =
+    autoSalted(spark) { s =>
       Tables.materialize(
-        toks.groupBy("lang", "token")
+        langTokens(s, dir).groupBy("lang", "token")
           .agg(count(lit(1)).as("n"),
             avg(col("n_chars")).as("avg_chars"),
             avg(length(col("token"))).as("avg_len"),
             avg(when(col("doc_id") < 0, col("n_chars"))).as("avg_none"))
           .orderBy(desc("n"), asc("lang"), asc("token"))
           .limit(100), "autosaltavg")
-    } finally spark.conf.unset(key)
-    mat.orderBy(desc("n"), asc("lang"), asc("token"))
-  }
+    }.orderBy(desc("n"), asc("lang"), asc("token"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_skew_agg" -> qSkewAgg _,

@@ -4,7 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQueryProgress, Trigger}
 
 /** Structured Streaming surface over the `events` shape (ts, user_id,
   * event_type, value). The reference is strictly batch with a hard phase
@@ -282,14 +283,6 @@ object EventsStream {
       .outputMode(OutputMode.Append)
       .start()
 
-  /** Run a streaming DataFrame to a named memory sink until drained. */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode): Unit = {
-    val q = df.writeStream.outputMode(mode)
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-  }
-
   /** Driver-gated replay-safety proof for the foreachBatch parquet sink:
     * streams the bounded events file through [[idempotentParquetSink]],
     * then forces the crash-replay Structured Streaming actually performs
@@ -370,17 +363,6 @@ object EventsStream {
       .orderBy("event_type")
   }
 
-  /** Driver-gated run of [[dedupStream]]: stream the bounded events file
-    * through dropDuplicatesWithinWatermark into a memory sink, then
-    * profile the surviving rows. Only the KEY columns are kept after the
-    * dedup: which physical row survives per key depends on partition
-    * processing order, so any non-key column (ts) in the output would be
-    * nondeterministic — the key triple itself is what the operator
-    * guarantees, and the profile is a pure function of it. The DuckDB
-    * oracle is the batch DISTINCT of the same triple (the single-batch
-    * bounded replay dedups every duplicate, so stream == batch here);
-    * the watermark state-eviction behavior itself is pinned in
-    * EventsStreamSpec where batches and watermarks are scripted. */
   // FileStreamSource needs a DIRECTORY whose files are all one table;
   // the fixture dir mixes every table, so stage a symlink dir holding
   // just events.parquet — shareable across queries and passes (read-only)
@@ -393,58 +375,85 @@ object EventsStream {
     d.toString
   }
 
-  /** Scope the stateful-shuffle partition count to a stream run: a
-    * stateful operator creates one state store per shuffle partition
-    * and COMMITS each store every micro-batch, so the right number
-    * tracks the operator's KEY cardinality, not the session's CPU
-    * count — at 32 partitions the fixture's ~10³-key streams spent
-    * ~45% of their wall time on store commits (measured 5.1 s → 2.9 s
-    * at 8, `Debug confab`). A billion-key production stream tunes the
-    * same knob UP; the session-global 32 stays untouched for batch.
-    * Safe to scope here because the whole stream runs inside the
-    * query function (conf is read at stream start, restored after). */
-  /** Stream-gate state-partition count (`spark.graft.stream.parts`,
-    * default 4 — the fixture streams' key cardinalities are ~10³, and
-    * the interleaved A/B at sf0.1 read 4 ≤ 8 on every gate stream:
-    * state-store commit cost scales with partition count; a billion-key
-    * production stream tunes UP); conf'd so partition-count A/Bs don't
-    * need a rebuild. */
+  /** Run a stream to a memory sink and return the sink's rows as a
+    * DataFrame of the CALLER's session, plus the run's progress.
+    *
+    * `build` receives the session to build the stream in: the caller's
+    * [[graft.Scoped]] child, whose conf adds `confs` and the stateful
+    * shuffle partition count ([[statePartitions]]) to the caller's. The
+    * caller's own conf is never written, so batch queries planned
+    * concurrently keep the session's partitions and provider, and every
+    * run of a checkpointed stream plans under the same confs. Listeners
+    * on the caller's `spark.streams` still see the run's events.
+    *
+    * `Trigger.AvailableNow()` runs until the source is drained and the
+    * trailing no-data batch has fired (window finalization, timers and
+    * outer-join eviction depend on it); any other trigger runs until
+    * `processAllAvailable` returns. `checkpoint` lets a second drain
+    * resume a first one's offsets and state. The sink's view is dropped
+    * before returning, so its rows live exactly as long as the returned
+    * DataFrame. */
+  def drain(spark: SparkSession, mode: OutputMode, trigger: Trigger,
+      confs: Map[String, String] = Map.empty,
+      checkpoint: Option[String] = None)(
+      build: SparkSession => DataFrame): Drained = {
+    val child = graft.Scoped.session(spark, confs +
+      ("spark.sql.shuffle.partitions" -> statePartitions(spark).toString))
+    val name = "drain_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val df = build(child)
+    require(df.sparkSession eq child, "drain: build the stream in the " +
+      "session passed to build, not the caller's")
+    val w = df.writeStream.outputMode(mode).trigger(trigger)
+      .format("memory").queryName(name)
+    val q = checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
+    try {
+      if (trigger == Trigger.AvailableNow()) q.awaitTermination()
+      else q.processAllAvailable()
+      Drained(graft.Scoped.rebind(spark, child.table(name)),
+        q.recentProgress.toSeq)
+    } finally { q.stop(); child.catalog.dropTempView(name); () }
+  }
+
+  final case class Drained(rows: DataFrame,
+      progress: Seq[StreamingQueryProgress])
+
+  /** Stateful shuffle partitions of a [[drain]] run
+    * (`spark.graft.stream.parts`, default 4). A stateful operator keeps
+    * one state store per shuffle partition and commits each store every
+    * micro-batch, so the right count tracks the operator's KEY
+    * cardinality, not the session's CPU count: at 32 partitions the
+    * fixture's ~10³-key streams spent ~45% of their wall time on store
+    * commits (5.1 s → 2.9 s at 8, `Debug confab`), and an interleaved A/B
+    * at sf0.1 read 4 ≤ 8 on every gate stream. A billion-key production
+    * stream tunes it UP; batch queries keep the session's count. */
   private[graft] def statePartitions(spark: SparkSession): Int =
     spark.conf.get("spark.graft.stream.parts", "4").toInt
 
-  private[graft] def withStatePartitions[A](spark: SparkSession, n: Int)(
-      body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val orig = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, orig)
-  }
+  private val RocksDb = Map("spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
-  def qStreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val name = "streamdedup_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark, statePartitions(spark)) {
-      val src = graft.Tables.eventsStream(spark, eventsSrcDir(dir))
-        .select(col("ts"), col("user_id"), col("event_type"), col("value"))
-      runToMemory(dedupStream(src).select("user_id", "event_type", "value"),
-        name, OutputMode.Append)
-    }
-    // previous invocation's sink is dead weight once a new one exists
-    // (bench passes re-run the stream; without this the driver holds
-    // every pass's rows)
-    lastDedupSink.getAndSet(name) match {
-      case null => ()
-      case prev => spark.catalog.dropTempView(prev)
-    }
-    spark.table(name)
+  /** Driver-gated run of [[dedupStream]]: stream the bounded events file
+    * through dropDuplicatesWithinWatermark into a memory sink, then
+    * profile the surviving rows. Only the KEY columns are kept after the
+    * dedup: which physical row survives per key depends on partition
+    * processing order, so any non-key column (ts) in the output would be
+    * nondeterministic — the key triple itself is what the operator
+    * guarantees, and the profile is a pure function of it. The DuckDB
+    * oracle is the batch DISTINCT of the same triple (the single-batch
+    * bounded replay dedups every duplicate, so stream == batch here);
+    * the watermark state-eviction behavior itself is pinned in
+    * EventsStreamSpec where batches and watermarks are scripted. */
+  def qStreamDedup(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, OutputMode.Append, Trigger.ProcessingTime(0)) { s =>
+      dedupStream(graft.Tables.eventsStream(s, eventsSrcDir(dir))
+        .select(col("ts"), col("user_id"), col("event_type"), col("value")))
+        .select("user_id", "event_type", "value")
+    }.rows
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_unique"),
         count_distinct(col("user_id")).as("n_users"),
         graft.Tables.dsum(col("value")).as("total_value"))
       .orderBy("event_type")
-  }
-  private val lastDedupSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   // dir -> 6-file staged copy of events (written once per JVM from the
   // NORMALIZED batch table, so ts is unconditionally instant-typed
@@ -471,40 +480,27 @@ object EventsStream {
     * touch). No watermark: this query gates the MERGE; eviction is
     * gated by q_stream_dedup/windowedAgg and the scripted specs. */
   def qStreamIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val name = "streaminc_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark, statePartitions(spark)) {
-      val src = spark.readStream
+    val staged = splitEventsDir(spark, dir)
+    // Trigger.AvailableNow — the production "drain whatever exists,
+    // then stop" trigger (vs processAllAvailable): it honors source
+    // limits (maxFilesPerTrigger still yields six batches) and
+    // terminates by itself, which is what a scheduled incremental job
+    // wants
+    drain(spark, OutputMode.Complete, Trigger.AvailableNow()) { s =>
+      s.readStream
         .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
           "event_type STRING, value DOUBLE, props STRING")
         .option("maxFilesPerTrigger", "1")
-        .parquet(splitEventsDir(spark, dir))
-      val agg = src.groupBy(
-          window(col("ts"), "1 hour").getField("start").as("b"),
+        .parquet(staged)
+        .groupBy(window(col("ts"), "1 hour").getField("start").as("b"),
           col("event_type"))
         .agg(count(lit(1)).as("n"), graft.Tables.dsum(col("value"))
           .as("total_value"))
-      // Trigger.AvailableNow — the production "drain whatever exists,
-      // then stop" trigger (vs the test helper's processAllAvailable):
-      // it honors source limits (maxFilesPerTrigger still yields six
-      // batches) and terminates by itself, which is what a scheduled
-      // incremental job wants
-      val q = agg.writeStream.outputMode(OutputMode.Complete)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
-      q.awaitTermination()
-    }
-    lastIncSink.getAndSet(name) match {
-      case null => ()
-      case prev => spark.catalog.dropTempView(prev)
-    }
-    spark.table(name)
+    }.rows
       .select(date_format(col("b"), "yyyy-MM-dd HH:mm:ss").as("bucket"),
         col("event_type"), col("n"), col("total_value"))
       .orderBy("bucket", "event_type")
   }
-  private val lastIncSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** transformWithState behind the DRIVER gate (TwsSessionSpec pins it
     * against the fMGWS twin; this runs the real operator — typed
@@ -521,40 +517,18 @@ object EventsStream {
     * exactly that release rule, so this gate would catch a regression
     * in timer delivery (no-data batch skipped → missing rows), state
     * carry-over, or the fold itself. */
-  def qStreamTws(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val name = "streamtws_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val pk = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(pk)
-    spark.conf.set(pk,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStatePartitions(spark, statePartitions(spark)) {
-      val src = graft.Tables.eventsStream(spark, eventsSrcDir(dir))
+  def qStreamTws(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, OutputMode.Append, Trigger.AvailableNow(), RocksDb) { s =>
+      import s.implicits._
+      TwsSession.sessionize(graft.Tables.eventsStream(s, eventsSrcDir(dir))
         .select(col("ts"), col("user_id"), col("event_type"), col("value"))
-        .as[Event]
-      val q = TwsSession.sessionize(src).toDF()
-        .writeStream.outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(v) => spark.conf.set(pk, v)
-      case None => spark.conf.unset(pk)
-    }
-    lastTwsSink.getAndSet(name) match {
-      case null => ()
-      case prevSink => spark.catalog.dropTempView(prevSink)
-    }
-    spark.table(name)
+        .as[Event]).toDF()
+    }.rows
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"),
         sum(graft.Tables.dec(col("total_value"))).cast("double")
           .as("total_value"))
       .orderBy("user_id")
-  }
-  private val lastTwsSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** The BUILT-IN `session_window` behind the driver gate — the
     * declarative twin of [[qStreamTws]]'s hand-rolled keyed-state
@@ -576,13 +550,11 @@ object EventsStream {
     * State is one row per OPEN session per user — bounded by the
     * watermark horizon, never stream history: the only sessionization
     * shape that survives an unbounded ingest. */
-  def qStreamSession(spark: SparkSession, dir: String): DataFrame = {
-    val name = "streamsess_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark, statePartitions(spark)) {
-      val src = graft.Tables.eventsStream(spark, eventsSrcDir(dir))
+  def qStreamSession(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, OutputMode.Append, Trigger.AvailableNow()) { s =>
+      graft.Tables.eventsStream(s, eventsSrcDir(dir))
         .select(col("ts"), col("user_id"), col("value"))
-      val agg = src.withWatermark("ts", "10 minutes")
+        .withWatermark("ts", "10 minutes")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("n"),
           sum(graft.Tables.dec(col("value"))).as("total"))
@@ -590,24 +562,12 @@ object EventsStream {
           col("session_window.start").as("s"),
           col("session_window.end").as("e"),
           col("n"), col("total"))
-      val q = agg.writeStream.outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
-      q.awaitTermination()
-    }
-    lastSessionSink.getAndSet(name) match {
-      case null => ()
-      case prevSink => spark.catalog.dropTempView(prevSink)
-    }
-    spark.table(name)
+    }.rows
       .select(col("user_id"),
         date_format(col("s"), TsFmt).as("session_start"),
         date_format(col("e"), TsFmt).as("session_end"),
         col("n"), col("total").cast("double").as("total_value"))
       .orderBy("user_id", "session_start")
-  }
-  private val lastSessionSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   private val TsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
@@ -665,8 +625,6 @@ object EventsStream {
     * same invariants as constants while state_rows stays exact. */
   def qStreamStateMetrics(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val name = "streamstate_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val staged = userSliceDir(spark, dir)
     val work = Files.createTempDirectory("graft-statemetrics").toString
     graft.Tables.registerTempDir(s"statemetrics:$work", work)
@@ -675,48 +633,29 @@ object EventsStream {
     def linkIn(names: Seq[String]): Unit = names.foreach { f =>
       Files.createSymbolicLink(Paths.get(srcDir, f), Paths.get(staged, f))
     }
-    val pk = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(pk)
-    spark.conf.set(pk,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // (rowsTotal at last commit, Σ rowsUpdated, any-memory-reported)
-    def drain(): (Long, Long, Boolean) = try {
-      withStatePartitions(spark, statePartitions(spark)) {
-        val src = spark.readStream
+    def run(): (Long, Long, Boolean) = {
+      val sps = drain(spark, OutputMode.Complete, Trigger.AvailableNow(),
+          RocksDb, Some(chk)) { s =>
+        s.readStream
           .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
             "event_type STRING, value DOUBLE, props STRING")
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir)
-        val agg = src.groupBy("user_id")
+          .groupBy("user_id")
           .agg(count(lit(1)).as("n"),
             graft.Tables.dsum(col("value")).as("total_value"))
-        val q = agg.writeStream.outputMode(OutputMode.Complete)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory").queryName(name).start()
-        q.awaitTermination()
-        val sps = q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq)
-        (sps.lastOption.map(_.numRowsTotal).getOrElse(-1L),
-          sps.map(_.numRowsUpdated).sum,
-          sps.exists(sp => sp.memoryUsedBytes > 0 ||
-            sp.customMetrics.values().stream()
-              .mapToLong(_.longValue()).sum() > 0))
-      }
-    } finally ()
-    val (m1, m2) = try {
-      linkIn(Seq("u0.parquet", "u1.parquet"))
-      val a = drain() // run 1: two slices, checkpointed
-      linkIn(Seq("u2.parquet"))
-      val b = drain() // run 2: resumes + restores RocksDB state
-      (a, b)
-    } finally prev match {
-      case Some(v) => spark.conf.set(pk, v)
-      case None => spark.conf.unset(pk)
+      }.progress.flatMap(_.stateOperators.toSeq)
+      (sps.lastOption.map(_.numRowsTotal).getOrElse(-1L),
+        sps.map(_.numRowsUpdated).sum,
+        sps.exists(sp => sp.memoryUsedBytes > 0 ||
+          sp.customMetrics.values().stream()
+            .mapToLong(_.longValue()).sum() > 0))
     }
-    lastStateSink.getAndSet(name) match {
-      case null => ()
-      case prevSink => spark.catalog.dropTempView(prevSink)
-    }
+    linkIn(Seq("u0.parquet", "u1.parquet"))
+    val m1 = run() // run 1: two slices, checkpointed
+    linkIn(Seq("u2.parquet"))
+    val m2 = run() // run 2: resumes + restores RocksDB state
     import spark.implicits._
     Seq(
       (1, m1._1, if (m1._2 >= m1._1) 1 else 0, if (m1._3) 1 else 0),
@@ -724,8 +663,6 @@ object EventsStream {
       .toDF("run", "state_rows", "updated_ge_new_keys", "state_mem_positive")
       .orderBy("run")
   }
-  private val lastStateSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** The REAL stream-stream interval join behind the driver gate
     * ([[purchaseErrorJoin]]; the batch twin q_stream_join pins the same
@@ -736,25 +673,14 @@ object EventsStream {
     * the same SQL as the batch twin's. A state-eviction bug that drops
     * a buffered row before its partner arrives would surface as missing
     * pairs → hash mismatch. */
-  def qStreamJoinLive(spark: SparkSession, dir: String): DataFrame = {
-    val name = "streamssj_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark, statePartitions(spark)) {
-      val src = graft.Tables.eventsStream(spark, eventsSrcDir(dir))
-      runToMemory(purchaseErrorJoin(src), name, OutputMode.Append)
-    }
-    lastSsjSink.getAndSet(name) match {
-      case null => ()
-      case prevSink => spark.catalog.dropTempView(prevSink)
-    }
-    spark.table(name)
+  def qStreamJoinLive(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, OutputMode.Append, Trigger.ProcessingTime(0)) { s =>
+      purchaseErrorJoin(graft.Tables.eventsStream(s, eventsSrcDir(dir)))
+    }.rows
       .select(col("p_id"), col("e_id"), col("user_id"),
         date_format(col("p_ts"), TsFmt).as("pts"),
         date_format(col("e_ts"), TsFmt).as("ets"), col("value"))
       .orderBy("p_id", "e_id")
-  }
-  private val lastSsjSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** LEFT-OUTER stream-stream interval join behind the gate — the
     * eviction-driven null-emission semantics no batch twin can witness:
@@ -774,11 +700,9 @@ object EventsStream {
     * (min of the two sides' max event times − 10 min); the few
     * trailing purchases whose horizon stayed open remain unemitted.
     * The DuckDB oracle encodes that release rule explicitly. */
-  def qStreamOuterJoin(spark: SparkSession, dir: String): DataFrame = {
-    val name = "streamoj_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark, statePartitions(spark)) {
-      val src = graft.Tables.eventsStream(spark, eventsSrcDir(dir))
+  def qStreamOuterJoin(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, OutputMode.Append, Trigger.AvailableNow()) { s =>
+      val src = graft.Tables.eventsStream(s, eventsSrcDir(dir))
       val purchases = src.filter(col("event_type") === "purchase")
         .select(col("event_id").as("p_id"), col("user_id"),
           col("ts").as("p_ts"), col("value"))
@@ -787,30 +711,18 @@ object EventsStream {
         .select(col("event_id").as("e_id"), col("user_id").as("e_user"),
           col("ts").as("e_ts"))
         .withWatermark("e_ts", "10 minutes")
-      val joined = purchases.join(errors,
+      purchases.join(errors,
         col("user_id") === col("e_user") &&
           col("e_ts") >= col("p_ts") &&
           col("e_ts") <= col("p_ts") + expr("INTERVAL 30 MINUTES"),
         "leftOuter")
         .select(col("p_id"), col("e_id"), col("user_id"),
           col("p_ts"), col("e_ts"), col("value"))
-      val q = joined.writeStream.outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
-      q.awaitTermination()
-    }
-    lastOjSink.getAndSet(name) match {
-      case null => ()
-      case prevSink => spark.catalog.dropTempView(prevSink)
-    }
-    spark.table(name)
+    }.rows
       .select(col("p_id"), col("e_id"), col("user_id"),
         date_format(col("p_ts"), TsFmt).as("pts"),
         date_format(col("e_ts"), TsFmt).as("ets"), col("value"))
       .orderBy(asc("p_id"), asc_nulls_first("e_id"))
-  }
-  private val lastOjSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Stream-STATIC dimension-enrichment join behind the gate — the
     * third streaming-join shape next to stream-stream
@@ -828,36 +740,21 @@ object EventsStream {
     * q_stream_topk release rule), so the sink is deterministic for the
     * bounded fixture and the DuckDB oracle is the batch join +
     * window aggregation restricted to the same finalized set. */
-  def qStreamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
-    val name = "streamstatic_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark, statePartitions(spark)) {
-      val src = graft.Tables.eventsStream(spark, eventsSrcDir(dir))
-      val dim = graft.Tables(spark, dir, "customer")
+  def qStreamStaticJoin(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, OutputMode.Append, Trigger.AvailableNow()) { s =>
+      val dim = graft.Tables(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
-      val agg = src
+      graft.Tables.eventsStream(s, eventsSrcDir(dir))
         .withWatermark("ts", "10 minutes")
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .groupBy(window(col("ts"), "1 hour"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
           graft.Tables.dsum(col("value")).as("total_value"))
-      val q = agg.writeStream.outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
-      q.awaitTermination()
-    }
-    lastStaticSink.getAndSet(name) match {
-      case null => ()
-      case prevSink => spark.catalog.dropTempView(prevSink)
-    }
-    spark.table(name)
+    }.rows
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("bucket"),
         col("c_mktsegment").as("segment"), col("n"), col("total_value"))
       .orderBy("bucket", "segment")
-  }
-  private val lastStaticSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Streaming SpaceSaving heavy hitters behind the driver gate
     * ([[heavyHittersStream]]): constant-size sketch state per open
@@ -868,31 +765,16 @@ object EventsStream {
     * sketch in its exact regime, so the DuckDB oracle is plain
     * per-window counting with the sketch's (n DESC, type ASC)
     * tie-break — the same exact-regime split as q_heavy_hitters. */
-  def qStreamTopk(spark: SparkSession, dir: String): DataFrame = {
-    val name = "streamtopk_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark, statePartitions(spark)) {
-      val src = graft.Tables.eventsStream(spark, eventsSrcDir(dir))
-      // AvailableNow (not processAllAvailable): window finalization
-      // needs the trailing no-data batch after the watermark advances —
-      // the same delivery the tws timer gate relies on
-      val q = heavyHittersStream(src).writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
-      q.awaitTermination()
-    }
-    lastTopkSink.getAndSet(name) match {
-      case null => ()
-      case prevSink => spark.catalog.dropTempView(prevSink)
-    }
-    spark.table(name)
+  def qStreamTopk(spark: SparkSession, dir: String): DataFrame =
+    // AvailableNow (not processAllAvailable): window finalization needs
+    // the trailing no-data batch after the watermark advances — the same
+    // delivery the tws timer gate relies on
+    drain(spark, OutputMode.Append, Trigger.AvailableNow()) { s =>
+      heavyHittersStream(graft.Tables.eventsStream(s, eventsSrcDir(dir)))
+    }.rows
       .select(date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss")
           .as("bucket"), col("event_type"), col("n"))
       .orderBy("bucket", "event_type")
-  }
-  private val lastTopkSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   // three-file staged events dir for the LATE-DATA gate: files 00+01
   // hold the most recent 24 h split at an hour-aligned midpoint (so no
@@ -948,36 +830,24 @@ object EventsStream {
     * that lets late rows into state would emit the old windows too
     * (their ends are far behind the watermark) and break the hash. */
   def qStreamLate(spark: SparkSession, dir: String): DataFrame = {
-    val name = "streamlate_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark, statePartitions(spark)) {
-      val src = spark.readStream
+    val staged = lateEventsDir(spark, dir)
+    drain(spark, OutputMode.Append, Trigger.AvailableNow()) { s =>
+      s.readStream
         .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
           "event_type STRING, value DOUBLE, props STRING")
         .option("maxFilesPerTrigger", "1")
-        .parquet(lateEventsDir(spark, dir))
-      val agg = src.withWatermark("ts", "10 minutes")
+        .parquet(staged)
+        .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour").as("win"))
         .agg(count(lit(1)).as("n"),
           graft.Tables.dsum(col("value")).as("total_value"))
         .select(col("win.start").as("bucket"), col("n"),
           col("total_value"))
-      val q = agg.writeStream.outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
-      q.awaitTermination()
-    }
-    lastLateSink.getAndSet(name) match {
-      case null => ()
-      case prevSink => spark.catalog.dropTempView(prevSink)
-    }
-    spark.table(name)
+    }.rows
       .select(date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss")
           .as("bucket"), col("n"), col("total_value"))
       .orderBy("bucket")
   }
-  private val lastLateSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Checkpoint RESTART behind the driver gate — the scheduled
     * incremental job pattern: run 1 drains the first half of the
@@ -992,8 +862,6 @@ object EventsStream {
     * only). Uses the same 6-file staged dir as q_stream_incremental. */
   def qStreamRestart(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val name = "streamrestart_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val staged = splitEventsDir(spark, dir)
     val srcFiles = new java.io.File(staged).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted
@@ -1004,35 +872,24 @@ object EventsStream {
     def linkIn(names: Seq[String]): Unit = names.foreach { f =>
       Files.createSymbolicLink(Paths.get(srcDir, f), Paths.get(staged, f))
     }
-    def drain(): Unit = withStatePartitions(spark, statePartitions(spark)) {
-      val src = spark.readStream
+    def run(): DataFrame = drain(spark, OutputMode.Complete,
+        Trigger.AvailableNow(), checkpoint = Some(chk)) { s =>
+      s.readStream
         .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
           "event_type STRING, value DOUBLE, props STRING")
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir)
-      val agg = src.groupBy("event_type")
+        .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           graft.Tables.dsum(col("value")).as("total_value"))
-      val q = agg.writeStream.outputMode(OutputMode.Complete)
-        .option("checkpointLocation", chk)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
-      q.awaitTermination()
-    }
+    }.rows
     linkIn(srcFiles.take(3).toSeq)
-    drain() // run 1: first half, checkpointed
+    run() // run 1: first half, checkpointed
     linkIn(srcFiles.drop(3).toSeq)
-    drain() // run 2: resumes offsets + restores state
-    lastRestartSink.getAndSet(name) match {
-      case null => ()
-      case prevSink => spark.catalog.dropTempView(prevSink)
-    }
-    spark.table(name)
+    run() // run 2: resumes offsets + restores state
       .select(col("event_type"), col("n"), col("total_value"))
       .orderBy("event_type")
   }
-  private val lastRestartSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** The BATCH-REFRESHED DIMENSION pattern behind the gate: a long-lived
     * incremental job joins its stream against a dim table that is
@@ -1051,8 +908,6 @@ object EventsStream {
     * the hash. */
   def qStreamDimRefresh(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val name = "streamdim_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val work = Files.createTempDirectory("graft-dimrefresh").toString
     graft.Tables.registerTempDir(s"dimrefresh:$work", work)
     val srcDir = s"$work/src"; val chk = s"$work/chk"
@@ -1078,38 +933,26 @@ object EventsStream {
       cust.select(col("c_custkey"), seg.as("segment"))
         .coalesce(1).write.mode("overwrite").parquet(dimDir)
     }
-    def drain(): Unit = withStatePartitions(spark, statePartitions(spark)) {
-      val src = spark.readStream
+    def run(): DataFrame = drain(spark, OutputMode.Complete,
+        Trigger.AvailableNow(), checkpoint = Some(chk)) { s =>
+      val dim = s.read.parquet(dimDir) // the snapshot current NOW
+      s.readStream
         .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
           "event_type STRING, value DOUBLE, props STRING")
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir)
-      val dim = spark.read.parquet(dimDir) // the snapshot current NOW
-      val agg = src
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .groupBy("segment")
         .agg(count(lit(1)).as("n"),
           graft.Tables.dsum(col("value")).as("total_value"))
-      val q = agg.writeStream.outputMode(OutputMode.Complete)
-        .option("checkpointLocation", chk)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
-      q.awaitTermination()
-    }
+    }.rows
     stageSlice("a", 0); publishDim(1)
-    drain() // run 1: even users under dim v1, checkpointed
+    run() // run 1: even users under dim v1, checkpointed
     stageSlice("b", 1); publishDim(2)
-    drain() // run 2: odd users under dim v2, state restored
-    lastDimSink.getAndSet(name) match {
-      case null => ()
-      case prevSink => spark.catalog.dropTempView(prevSink)
-    }
-    spark.table(name)
+    run() // run 2: odd users under dim v2, state restored
       .select(col("segment"), col("n"), col("total_value"))
       .orderBy("segment")
   }
-  private val lastDimSink =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_stream_dim_refresh" -> qStreamDimRefresh _,

@@ -4,7 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Column ↔ Catalyst Expression bridge.
+/** Column ↔ Catalyst Expression bridge, plus the session clone and
+  * listener access behind [[graft.Scoped]].
   *
   * Spark 4 moved the Column/Expression conversion behind
   * `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`), so a
@@ -27,4 +28,18 @@ object ColumnBridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
+
+  /** A child of `spark` sharing its SparkContext and cached data, with
+    * its own copy of the SQLConf, functions, temp views and experimental
+    * rules (`cloneSession` is `private[sql]`). */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .cloneSession()
+
+  /** The query-execution listeners registered on `spark`
+    * (`listListeners` is `private[sql]`). */
+  def queryListeners(spark: org.apache.spark.sql.SparkSession)
+      : Seq[org.apache.spark.sql.util.QueryExecutionListener] =
+    spark.listenerManager.listListeners().toSeq
 }

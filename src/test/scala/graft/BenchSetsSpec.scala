@@ -29,11 +29,9 @@ class BenchSetsSpec extends AnyFunSuite {
         s"stale ${Bench.streamGates -- realGates}")
   }
 
-  test("every canary and lane-solo entry is a registered query") {
+  test("every canary is a registered query") {
     val missingCanary = Bench.canaryWarm.keySet.filterNot(registry)
     assert(missingCanary.isEmpty, s"canaries not in registry: $missingCanary")
-    val missingSolo = Bench.laneSolo.filterNot(registry)
-    assert(missingSolo.isEmpty, s"laneSolo not in registry: $missingSolo")
   }
 
   test("every chain-dep prefix matches at least one registered query") {

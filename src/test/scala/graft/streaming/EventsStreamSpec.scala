@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.SparkSpec
 import EventsStream.{Event, UserStats}
 
@@ -12,19 +12,21 @@ class EventsStreamSpec extends SparkSpec {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   test("watermarked tumbling-window agg matches the batch computation") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[Event]
-    input.addData(
-      Event(ts("2024-01-01 00:05:00"), 1, "click", 2.0),
-      Event(ts("2024-01-01 00:25:00"), 2, "click", 3.0),
-      Event(ts("2024-01-01 00:45:00"), 1, "view", 1.5),
-      Event(ts("2024-01-01 01:10:00"), 3, "click", 4.0))
-    EventsStream.runToMemory(
-      EventsStream.windowedAgg(input.toDF()), "win_out", OutputMode.Update)
-    val got = spark.sql(
-      "SELECT cast(bucket AS STRING), event_type, n, total_value " +
-        "FROM win_out ORDER BY 1, 2")
+    val out = EventsStream.drain(spark, OutputMode.Update,
+        Trigger.ProcessingTime(0)) { s =>
+      import s.implicits._
+      implicit val ctx = s.sqlContext
+      val input = MemoryStream[Event]
+      input.addData(
+        Event(ts("2024-01-01 00:05:00"), 1, "click", 2.0),
+        Event(ts("2024-01-01 00:25:00"), 2, "click", 3.0),
+        Event(ts("2024-01-01 00:45:00"), 1, "view", 1.5),
+        Event(ts("2024-01-01 01:10:00"), 3, "click", 4.0))
+      EventsStream.windowedAgg(input.toDF())
+    }.rows
+    val got = out.selectExpr("cast(bucket AS STRING) AS bucket",
+        "event_type", "n", "total_value")
+      .orderBy("bucket", "event_type")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getDouble(3))).toSeq
     assert(got === Seq(
@@ -34,17 +36,19 @@ class EventsStreamSpec extends SparkSpec {
   }
 
   test("sliding-window agg lands every event in exactly two buckets") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[Event]
-    input.addData(
-      Event(ts("2024-01-01 00:05:00"), 1, "click", 2.0),
-      Event(ts("2024-01-01 00:40:00"), 2, "click", 3.0))
-    EventsStream.runToMemory(
-      EventsStream.slidingAgg(input.toDF()), "slide_out", OutputMode.Update)
-    val got = spark.sql(
-      "SELECT cast(bucket AS STRING), event_type, n, total_value " +
-        "FROM slide_out ORDER BY 1, 2")
+    val out = EventsStream.drain(spark, OutputMode.Update,
+        Trigger.ProcessingTime(0)) { s =>
+      import s.implicits._
+      implicit val ctx = s.sqlContext
+      val input = MemoryStream[Event]
+      input.addData(
+        Event(ts("2024-01-01 00:05:00"), 1, "click", 2.0),
+        Event(ts("2024-01-01 00:40:00"), 2, "click", 3.0))
+      EventsStream.slidingAgg(input.toDF())
+    }.rows
+    val got = out.selectExpr("cast(bucket AS STRING) AS bucket",
+        "event_type", "n", "total_value")
+      .orderBy("bucket", "event_type")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getDouble(3))).toSeq
     // 00:05 -> [23:30, 00:00]-start windows; 00:40 -> [00:00, 00:30]
