@@ -57,7 +57,7 @@ object OracleExport {
     * queries serially, and no two prewarm chains export the same tag —
     * but if exports ever move into concurrent chains, store a per-dir
     * holder/future here and block followers on write completion (the
-    * Tables.materializeSharedBy holder pattern). */
+    * Tables.KeyedOnce holder pattern). */
   def export(df: DataFrame, tag: String, sfDir: String,
              knobKey: String = ""): Unit = {
     if (df.sparkSession.conf.get("spark.graft.oracleExport", "true") != "true")

@@ -39,9 +39,9 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   *    match. A rewritten path can't be served a stale schema: Spark part
   *    files carry a per-write UUID in their names, and any other rewrite
   *    changes a length or an mtime. A rewrite replaces the path's entry.
-  *  - Entries are dropped when `materialize`'s per-tag GC deletes a dir
-  *    and when `materializeSharedBy`'s dead-dir check fires, so
-  *    per-invocation materialize dirs don't grow the map.
+  *  - Entries under a session-temp dir are dropped when [[Tables.scratch]]
+  *    or `materialize` replaces the dir and when a staged or shared dir is
+  *    found removed, so per-invocation dirs don't grow the map.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -162,16 +162,76 @@ object Tables {
   private[graft] def deleteDir(path: String): Unit =
     deleteRec(new java.io.File(path))
 
-  // ONE shutdown hook for all materialized temp dirs: sys.addShutdownHook
-  // spawns a thread per call, and a bench session materializes hundreds.
-  // Keyed by tag: re-materializing a tag deletes the previous run's copy
-  // (a materialization's consumers never outlive their query's action),
-  // so repeated invocations don't grow disk linearly.
-  private val matDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private lazy val matCleanup: Unit = {
-    sys.addShutdownHook(
-      matDirs.values.forEach(p => deleteRec(new java.io.File(p)))); ()
+  // ---- session-temp dirs ---------------------------------------------
+  // Every dir a query stages, materializes or scratches has one
+  // lifecycle. `staged` and `materializeSharedBy` build a dir once per
+  // (tag, key) and rebuild it when it no longer exists; `scratch` and
+  // `materialize` hand out a fresh dir per call and delete the previous
+  // one of the same (tag, key). Tags share one namespace across the four.
+
+  // dirs deleted at JVM exit by ONE shutdown hook: sys.addShutdownHook
+  // spawns a thread per call, and a bench session stages hundreds
+  private val exitDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private lazy val exitHook: Unit = {
+    sys.addShutdownHook(exitDirs.forEach(p => deleteDir(p))); ()
   }
+  private def deleteAtExit(dir: String): String = {
+    exitHook
+    exitDirs.add(dir)
+    dir
+  }
+
+  private def safeTag(tag: String): String =
+    tag.replaceAll("[^A-Za-z0-9.-]", "_")
+
+  /** A fresh empty dir `graft-<tag>-*` under the local temp dir. */
+  private def newDir(tag: String): String = deleteAtExit(java.nio.file.Files
+    .createTempDirectory(s"graft-${safeTag(tag)}-").toString)
+
+  // only local dirs are cheaply checkable; a spark.graft.materializeDir
+  // URI on shared storage is trusted to exist
+  private def isLocal(dir: String): Boolean = !dir.contains("://")
+
+  /** Forgets a dir that is gone or about to be: its schema-cache entries
+    * (the dir and every path under it) and its exit registration. */
+  private def forget(dir: String): Unit = {
+    schemas.keySet.removeIf(p => p == dir || p.startsWith(dir + "/"))
+    exitDirs.remove(dir); ()
+  }
+
+  // (tag, key) → the dir its latest scratch or materialize call handed out
+  private val lastDirs =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+
+  /** Makes `dir` the current dir of (tag, key) and deletes the previous
+    * one (a URI through the Hadoop FS of the active session). */
+  private def replace(tag: String, key: String, dir: String): String = {
+    val prev = lastDirs.put((tag, key), dir)
+    if (prev != null && prev != dir) {
+      forget(prev)
+      if (isLocal(prev)) deleteDir(prev)
+      else try {
+        val conf = SparkSession.getActiveSession
+          .orElse(SparkSession.getDefaultSession)
+          .fold(new org.apache.hadoop.conf.Configuration())(
+            _.sparkContext.hadoopConfiguration)
+        val p = new org.apache.hadoop.fs.Path(prev)
+        p.getFileSystem(conf).delete(p, true); ()
+      } catch { case scala.util.control.NonFatal(_) => () }
+    }
+    dir
+  }
+
+  /** A fresh local session-temp dir per call, for per-invocation work
+    * (stream outputs and checkpoints, snapshot stores, exports). The call
+    * deletes the dir the previous call with the same (tag, key) returned,
+    * so repeated passes keep one dir per key, not one per call. Same
+    * contract as [[materialize]]: the previous invocation's consumers are
+    * done, and a key reachable from concurrent callers carries the dir
+    * (callers key by their source dir). */
+  def scratch(tag: String, key: String): String =
+    replace(tag, key, newDir(tag))
 
   /** Materialize an expensive, multiply-consumed subtree to a session-temp
     * parquet and read it back: the subtree computes ONCE and every consumer
@@ -182,73 +242,32 @@ object Tables {
     * Temp parquet is chosen over localCheckpoint deliberately: checkpoint
     * blocks linger in the block manager until ContextCleaner GC and
     * intermittently slow LATER queries in a shared session; a temp parquet
-    * is self-contained and removed on JVM exit. */
-  /** Base dir selection: `spark.graft.materializeDir` when set (point it
+    * is self-contained and removed on JVM exit.
+    *
+    * The dir lives under `spark.graft.materializeDir` when set (point it
     * at SHARED storage — HDFS/S3 — on a real cluster; the intermediate is
-    * written and read through the Hadoop FS), else a driver-local temp
-    * dir, which is only correct under local[*] masters. Not safe for
-    * concurrent query execution in one session (per-tag GC assumes the
-    * previous invocation's consumers are done). */
+    * written and read through the Hadoop FS), else under the driver-local
+    * temp dir, which is only correct under local[*] masters.
+    *
+    * Like [[scratch]], a call deletes the previous invocation's dir of
+    * the same tag, so two concurrent executions that reach the same tag
+    * race (one reads a dir the other just deleted — observed when bench
+    * overlapped the tiny-sf codegen warmup with prewarm). Any materialize
+    * reachable from a SHARED builder (which may build concurrently for
+    * different sf dirs) must qualify its tag with the dir (e.g.
+    * s"cand:$dir"); plain per-query tags are fine — queries execute
+    * serially. */
+  def materialize(df: DataFrame, tag: String): DataFrame =
+    parquet(df.sparkSession, replace("mat", tag, writeMat(df, tag)))
+
   private def writeMat(df: DataFrame, tag: String): String = {
-    val spark = df.sparkSession
-    val base = spark.conf.get("spark.graft.materializeDir", "")
-    // tags may carry a dir qualifier (e.g. "cand:/root/testdata/sf0.01"
-    // — see materialize's concurrency note); sanitize for the path
-    val safeTag = tag.replaceAll("[^A-Za-z0-9.-]", "_")
+    val base = df.sparkSession.conf.get("spark.graft.materializeDir", "")
     val dir =
-      if (base.isEmpty)
-        java.nio.file.Files.createTempDirectory(s"graft-mat-$safeTag-").toString
-      else s"$base/graft-mat-$safeTag-${java.util.UUID.randomUUID}"
-    matCleanup
+      if (base.isEmpty) newDir(s"mat-$tag")
+      else deleteAtExit(
+        s"$base/graft-mat-${safeTag(tag)}-${java.util.UUID.randomUUID}")
     df.write.mode("overwrite").parquet(dir)
     dir
-  }
-
-  /** Per-tag GC note: replacing a tag DELETES the previous invocation's
-    * dir, so two concurrent executions that reach the same tag race (one
-    * reads a dir the other just deleted — observed when bench overlapped
-    * the tiny-sf codegen warmup with prewarm). Any materialize reachable
-    * from a SHARED builder (which may build concurrently for different
-    * sf dirs) must qualify its tag with the dir (e.g. s"cand:$dir");
-    * plain per-query tags are fine — queries execute serially. */
-  def materialize(df: DataFrame, tag: String): DataFrame = {
-    val spark = df.sparkSession
-    val dir = writeMat(df, tag)
-    val prev = matDirs.put(tag, dir)
-    if (prev != null) {
-      schemas.remove(prev)
-      val p = new org.apache.hadoop.fs.Path(prev)
-      try { p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true); () }
-      catch { case _: Throwable => () }
-    }
-    parquet(spark, dir)
-  }
-
-  /** Register a session-temp dir for deletion at JVM exit (the same hook
-    * the materializations use). `tag` must be unique per dir. */
-  private[graft] def registerTempDir(tag: String, dir: String): Unit = {
-    matCleanup
-    matDirs.put(tag, dir); ()
-  }
-
-  /** Like [[registerTempDir]] but with the materialize-style per-tag GC:
-    * re-registering the SAME tag deletes the previous invocation's dir
-    * immediately instead of leaking it until JVM exit. For per-invocation
-    * scratch stores rebuilt by repeated bench/verify passes (the
-    * q_index_asof snapshot dirs). Same concurrency contract as
-    * materialize: the tag must be dir-qualified and never shared across
-    * registered queries. */
-  private[graft] def registerReplacingTempDir(tag: String, dir: String): Unit = {
-    matCleanup
-    val prev = matDirs.put(tag, dir)
-    if (prev != null && prev != dir) {
-      try {
-        val p = new org.apache.hadoop.fs.Path(prev)
-        p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-          .delete(p, true); ()
-      } catch { case _: Throwable => () }
-    }
   }
 
   // ---- prewarm disk cache (bench-only, see Bench.scala) --------------
@@ -300,95 +319,21 @@ object Tables {
         }
     }
 
-  /** One shared materialization: the holder is what lives in the map; the
-    * BUILD runs under the holder's own monitor, never under a
-    * ConcurrentHashMap bin lock. The previous design ran `writeMat(build)`
-    * inside `computeIfAbsent`, which breaks two ways once builders nest
-    * (sharedMerges→wordFreq, dupComponents→survivorPairs): a nested
-    * computeIfAbsent whose key lands in the same bin throws
-    * IllegalStateException "Recursive update", and a multi-minute CC/BPE
-    * build stalls every concurrent chain colliding on that bin. Holder
-    * allocation is the only thing the map compute does now. Double-checked
-    * @volatile so the post-build fast path is lock-free; concurrent
-    * requests for the SAME key still serialize on the holder (correct —
-    * the build must run once).
-    *
-    * With the prewarm disk cache active (bench runs), the share lives at
-    * a STABLE path keyed by (tag, key) under the fingerprinted cache
-    * root: a hit skips the build entirely (the builder is by-name), a
-    * miss builds into the cache path so the NEXT bench run hits. Cache
-    * dirs are never registered for shutdown deletion. */
-  private final class SharedMat(tag: String, key: String,
-      build: () => DataFrame) {
-    @volatile private var built: String = null
-    def dirIfBuilt: Option[String] = Option(built)
-    def dir(spark: SparkSession): String = {
-      var d = built
-      if (d == null) synchronized {
-        d = built
-        if (d == null) {
-          d = cacheRoot(spark) match {
-            case Some(root) =>
-              val safeTag = tag.replaceAll("[^A-Za-z0-9.-]", "_")
-              val cdir = s"$root/mat-$safeTag-${sha1Hex(key)}"
-              if (successExists(cdir)) cdir
-              else {
-                // build into a uniquely named temp dir and atomically
-                // rename into the cache path (r15 ADVICE): two JVMs
-                // sharing the cache can both see a missing _SUCCESS —
-                // an in-place overwrite write would race the other's
-                // read (PATH_NOT_FOUND mid-scan). Rename loser defers
-                // to the winner's published dir; a wedged target
-                // (exists, no _SUCCESS) falls back to serving the
-                // private build.
-                val tmp =
-                  s"$cdir.build-${java.util.UUID.randomUUID().toString.take(8)}"
-                build().write.mode("overwrite").parquet(tmp)
-                if (new java.io.File(tmp).renameTo(new java.io.File(cdir)))
-                  cdir
-                else if (successExists(cdir)) { deleteDir(tmp); cdir }
-                else {
-                  // rename lost to a WEDGED target (exists, no _SUCCESS
-                  // — e.g. a killed JVM's half-publish): repair it once
-                  // (r16 ADVICE) so later JVMs stop rebuilding forever;
-                  // if the retry still loses (a live racer re-wedged or
-                  // published mid-delete), serve the private build dir
-                  deleteDir(cdir)
-                  if (new java.io.File(tmp).renameTo(new java.io.File(cdir)))
-                    cdir
-                  else if (successExists(cdir)) { deleteDir(tmp); cdir }
-                  else { matDirs.put(s"shared:$tag:$key", tmp); tmp }
-                }
-              }
-            case None =>
-              val dd = writeMat(build(), tag)
-              matDirs.put(s"shared:$tag:$key", dd) // shutdown cleanup
-              dd
-          }
-          built = d
-        }
-      }
-      d
-    }
-  }
-
-  // key → holder of a shared materialization; never GC'd before shutdown
-  private val matShared = new java.util.concurrent.ConcurrentHashMap[String, SharedMat]()
-
-  /** Generic once-per-key builder with the SAME holder-outside-the-bin-
-    * lock discipline as [[SharedMat]], for session-once artifacts that
-    * aren't DataFrames (layout dirs, collected centroid arrays). The
-    * session-once layout builders (CSV/JSONL copies, fragmented/compacted
-    * dirs, hive layout, k-means centroids) used to run multi-second Spark
-    * writes inside `ConcurrentHashMap.computeIfAbsent` — safe only while
-    * no builder ever nests into another key in the same bin; this class
-    * makes the invariant structural instead of accidental: the map
-    * compute only allocates a holder, the build runs under the holder's
-    * own monitor, and concurrent requests for the same key serialize on
-    * that holder alone. */
+  /** Once-per-key builder for session-once values (staged dirs, shared
+    * materializations, collected centroid and codebook arrays, trained
+    * models, cached counts). The map compute only allocates a holder; the
+    * build runs under that holder's own monitor, never under a
+    * ConcurrentHashMap bin lock. Building inside `computeIfAbsent` breaks
+    * two ways once builders nest (sharedMerges→wordFreq,
+    * dupComponents→survivorPairs): a nested computeIfAbsent whose key
+    * lands in the same bin throws IllegalStateException "Recursive
+    * update", and a multi-minute CC/BPE build stalls every concurrent
+    * chain colliding on that bin. So the same key serializes on its
+    * holder, different keys build in parallel, the post-build fast path
+    * is one volatile read, and a build that throws caches nothing. */
   private[graft] final class KeyedOnce[T] {
     private final class Holder {
-      @volatile private var built: Option[T] = None
+      @volatile var built: Option[T] = None
       def get(build: () => T): T = {
         var v = built
         if (v.isEmpty) synchronized {
@@ -402,6 +347,11 @@ object Tables {
       new java.util.concurrent.ConcurrentHashMap[String, Holder]()
     def apply(key: String)(build: => T): T =
       holders.computeIfAbsent(key, _ => new Holder).get(() => build)
+    /** Drops `key`'s built value when `stale` holds for it, so the next
+      * call builds again; returns the dropped value. */
+    def dropIf(key: String)(stale: T => Boolean): Option[T] =
+      Option(holders.get(key)).flatMap(h =>
+        h.built.filter(v => stale(v) && holders.remove(key, h)))
   }
 
   private val counts = new KeyedOnce[Long]
@@ -415,39 +365,92 @@ object Tables {
   def cachedCount(key: String)(df: => DataFrame): Long =
     counts(key)(df.count())
 
+  // "tag:key" → its built dir (staged layouts and shared materializations)
+  private val onceDirs = new KeyedOnce[String]
+
+  /** `(tag, key)`'s dir, built by `build` once per JVM. A built dir only
+    * serves while it exists: a long session can lose a /tmp dir to an
+    * external cleaner (same scenario ops.Bucketed.locationMissing guards),
+    * and serving the dead path would fail every consumer for the rest of
+    * the session with no rebuild path — so a missing dir is forgotten and
+    * built again. */
+  private def onceDir(tag: String, key: String)(build: => String): String = {
+    val k = s"$tag:$key"
+    onceDirs.dropIf(k)(d => isLocal(d) && !new java.io.File(d).exists())
+      .foreach(forget)
+    onceDirs(k)(build)
+  }
+
+  /** A read-only layout staged once per `(tag, key)` per JVM (ingest
+    * copies, hive and fragmented layouts, stream source dirs): `write`
+    * fills a fresh local session-temp dir, which every later call
+    * returns. Same key: concurrent callers wait for one `write`;
+    * different keys stage in parallel. A `write` that throws leaves
+    * nothing behind, so the next call retries; a staged dir that was
+    * removed is staged again. Keys carry the source dir. */
+  def staged(tag: String, key: String)(write: String => Unit): String =
+    onceDir(tag, key) {
+      val d = newDir(tag)
+      try { write(d); d }
+      catch { case e: Throwable => forget(d); deleteDir(d); throw e }
+    }
+
   /** Like [[materialize]], but REUSED across queries in the session: when
     * the same `key` (caller's promise that the content is identical —
     * e.g. "same projection of the same table dir") was already
     * materialized, later callers read the existing parquet instead of
     * recomputing and rewriting it. The production-pipeline shape: derived
     * tables (normalized embeddings, shingle tables) are built once per
-    * corpus version and shared by every downstream job.
+    * corpus version and shared by every downstream job. The dir is kept
+    * like a [[staged]] one (built once per key, rebuilt when removed).
     *
     * `build` is BY-NAME and not touched when the share is already
     * materialized: constructing the DataFrame may itself run Spark jobs
     * (the iterative [[graft.ops.Graph.connectedComponents]] loop executes
     * actions per round during construction), and even a plain builder
-    * would cost a re-analysis of its tree on every reuse. */
+    * would cost a re-analysis of its tree on every reuse.
+    *
+    * With the prewarm disk cache active (bench runs), the share lives at
+    * a STABLE path keyed by (tag, key) under the fingerprinted cache
+    * root: a hit skips the build entirely, a miss builds into the cache
+    * path so the NEXT bench run hits. Cache dirs are never registered for
+    * shutdown deletion. */
   def materializeSharedBy(spark: SparkSession, tag: String, key: String)(
-      build: => DataFrame): DataFrame = {
-    val mapKey = s"$tag:$key"
-    // A cached entry only serves reuse while its backing dir still exists:
-    // a long session can lose a /tmp intermediate to an external cleaner
-    // (same scenario ops.Bucketed.locationMissing guards) — serving the
-    // dead path would fail every consumer for the rest of the session
-    // with no rebuild path. Only local paths are cheaply checkable; conf'd
-    // shared-storage dirs (spark.graft.materializeDir) are trusted.
-    val prev = matShared.get(mapKey)
-    if (prev != null) prev.dirIfBuilt.foreach { d =>
-      if (!d.contains("://") && !new java.io.File(d).exists()) {
-        matShared.remove(mapKey, prev)
-        schemas.remove(d)
-      }
-    }
-    val holder =
-      matShared.computeIfAbsent(mapKey, _ => new SharedMat(tag, key, () => build))
-    parquet(spark, holder.dir(spark))
-  }
+      build: => DataFrame): DataFrame =
+    parquet(spark, onceDir(tag, key)(cacheRoot(spark) match {
+      case Some(root) =>
+        val cdir = s"$root/mat-${safeTag(tag)}-${sha1Hex(key)}"
+        if (successExists(cdir)) cdir
+        else {
+          // build into a uniquely named temp dir and atomically
+          // rename into the cache path (r15 ADVICE): two JVMs
+          // sharing the cache can both see a missing _SUCCESS —
+          // an in-place overwrite write would race the other's
+          // read (PATH_NOT_FOUND mid-scan). Rename loser defers
+          // to the winner's published dir; a wedged target
+          // (exists, no _SUCCESS) falls back to serving the
+          // private build.
+          val tmp =
+            s"$cdir.build-${java.util.UUID.randomUUID().toString.take(8)}"
+          build.write.mode("overwrite").parquet(tmp)
+          if (new java.io.File(tmp).renameTo(new java.io.File(cdir)))
+            cdir
+          else if (successExists(cdir)) { deleteDir(tmp); cdir }
+          else {
+            // rename lost to a WEDGED target (exists, no _SUCCESS
+            // — e.g. a killed JVM's half-publish): repair it once
+            // (r16 ADVICE) so later JVMs stop rebuilding forever;
+            // if the retry still loses (a live racer re-wedged or
+            // published mid-delete), serve the private build dir
+            deleteDir(cdir)
+            if (new java.io.File(tmp).renameTo(new java.io.File(cdir)))
+              cdir
+            else if (successExists(cdir)) { deleteDir(tmp); cdir }
+            else deleteAtExit(tmp)
+          }
+        }
+      case None => writeMat(build, tag)
+    }))
 
   /** Exact decimal view of a double measure column (2 fractional digits in
     * every fixture measure: prices, discounts, balances, quantities). */

@@ -33,7 +33,7 @@ object Bucketed {
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** Write `table` bucketed+sorted on `key` once per session (external
-    * table backed by a session-temp dir, like Tables.materialize; on a
+    * table backed by a Tables.scratch dir keyed by the table name; on a
     * real cluster the path would be shared storage and the layout built
     * once per corpus version, not per session). Later calls reuse the
     * catalog table. The name carries the full md5 of the cache key, so
@@ -59,9 +59,7 @@ object Bucketed {
         locationMissing(spark, tname)
       if (stale) spark.sql(s"DROP TABLE IF EXISTS $tname")
       if (stale || !spark.catalog.tableExists(tname)) {
-        val path = java.nio.file.Files
-          .createTempDirectory(s"graft-bucket-$table-").toString
-        Tables.registerTempDir(s"bucket:$tname:$path", path)
+        val path = Tables.scratch("bucket", tname)
         Tables(spark, dir, table).write
           .bucketBy(buckets, key).sortBy(key)
           .option("path", path)

@@ -25,37 +25,31 @@ import graft.Tables
   * can't see: real fragmentation before, a bounded file count after. */
 object Compact {
 
-  /** (fragmentedDir, compactedDir) for the documents table, built once
-    * per session. */
-  private val written = new Tables.KeyedOnce[(String, String)]
-
-  private[ops] def layouts(spark: SparkSession, dir: String): (String, String) =
-    written(dir) {
-      val frag =
-        java.nio.file.Files.createTempDirectory("graft-frag-").toString
-      Tables.registerTempDir(s"frag:$frag", frag)
+  /** (fragmentedDir, compactedDir) for the documents table, each staged
+    * once per session. */
+  private[ops] def layouts(spark: SparkSession, dir: String): (String, String) = {
+    val frag = Tables.staged("frag", dir)(
       Tables(spark, dir, "documents")
         .repartition(64) // the small-files problem, manufactured
-        .write.mode("overwrite").parquet(frag)
-      val compact =
-        java.nio.file.Files.createTempDirectory("graft-compact-").toString
-      Tables.registerTempDir(s"compact:$compact", compact)
-      val rows = spark.read.parquet(frag).count()
+        .write.mode("overwrite").parquet(_))
+    val compact = Tables.staged("compact", dir) { out =>
+      val rows = Tables.parquet(spark, frag).count()
       val target = 5000L // rows per output file (stands in for a byte size)
       val nFiles = math.max(1, ((rows + target - 1) / target).toInt)
-      spark.read.parquet(frag)
+      Tables.parquet(spark, frag)
         .repartition(nFiles)
         .write.mode("overwrite")
         .option("maxRecordsPerFile", target)
-        .parquet(compact)
-      (frag, compact)
+        .parquet(out)
     }
+    (frag, compact)
+  }
 
   /** Full-fidelity profile of the COMPACTED copy, oracle-compared to the
     * original table: any dropped/duplicated/mangled row breaks the hash. */
   def qCompactRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val (_, compacted) = layouts(spark, dir)
-    spark.read.parquet(compacted)
+    Tables.parquet(spark, compacted)
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(md5(col("text"))).as("n_distinct"),

@@ -1433,20 +1433,15 @@ object Multimodal {
   /** Staged batch-side dHash codes (doc_id, c0..c3; the > cut slice of
     * [[phashCodes]]) as a 3-file parquet DIRECTORY — the
     * FileStreamSource input of [[qStreamPhash]], one micro-batch per
-    * file. A KeyedOnce artifact like the event staging dirs (read-only
-    * after build; prewarmed on the media chain). */
-  private val phashBatchStaged = new graft.Tables.KeyedOnce[String]
+    * file. A [[graft.Tables.staged]] layout like the event staging dirs
+    * (read-only after build; prewarmed on the media chain). */
   private[graft] def phashBatchDir(spark: SparkSession,
-      dir: String): String = phashBatchStaged(dir) {
-    val d =
-      java.nio.file.Files.createTempDirectory("graft-streamphash").toString
-    Tables.registerTempDir(s"streamphash:$d", d)
+      dir: String): String = Tables.staged("streamphash", dir) { d =>
     val codes = phashCodes(spark, dir)
     val cut = codes.agg(expr("max(doc_id) * 4 div 5")).head.getLong(0)
     codes.filter(col("doc_id") > cut)
       .select("doc_id", "c0", "c1", "c2", "c3")
       .repartition(3).write.mode("overwrite").parquet(d)
-    d
   }
 
   /** STREAMING perceptual ingest — [[qPhashIncremental]]'s probe as a

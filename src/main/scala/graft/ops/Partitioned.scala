@@ -29,20 +29,11 @@ import graft.Tables
   * bottleneck. */
 object Partitioned {
 
-  private val written = new Tables.KeyedOnce[String]
-
   /** documents re-laid-out as lang=<x>/ hive partitions, once per session. */
-  def partitionedDocs(spark: SparkSession, dir: String): DataFrame = {
-    val path = written(dir) {
-      val out =
-        java.nio.file.Files.createTempDirectory("graft-partdocs-").toString
-      Tables.registerTempDir(s"partdocs:$out", out)
+  def partitionedDocs(spark: SparkSession, dir: String): DataFrame =
+    Tables.parquet(spark, Tables.staged("partdocs", dir)(
       Tables(spark, dir, "documents").write.mode("overwrite")
-        .partitionBy("lang").parquet(out)
-      out
-    }
-    spark.read.parquet(path)
-  }
+        .partitionBy("lang").parquet(_)))
 
   /** Per-(lang, source) profile of the above-average languages, computed
     * against the partitioned layout so the lang dim join dynamically

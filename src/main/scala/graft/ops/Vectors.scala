@@ -544,11 +544,9 @@ object Vectors {
       s"q_index_asof keyspace split needs nlist < 1000, got ${cents.length}")
     graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir,
       pqKey(spark))
-    val out =
-      java.nio.file.Files.createTempDirectory("graft-indexasof").toString
-    // stable tag + replace-GC: repeated bench/verify passes each build a
-    // fresh two-snapshot store and reclaim the previous invocation's
-    graft.Tables.registerReplacingTempDir(s"indexasof:$dir", out)
+    // repeated bench/verify passes each build a fresh two-snapshot store
+    // and reclaim the previous invocation's
+    val out = Tables.scratch("indexasof", dir)
     val centRows = centsDf(spark, cents)
       .select(col("cid").cast("long").as("doc_id"),
         concat_ws(",", col("vals").cast("array<string>")).as("payload"))
@@ -606,9 +604,7 @@ object Vectors {
       s"q_index_vacuum keyspace split needs nlist < 1000, got ${cents.length}")
     graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir,
       pqKey(spark))
-    val out =
-      java.nio.file.Files.createTempDirectory("graft-indexvac").toString
-    graft.Tables.registerReplacingTempDir(s"indexvac:$dir", out)
+    val out = Tables.scratch("indexvac", dir)
     val centRows = centsDf(spark, cents)
       .select(col("cid").cast("long").as("doc_id"),
         concat_ws(",", col("vals").cast("array<string>")).as("payload"))

@@ -45,15 +45,11 @@ object AvroIngest {
   final case class DocRow(
       doc_id: Long, text: String, lang: String, source: String, n_chars: Long)
 
-  private val written = new Tables.KeyedOnce[String]
-
   /** Write the documents table as `part-NNNNN.avro` container files,
     * once per (session, sf dir). Local staging here; a cluster writes
     * the same containers to DFS — the framing is identical. */
   private[sources] def avroCopy(spark: SparkSession, dir: String): String =
-    written(dir) {
-      val out = java.nio.file.Files.createTempDirectory("graft-avro-").toString
-      Tables.registerTempDir(s"avro:$out", out)
+    Tables.staged("avro", dir) { out =>
       val schemaJson = SchemaJson // serialize the STRING, not the Schema
       Tables(spark, dir, "documents")
         .select("doc_id", "text", "lang", "source", "n_chars")
@@ -79,7 +75,7 @@ object AvroIngest {
           w.close()
           Iterator.single(n)
         }.collect() // bounded: one row count per shard
-      out
+      ()
     }
 
   /** Decode the container files back into a DataFrame: binaryFile scan

@@ -55,9 +55,7 @@ object CorpusExport {
     * proving the roundtrip lost nothing and partition values landed
     * where the manifest says. */
   def qExportManifest(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-export-")
-      .toString
-    Tables.registerTempDir(s"export:$out", out)
+    val out = Tables.scratch("export", dir)
     val split = graft.ops.TextOps.splitExpr
     val curated = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), split.as("split"))

@@ -23,8 +23,6 @@ import graft.Tables
   * always: an inference pass would scan the corpus twice. */
 object CsvIngest {
 
-  private val written = new Tables.KeyedOnce[String]
-
   /** Shared write/read option sets: explicit `nullValue` distinguishes a
     * NULL field (written `\N`) from an empty string (written as a quoted
     * empty field) — with the defaults both serialize to an empty field
@@ -49,13 +47,7 @@ object CsvIngest {
       .csv(path)
 
   private def csvCopy(spark: SparkSession, dir: String): String =
-    written(dir) {
-      val out =
-        java.nio.file.Files.createTempDirectory("graft-csv-").toString
-      Tables.registerTempDir(s"csv:$out", out)
-      csvWrite(Tables(spark, dir, "documents"), out)
-      out
-    }
+    Tables.staged("csv", dir)(csvWrite(Tables(spark, dir, "documents"), _))
 
   def qIngestCsv(spark: SparkSession, dir: String): DataFrame = {
     val docs = csvRead(spark,

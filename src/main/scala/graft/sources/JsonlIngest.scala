@@ -23,18 +23,9 @@ import graft.Tables
   * play by design. */
 object JsonlIngest {
 
-  // dir -> session-temp JSONL copy (written once per JVM; registered for
-  // shutdown cleanup like the materializations)
-  private val written = new Tables.KeyedOnce[String]
-
   private def jsonlCopy(spark: SparkSession, dir: String): String =
-    written(dir) {
-      val out =
-        java.nio.file.Files.createTempDirectory("graft-jsonl-").toString
-      Tables.registerTempDir(s"jsonl:$out", out)
-      Tables(spark, dir, "documents").write.mode("overwrite").json(out)
-      out
-    }
+    Tables.staged("jsonl", dir)(
+      Tables(spark, dir, "documents").write.mode("overwrite").json(_))
 
   def qIngestJsonl(spark: SparkSession, dir: String): DataFrame = {
     val path = jsonlCopy(spark, dir)
@@ -56,13 +47,8 @@ object JsonlIngest {
   // JSON (the intact line ends in '}', the truncation drops it), with
   // the corrupted ID SET a pure function of the corpus so the oracle
   // can name it without parsing broken lines
-  private val dirtyWritten = new Tables.KeyedOnce[String]
-
   private def dirtyCopy(spark: SparkSession, dir: String): String =
-    dirtyWritten(dir) {
-      val out =
-        java.nio.file.Files.createTempDirectory("graft-jsonl-dirty-").toString
-      Tables.registerTempDir(s"jsonl-dirty:$out", out)
+    Tables.staged("jsonl-dirty", dir) { out =>
       Tables(spark, dir, "documents")
         .select(when(col("doc_id") % 37 === 0,
             expr("substring(to_json(struct(doc_id, text, lang, source, n_chars)), 1, " +
@@ -71,7 +57,6 @@ object JsonlIngest {
             col("source"), col("n_chars"))))
           .as("value"))
         .write.mode("overwrite").text(out)
-      out
     }
 
   /** Malformed-record accounting — the dirty-ingest reality at 100 TB:

@@ -22,16 +22,9 @@ import graft.Tables
   * the catalog already knows). */
 object OrcIngest {
 
-  private val written = new Tables.KeyedOnce[String]
-
   private def orcCopy(spark: SparkSession, dir: String): String =
-    written(dir) {
-      val out =
-        java.nio.file.Files.createTempDirectory("graft-orc-").toString
-      Tables.registerTempDir(s"orc:$out", out)
-      Tables(spark, dir, "documents").write.mode("overwrite").orc(out)
-      out
-    }
+    Tables.staged("orc", dir)(
+      Tables(spark, dir, "documents").write.mode("overwrite").orc(_))
 
   def qIngestOrc(spark: SparkSession, dir: String): DataFrame = {
     val docs = spark.read

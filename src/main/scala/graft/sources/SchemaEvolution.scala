@@ -25,13 +25,8 @@ import graft.Tables
   * the hash. */
 object SchemaEvolution {
 
-  private val written = new Tables.KeyedOnce[String]
-
   private def evolvedDir(spark: SparkSession, dir: String): String =
-    written(dir) {
-      val out =
-        java.nio.file.Files.createTempDirectory("graft-schemaevo-").toString
-      Tables.registerTempDir(s"schemaevo:$out", out)
+    Tables.staged("schemaevo", dir) { out =>
       val docs = Tables(spark, dir, "documents")
       docs.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "text", "lang") // v1 schema era
@@ -39,7 +34,6 @@ object SchemaEvolution {
       docs.filter(col("doc_id") % 2 === 1) // v2 schema era
         .select("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$out/era=2")
-      out
     }
 
   def qSchemaMerge(spark: SparkSession, dir: String): DataFrame = {

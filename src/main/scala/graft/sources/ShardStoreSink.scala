@@ -257,8 +257,7 @@ object ShardSinkQueries {
   import org.apache.spark.sql.functions._
 
   def qShardSink(spark: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft-shardsink").toString
-    graft.Tables.registerTempDir(s"shardsink:$out", out)
+    val out = graft.Tables.scratch("shardsink", dir)
     graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text").as("payload"))
       .repartition(4, col("doc_id"))
@@ -280,8 +279,7 @@ object ShardSinkQueries {
     * snapshot is byte-stable under later commits (ShardSinkSpec
     * additionally pins the v1 shard files byte-identical). */
   def qShardTimetravel(spark: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft-shardtt").toString
-    graft.Tables.registerTempDir(s"shardtt:$out", out)
+    val out = graft.Tables.scratch("shardtt", dir)
     val base = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text").as("payload"))
     base.filter(col("doc_id") % 2 === 0)
@@ -310,8 +308,7 @@ object ShardSinkQueries {
     * witness; ShardSinkSpec pins the physical-deletion side (v1 files
     * gone, pinned read refuses loudly). */
   def qShardVacuum(spark: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft-shardvac").toString
-    graft.Tables.registerTempDir(s"shardvac:$out", out)
+    val out = graft.Tables.scratch("shardvac", dir)
     val base = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text").as("payload"))
     for (slice <- Seq(base.filter(col("doc_id") % 2 === 0),

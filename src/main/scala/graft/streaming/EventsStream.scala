@@ -296,23 +296,16 @@ object EventsStream {
     * exactly-once-placement proof (EventsStreamSpec witnesses the same
     * property in-JVM; this puts it behind the driver gate).
     *
-    * Fresh temp output/checkpoint per invocation — the query re-runs the
-    * whole stream+replay dance every time, so repeated bench passes time
-    * the same work. */
+    * Fresh output/checkpoint dir per invocation (a [[graft.Tables.scratch]]
+    * keyed by the sf dir) — the query re-runs the whole stream+replay
+    * dance every time, so repeated bench passes time the same work. */
   def qStreamSink(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val out = Files.createTempDirectory("graft-streamsink").toString
-    graft.Tables.registerTempDir(s"streamsink-out:$out", out)
-    // FileStreamSource requires a DIRECTORY (its basePath); the fixture's
-    // events table is a single file — stage a symlink, not a copy
-    val srcDir = Files.createTempDirectory("graft-streamsrc")
-    graft.Tables.registerTempDir(s"streamsink-src:$srcDir", srcDir.toString)
-    Files.createSymbolicLink(srcDir.resolve("events.parquet"),
-      Paths.get(dir, "events.parquet").toAbsolutePath)
+    val out = graft.Tables.scratch("streamsink", dir)
     val schema = "event_id BIGINT, ts BIGINT, user_id BIGINT, " +
       "event_type STRING, value DOUBLE, props STRING"
-    def src = spark.readStream.schema(schema).parquet(srcDir.toString)
+    def src = spark.readStream.schema(schema).parquet(eventsSrcDir(dir))
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     // stop() returns when the execution thread dies, but the checkpoint's
     // ownership entry is released asynchronously (termination-event
@@ -366,13 +359,32 @@ object EventsStream {
   // FileStreamSource needs a DIRECTORY whose files are all one table;
   // the fixture dir mixes every table, so stage a symlink dir holding
   // just events.parquet — shareable across queries and passes (read-only)
-  private val stagedSrc = new graft.Tables.KeyedOnce[String]
-  private def eventsSrcDir(dir: String): String = stagedSrc(dir) {
-    val d = java.nio.file.Files.createTempDirectory("graft-streamsrc-ded")
-    graft.Tables.registerTempDir(s"streamsrc:$d", d.toString)
-    java.nio.file.Files.createSymbolicLink(d.resolve("events.parquet"),
-      java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath)
-    d.toString
+  private def eventsSrcDir(dir: String): String =
+    graft.Tables.staged("streamsrc", dir) { d =>
+      java.nio.file.Files.createSymbolicLink(
+        java.nio.file.Paths.get(d, "events.parquet"),
+        java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath)
+      ()
+    }
+
+  /** Writes each `(name, df)` into `dir` as ONE parquet file `name`, with
+    * modification times 30 s apart in list order: a FileStreamSource
+    * orders its initial listing by modification time, so a
+    * maxFilesPerTrigger=1 stream consumes the files in list order. */
+  private[streaming] def writeOrdered(dir: String,
+      files: Seq[(String, DataFrame)]): Unit = {
+    import java.nio.file.{Files, Paths}
+    val now = System.currentTimeMillis()
+    files.zipWithIndex.foreach { case ((name, df), i) =>
+      val tmp = s"$dir/_tmp_$name"
+      df.repartition(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.move(part.toPath, Paths.get(dir, name))
+      graft.Tables.deleteDir(tmp)
+      Paths.get(dir, name).toFile
+        .setLastModified(now - (files.size - i) * 30000L)
+    }
   }
 
   /** Run a stream to a memory sink and return the sink's rows as a
@@ -458,16 +470,9 @@ object EventsStream {
   // dir -> 6-file staged copy of events (written once per JVM from the
   // NORMALIZED batch table, so ts is unconditionally instant-typed
   // TIMESTAMP — no parquet-unit ambiguity in the declared stream schema)
-  private val splitStaged = new graft.Tables.KeyedOnce[String]
   private def splitEventsDir(spark: SparkSession, dir: String): String =
-    splitStaged(dir) {
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-streamsplit").toString
-      graft.Tables.registerTempDir(s"streamsplit:$d", d)
-      graft.Tables(spark, dir, "events")
-        .repartition(6).write.mode("overwrite").parquet(d)
-      d
-    }
+    graft.Tables.staged("streamsplit", dir)(graft.Tables(spark, dir, "events")
+      .repartition(6).write.mode("overwrite").parquet(_))
 
   /** Multi-batch INCREMENTAL aggregation behind the gate: the events
     * table staged as six files, streamed one file per trigger — six real
@@ -572,9 +577,9 @@ object EventsStream {
   private val TsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
   /** Build the staged stream source dirs (symlink dir, 6-file split,
-    * 3-file late layout) ahead of time — each is a KeyedOnce artifact
-    * that otherwise charges its staging write to the first stream gate
-    * query of a bench pass. */
+    * 3-file late layout) ahead of time — each is a [[graft.Tables.staged]]
+    * layout that otherwise charges its staging write to the first stream
+    * gate query of a bench pass. */
   def prewarmStaging(spark: SparkSession, dir: String): Unit = {
     eventsSrcDir(dir)
     splitEventsDir(spark, dir)
@@ -586,26 +591,11 @@ object EventsStream {
   // Three one-file slices keyed by user_id % 3 — unlike the round-robin
   // 6-file split, these slices are SQL-EXPRESSIBLE, so a metrics oracle
   // can recompute the exact distinct-key population of any file subset.
-  private val sliceStaged = new graft.Tables.KeyedOnce[String]
-  private[streaming] def userSliceDir(
-      spark: SparkSession, dir: String): String = sliceStaged(dir) {
-    import java.nio.file.{Files, Paths}
-    val d = Files.createTempDirectory("graft-streamslice").toString
-    graft.Tables.registerTempDir(s"streamslice:$d", d)
+  private[streaming] def userSliceDir(spark: SparkSession,
+      dir: String): String = graft.Tables.staged("streamslice", dir) { d =>
     val ev = graft.Tables(spark, dir, "events")
-    val now = System.currentTimeMillis()
-    for (i <- 0 to 2) {
-      val tmp = s"$d/_tmp_u$i"
-      ev.filter(col("user_id") % 3 === i)
-        .repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, Paths.get(d, s"u$i.parquet"))
-      graft.Tables.deleteDir(tmp)
-      Paths.get(d, s"u$i.parquet").toFile
-        .setLastModified(now - (3 - i) * 30000)
-    }
-    d
+    writeOrdered(d, (0 to 2).map(i =>
+      s"u$i.parquet" -> ev.filter(col("user_id") % 3 === i)))
   }
 
   /** The KEYED-STATE SCALE WITNESS behind the driver gate: a real
@@ -626,8 +616,7 @@ object EventsStream {
   def qStreamStateMetrics(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     val staged = userSliceDir(spark, dir)
-    val work = Files.createTempDirectory("graft-statemetrics").toString
-    graft.Tables.registerTempDir(s"statemetrics:$work", work)
+    val work = graft.Tables.scratch("statemetrics", dir)
     val srcDir = s"$work/src"; val chk = s"$work/chk"
     Files.createDirectories(Paths.get(srcDir))
     def linkIn(names: Seq[String]): Unit = names.foreach { f =>
@@ -787,35 +776,18 @@ object EventsStream {
   // forward so the late file meets a current one. Explicit ascending
   // mtimes pin consumption order — FileStreamSource orders its initial
   // listing by modification time.
-  private val lateStaged = new graft.Tables.KeyedOnce[String]
-  private[streaming] def lateEventsDir(
-      spark: SparkSession, dir: String): String = lateStaged(dir) {
-    import java.nio.file.{Files, Paths}
-    val d = Files.createTempDirectory("graft-streamlate").toString
-    graft.Tables.registerTempDir(s"streamlate:$d", d)
+  private[streaming] def lateEventsDir(spark: SparkSession,
+      dir: String): String = graft.Tables.staged("streamlate", dir) { d =>
     val ev = graft.Tables(spark, dir, "events")
     val cutoff = ev.agg(date_trunc("hour",
       max(col("ts")) - expr("INTERVAL 24 HOURS")).as("c"))
       .head().getAs[java.sql.Timestamp](0)
     val mid = new java.sql.Timestamp(cutoff.getTime + 12L * 3600 * 1000)
-    def writeOne(df: org.apache.spark.sql.DataFrame, name: String,
-        mtime: Long): Unit = {
-      val tmp = s"$d/_tmp_$name"
-      df.repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, Paths.get(d, name))
-      graft.Tables.deleteDir(tmp)
-      Paths.get(d, name).toFile.setLastModified(mtime); ()
-    }
-    val now = System.currentTimeMillis()
-    writeOne(ev.filter(col("ts") >= lit(cutoff) && col("ts") < lit(mid)),
-      "00-recent-a.parquet", now - 90000)
-    writeOne(ev.filter(col("ts") >= lit(mid)), "01-recent-b.parquet",
-      now - 60000)
-    writeOne(ev.filter(col("ts") < lit(cutoff)), "02-late.parquet",
-      now - 30000)
-    d
+    writeOrdered(d, Seq(
+      "00-recent-a.parquet" ->
+        ev.filter(col("ts") >= lit(cutoff) && col("ts") < lit(mid)),
+      "01-recent-b.parquet" -> ev.filter(col("ts") >= lit(mid)),
+      "02-late.parquet" -> ev.filter(col("ts") < lit(cutoff))))
   }
 
   /** Watermark LATE-DATA semantics behind the driver gate: the recent
@@ -865,8 +837,7 @@ object EventsStream {
     val staged = splitEventsDir(spark, dir)
     val srcFiles = new java.io.File(staged).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted
-    val work = Files.createTempDirectory("graft-restart").toString
-    graft.Tables.registerTempDir(s"restart:$work", work)
+    val work = graft.Tables.scratch("restart", dir)
     val srcDir = s"$work/src"; val chk = s"$work/chk"
     Files.createDirectories(Paths.get(srcDir))
     def linkIn(names: Seq[String]): Unit = names.foreach { f =>
@@ -908,8 +879,7 @@ object EventsStream {
     * the hash. */
   def qStreamDimRefresh(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val work = Files.createTempDirectory("graft-dimrefresh").toString
-    graft.Tables.registerTempDir(s"dimrefresh:$work", work)
+    val work = graft.Tables.scratch("dimrefresh", dir)
     val srcDir = s"$work/src"; val chk = s"$work/chk"
     val dimDir = s"$work/dim"
     Files.createDirectories(Paths.get(srcDir))

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -30,11 +28,6 @@ import org.apache.spark.sql.streaming.Trigger
   * of the three batches from the orders table directly. */
 object UpsertStream {
 
-  // dir -> 3-file staged CDC stream (written once per JVM; mtimes set
-  // so FileStreamSource's initial listing preserves batch order — the
-  // r12 lesson)
-  private val staged = new graft.Tables.KeyedOnce[String]
-
   private def cdcBatches(spark: SparkSession,
       dir: String): Seq[(String, DataFrame)] = {
     val base = graft.Tables(spark, dir, "orders")
@@ -54,23 +47,12 @@ object UpsertStream {
       ("02-deletes.parquet", f3))
   }
 
-  private[graft] def stagedCdcDir(spark: SparkSession,
-      dir: String): String = staged(dir) {
-    val d = Files.createTempDirectory("graft-cdcstream").toString
-    graft.Tables.registerTempDir(s"cdcstream:$d", d)
-    val now = System.currentTimeMillis()
-    cdcBatches(spark, dir).zipWithIndex.foreach { case ((name, df), i) =>
-      val tmp = s"$d/_tmp_$name"
-      df.repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, Paths.get(d, name))
-      graft.Tables.deleteDir(tmp)
-      Paths.get(d, name).toFile.setLastModified(now - (90 - 30 * i) * 1000L)
-      ()
-    }
-    d
-  }
+  /** dir -> 3-file staged CDC stream, staged once per JVM; the files'
+    * mtimes keep FileStreamSource's initial listing in batch order (the
+    * r12 lesson). */
+  private[graft] def stagedCdcDir(spark: SparkSession, dir: String): String =
+    graft.Tables.staged("cdcstream", dir)(
+      EventsStream.writeOrdered(_, cdcBatches(spark, dir)))
 
   def qStreamCdcApply(spark: SparkSession, dir: String): DataFrame =
     applyCdcStream(spark, stagedCdcDir(spark, dir))
@@ -83,10 +65,8 @@ object UpsertStream {
     * order-matters and duplicate-key pins. */
   private[streaming] def applyCdcStream(spark: SparkSession,
       srcDir: String): DataFrame = {
-    val stateRoot = Files.createTempDirectory("graft-cdcstate").toString
-    graft.Tables.registerTempDir(s"cdcstate:$stateRoot", stateRoot)
-    val ck = Files.createTempDirectory("graft-cdcck").toString
-    graft.Tables.registerTempDir(s"cdcck:$ck", ck)
+    val work = graft.Tables.scratch("cdcapply", srcDir)
+    val stateRoot = s"$work/state"; val ck = s"$work/chk"
     val stateRef =
       new java.util.concurrent.atomic.AtomicReference[String](null)
     val ver = new java.util.concurrent.atomic.AtomicInteger(0)

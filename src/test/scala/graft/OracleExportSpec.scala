@@ -4,8 +4,18 @@ import graft.SparkSpec
 
 /** Pins the OracleExport contract the gate oracles depend on: stable
   * sf-keyed paths, once-per-JVM writes, and the Bench disable switch. */
-class OracleExportSpec extends SparkSpec {
+class OracleExportSpec extends SparkSpec
+    with org.scalatest.BeforeAndAfterAll {
   import org.apache.spark.sql.functions._
+
+  // the specs' fixed export paths: cleared before use (a previous run's
+  // copy would break the disabled-export check), deleted after the suite
+  private val bases = scala.collection.mutable.ArrayBuffer.empty[String]
+  private def exportBase(base: String): String = {
+    graft.Tables.deleteDir(base); bases += base; base
+  }
+  override protected def afterAll(): Unit =
+    bases.foreach(graft.Tables.deleteDir)
 
   test("oraclePath is the sf0.01-keyed glob the oracle SQL embeds") {
     assert(OracleExport.oraclePath("x") ==
@@ -15,8 +25,7 @@ class OracleExportSpec extends SparkSpec {
   test("export writes once per (tag, dir), honors the disable conf") {
     import spark.implicits._
     val dir = "/spec/only" // path key, no table reads involved
-    val base = "/tmp/graft-oracle-export/spectag-_spec_only"
-    graft.Tables.registerTempDir(s"spec:$base", base)
+    val base = exportBase("/tmp/graft-oracle-export/spectag-_spec_only")
     val out = new java.io.File(base)
     // disabled: nothing written
     spark.conf.set("spark.graft.oracleExport", "false")
@@ -39,8 +48,7 @@ class OracleExportSpec extends SparkSpec {
   test("re-export under a different knob key throws; same key is a no-op") {
     import spark.implicits._
     val dir = "/spec/knobguard"
-    val base = "/tmp/graft-oracle-export/knobtag-_spec_knobguard"
-    graft.Tables.registerTempDir(s"spec:$base", base)
+    val base = exportBase("/tmp/graft-oracle-export/knobtag-_spec_knobguard")
     OracleExport.export(Seq(1L).toDF("v"), "knobtag", dir, "k12.w8")
     // same knobs: silent reuse (the per-JVM once semantics)
     OracleExport.export(Seq(9L).toDF("v"), "knobtag", dir, "k12.w8")
@@ -56,8 +64,7 @@ class OracleExportSpec extends SparkSpec {
   test("a failed export write is retried by the next caller") {
     import spark.implicits._
     val dir = "/spec/retry"
-    val base = "/tmp/graft-oracle-export/retrytag-_spec_retry"
-    graft.Tables.registerTempDir(s"spec:$base", base)
+    val base = exportBase("/tmp/graft-oracle-export/retrytag-_spec_retry")
     // first attempt: evaluation throws mid-write → the in-flight mark
     // must be rolled back (mark-before-write used to pin the failure
     // for the whole JVM and the gate then read a missing export)

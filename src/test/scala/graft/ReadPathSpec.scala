@@ -13,8 +13,6 @@ class ReadPathSpec extends AnyFunSuite {
   // file (relative to src/main/scala) → its sites; None = any number
   private val allowed: Map[String, Option[Int]] = Map(
     "graft/Tables.scala" -> Some(1), // inside Tables.parquet itself
-    "graft/ops/Partitioned.scala" -> Some(1),
-    "graft/ops/Compact.scala" -> Some(3),
     "graft/streaming/UpsertStream.scala" -> Some(2),
     "graft/streaming/EventsStream.scala" -> Some(2),
     "graft/Debug.scala" -> None)

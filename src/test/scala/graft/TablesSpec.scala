@@ -11,6 +11,11 @@ class TablesSpec extends SparkSpec {
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Entries of the session temp dir whose name starts with `prefix`. */
+  private def tempDirsNamed(prefix: String): Int =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles())
+      .toSeq.flatten.count(_.getName.startsWith(prefix))
+
   /** Runs `body` and returns how many schema-inference jobs (a job whose
     * first stage is `parquet at Tables.scala:N`) it launched. */
   private def inferenceJobs(body: => Unit): Int = {
@@ -57,6 +62,54 @@ class TablesSpec extends SparkSpec {
     val third = Tables.materializeSharedBy(spark, "tablesspec", "recovery-test")(
       Seq((9L, "z")).toDF("id", "v"))
     assert(third.count() === 2) // caller-promised same content: reused
+    // a staged layout follows the same rule
+    var writes = 0
+    def stage() = Tables.staged("tablesspec", "staged-recovery-test") { d =>
+      writes += 1
+      spark.range(3).write.mode("overwrite").parquet(d)
+    }
+    val s1 = stage()
+    assert(Tables.parquet(spark, s1).count() === 3)
+    val stagedCached = Tables.schemaCacheSize
+    rm(new java.io.File(s1))
+    val s2 = stage()
+    assert(writes === 2 && new java.io.File(s2).isDirectory)
+    assert(Tables.parquet(spark, s2).count() === 3)
+    assert(Tables.schemaCacheSize === stagedCached)
+    assert(stage() === s2 && writes === 2) // alive: reused
+  }
+
+  test("two threads staging one key run its write once; a failed write caches nothing") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val key = java.util.UUID.randomUUID.toString
+    val writes = new java.util.concurrent.atomic.AtomicInteger()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    def stage(): String = {
+      go.await()
+      Tables.staged("tablesspec-once", key) { d =>
+        writes.incrementAndGet()
+        Thread.sleep(300) // hold the build while the other thread arrives
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(d, "x"), Array[Byte](1))
+        ()
+      }
+    }
+    val both = Seq.fill(2)(Future(stage()))
+    go.countDown()
+    val dirs = both.map(Await.result(_, 60.seconds))
+    assert(writes.get === 1)
+    assert(dirs.distinct.size === 1 && new java.io.File(dirs.head, "x").isFile)
+    // a write that throws leaves no entry behind: the next call writes
+    val failKey = java.util.UUID.randomUUID.toString
+    intercept[IllegalStateException] {
+      Tables.staged("tablesspec-once", failKey)(
+        _ => throw new IllegalStateException("boom"))
+    }
+    var retried = 0
+    Tables.staged("tablesspec-once", failKey)(_ => retried += 1)
+    assert(retried === 1)
   }
 
   test("materializeSharedBy never touches the builder on reuse") {
@@ -158,6 +211,31 @@ class TablesSpec extends SparkSpec {
     val size = Tables.schemaCacheSize
     (1 to 100).foreach(_ => Tables.materialize(df, tag))
     assert(Tables.schemaCacheSize === size)
+    assert(tempDirsNamed(s"graft-mat-$tag-") === 1)
+    // a scratch dir read through Tables.parquet on every call
+    val stag = s"tablesspec-scratch-${java.util.UUID.randomUUID}"
+    def scratchRead(): Long = {
+      val d = Tables.scratch(stag, "bounded")
+      df.write.mode("overwrite").parquet(d)
+      Tables.parquet(spark, d).count()
+    }
+    assert(scratchRead() === 2)
+    val scratchSize = Tables.schemaCacheSize
+    (1 to 100).foreach(_ => assert(scratchRead() === 2))
+    assert(Tables.schemaCacheSize === scratchSize)
+    assert(tempDirsNamed(s"graft-$stag-") === 1,
+      "exactly one scratch dir of the key stays on disk")
+  }
+
+  test("a second q_export_manifest or q_shard_sink call adds no temp dir") {
+    val dir = sf("sf0.001")
+    for ((q, prefix) <- Seq("q_export_manifest" -> "graft-export-",
+        "q_shard_sink" -> "graft-shardsink")) {
+      SparkEntry.queries(q)(spark, dir).collect()
+      val n = tempDirsNamed(prefix)
+      SparkEntry.queries(q)(spark, dir).collect()
+      assert(tempDirsNamed(prefix) === n, s"$q kept its previous call's dir")
+    }
   }
 
   test("percentileCont equals DuckDB's weighted form on seeded random groups") {

@@ -16,11 +16,8 @@ class ShardSinkSpec extends SparkSpec {
   private def docs = graft.Tables(spark, sf("sf0.001"), "documents")
     .select(col("doc_id"), col("text").as("payload"))
 
-  private def freshDir(): String = {
-    val d = Files.createTempDirectory("graft-shardspec").toString
-    graft.Tables.registerTempDir(s"shardspec:$d", d)
-    d
-  }
+  private def freshDir(): String =
+    graft.Tables.scratch("shardspec", java.util.UUID.randomUUID.toString)
 
   test("round trip is exact (ids and payload bytes)") {
     val out = freshDir()

@@ -386,9 +386,7 @@ class EventsStreamSpec extends SparkSpec {
     // pins that the merge actually spans multiple batches — if Spark ever
     // ignored the option and ran one batch, the gate would pass vacuously
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files
-      .createTempDirectory("inc-spec-").toString
-    graft.Tables.registerTempDir(s"incspec:$dir", dir)
+    val dir = graft.Tables.scratch("incspec", "maxFilesPerTrigger")
     graft.Tables.events(spark, "/root/testdata/sf0.001")
       .repartition(3).write.mode("overwrite").parquet(dir)
     val nFiles = new java.io.File(dir).listFiles()
@@ -418,8 +416,7 @@ class EventsStreamSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.functions._
     val dir = sf("sf0.001")
-    val work = Files.createTempDirectory("graft-restart-spec").toString
-    graft.Tables.registerTempDir(s"restartspec:$work", work)
+    val work = graft.Tables.scratch("restartspec", "restart")
     val srcDir = s"$work/src"; Files.createDirectories(Paths.get(srcDir))
     val ev = graft.Tables.events(spark, dir)
     ev.filter(col("event_id") % 2 === 0).repartition(1)

@@ -12,8 +12,7 @@ class UpsertStreamSpec extends SparkSpec {
 
   private def stage(batches: Seq[Seq[(String, Long, Double)]]): String = {
     import spark.implicits._
-    val d = Files.createTempDirectory("graft-cdcspec").toString
-    graft.Tables.registerTempDir(s"cdcspec:$d", d)
+    val d = graft.Tables.scratch("cdcspec", java.util.UUID.randomUUID.toString)
     val now = System.currentTimeMillis()
     batches.zipWithIndex.foreach { case (rows, i) =>
       val tmp = s"$d/_tmp_$i"
