@@ -112,20 +112,19 @@ object Tables {
     "spark.sql.sources.partitionColumnTypeInference.enabled")
 
   /** (name, length, mtime) of every leaf file under `path`, sorted; None
-    * when the path can't be listed (e.g. missing, or a glob). */
+    * when the path can't be listed (e.g. missing, or a glob). A plain
+    * `listStatus` walk: `FileSystem.listFiles` builds a
+    * `LocatedFileStatus` per file, which without native Hadoop forks a
+    * shell per file to read its permissions. */
   private def leafFiles(spark: SparkSession,
       path: String): Option[Seq[(String, Long, Long)]] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    try {
-      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listFiles(p, true)
-      val b = Vector.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      Some(b.result().sorted)
-    } catch { case _: java.io.FileNotFoundException => None }
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    try Some(fs.listStatus(p).toSeq.flatMap(walk).sorted)
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** A schema-less parquet read with the schema inferred once per session

@@ -53,12 +53,12 @@ final case class MapReduceJob(
 
   /** The full dataflow as an RDD of output lines, partitioned exactly as
     * the reference's reduce tasks would be (partition i = part-{i:05d}).
-    * `numMappers` is a MINIMUM split count (Hadoop minPartitions): the
-    * reference assigns whole files round-robin to exactly N map tasks
-    * (manager/__main__.py:440-455); byte-based splitting is deliberately
-    * finer (SURVEY.md §7.4) but honors the requested parallelism floor.
-    * `wholeFiles = true` restores the reference's granularity exactly —
-    * see [[MapReduceJob.inputLines]]. */
+    * `numMappers` is a MINIMUM map-task count: the reference assigns whole
+    * files round-robin to exactly N map tasks (manager/__main__.py:
+    * 440-455); the scan packs files into byte-sized splits instead
+    * (SURVEY.md §7.4) and repartitions up to `numMappers` only when it
+    * yields fewer. `wholeFiles = true` restores the reference's
+    * granularity exactly — see [[MapReduceJob.inputLines]]. */
   def transform(spark: SparkSession): RDD[String] =
     MapReduceJob.dataflow(
       MapReduceJob.inputLines(spark, inputDir, wholeFiles, numMappers),
@@ -103,36 +103,37 @@ object MapReduceJob {
       .repartitionAndSortWithinPartitions(new Md5Partitioner(numReducers))
       .mapPartitions(_.map(_._1), preservesPartitioning = true)
 
-  /** O1/O2 input scan. Default: byte-split text lines (Hadoop splits —
-    * finer-grained than the reference, deliberately; SURVEY.md §7.4).
+  /** O1/O2 input scan, through Spark's file index (`spark.read.text`).
+    * Default: one row per text line, files bin-packed into byte-sized
+    * splits (finer-grained than the reference for big files, coarser for
+    * many small ones; SURVEY.md §7.4). The index bounds the task count by
+    * itself: at `local[4]`, 256 small files pack into 8 splits, not 256.
     * `wholeFiles = true` is the compat knob for MAPPERS WITH PER-FILE
     * STATE: like the reference's round-robin whole-file assignment
-    * (manager/__main__.py:440-455), no file is ever split across map
-    * tasks — every file's lines stay contiguous in one partition, in
-    * order. Costs memory proportional to the largest file (wholeTextFiles
-    * materializes each file), which is exactly why byte-splitting is the
-    * default at 100 TB. */
+    * (manager/__main__.py:440-455), each file is one row, so no file is
+    * ever split across map tasks — every file's lines stay contiguous in
+    * one partition, in order. Costs memory proportional to the largest
+    * file, which is exactly why line splitting is the default at 100 TB.
+    *
+    * Floor: when the index yields fewer than `numMappers` partitions, the
+    * rows (whole files in `wholeFiles` mode, before line splitting) are
+    * repartitioned to exactly `numMappers`.
+    *
+    * Not the `SparkContext` text readers: their Hadoop `FileInputFormat`
+    * listing builds a `LocatedFileStatus` per file, which without native
+    * Hadoop forks a shell per file to read its permissions — about 1 s of
+    * driver time before every job on a 256-file input. Both readers split
+    * lines with Hadoop's `LineRecordReader` defaults and skip `_`/`.`
+    * files. */
   private[mr] def inputLines(spark: SparkSession, inputDir: String,
-      wholeFiles: Boolean, minPartitions: Int = 2): RDD[String] =
-    if (wholeFiles)
-      spark.sparkContext.wholeTextFiles(inputDir, minPartitions)
-        .flatMap { case (_, content) => content.linesIterator }
-    else {
-      val raw = spark.sparkContext.textFile(inputDir, minPartitions)
-      // Many-small-files corpora explode into one partition per file
-      // (TextInputFormat splits files, never combines them): a 1024-file
-      // input measured 1024 map tasks — and for PIPE mappers 1024
-      // process spawns — per job, ~25 ms apiece (~31 s vs the reference
-      // cluster's 19 s at 191 MB, measured by tools/ref_throughput.py).
-      // Coalesce (no shuffle, adjacent splits merge) back to the larger
-      // of the requested floor and the available parallelism — the
-      // reference itself assigns whole files round-robin onto exactly N
-      // map tasks, so a bounded task count IS the fidelity semantics.
-      // The 4x slack leaves normally-split inputs untouched.
-      val target =
-        math.max(minPartitions, spark.sparkContext.defaultParallelism)
-      if (raw.getNumPartitions > 4 * target) raw.coalesce(target) else raw
-    }
+      wholeFiles: Boolean, numMappers: Int = 2): RDD[String] = {
+    val rows = spark.read.option("wholetext", wholeFiles).text(inputDir)
+      .queryExecution.toRdd.map(_.getUTF8String(0).toString)
+    val floored =
+      if (rows.getNumPartitions < numMappers) rows.repartition(numMappers)
+      else rows
+    if (wholeFiles) floored.flatMap(_.linesIterator) else floored
+  }
 
   /** key = substring before the first tab (worker/__main__.py:115);
     * a line with no tab is its own key, like Python's split()[0]. */

@@ -8,9 +8,6 @@ import org.apache.spark.sql.functions._
   * Bench's JSON record hygiene. */
 class TablesSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** Entries of the session temp dir whose name starts with `prefix`. */
   private def tempDirsNamed(prefix: String): Int =
     Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles())

@@ -10,17 +10,6 @@ import graft.SparkSpec
   * reference entry point the in-process [[Submit]] facade didn't cover. */
 class ManagerServerSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  private def stageExecutable(resource: String): String = {
-    val src = Paths.get(getClass.getResource(resource).toURI)
-    val dst = Paths.get(tmpDir("mgr-exec"), src.getFileName.toString)
-    Files.copy(src, dst)
-    assert(dst.toFile.setExecutable(true))
-    dst.toString
-  }
-
   /** submit.py's exact client behavior: one JSON message, then close. */
   private def send(port: Int, json: String): Unit = {
     val s = new java.net.Socket("localhost", port)

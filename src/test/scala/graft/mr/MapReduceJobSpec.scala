@@ -6,9 +6,6 @@ import graft.SparkSpec
 
 class MapReduceJobSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   private def writeInput(dir: String, files: Map[String, String]): Unit =
     files.foreach { case (name, content) =>
       Files.writeString(Paths.get(dir, name), content)
@@ -104,6 +101,99 @@ class MapReduceJobSpec extends SparkSpec {
     val byPartition = MapReduceJob.inputLines(spark, in, wholeFiles = true)
       .mapPartitionsWithIndex { (i, it) => it.map(l => (i, l)) }
       .collect()
+    corpus.values.foreach { content =>
+      val fileLines = content.linesIterator.toSeq
+      val idx = byPartition.indexWhere(_._2 == fileLines.head)
+      assert(idx >= 0)
+      val window = byPartition.slice(idx, idx + fileLines.length)
+      assert(window.map(_._2).toSeq === fileLines, "lines contiguous in order")
+      assert(window.map(_._1).distinct.length === 1, "single partition")
+    }
+  }
+
+  /** name → content of every entry of an output dir. */
+  private def outputBytes(dir: String): Map[String, String] =
+    Files.list(Paths.get(dir)).iterator.asScala
+      .map(p => p.getFileName.toString -> Files.readString(p)).toMap
+
+  test("input edge cases: CRLF, no trailing newline, empty and hidden files") {
+    val in = tmpDir("mr-edge")
+    writeInput(in, Map(
+      "crlf.txt" -> "a b\r\nc a\r\n",
+      "notrail.txt" -> "b d",
+      "empty.txt" -> "",
+      "_SUCCESS" -> "zz hidden\n",
+      ".hidden" -> "zz hidden\n"))
+    val identity: MapReduceJob.Stage = lines => lines
+    // word count, R = 3: "zz" and "hidden" would both land in part-00002
+    val counts = Map(
+      "part-00000" -> "d\t1\n",
+      "part-00001" -> "a\t2\nb\t2\nc\t1\n",
+      "part-00002" -> "")
+    // identity, R = 2: the raw lines, so a kept '\r' or a lost last line
+    // changes the bytes
+    val lines = Map(
+      "part-00000" -> "a b\nc a\n",
+      "part-00001" -> "b d\n")
+
+    def native(out: String, wholeFiles: Boolean): Unit = {
+      WordCount.job(in, s"$out/wc", 3).copy(wholeFiles = wholeFiles)
+        .run(spark, exactPartNames = true)
+      MapReduceJob(in, s"$out/id", identity, identity, 2,
+        wholeFiles = wholeFiles).run(spark, exactPartNames = true)
+    }
+    def submit(out: String): Unit = {
+      Submit.run(spark, Seq("-i", in, "-o", s"$out/wc",
+        "-m", stageExecutable("/mr/exec/wc_map.sh"),
+        "-r", stageExecutable("/mr/exec/wc_reduce.sh"), "--nreducers", "3"))
+      Submit.run(spark, Seq("-i", in, "-o", s"$out/id",
+        "-m", "/bin/cat", "-r", "/bin/cat", "--nreducers", "2"))
+    }
+    val runs = Seq[(String, String => Unit)](
+      "native" -> (native(_, wholeFiles = false)),
+      "Submit.run" -> submit,
+      "wholeFiles" -> (native(_, wholeFiles = true)))
+    runs.foreach { case (mode, run) =>
+      val out = tmpDir("mr-edge-out")
+      run(out)
+      assert(outputBytes(s"$out/wc") === counts, s"$mode word count")
+      assert(outputBytes(s"$out/id") === lines, s"$mode identity")
+    }
+  }
+
+  test("input partitions: bounded on many small files, floored at numMappers") {
+    val sc = spark.sparkContext
+    val many = tmpDir("mr-many")
+    writeInput(many, (0 until 256).map(i => f"f$i%03d.txt" -> s"w$i x\n").toMap)
+    val expected = (0 until 256).map(i => s"w$i x").sorted
+    Seq(false, true).foreach { wholeFiles =>
+      Seq(1, 4).foreach { numMappers =>
+        val rdd = MapReduceJob.inputLines(spark, many, wholeFiles, numMappers)
+        assert(rdd.getNumPartitions <=
+          4 * math.max(numMappers, sc.defaultParallelism),
+          s"wholeFiles=$wholeFiles numMappers=$numMappers")
+        assert(rdd.collect().sorted.toSeq === expected)
+      }
+    }
+
+    val one = tmpDir("mr-one")
+    writeInput(one, Map("only.txt" -> "p q\nr s\nt u\n"))
+    Seq(false, true).foreach { wholeFiles =>
+      val rdd = MapReduceJob.inputLines(spark, one, wholeFiles, 3)
+      assert(rdd.getNumPartitions >= 3, s"wholeFiles=$wholeFiles")
+      assert(rdd.collect().toSeq.sorted === Seq("p q", "r s", "t u"))
+    }
+
+    // the floor fires in wholeFiles mode: every file's lines still land
+    // contiguous in ONE partition, in file order
+    val in = tmpDir("mr-floor")
+    writeInput(in, corpus)
+    val floored = MapReduceJob.inputLines(spark, in, wholeFiles = true, 8)
+    assert(floored.getNumPartitions >= 8)
+    val byPartition = floored
+      .mapPartitionsWithIndex { (i, it) => it.map(l => (i, l)) }
+      .collect()
+    assert(byPartition.length === corpus.values.map(_.linesIterator.size).sum)
     corpus.values.foreach { content =>
       val fileLines = content.linesIterator.toSeq
       val idx = byPartition.indexWhere(_._2 == fileLines.head)

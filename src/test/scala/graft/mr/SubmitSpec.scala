@@ -9,9 +9,6 @@ import graft.SparkSpec
   * `part-{i:05d}` output-naming option. */
 class SubmitSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   private def listNames(dir: String): Set[String] =
     Files.list(Paths.get(dir)).iterator.asScala
       .map(_.getFileName.toString).toSet
@@ -21,16 +18,6 @@ class SubmitSpec extends SparkSpec {
       .filter(_.getFileName.toString.startsWith("part-"))
       .flatMap(p => Files.readAllLines(p).asScala)
       .toSeq
-
-  /** Submit executes the file DIRECTLY (shebang honored, like the
-    * reference workers) — stage the classpath fixture as an executable. */
-  private def stageExecutable(resource: String): String = {
-    val src = Paths.get(getClass.getResource(resource).toURI)
-    val dst = Paths.get(tmpDir("submit-exec"), src.getFileName.toString)
-    Files.copy(src, dst)
-    assert(dst.toFile.setExecutable(true))
-    dst.toString
-  }
 
   test("Submit.run drives the executable word count end-to-end") {
     val in = tmpDir("submit-in")

@@ -12,18 +12,6 @@ import graft.SparkSpec
   * client. Sort/merge fidelity is cross-pinned against CPython itself. */
 class WorkerClientSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  private def stageExecutable(resource: String): String = {
-    val src = getClass.getResourceAsStream(resource)
-    require(src != null, s"missing test resource $resource")
-    val f = Files.createTempFile("wc-exec", ".sh")
-    Files.copy(src, f, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    f.toFile.setExecutable(true)
-    f.toString
-  }
-
   private def send(port: Int, json: String): Unit = {
     val s = new java.net.Socket("localhost", port)
     try {
@@ -157,7 +145,7 @@ class WorkerClientSpec extends SparkSpec {
     // a ready worker immediately (its stale-found_worker path, which
     // misroutes when every worker is busy, never triggers)
     val mapSlow = {
-      val f = Files.createTempFile("wc-slow-map", ".sh")
+      val f = Paths.get(tmpDir("wc-slow"), "wc-slow-map.sh")
       Files.writeString(f,
         "#!/bin/sh\nsleep 4\ntr -s ' \\t' '\\n\\n' | grep -v '^$' | " +
           "sed 's/$/\\t1/'\n")
@@ -347,7 +335,7 @@ class WorkerClientSpec extends SparkSpec {
     val reduceSh = stageExecutable("/mr/exec/wc_reduce.sh")
     // the same map output as wc_map.sh, late enough to kill mid-task
     val mapSlow = {
-      val f = Files.createTempFile("wc-slow-map", ".sh")
+      val f = Paths.get(tmpDir("wc-slow"), "wc-slow-map.sh")
       Files.writeString(f, s"#!/bin/sh\nsleep 3\nexec /bin/sh $mapSh\n")
       f.toFile.setExecutable(true)
       f.toString
