@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 // scratch smoke/debug main — not part of the shipped surface
 object Debug {
@@ -95,13 +97,27 @@ object Debug {
       // the reference's pre-started manager+workers excludes interpreter/
       // JVM boot on both sides.
       // Debug mrtime <inDir> <outDir> <mapper> <reducer> <nm> <nr> [runs]
+      // Each run also prints the shuffle records its tasks wrote and read.
       val Seq(in, out, m, r, nm, nr) = args.slice(1, 7).toSeq
       val runs = args.lift(7).map(_.toInt).getOrElse(3)
+      val written = new java.util.concurrent.atomic.AtomicLong
+      val read = new java.util.concurrent.atomic.AtomicLong
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null) {
+            written.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+            read.addAndGet(e.taskMetrics.shuffleReadMetrics.recordsRead)
+          }
+      })
       for (i <- 1 to runs) {
+        written.set(0); read.set(0)
         val t0 = System.nanoTime()
         mr.Submit.run(spark, Seq("-i", in, "-o", s"$out-$i", "-m", m,
           "-r", r, "--nmappers", nm, "--nreducers", nr))
         println(f"[mrtime] run $i: ${(System.nanoTime() - t0) / 1e9}%.3fs")
+        ColumnBridge.drainListeners(spark.sparkContext)
+        println(s"[mrtime] shuffle $i: records written ${written.get}, " +
+          s"read ${read.get}")
       }
       spark.stop(); return
     }

@@ -9,10 +9,10 @@ import org.apache.spark.Partitioner
   * Spark's default [[org.apache.spark.HashPartitioner]] gives the same
   * *semantics* (equal keys co-located); this partitioner additionally gives
   * the same *placement* as the reference, so part-file contents match
-  * byte-for-byte. Keys are WHOLE LINES (the plain String records
-  * [[MapReduceJob.shuffle]] carries); only the tab key feeds the hash,
-  * exactly as the reference hashes `line.split("\t")[0]`. Plain line
-  * records instead of ((key, line), unit) tuples: the tuple wrapping
+  * byte-for-byte. Keys are WHOLE LINES (the keys of the `(line, count)`
+  * records [[MapReduceJob.shuffle]] carries); only the tab key feeds the
+  * hash, exactly as the reference hashes `line.split("\t")[0]`. Line
+  * keys instead of ((key, line), unit) tuples: the tuple wrapping
   * tripled per-record shuffle serialization (measured in the
   * tools/ref_throughput.py head-to-head). */
 class Md5Partitioner(override val numPartitions: Int) extends Partitioner {

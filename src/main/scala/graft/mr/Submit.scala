@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   *
   * The mapper/reducer executables keep the reference's streaming contract
   * (lines on stdin → lines on stdout; reduce input sorted with equal keys
-  * contiguous) via `rdd.pipe`. Output is byte-compat `part-{i:05d}`.
+  * contiguous) via `rdd.pipe`, in UTF-8. Output is byte-compat
+  * `part-{i:05d}`.
   */
 object Submit {
 
@@ -43,8 +44,10 @@ object Submit {
   // non-shell mapper (e.g. a python script)
   private def job(a: Args): MapReduceJob = MapReduceJob(
     inputDir = a.input, outputDir = a.output,
-    mapStage = _.pipe(Seq(new java.io.File(a.mapper).getAbsolutePath)),
-    reduceStage = _.pipe(Seq(new java.io.File(a.reducer).getAbsolutePath)),
+    mapStage =
+      MapReduceJob.pipeStage(new java.io.File(a.mapper).getAbsolutePath),
+    reduceStage =
+      MapReduceJob.pipeStage(new java.io.File(a.reducer).getAbsolutePath),
     numReducers = a.numReducers, numMappers = a.numMappers)
 
   /** Cluster-lifecycle subcommands mirroring the reference's

@@ -29,7 +29,8 @@ object WordCount {
   /** Word count over an already-loaded RDD of text lines (the same
     * [[MapReduceJob.dataflow]] as [[job]] minus the directory scan)
     * surfaced as a (word, n) DataFrame. The stages default to the native
-    * mapper/reducer; the executable twin passes `_.pipe(cmd)` stages. */
+    * mapper/reducer; the executable twin passes [[MapReduceJob.pipeStage]]
+    * stages. */
   def countWords(spark: SparkSession, lines: RDD[String], numReducers: Int,
       mapStage: MapReduceJob.Stage = _.flatMap(mapper),
       reduceStage: MapReduceJob.Stage = _.mapPartitions(reducer))
@@ -99,8 +100,8 @@ object MrQueries {
     val lines = graft.Tables(spark, dir, "documents")
       .select("text").rdd.map(_.getString(0))
     WordCount.countWords(spark, lines, numReducers = 32,
-        _.pipe(Seq("/bin/sh", mapSh.getAbsolutePath)),
-        _.pipe(Seq("/bin/sh", reduceSh.getAbsolutePath)))
+        MapReduceJob.pipeStage("/bin/sh", mapSh.getAbsolutePath),
+        MapReduceJob.pipeStage("/bin/sh", reduceSh.getAbsolutePath))
       .orderBy("word")
   }
 

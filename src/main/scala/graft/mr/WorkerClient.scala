@@ -156,7 +156,7 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
       for (f <- partFiles) {
         val lines = splitKeepNewlines(
           new String(Files.readAllBytes(f.toPath), UTF_8))
-        java.util.Arrays.sort(lines, WorkerClient.codePointOrder)
+        java.util.Arrays.sort(lines, MapReduceJob.CodePointOrder)
         Files.write(f.toPath, lines.mkString.getBytes(UTF_8))
         Files.move(f.toPath, Paths.get(outDir, f.getName),
           StandardCopyOption.REPLACE_EXISTING)
@@ -208,7 +208,7 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
     val heap = new java.util.PriorityQueue[(String, Int)](
       math.max(1, readers.size),
       (a: (String, Int), b: (String, Int)) => {
-        val c = WorkerClient.codePointOrder.compare(a._1, b._1)
+        val c = MapReduceJob.CodePointOrder.compare(a._1, b._1)
         if (c != 0) c else Integer.compare(a._2, b._2)
       })
     for ((r, i) <- readers.zipWithIndex) {
@@ -322,23 +322,6 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
 }
 
 object WorkerClient {
-
-  /** Python's string order: Unicode CODE POINTS (Java's compareTo is
-    * UTF-16-unit order, which ranks supplementary-plane characters
-    * below [U+E000, U+FFFF] — wrong against CPython's list.sort and
-    * heapq.merge). */
-  private[mr] val codePointOrder: java.util.Comparator[String] =
-    (a: String, b: String) => {
-      val la = a.length; val lb = b.length
-      var i = 0; var j = 0
-      var res = 0
-      while (res == 0 && i < la && j < lb) {
-        val ca = a.codePointAt(i); val cb = b.codePointAt(j)
-        if (ca != cb) res = Integer.compare(ca, cb)
-        else { i += Character.charCount(ca); j += Character.charCount(cb) }
-      }
-      if (res != 0) res else Integer.compare(la - i, lb - j)
-    }
 
   /** `runMain graft.mr.WorkerClient [--host h] [--port p]
     * [--manager-host h] [--manager-port p]` — the reference

@@ -42,4 +42,10 @@ object ColumnBridge {
   def queryListeners(spark: org.apache.spark.sql.SparkSession)
       : Seq[org.apache.spark.sql.util.QueryExecutionListener] =
     spark.listenerManager.listListeners().toSeq
+
+  /** Wait until every queued listener event has been delivered
+    * (`listenerBus` is `private[spark]`), so a `SparkListener`'s counts
+    * cover every task that has finished. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -96,7 +96,8 @@ class ScopedSpec extends SparkSpec {
     spark.listenerManager.register(execs)
     try {
       assert(EventsStream.qStreamDedup(spark, dir).count() > 0)
-      TestBus.drain(spark.sparkContext)
+      org.apache.spark.sql.graftbridge.ColumnBridge
+        .drainListeners(spark.sparkContext)
       assert(progress.get() > 0, "no QueryProgressEvent reached the caller")
       assert(childExecs.get() > 0, "no child execution reached the caller")
     } finally {
@@ -111,7 +112,7 @@ class ScopedSpec extends SparkSpec {
       for (_ <- 1 to 5) run
       TestBus.streamBuses(spark.sparkContext) - before
     }
-    val src = java.nio.file.Files.createTempDirectory("scopedspec-src")
+    val src = java.nio.file.Paths.get(tmpDir("scopedspec-src"))
     java.nio.file.Files.createSymbolicLink(src.resolve("events.parquet"),
       java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath)
     val direct = growth {

@@ -43,12 +43,13 @@ object SparkSpec {
     // fault tolerance (FaultToleranceSpec) unwitnessable. One retry also
     // matches a real cluster's posture more closely; tests that assert
     // on thrown queries still throw (the retry re-fails instantly).
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-wh").toString
+    sys.addShutdownHook(Tables.deleteDir(warehouse))
     val s = SparkSession.builder().master("local[8, 2]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", 8)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.warehouse.dir", warehouse)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

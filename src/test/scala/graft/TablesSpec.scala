@@ -30,7 +30,7 @@ class TablesSpec extends SparkSpec {
     try {
       sc.setJobGroup(group, "schema inference count")
       try body finally sc.clearJobGroup()
-      org.apache.spark.graftbridge.TestBus.drain(sc)
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListeners(sc)
     } finally sc.removeSparkListener(l)
     n.get
   }

@@ -254,7 +254,8 @@ class ManagerServerSpec extends SparkSpec {
     val probe = new java.net.ServerSocket(0)
     val wPort = probe.getLocalPort
     probe.close()
-    val log = java.nio.file.Files.createTempFile("ref-worker", ".log")
+    val log = Files.createTempFile(
+      Paths.get(tmpDir("ref-worker")), "ref-worker", ".log")
     val pb = new ProcessBuilder("python3", "-m", "mapreduce.worker",
       "--port", wPort.toString,
       "--manager-port", srv.boundPort.toString)
@@ -324,7 +325,8 @@ class ManagerServerSpec extends SparkSpec {
     // output BEFORE its buffered sorted rewrite flushed
     val srv = new ManagerServer(spark, port = 0,
       dispatchToWorkers = true, sharedDir = Some("/tmp")).start()
-    val logs = Seq.fill(2)(Files.createTempFile("ref-worker-job", ".log"))
+    val logs = Seq.fill(2)(Files.createTempFile(
+      Paths.get(tmpDir("ref-worker-job")), "ref-worker-job", ".log"))
     val ports = Seq.fill(2) {
       val p = new java.net.ServerSocket(0)
       val n = p.getLocalPort; p.close(); n

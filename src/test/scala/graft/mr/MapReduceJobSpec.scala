@@ -3,6 +3,7 @@ package graft.mr
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import graft.SparkSpec
+import MapReduceJob.LineCounts
 
 class MapReduceJobSpec extends SparkSpec {
 
@@ -202,6 +203,122 @@ class MapReduceJobSpec extends SparkSpec {
       assert(window.map(_._2).toSeq === fileLines, "lines contiguous in order")
       assert(window.map(_._1).distinct.length === 1, "single partition")
     }
+  }
+
+  test("line-count shuffle: each reducer receives the full sorted stream, duplicates included") {
+    val rnd = new scala.util.Random(7)
+    val hot = Seq("the\t1", "a\t1", "fox\t1", "\uFFFD\t1", "\uD83D\uDE00\t1",
+      "lazy dog", "")
+    // heavy duplication: every map task sees every hot line many times,
+    // plus lines that occur once
+    val lines = Seq.tabulate(4000) { i =>
+      if (i % 10 == 0) s"once-$i\t1" else hot(rnd.nextInt(hot.length))
+    }
+    val mapped = spark.sparkContext.parallelize(lines, numSlices = 5)
+    val caps = Seq(
+      "default caps" -> (LineCounts.MaxEntries, LineCounts.MaxChars),
+      "entry cap 3" -> (3, LineCounts.MaxChars),
+      "char cap 8" -> (LineCounts.MaxEntries, 8L))
+    for ((name, (maxEntries, maxChars)) <- caps; r <- Seq(1, 3)) {
+      // what a recording identity reducer receives in each partition
+      val got = MapReduceJob.shuffle(mapped, r, maxEntries, maxChars)
+        .glom().collect().map(_.toSeq).toSeq
+      // the same stream by hand: MD5-mod placement, code-point order,
+      // duplicates kept
+      val expected = (0 until r).map { i =>
+        lines.filter(l =>
+          Md5Partitioner.partition(MapReduceJob.tabKey(l), r) == i)
+          .sorted(MapReduceJob.CodePointOrder)
+      }
+      assert(got === expected, s"$name, R = $r")
+    }
+  }
+
+  test("CodePointOrder equals code-point sequence order, unpaired surrogates included") {
+    // BMP chars on both sides of the surrogate block, both surrogate
+    // halves, and pairs (U+1F600, U+1F601, U+10000, U+10FFFF)
+    val units = "a\t\uD7FF\uD800\uDBFF\uD83D\uDC00\uDE00\uDE01\uDFFF\uE000\uFFFD"
+    val rnd = new scala.util.Random(11)
+    def str(): String =
+      Seq.fill(rnd.nextInt(6))(units(rnd.nextInt(units.length))).mkString
+    for (_ <- 1 to 20000) {
+      val (a, b) = (str(), str())
+      val want = java.util.Arrays.compare(
+        a.codePoints().toArray, b.codePoints().toArray).sign
+      assert(MapReduceJob.CodePointOrder.compare(a, b).sign === want,
+        s"${a.map(_.toInt)} vs ${b.map(_.toInt)}")
+    }
+    assert(MapReduceJob.CodePointOrder.lt("\uFFFD\t2", "\uD83D\uDE00\t1"))
+    assert("\uFFFD\t2".compareTo("\uD83D\uDE00\t1") > 0, "UTF-16 order differs")
+  }
+
+  test("LineCounts flushes at its caps and keeps every occurrence") {
+    def counts(lines: Seq[String], maxEntries: Int, maxChars: Long) =
+      new LineCounts(lines.iterator, maxEntries, maxChars).toSeq
+    val lines = Seq("a", "b", "a", "c", "a", "a", "b", "d")
+    // no cap reached: one record per distinct line
+    assert(counts(lines, 10, 100).toMap ===
+      Map("a" -> 4L, "b" -> 2L, "c" -> 1L, "d" -> 1L))
+    assert(counts(lines, 10, 100).length === 4)
+    // entry cap 2: {a, b} counts the repeat of a, then c flushes it
+    val capped = counts(lines, 2, 100)
+    assert(capped.take(2).toMap === Map("a" -> 2L, "b" -> 1L))
+    assert(capped.drop(2).take(2).toMap === Map("c" -> 1L, "a" -> 2L))
+    assert(capped.drop(4).toMap === Map("b" -> 1L, "d" -> 1L))
+    // char cap: a line longer than the cap still makes progress
+    val long = "x" * 50
+    val byChars = counts(Seq(long, long, "y", long), 10, 10)
+    assert(byChars.head === long -> 2L)
+    assert(byChars.tail.toMap === Map("y" -> 1L, long -> 1L))
+    assert(counts(Seq.empty, 2, 100).isEmpty)
+  }
+
+  test("expandCounts turns Long counts back into lines, in order") {
+    assert(MapReduceJob.expandCounts(
+      Iterator(("a", 3L), ("b", 0L), ("c", 1L), ("d", 2L))).toSeq ===
+      Seq("a", "a", "a", "c", "d", "d"))
+    assert(MapReduceJob.expandCounts(Iterator.empty).isEmpty)
+    val it = MapReduceJob.expandCounts(Iterator(("z", 1L)))
+    assert(it.next() === "z")
+    assert(!it.hasNext)
+    assertThrows[NoSuchElementException](it.next())
+  }
+
+  test("word count shuffles at most distinct words x map tasks records") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    val in = tmpDir("mr-records")
+    // the corpus 50 times over: 800 words, 7 distinct
+    writeInput(in, corpus.map { case (f, c) => f -> c * 50 })
+    val job = WordCount.job(in, tmpDir("mr-records-out") + "/o", 3)
+    val mapTasks = MapReduceJob.inputLines(spark, in, wholeFiles = false,
+      job.numMappers).getNumPartitions
+    val sc = spark.sparkContext
+    val group = s"mr-records-${java.util.UUID.randomUUID}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.atomic.AtomicLong
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          written.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "line-count shuffle records")
+      try job.run(spark) finally sc.clearJobGroup()
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListeners(sc)
+    } finally sc.removeSparkListener(l)
+    assert(written.get > 0)
+    assert(written.get <= expectedCounts.size * mapTasks,
+      s"$mapTasks map tasks")
+    val counts = readPartFiles(job.outputDir).values.flatten.map { l =>
+      val Array(k, v) = l.split("\t", 2); k -> v.toLong
+    }.toMap
+    assert(counts === expectedCounts.map { case (k, v) => k -> v * 50 })
   }
 
   test("groupedReducer streams contiguous groups without materializing") {

@@ -27,7 +27,8 @@ class WorkerClientSpec extends SparkSpec {
     catch { case _: Exception => false }
 
   private def bootRefManager(port: Int): (Process, java.nio.file.Path) = {
-    val log = Files.createTempFile("ref-manager", ".log")
+    val log = Files.createTempFile(
+      Paths.get(tmpDir("ref-manager")), "ref-manager", ".log")
     val pb = new ProcessBuilder("python3", "-m", "mapreduce.manager",
       "--port", port.toString)
     pb.environment().put("PYTHONPATH", refRoot.getAbsolutePath)
@@ -41,13 +42,15 @@ class WorkerClientSpec extends SparkSpec {
     try s.getLocalPort finally s.close()
   }
 
+  // tricky cases: tab (9) vs newline (10) adjacency, tab-less lines
+  // whose key keeps the newline, supplementary-plane chars that Java's
+  // UTF-16 compareTo misorders against BMP chars in [E000, FFFF]
+  private val trickyLines = Seq("a\tx", "a", "ab\t1", "a\t1", "😀\t1",
+    "�\t2", "b", "b\tz", "aa", "a\t\t2", "zz\t0", "")
+
   test("code-point line order and key rule match CPython exactly (cross-pinned)") {
     assume(pyOk)
-    // tricky cases: tab (9) vs newline (10) adjacency, tab-less lines
-    // whose key keeps the newline, supplementary-plane chars that Java's
-    // UTF-16 compareTo misorders against BMP chars in [E000, FFFF]
-    val lines = Seq("a\tx", "a", "ab\t1", "a\t1", "😀\t1",
-      "�\t2", "b", "b\tz", "aa", "a\t\t2", "zz\t0", "")
+    val lines = trickyLines
     val py = new ProcessBuilder("python3", "-c",
       """import sys, json, hashlib
         |lines = [l + "\n" for l in json.load(sys.stdin)]
@@ -70,7 +73,7 @@ class WorkerClientSpec extends SparkSpec {
     val pyParts = out.get("parts").asInstanceOf[java.util.List[Object]]
       .asScala.map(_.toString.toInt).toSeq
     val mine = lines.map(_ + "\n").toArray
-    java.util.Arrays.sort(mine, WorkerClient.codePointOrder)
+    java.util.Arrays.sort(mine, MapReduceJob.CodePointOrder)
     assert(mine.toSeq === pySorted, "sort order diverges from CPython")
     val w = new WorkerClient(port = 0, managerPort = 1) // never started
     val myParts = pySorted.map(l =>
@@ -235,7 +238,8 @@ class WorkerClientSpec extends SparkSpec {
     val (mgr, log) = bootRefManager(mPort)
     // reference python worker first (it gets task 0)
     val refPort = freePort()
-    val refLog = Files.createTempFile("ref-worker-mix", ".log")
+    val refLog = Files.createTempFile(
+      Paths.get(tmpDir("ref-worker-mix")), "ref-worker-mix", ".log")
     val pb = new ProcessBuilder("python3", "-m", "mapreduce.worker",
       "--port", refPort.toString, "--manager-port", mPort.toString)
     pb.environment().put("PYTHONPATH", refRoot.getAbsolutePath)
@@ -327,6 +331,62 @@ class WorkerClientSpec extends SparkSpec {
         System.currentTimeMillis() - t2 < 15000) Thread.sleep(100)
       assert(ws.forall(_.isShutdown),
         "our manager's forwarded shutdown never reached the workers")
+    }
+  }
+
+  test("code-point order: Submit.run, native run and dispatch mode write byte-identical parts for the tricky lines") {
+    // The tricky lines that carry a tab. A tab-less line is keyed
+    // differently by the reference worker (its key keeps the newline, see
+    // WorkerClient.lineKey), so it may land in another part; that is
+    // placement, not order.
+    val lines = trickyLines.filter(_.contains('\t'))
+    val in = tmpDir("wkr-cp-in")
+    Files.writeString(Paths.get(in, "a.txt"),
+      lines.take(4).mkString("", "\n", "\n"))
+    Files.writeString(Paths.get(in, "b.txt"),
+      lines.drop(4).mkString("", "\n", "\n"))
+    val out = tmpDir("wkr-cp-out")
+    val identity: MapReduceJob.Stage = l => l
+    val srv = new ManagerServer(spark, port = 0,
+      dispatchToWorkers = true,
+      sharedDir = Some(System.getProperty("java.io.tmpdir"))).start()
+    val ws = Seq.fill(2)(
+      new WorkerClient(port = 0, managerPort = srv.boundPort).start())
+    def parts(dir: String, r: Int): Seq[String] = (0 until r).map(i =>
+      Files.readString(Paths.get(dir, f"part-$i%05d")))
+    try {
+      val t0 = System.currentTimeMillis()
+      while (!ws.forall(_.heartbeating) &&
+        System.currentTimeMillis() - t0 < 20000) Thread.sleep(100)
+      assert(ws.forall(_.heartbeating))
+      for (r <- Seq(1, 3)) {
+        Submit.run(spark, Seq("-i", in, "-o", s"$out/submit-$r",
+          "-m", "/bin/cat", "-r", "/bin/cat", "--nreducers", r.toString))
+        MapReduceJob(in, s"$out/native-$r", identity, identity, r)
+          .run(spark, exactPartNames = true)
+        val wire = s"$out/wire-$r"
+        send(srv.boundPort, s"""{"message_type": "new_manager_job",
+          "input_directory": "$in", "output_directory": "$wire",
+          "mapper_executable": "/bin/cat", "reducer_executable": "/bin/cat",
+          "num_mappers": 2, "num_reducers": $r}""")
+        val t1 = System.currentTimeMillis()
+        while ((0 until r).exists(i =>
+            !Files.exists(Paths.get(wire, f"part-$i%05d"))) &&
+          System.currentTimeMillis() - t1 < 60000) Thread.sleep(200)
+        val expect = parts(s"$out/submit-$r", r)
+        assert(expect.mkString.linesIterator.toSeq.sorted === lines.sorted)
+        assert(parts(s"$out/native-$r", r) === expect, s"native, R = $r")
+        assert(parts(wire, r) === expect, s"dispatch mode, R = $r")
+      }
+      // one partition holds every line: U+FFFD sorts before U+1F600
+      val one = parts(s"$out/submit-1", 1).head
+      assert(one.indexOf("�\t2") < one.indexOf("😀\t1"))
+    } finally {
+      send(srv.boundPort, """{"message_type": "shutdown"}""")
+      srv.awaitTermination()
+      val t2 = System.currentTimeMillis()
+      while (!ws.forall(_.isShutdown) &&
+        System.currentTimeMillis() - t2 < 15000) Thread.sleep(100)
     }
   }
 

@@ -12,7 +12,7 @@ class BloomJoinSpec extends SparkSpec {
   /** A private copy of the two tables, so no earlier suite has already
     * cached this dir's count. */
   private def copyTables(): String = {
-    val dir = Files.createTempDirectory("bloom-cache")
+    val dir = Paths.get(tmpDir("bloom-cache"))
     for (t <- Seq("orders.parquet", "lineitem.parquet")) {
       val src = Paths.get(sf("sf0.001"), t)
       Files.walk(src).iterator.asScala.foreach { p: Path =>
@@ -38,7 +38,8 @@ class BloomJoinSpec extends SparkSpec {
       spark.listenerManager.register(l)
       try {
         val df = BloomJoin.qBloomJoin(spark, dir)
-        org.apache.spark.graftbridge.TestBus.drain(spark.sparkContext)
+        org.apache.spark.sql.graftbridge.ColumnBridge
+          .drainListeners(spark.sparkContext)
         (df, actions.asScala.toSeq)
       } finally spark.listenerManager.unregister(l)
     }

@@ -247,7 +247,8 @@ class GraphSpec extends SparkSpec {
       spark.listenerManager.register(l)
       try {
         run
-        org.apache.spark.graftbridge.TestBus.drain(spark.sparkContext)
+        org.apache.spark.sql.graftbridge.ColumnBridge
+          .drainListeners(spark.sparkContext)
       } finally spark.listenerManager.unregister(l)
       import scala.jdk.CollectionConverters._
       seen.asScala.toSet - 0

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 
@@ -11,7 +9,7 @@ import graft.{SparkSpec, Tables}
 class PartitionPruningSpec extends SparkSpec {
 
   test("partition-key filter prunes the scan to matching partitions") {
-    val out = Files.createTempDirectory("part-out").toString + "/orders"
+    val out = tmpDir("part-out") + "/orders"
     Tables(spark, sf("sf0.001"), "orders")
       .withColumn("o_year", year(col("o_orderdate")))
       .write.partitionBy("o_year").mode("overwrite").parquet(out)

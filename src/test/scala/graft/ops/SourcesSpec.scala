@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 
@@ -10,10 +8,8 @@ import graft.{SparkSpec, Tables}
   * these are the structured-format equivalents a real pipeline needs). */
 class SourcesSpec extends SparkSpec {
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
-
   test("csv round-trip preserves rows and types (header + explicit schema)") {
-    val out = tmp("csv-out") + "/orders"
+    val out = tmpDir("csv-out") + "/orders"
     val src = Tables(spark, sf("sf0.001"), "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"), col("o_orderdate").cast("date").as("o_date"))
@@ -29,7 +25,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("json lines round-trip preserves rows, nested props parse") {
-    val out = tmp("json-out") + "/events"
+    val out = tmpDir("json-out") + "/events"
     val src = Tables(spark, sf("sf0.001"), "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("props"))
@@ -46,7 +42,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("orc round-trip preserves rows and types") {
-    val out = tmp("orc-out") + "/customer"
+    val out = tmpDir("orc-out") + "/customer"
     val src = Tables(spark, sf("sf0.001"), "customer")
     src.write.mode("overwrite").orc(out)
     val back = spark.read.orc(out)
@@ -58,7 +54,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("text sink + source round-trip (the reference's native format)") {
-    val out = tmp("text-out") + "/words"
+    val out = tmpDir("text-out") + "/words"
     val src = Tables(spark, sf("sf0.001"), "documents")
       .select(concat(col("doc_id"), lit("\t"), col("lang")).as("value"))
     src.write.mode("overwrite").text(out)

@@ -34,7 +34,7 @@ class CsvIngestSpec extends SparkSpec {
       Row(6L, "\\N", "en", "web", 2L))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), schema)
-    val out = java.nio.file.Files.createTempDirectory("graft-csvtest-")
+    val out = tmpDir("graft-csvtest-")
     CsvIngest.csvWrite(df, out.toString)
     val back = CsvIngest.csvRead(spark,
       "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",

@@ -11,7 +11,7 @@ class ExportSpec extends SparkSpec {
   private val dir = sf("sf0.001")
 
   test("export shards respect the per-file row cap and partition layout") {
-    val out = java.nio.file.Files.createTempDirectory("graft-exporttest-")
+    val out = java.nio.file.Paths.get(tmpDir("graft-exporttest-"))
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"))
     val cap = 20

@@ -19,7 +19,7 @@ class OrcIngestSpec extends SparkSpec {
       Row(3L, "\\N", "en", "s", 2L), // the CSV null marker, as literal text
       Row(4L, "line1\nline2, \"quoted\"", "en", "s", 21L))
     val df = spark.createDataFrame(rows.asJava, schema)
-    val out = java.nio.file.Files.createTempDirectory("orc-spec-").toString
+    val out = tmpDir("orc-spec-")
     df.write.mode("overwrite").orc(out)
     val back = spark.read.schema(schema).orc(out)
       .collect().sortBy(_.getLong(0))

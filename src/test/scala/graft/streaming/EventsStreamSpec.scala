@@ -306,8 +306,7 @@ class EventsStreamSpec extends SparkSpec {
   test("idempotent file sink: a replayed micro-batch does not duplicate rows") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-sink-test").toString
+    val outDir = tmpDir("graft-sink-test")
     val input = MemoryStream[Event]
     input.addData(
       Event(ts("2024-01-01 00:05:00"), 1, "click", 2.0),
