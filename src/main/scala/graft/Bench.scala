@@ -363,16 +363,10 @@ object Bench {
       // sf-appropriate shuffle sizing (SCALE.md's maxPartitionBytes
       // rule applied to the bench): sf0.1 is ~100 MB, so 32 shuffle
       // partitions means sub-MB tasks whose scheduling overhead
-      // dominates — env-tunable for A/Bs
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUFFLE", cpus))
-      // shuffle/broadcast bytes live on /dev/shm (tmpfs) in this image:
-      // lz4 is pure CPU tax with RAM-speed "disk" — env-tunable (static
-      // confs, so they must be set at session build)
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUF_COMPRESS", "true"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUF_COMPRESS", "true"))
+      // dominates
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.shuffle.compress", "true")
+      .config("spark.shuffle.spill.compress", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // AQE stays ON: a 5-query confab sample suggested 10-20% warm
       // overhead, but the full-registry A/B (r16, BENCH_RUNS history)
@@ -381,9 +375,8 @@ object Bench {
       // q_ppr_seeds 4.2→6.4s, q_bfs 1.9→4.1s without it; Σ regression
       // +60s vs −3s improvements). Moral: never conclude from a
       // single-join sample what a 32-partition fixed-shuffle plan does
-      // to a 6-round graph loop. Env-tunable for future A/Bs only.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_AQE", "true"))
+      // to a 6-round graph loop.
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.scheduler.allocation.file", fairXml.toString)

@@ -16,8 +16,8 @@ import org.apache.spark.sql.DataFrame
   * sf0.01 path ([[oraclePath]]) because the driver contract runs the
   * correctness gate at sf0.01 (Verify writes the export before the
   * driver's DuckDB pass reads it; a bench run at another sf exports to
-  * its own path and never clobbers the gate's). Assumes default sketch
-  * knobs — the same assumption the gate run itself makes.
+  * its own path and never clobbers the gate's). Sketch parameters are
+  * code constants, so every export of a tag has one content per sfDir.
   *
   * `spark.graft.oracleExport=false` (set by Bench) skips the writes so
   * timed passes never pay the export I/O. */
@@ -32,18 +32,10 @@ object OracleExport {
   /** Glob the gate oracle reads for `tag` — embed in oracle SQL. */
   def oraclePath(tag: String): String = dirFor(tag, GateSf) + "/*.parquet"
 
-  /** dir → knob key it was exported under (sentinel "" = knob-free). */
-  private val done = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Export dirs written (or being written) in this JVM. */
+  private val done = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Write `df` once per (tag, sfDir) per JVM; no-op when disabled.
-    *
-    * `knobKey` names the session-knob configuration the exported CONTENT
-    * depends on (same convention as the shared-table share keys). The
-    * first export pins the key for the JVM; a later export of the same
-    * (tag, sfDir) under a DIFFERENT key throws immediately — the oracle
-    * SQL hardcodes one path, so a mid-session knob change would otherwise
-    * surface as an opaque downstream hash mismatch (the gate comparing
-    * default-knob Spark output against a stale non-default export).
     *
     * Failure handling: the in-flight mark is rolled back when the write
     * throws (disk full, transient FS error), so a later caller in the
@@ -58,19 +50,13 @@ object OracleExport {
     * but if exports ever move into concurrent chains, store a per-dir
     * holder/future here and block followers on write completion (the
     * Tables.KeyedOnce holder pattern). */
-  def export(df: DataFrame, tag: String, sfDir: String,
-             knobKey: String = ""): Unit = {
+  def export(df: DataFrame, tag: String, sfDir: String): Unit = {
     if (df.sparkSession.conf.get("spark.graft.oracleExport", "true") != "true")
       return
     val d = dirFor(tag, sfDir)
-    val prev = done.putIfAbsent(d, knobKey)
-    if (prev == null) {
+    if (done.add(d)) {
       try df.write.mode("overwrite").parquet(d)
       catch { case e: Throwable => done.remove(d); throw e }
-    } else if (prev != knobKey)
-      throw new IllegalStateException(
-        s"oracle export '$tag' for $sfDir already written under knob key " +
-          s"'$prev'; exporting under '$knobKey' would desync the gate " +
-          "oracle — keep sketch knobs fixed for the JVM (or restart it)")
+    }
   }
 }

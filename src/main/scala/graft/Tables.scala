@@ -271,7 +271,7 @@ object Tables {
 
   // ---- prewarm disk cache (bench-only, see Bench.scala) --------------
   // Shared materializations and driver-held training arrays are
-  // DETERMINISTIC per (builder code, fixture content, knob key) — the
+  // DETERMINISTIC per (builder code, fixture content, share key) — the
   // partition-invariance sweep is the standing proof — so a bench run
   // can pay parquet READ-BACK instead of a rebuild: the r14 driver run
   // spent 137 s of its 300 s budget rebuilding prewarm artifacts under

@@ -210,16 +210,39 @@ object MapReduceJob {
     }
   }
 
-  /** Python's string order: Unicode CODE POINTS, the order of CPython's
-    * `list.sort` and `heapq.merge`. Java's `compareTo` is UTF-16-unit
-    * order, which ranks supplementary-plane characters (surrogate pairs)
-    * below [U+E000, U+FFFF]. Compares units up to the first difference
-    * and decodes code points only when both differing units are
-    * >= U+D800; below that, unit order is code-point order. Unpaired
-    * surrogates count as their own code point, as in `codePointAt`. */
+  /** The reference's line order: Python's string order (Unicode CODE
+    * POINTS, the order of CPython's `list.sort` and `heapq.merge`) over
+    * NEWLINE-TERMINATED lines, the form the reference worker sorts and
+    * merges. The newline only matters on a prefix tie: the shorter
+    * line's '\n' meets the longer line's next char, so `a\tx` sorts
+    * before `a` ('\t' < '\n') and `a` before `ab`. Java's `compareTo`
+    * is UTF-16-unit order, which ranks supplementary-plane characters
+    * (surrogate pairs) below [U+E000, U+FFFF]. Compares units up to the
+    * first difference and decodes code points only when both differing
+    * units are >= U+D800; below that, unit order is code-point order.
+    * Unpaired surrogates count as their own code point, as in
+    * `codePointAt`. */
   object CodePointOrder extends Ordering[String] {
     override def compare(a: String, b: String): Int = {
       val n = math.min(a.length, b.length)
+      val c = firstDiff(a, b, n)
+      if (c != 0 || a.length == b.length) c
+      else if (a.length < b.length) afterNewline(b.charAt(n))
+      else -afterNewline(a.charAt(n))
+    }
+
+    /** Python's order of plain strings (file names): code points, a
+      * strict prefix first. */
+    val plain: Ordering[String] = (a: String, b: String) => {
+      val n = math.min(a.length, b.length)
+      val c = firstDiff(a, b, n)
+      if (c != 0) c else Integer.compare(a.length, b.length)
+    }
+
+    /** A line's virtual '\n' against the longer line's next unit `c`. */
+    private def afterNewline(c: Char): Int = if (c == '\n') -1 else '\n' - c
+
+    private def firstDiff(a: String, b: String, n: Int): Int = {
       var i = 0
       while (i < n) {
         val ca = a.charAt(i)
@@ -229,7 +252,7 @@ object MapReduceJob {
           else ca - cb
         i += 1
       }
-      Integer.compare(a.length, b.length)
+      0
     }
 
     /** The code points at the first differing unit `i`: if the shared
@@ -294,8 +317,18 @@ object MapReduceJob {
     if (wholeFiles) sized.flatMap(_.linesIterator) else sized
   }
 
-  /** key = substring before the first tab (worker/__main__.py:115);
-    * a line with no tab is its own key, like Python's split()[0]. */
+  /** The shuffle's partition key: the text before the first tab of the
+    * NEWLINE-TERMINATED line, as the reference worker hashes
+    * `line.split("\t")[0]` on a line that still carries its "\n"
+    * (worker/__main__.py:115). A tab-less line's key keeps the newline.
+    * [[Md5Partitioner]] and [[WorkerClient]] both place lines by it. */
+  def partitionKey(line: String): String = {
+    val i = line.indexOf('\t')
+    if (i < 0) line + "\n" else line.substring(0, i)
+  }
+
+  /** Group key of a map-output line: the substring before the first tab;
+    * a line with no tab is its own key. */
   def tabKey(line: String): String = {
     val i = line.indexOf('\t')
     if (i < 0) line else line.substring(0, i)

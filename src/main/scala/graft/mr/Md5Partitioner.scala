@@ -10,8 +10,8 @@ import org.apache.spark.Partitioner
   * *semantics* (equal keys co-located); this partitioner additionally gives
   * the same *placement* as the reference, so part-file contents match
   * byte-for-byte. Keys are WHOLE LINES (the keys of the `(line, count)`
-  * records [[MapReduceJob.shuffle]] carries); only the tab key feeds the
-  * hash, exactly as the reference hashes `line.split("\t")[0]`. Line
+  * records [[MapReduceJob.shuffle]] carries); only their
+  * [[MapReduceJob.partitionKey]] feeds the hash. Line
   * keys instead of ((key, line), unit) tuples: the tuple wrapping
   * tripled per-record shuffle serialization (measured in the
   * tools/ref_throughput.py head-to-head). */
@@ -20,7 +20,7 @@ class Md5Partitioner(override val numPartitions: Int) extends Partitioner {
 
   override def getPartition(key: Any): Int =
     Md5Partitioner.partition(
-      MapReduceJob.tabKey(String.valueOf(key)), numPartitions)
+      MapReduceJob.partitionKey(String.valueOf(key)), numPartitions)
 
   override def equals(other: Any): Boolean = other match {
     case p: Md5Partitioner => p.numPartitions == numPartitions

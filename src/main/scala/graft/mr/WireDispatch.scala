@@ -106,16 +106,14 @@ object WireDispatch {
   }
 
   /** Python's list.sort() ordering over lists of strings: element-wise
-    * comparison, a strict prefix sorts first. (String comparison is by
-    * UTF-16 code unit here vs code point in Python — identical for the
-    * ASCII paths this protocol carries.) */
+    * code-point comparison, a strict prefix sorts first. */
   private[mr] val pyListOrdering: Ordering[Vector[String]] =
     new Ordering[Vector[String]] {
       def compare(a: Vector[String], b: Vector[String]): Int = {
         val n = math.min(a.length, b.length)
         var i = 0
         while (i < n) {
-          val c = a(i).compareTo(b(i))
+          val c = MapReduceJob.CodePointOrder.plain.compare(a(i), b(i))
           if (c != 0) return c
           i += 1
         }
@@ -127,7 +125,7 @@ object WireDispatch {
     * `num_mappers` buckets of full input paths; bucket index == task_id. */
   def inputPartition(files: Seq[String], numMappers: Int,
       inputDirectory: String): Vector[Vector[String]] = {
-    val sorted = files.sorted
+    val sorted = files.sorted(MapReduceJob.CodePointOrder.plain)
     val results = Array.fill(numMappers)(Vector.empty[String])
     var i = 0
     while (i < sorted.length) { // the reference's pop-from-front deal

@@ -107,15 +107,6 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
 
   // ---- task execution ----
 
-  /** Key = text up to the first tab of the NEWLINE-TERMINATED line
-    * (reference line.split("\t")[0] on a line that still carries its
-    * "\n": a tab-less line's key includes the newline). */
-  private[mr] def lineKey(line: String): String = {
-    val t = line + "\n"
-    val i = t.indexOf('\t')
-    if (i >= 0) t.substring(0, i) else t
-  }
-
   private def runMapTask(msg: java.util.Map[String, Object]): Unit = {
     import scala.jdk.CollectionConverters._
     val taskId = msg.get("task_id").toString.toInt
@@ -144,7 +135,7 @@ final class WorkerClient(host: String = "localhost", port: Int = 0,
         val br = new BufferedReader(new InputStreamReader(p.getInputStream, UTF_8))
         var line = br.readLine()
         while (line != null) {
-          writers(Md5Partitioner.partition(lineKey(line), nPart))
+          writers(Md5Partitioner.partition(MapReduceJob.partitionKey(line), nPart))
             .write(line + "\n")
           line = br.readLine()
         }

@@ -111,7 +111,7 @@ object Bpe {
     * downstream job (encode, stats) reads. By-name share: the training
     * loop executes jobs during construction, like the CC labelings. */
   private[graft] def sharedMerges(spark: SparkSession, dir: String): DataFrame =
-    Tables.materializeSharedBy(spark, "bpemerges", s"$dir#n12")(
+    Tables.materializeSharedBy(spark, "bpemerges", dir)(
       merges(spark, dir, 12))
 
   /** 12 merges — enough to exercise multi-char merge chains (a learned
@@ -127,7 +127,7 @@ object Bpe {
     * and BpeSpec pins the sequence against a reference fold. */
   def qBpeMerges(spark: SparkSession, dir: String): DataFrame = {
     val m = sharedMerges(spark, dir)
-    graft.OracleExport.export(m, "bpemerges", dir, "n12")
+    graft.OracleExport.export(m, "bpemerges", dir)
     m.orderBy("step")
   }
 
@@ -190,7 +190,7 @@ object Bpe {
 
   def qBpeEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.OracleExport.export(sharedMerges(spark, dir), "bpemerges", dir, "n12")
+    graft.OracleExport.export(sharedMerges(spark, dir), "bpemerges", dir)
     val learned = sharedMerges(spark, dir).orderBy("step")
       .select("left", "right").as[(String, String)].collect()
     val vocabTokens = wordFreq(spark, dir)

@@ -22,8 +22,8 @@ import graft.Tables
   *
   * Scale shape (r16: the sample is now a BOUNDED COUNT, not a fixed
   * fraction): one exact corpus count scales the md5 threshold so the
-  * expected sample size is `spark.graft.rangeshard.sampleTarget`
-  * (default 4096) at ANY corpus scale — the same count-scaled-threshold
+  * expected sample size is [[SampleTarget]] (4096) at ANY corpus
+  * scale — the same count-scaled-threshold
   * rule as quantizer training. The ≤~target-row sample is collected and
   * ranked DRIVER-SIDE (the IVF-centroid bounded-scalar pattern; there
   * is no unpartitioned window anywhere in the plan), cut points are
@@ -42,17 +42,9 @@ object RangeShard {
 
   private val K = 16
 
-  /** Gate-default sample target — interpolated into the oracle SQL
-    * below, so engine and oracle derive the SAME threshold at default
-    * knobs. Setting the conf to a non-default value desyncs the gate
-    * (the sketch-knob convention: knobs stay fixed for a gate JVM;
-    * RangeShardSpec's tiny-target test restores the default in a
-    * finally). */
-  private val GateSampleTarget = 4096L
-
-  private def sampleTarget(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.rangeshard.sampleTarget")
-      .map(_.toLong).getOrElse(GateSampleTarget)
+  /** Expected sample size — interpolated into the oracle SQL below, so
+    * engine and oracle derive the SAME threshold. */
+  private val SampleTarget = 4096L
 
   /** Count-scaled md5 threshold over the first 8 hex digits (uniform in
     * [0, 2³²−1]): keep rows with hexval <= thr where
@@ -66,9 +58,10 @@ object RangeShard {
   private[ops] def mdThreshold(n: Long, target: Long): Long =
     math.min(4294967295L, (4294967296L * target) / math.max(n, 1L))
 
-  private[ops] def sampleOf(spark: SparkSession, dir: String): DataFrame = {
+  private[ops] def sampleOf(spark: SparkSession, dir: String,
+      target: Long): DataFrame = {
     val d = keyed(spark, dir)
-    val thr = mdThreshold(d.count(), sampleTarget(spark))
+    val thr = mdThreshold(d.count(), target)
     d.filter(
       conv(substring(md5(concat(col("doc_id").cast("string"), lit(":rs"))),
         1, 8), 16, 10).cast("long") <= thr)
@@ -80,11 +73,16 @@ object RangeShard {
         (col("n_chars").cast("long") * lit(4294967296L) + col("doc_id"))
           .as("rkey"))
 
-  def qRangeShard(spark: SparkSession, dir: String): DataFrame = {
+  def qRangeShard(spark: SparkSession, dir: String): DataFrame =
+    rangeShardOf(spark, dir, SampleTarget)
+
+  /** [[qRangeShard]] with an expected sample size of `target`. */
+  private[ops] def rangeShardOf(spark: SparkSession, dir: String,
+      target: Long): DataFrame = {
     val d = keyed(spark, dir)
     // bounded-count sample, ranked driver-side: ~target longs, the same
     // bounded-scalar pattern as the IVF centroid collect
-    val keys = sampleOf(spark, dir)
+    val keys = sampleOf(spark, dir, target)
       .select(col("rkey")).collect().map(_.getLong(0)).sorted
     val m = keys.length.toLong
     require(m >= K, s"range-shard sample too small: $m rows")
@@ -117,7 +115,7 @@ object RangeShard {
         |    CAST(n_chars AS BIGINT) * 4294967296 + doc_id AS rkey
         |  FROM documents),
         |t AS (SELECT LEAST(CAST(4294967295 AS BIGINT),
-        |        (CAST(4294967296 AS BIGINT) * $GateSampleTarget)
+        |        (CAST(4294967296 AS BIGINT) * $SampleTarget)
         |          // GREATEST(COUNT(*), 1)) AS thr FROM d),
         |s AS (SELECT rkey FROM d, t
         |      WHERE CAST('0x' || substr(md5(doc_id::VARCHAR || ':rs'), 1, 8)

@@ -418,35 +418,41 @@ object Similarity {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** MinHash scale knobs, settable per session via spark conf (defaults
-    * match the shipped behavior; SCALE.md documents the 100 TB settings):
-    * spark.graft.minhash.k (signature length) / .bands (band count; must
-    * divide k). More bands at fixed k raises recall at the LSH threshold
-    * and candidate volume; longer signatures sharpen the S-curve. */
-  private def minhashKN(spark: SparkSession) =
-    Vectors.intConf(spark, "spark.graft.minhash.k", 32)
-  private def bandsN(spark: SparkSession) =
-    Vectors.intConf(spark, "spark.graft.minhash.bands", 8)
+  /** MinHash signature length k and LSH band count (SCALE.md lists the
+    * 100 TB values): 8 bands × 4 rows. More bands at fixed k raises
+    * recall at the LSH threshold and candidate volume; longer signatures
+    * sharpen the S-curve. [[OracleBandArms]] derives the gate oracles'
+    * band arms from them. */
+  private val MinhashK = 32
+  private val Bands = 8
+  private val RowsPerBand = MinhashK / Bands
+
+  /** The oracles' `banded` CTE body over the exported signature table
+    * `sig`: one UNION ALL arm per band, the same concat_ws('_') band
+    * signatures as [[bandedSignatures]]. */
+  private val OracleBandArms = (0 until Bands).map { b =>
+    val cols = (0 until RowsPerBand).map(r => s"mh${b * RowsPerBand + r}")
+      .mkString(", ")
+    s"SELECT doc_id, $b AS band, concat_ws('_', $cols) AS sig FROM sig"
+  }.mkString("\n  UNION ALL ")
 
   /** MinHash signature table (doc_id × k min-hash longs), session-shared
-    * (keyed by dir AND k — a changed k conf is a different table) and built
-    * in [[graft.SparkEntry.prewarm]]: BENCH_r06 showed the k=32 signature
+    * and built in [[graft.SparkEntry.prewarm]]: BENCH_r06 showed the k=32 signature
     * aggregation — not the shingle build — is q_minhash_lsh's cost (22.75 s
     * with shingles already shared), and the table is tiny (one row per doc)
     * while its build scans every (doc, shingle) k times. At 100 TB
     * signatures are likewise computed once per corpus version and reused by
     * every LSH query, never rebuilt per query. */
   private[graft] def minhashSignatures(spark: SparkSession, dir: String): DataFrame = {
-    val minhashK = minhashKN(spark)
     val sh = corpusShingles(spark, dir)
-    val minhashCols = (0 until minhashK).map(i =>
+    val minhashCols = (0 until MinhashK).map(i =>
       min(xxhash64(col("shingle"), lit(i))).as(s"mh$i"))
-    Tables.materializeSharedBy(spark,
-      "minhsig", s"$dir:k=$minhashK")(sh.groupBy("doc_id").agg(minhashCols.head, minhashCols.tail: _*))
+    Tables.materializeSharedBy(spark, "minhsig", dir)(
+      sh.groupBy("doc_id").agg(minhashCols.head, minhashCols.tail: _*))
   }
 
   /** Banded MinHash-LSH near-dup candidates, verified with exact Jaccard.
-    * Default k=32 salted xxhash64 min-hashes, 8 bands × 4 rows:
+    * k=32 salted xxhash64 min-hashes, 8 bands × 4 rows:
     * P(candidate) at J=0.8 is 1-(1-0.8^4)^8 ≈ 0.99 — candidates are then
     * exactly verified, so output precision is 1.0.
     *
@@ -455,48 +461,37 @@ object Similarity {
     * oracle recomputes the banding, bucket join, and exact-Jaccard
     * verification from them; the hash kernel itself is pinned by the
     * recall/subset property tests in SimilaritySpec. */
+  /** (doc_id, band, sig) rows of the signature table: each band's
+    * [[RowsPerBand]] min-hashes joined into one string. */
+  private def bandedSignatures(minh: DataFrame): DataFrame = {
+    val bandStructs = (0 until Bands).map { b =>
+      struct(lit(b).as("band"),
+        concat_ws("_", (0 until RowsPerBand).map(r =>
+          col(s"mh${b * RowsPerBand + r}")): _*).as("sig"))
+    }
+    minh
+      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
+      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+  }
+
   /** Banded LSH candidate pairs (pre-verification), shared by
-    * [[qMinhashLsh]] and [[qLshQuality]]; performs the knob guard and
-    * the signature/shingle exports the oracles read. */
+    * [[qMinhashLsh]] and [[qLshQuality]]; performs the signature/shingle
+    * exports the oracles read. */
   private[graft] def lshCandidates(spark: SparkSession, dir: String): DataFrame = {
-    val (minhashK, bands) = (minhashKN(spark), bandsN(spark))
-    require(minhashK % bands == 0, s"minhash.k=$minhashK not divisible by bands=$bands")
-    // The gate's oracle SQL hardcodes the DEFAULT band arms (mh0..mh31,
-    // 8 bands × 4 rows): refusing a non-default-knob run while export is
-    // on turns a silent oracle desync into an immediate error. Bench and
-    // knob experiments set spark.graft.oracleExport=false and are free.
-    if (spark.conf.get("spark.graft.oracleExport", "true") == "true")
-      require(minhashK == 32 && bands == 8,
-        s"the LSH oracle SQL assumes k=32/bands=8 (got k=$minhashK" +
-          s", bands=$bands); set spark.graft.oracleExport=false for " +
-          "non-default minhash knobs")
-    val rowsPerBand = minhashK / bands
     val sh = corpusShingles(spark, dir)
     val minh = minhashSignatures(spark, dir)
     graft.OracleExport.export(sh, "shingles", dir)
-    graft.OracleExport.export(minh, "minhsig", dir, s"k=$minhashK.b=$bands")
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("_", (0 until rowsPerBand).map(r =>
-          col(s"mh${b * rowsPerBand + r}")): _*).as("sig"))
-    }
-    val banded = minh
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+    graft.OracleExport.export(minh, "minhsig", dir)
     // join generator: identical docs share every band signature, so LSH
     // buckets are hot wherever exact dups exist (see bucketPairs scaladoc).
-    // SESSION-SHARED (knob-keyed): the candidate set is a corpus-version
-    // artifact consumed by q_minhash_lsh AND q_lsh_quality.
-    Tables.materializeSharedBy(spark, "lshcand",
-      s"$dir:k=$minhashK.b=$bands")(
+    // SESSION-SHARED: the candidate set is a corpus-version artifact
+    // consumed by q_minhash_lsh AND q_lsh_quality.
+    Tables.materializeSharedBy(spark, "lshcand", dir)(
       // dir-qualified mat tag: this build runs inside a shared holder,
       // but holders for DIFFERENT dirs run concurrently under the
       // overlapped bench prewarm/warmup (the Tables.materialize GC rule)
-      // the full share-key knobs, not just the dir: two same-dir holders
-      // under different minhash knobs are distinct and may build
-      // concurrently, so the mat tag must separate them too
-      bucketPairsJoin(banded, Seq("band", "sig"),
-        s"banded:$dir:k$minhashK.b$bands"))
+      bucketPairsJoin(bandedSignatures(minh), Seq("band", "sig"),
+        s"banded:$dir"))
   }
 
   /** Exact-Jaccard ≥ t ground-truth pairs over the full corpus
@@ -526,17 +521,10 @@ object Similarity {
     * re-ran per invocation (collect_set + two joins + the intersect
     * fan-out — the expensive half of each query). Prewarmed on the
     * minhash chain; jac doubles round-trip parquet exactly. */
-  private[graft] def lshVerified(spark: SparkSession, dir: String): DataFrame = {
-    // knob-keyed like its input lshcand (r20 ADVICE): a dir-only key
-    // would serve the stale-knob hit set after a same-session
-    // minhash-knob change (the documented knob-A/B path with
-    // oracleExport=false), making qLshQuality's precision/recall row
-    // internally inconsistent — the r16 same-dir-different-knobs rule
-    val (k, b) = (minhashKN(spark), bandsN(spark))
-    Tables.materializeSharedBy(spark, "lshverified", s"$dir:k=$k.b=$b.t=0.7")(
+  private[graft] def lshVerified(spark: SparkSession, dir: String): DataFrame =
+    Tables.materializeSharedBy(spark, "lshverified", dir)(
       verifyJaccard(lshCandidates(spark, dir), corpusShingles(spark, dir),
         0.7).select("doc_a", "doc_b", "jac"))
-  }
 
   def qMinhashLsh(spark: SparkSession, dir: String): DataFrame =
     lshVerified(spark, dir)
@@ -591,28 +579,12 @@ object Similarity {
     * established (exact on both engines). */
   def qNeardupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val t = 0.7
-    val (minhashK, bands) = (minhashKN(spark), bandsN(spark))
-    require(minhashK % bands == 0,
-      s"minhash.k=$minhashK not divisible by bands=$bands")
-    if (spark.conf.get("spark.graft.oracleExport", "true") == "true")
-      require(minhashK == 32 && bands == 8,
-        "q_neardup_incremental's oracle SQL assumes k=32/bands=8; set " +
-          "spark.graft.oracleExport=false for non-default minhash knobs")
-    val rowsPerBand = minhashK / bands
     val sh = corpusShingles(spark, dir)
     val minh = minhashSignatures(spark, dir)
     graft.OracleExport.export(sh, "shingles", dir)
-    graft.OracleExport.export(minh, "minhsig", dir, s"k=$minhashK.b=$bands")
+    graft.OracleExport.export(minh, "minhsig", dir)
     val cut = minh.agg(expr("max(doc_id) * 4 div 5").as("cut"))
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("_", (0 until rowsPerBand).map(r =>
-          col(s"mh${b * rowsPerBand + r}")): _*).as("sig"))
-    }
-    val banded = minh
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-      .crossJoin(broadcast(cut))
+    val banded = bandedSignatures(minh).crossJoin(broadcast(cut))
     val batch = banded.filter(col("doc_id") > col("cut"))
     val hist = banded.filter(col("doc_id") <= col("cut"))
     val cand = batch.as("a").join(hist.as("b"),
@@ -1115,13 +1087,9 @@ object Similarity {
     // weights re-derived from documents, numerator/norms as
     // token-ordered sequential list_sums — see qLexCosine
     "q_lex_cosine" -> {
-      val bandArms = (0 until 8).map { b =>
-        val cols = (0 until 4).map(r => s"mh${b * 4 + r}").mkString(", ")
-        s"SELECT doc_id, $b AS band, concat_ws('_', $cols) AS sig FROM sig"
-      }.mkString("\n  UNION ALL ")
       s"""WITH sig AS (SELECT * FROM '${graft.OracleExport.oraclePath("minhsig")}'),
          |banded AS (
-         |  $bandArms),
+         |  $OracleBandArms),
          |cand AS (
          |  SELECT DISTINCT a.doc_id doc_a, b.doc_id doc_b
          |  FROM banded a JOIN banded b
@@ -1171,18 +1139,13 @@ object Similarity {
          |WHERE hamming <= 3 ORDER BY doc_a, doc_b""".stripMargin,
     // Recomputes banding + bucket join + exact-Jaccard verify from the
     // exported signature/shingle tables (see qMinhashLsh scaladoc). The
-    // 8 band arms are generated to mirror the engine's concat_ws('_')
-    // band signatures over mh{4b}..mh{4b+3}.
+    // the band arms mirror the engine's concat_ws('_') band signatures
     "q_neardup_incremental" -> {
-      val bandArms = (0 until 8).map { b =>
-        val cols = (0 until 4).map(r => s"mh${b * 4 + r}").mkString(", ")
-        s"SELECT doc_id, $b AS band, concat_ws('_', $cols) AS sig FROM sig"
-      }.mkString("\n  UNION ALL ")
       s"""WITH sig AS (SELECT * FROM '${graft.OracleExport.oraclePath("minhsig")}'),
          |sh AS (SELECT doc_id, shingle FROM '${graft.OracleExport.oraclePath("shingles")}'),
          |cut AS (SELECT CAST(MAX(doc_id) * 4 // 5 AS BIGINT) AS cut FROM sig),
          |banded AS (
-         |  $bandArms),
+         |  $OracleBandArms),
          |cand AS (
          |  SELECT DISTINCT a.doc_id AS batch_doc, b.doc_id AS hist_doc
          |  FROM banded a JOIN banded b
@@ -1207,14 +1170,10 @@ object Similarity {
     // common-shingle truth; hits = cand ∩ truth (same exact verify);
     // integer basis-point ratios via floor division
     "q_lsh_quality" -> {
-      val bandArms = (0 until 8).map { b =>
-        val cols = (0 until 4).map(r => s"mh${b * 4 + r}").mkString(", ")
-        s"SELECT doc_id, $b AS band, concat_ws('_', $cols) AS sig FROM sig"
-      }.mkString("\n  UNION ALL ")
       s"""WITH sig AS (SELECT * FROM '${graft.OracleExport.oraclePath("minhsig")}'),
          |sh AS (SELECT doc_id, shingle FROM '${graft.OracleExport.oraclePath("shingles")}'),
          |banded AS (
-         |  $bandArms),
+         |  $OracleBandArms),
          |cand AS (
          |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |  FROM banded a JOIN banded b
@@ -1242,14 +1201,10 @@ object Similarity {
          |FROM k""".stripMargin
     },
     "q_minhash_lsh" -> {
-      val bandArms = (0 until 8).map { b =>
-        val cols = (0 until 4).map(r => s"mh${b * 4 + r}").mkString(", ")
-        s"SELECT doc_id, $b AS band, concat_ws('_', $cols) AS sig FROM sig"
-      }.mkString("\n  UNION ALL ")
       s"""WITH sig AS (SELECT * FROM '${graft.OracleExport.oraclePath("minhsig")}'),
          |sh AS (SELECT doc_id, shingle FROM '${graft.OracleExport.oraclePath("shingles")}'),
          |banded AS (
-         |  $bandArms),
+         |  $OracleBandArms),
          |cand AS (
          |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |  FROM banded a JOIN banded b

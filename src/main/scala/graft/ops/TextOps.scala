@@ -914,45 +914,31 @@ object TextOps {
     * asymmetric copies (a doc CONTAINING another) surface even when
     * whole-doc Jaccard is low — the overlap class the shingle family
     * misses. Candidate generation joins on the fingerprint (derived-key
-    * rule, never all-pairs); fingerprints in > [[winnowMaxDf]] docs are dropped as
+    * rule, never all-pairs); fingerprints in > [[WinnowMaxDf]] docs are dropped as
     * boilerplate "stop fingerprints" (no containment signal, O(df²)
     * pair blowup — the same hot-key hygiene as the PPJoin prefix
     * filter). Fingerprint table materialized once per run (4 consumer
     * branches). Rows-only by design: semantics are defined by the
     * Karp-Rabin hash, like the minhash/simhash family; WinnowSpec pins
     * the kernel against an independent reference implementation. */
-  /** Knob key of the winnow family's derived tables — the SAME suffix the
-    * share keys use; passed to OracleExport so a mid-session knob change
-    * throws instead of desyncing the gate oracle. Includes the stop-
-    * fingerprint cap even though the fp tables themselves don't depend on
-    * it: the oracle SQL recomputes the df filter with the DEFAULT cap
-    * hardcoded, so a mid-session cap change must throw at export time
-    * like any other knob desync. */
-  private def winnowKey(spark: SparkSession): String =
-    s"k${winnowK(spark)}.w${winnowW(spark)}.df${winnowMaxDf(spark)}"
-
-  private def winnowK(spark: SparkSession): Int =
-    Vectors.intConf(spark, "spark.graft.winnow.k", 12)
-  private def winnowW(spark: SparkSession): Int =
-    Vectors.intConf(spark, "spark.graft.winnow.w", 8)
+  /** Winnowing k-gram length and window (SCALE.md lists the 100 TB
+    * values). */
+  private val WinnowK = 12
+  private val WinnowW = 8
   /** Stop-fingerprint cap: fps in more than this many docs are dropped as
     * boilerplate before pair generation (no containment signal, O(df²)
-    * pair blowup). A scale-critical knob like the minhash/ann/ivf family
-    * — SCALE.md has the 100 TB row. Both cap sites ([[winnowPairs]] and
-    * [[winnowMatches]]) read THIS conf; WinnowSpec pins they share it. */
-  private[graft] def winnowMaxDf(spark: SparkSession): Int =
-    Vectors.intConf(spark, "spark.graft.winnow.maxdf", 50)
+    * pair blowup) — SCALE.md has the 100 TB row. Both cap sites
+    * ([[winnowPairsOf]] and [[winnowMatchesOf]]) take it as their
+    * `maxDf`, and the oracle SQL interpolates it. */
+  private val WinnowMaxDf = 50
 
-  private[graft] def winnowFps(spark: SparkSession, dir: String): DataFrame = {
-    val (k, w) = (winnowK(spark), winnowW(spark))
-    // corpus-keyed derived table (one winnow pass per corpus version),
-    // shared like the shingle/signature tables; knobs key the share
-    // (k/w only — the fp table's CONTENT doesn't depend on the df cap)
-    Tables.materializeSharedBy(spark,
-      "winnowfps", s"$dir#k$k.w$w")(Tables(spark, dir, "documents")
+  /** Corpus-keyed derived table (one winnow pass per corpus version),
+    * shared like the shingle/signature tables. */
+  private[graft] def winnowFps(spark: SparkSession, dir: String): DataFrame =
+    Tables.materializeSharedBy(spark, "winnowfps", dir)(
+      Tables(spark, dir, "documents")
         .select(col("doc_id"), explode(array_distinct(
-          graft.functions.Winnow.winnow(col("text"), k, w))).as("fp")))
-  }
+          graft.functions.Winnow.winnow(col("text"), WinnowK, WinnowW))).as("fp")))
 
   def qWinnowOverlap(spark: SparkSession, dir: String): DataFrame = {
     val fps = winnowFps(spark, dir)
@@ -960,7 +946,7 @@ object TextOps {
     // recomputes the stop-fingerprint filter, pair counting, and the
     // containment threshold from it (the winnow kernel itself is pinned
     // by WinnowSpec's golden + guarantee tests)
-    graft.OracleExport.export(fps, "winnowfps", dir, winnowKey(spark))
+    graft.OracleExport.export(fps, "winnowfps", dir)
     val sizes = fps.groupBy("doc_id").agg(count(lit(1)).as("nfp"))
     winnowPairs(spark, dir)
       .join(sizes.select(col("doc_id").as("doc_a"), col("nfp").as("na")), "doc_a")
@@ -976,39 +962,38 @@ object TextOps {
     * derived table of the winnow family (same role as
     * [[Similarity.survivorPairs]]): the fp-keyed self-join runs once per
     * corpus version; consumers pay only the tiny pair-table read. The
-    * stop-fingerprint filter (2 <= df <= [[winnowMaxDf]]) halves the
-    * join input AND caps the per-fp pair fan-out. */
+    * stop-fingerprint filter (2 <= df <= [[WinnowMaxDf]]) halves the
+    * join input AND caps the per-fp pair fan-out. BY-NAME share: the f2
+    * materialize in [[winnowPairsOf]] is a write job executed during
+    * construction — under the strict variant it ran outside the holder
+    * lock and concurrent callers raced on its per-tag GC. */
   private[graft] def winnowPairs(spark: SparkSession, dir: String): DataFrame =
-    // share key carries the FULL knob suffix (k/w/maxdf): a mid-session
-    // knob change rebuilds the fp table, and a pair table keyed by dir
-    // alone would keep serving pairs built under the OLD knobs.
-    // BY-NAME share: the f2 materialize below is a write job executed
-    // during construction — under the strict variant it ran outside the
-    // holder lock and concurrent callers raced on its per-tag GC.
-    Tables.materializeSharedBy(spark, "winnowpairs",
-      s"$dir#${winnowKey(spark)}") {
-      val fps = winnowFps(spark, dir)
-      val rare = fps.groupBy("fp").agg(count(lit(1)).as("df"))
-        .filter(col("df") >= 2 && col("df") <= winnowMaxDf(spark)).select("fp")
-      val f2 = Tables.materialize(fps.join(rare, "fp"), s"winnowf2:$dir")
-      f2.select(col("fp"), col("doc_id").as("doc_a"))
-        .join(f2.select(col("fp"), col("doc_id").as("doc_b")), "fp")
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared"))
-    }
+    Tables.materializeSharedBy(spark, "winnowpairs", dir)(
+      winnowPairsOf(spark, dir, WinnowMaxDf))
+
+  /** [[winnowPairs]]'s build at stop-fingerprint cap `maxDf`. */
+  private[graft] def winnowPairsOf(spark: SparkSession, dir: String,
+      maxDf: Int): DataFrame = {
+    val fps = winnowFps(spark, dir)
+    val rare = fps.groupBy("fp").agg(count(lit(1)).as("df"))
+      .filter(col("df") >= 2 && col("df") <= maxDf).select("fp")
+    val f2 = Tables.materialize(fps.join(rare, "fp"), s"winnowf2:$dir")
+    f2.select(col("fp"), col("doc_id").as("doc_a"))
+      .join(f2.select(col("fp"), col("doc_id").as("doc_b")), "fp")
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared"))
+  }
 
   /** Fingerprint table WITH positions (doc_id, fp, pos), shared per
-    * (corpus, knobs) like [[winnowFps]] — the span-report input. Rows
+    * corpus like [[winnowFps]] — the span-report input. Rows
     * are distinct by construction: selection indexes are strictly
     * increasing, so no (doc, fp, pos) repeats (the fp VALUE may). */
-  private[graft] def winnowFpsPos(spark: SparkSession, dir: String): DataFrame = {
-    val (k, w) = (winnowK(spark), winnowW(spark))
-    Tables.materializeSharedBy(spark,
-      "winnowfpspos", s"$dir#k$k.w$w")(Tables(spark, dir, "documents")
-        .select(col("doc_id"),
-          explode(graft.functions.Winnow.winnowPos(col("text"), k, w)).as("s"))
+  private[graft] def winnowFpsPos(spark: SparkSession, dir: String): DataFrame =
+    Tables.materializeSharedBy(spark, "winnowfpspos", dir)(
+      Tables(spark, dir, "documents")
+        .select(col("doc_id"), explode(graft.functions.Winnow.winnowPos(
+          col("text"), WinnowK, WinnowW)).as("s"))
         .select(col("doc_id"), col("s.fp").as("fp"), col("s.pos").as("pos")))
-  }
 
   /** Span-level overlap report: for every candidate pair sharing >= 8
     * rare fingerprints (the fixture's match-count distribution is
@@ -1026,7 +1011,7 @@ object TextOps {
     * one row per (fp, doc_a, doc_b) carrying each side's position
     * extent for that fp. Both the span report (aggregates it) and the
     * chain report (windows it) consume exactly this frame, so the
-    * fp-keyed pair join runs ONCE per (corpus, knobs) instead of once
+    * fp-keyed pair join runs ONCE per corpus instead of once
     * per query — the same share-the-derived-table discipline as the
     * shingle/signature/pair tables.
     *
@@ -1037,29 +1022,33 @@ object TextOps {
     * per-(fp,doc) extents compose exactly — min over matched fps of the
     * per-doc min IS the span start. The join input is then the same
     * cardinality as [[winnowPairs]]'. Same df-bounded stop-fingerprint
-    * filter (2 <= df <= [[winnowMaxDf]]) as the pair table. By-name share: the
+    * filter (2 <= df <= [[WinnowMaxDf]]) as the pair table. By-name share: the
     * builder materializes an intermediate (executes jobs) during
     * construction. */
   private[graft] def winnowMatches(spark: SparkSession, dir: String): DataFrame =
-    Tables.materializeSharedBy(spark, "winnowmatches",
-      s"$dir#${winnowKey(spark)}") {
-      val fp = winnowFpsPos(spark, dir)
-      val g = fp.groupBy("fp", "doc_id")
-        .agg(min(col("pos")).as("pmin"), max(col("pos")).as("pmax"))
-      val rare = g.groupBy("fp").agg(count(lit(1)).as("dfreq"))
-        .filter(col("dfreq") >= 2 && col("dfreq") <= winnowMaxDf(spark))
-        .select("fp")
-      val f2 = Tables.materialize(g.join(rare, "fp"), s"winnowf2pos:$dir")
-      f2.select(col("fp"), col("doc_id").as("doc_a"),
-          col("pmin").as("amin"), col("pmax").as("amax"))
-        .join(f2.select(col("fp"), col("doc_id").as("doc_b"),
-          col("pmin").as("bmin"), col("pmax").as("bmax")), "fp")
-        .filter(col("doc_a") < col("doc_b"))
-    }
+    Tables.materializeSharedBy(spark, "winnowmatches", dir)(
+      winnowMatchesOf(spark, dir, WinnowMaxDf))
+
+  /** [[winnowMatches]]'s build at stop-fingerprint cap `maxDf`. */
+  private[graft] def winnowMatchesOf(spark: SparkSession, dir: String,
+      maxDf: Int): DataFrame = {
+    val fp = winnowFpsPos(spark, dir)
+    val g = fp.groupBy("fp", "doc_id")
+      .agg(min(col("pos")).as("pmin"), max(col("pos")).as("pmax"))
+    val rare = g.groupBy("fp").agg(count(lit(1)).as("dfreq"))
+      .filter(col("dfreq") >= 2 && col("dfreq") <= maxDf)
+      .select("fp")
+    val f2 = Tables.materialize(g.join(rare, "fp"), s"winnowf2pos:$dir")
+    f2.select(col("fp"), col("doc_id").as("doc_a"),
+        col("pmin").as("amin"), col("pmax").as("amax"))
+      .join(f2.select(col("fp"), col("doc_id").as("doc_b"),
+        col("pmin").as("bmin"), col("pmax").as("bmax")), "fp")
+      .filter(col("doc_a") < col("doc_b"))
+  }
 
   def qWinnowSpans(spark: SparkSession, dir: String): DataFrame = {
     graft.OracleExport.export(
-      winnowFpsPos(spark, dir), "winnowfpspos", dir, winnowKey(spark))
+      winnowFpsPos(spark, dir), "winnowfpspos", dir)
     // shared = COUNT(*): each matched fp appears exactly once per doc
     // pair in the shared matches frame (extents collapsed per (fp,doc))
     winnowMatches(spark, dir)
@@ -1100,8 +1089,7 @@ object TextOps {
     // table is as much a corpus-version artifact as the matches frame
     // it derives from (all-integer columns; prewarmed on the "winnow"
     // chain)
-    Tables.materializeSharedBy(spark, "winnowchainblocks",
-      s"$dir#${winnowKey(spark)}") {
+    Tables.materializeSharedBy(spark, "winnowchainblocks", dir) {
       val matches = winnowMatches(spark, dir)
         .select(col("fp"), col("doc_a"), col("doc_b"),
           col("amin").as("apos"), col("bmin").as("bpos"))
@@ -1124,7 +1112,7 @@ object TextOps {
 
   def qWinnowChains(spark: SparkSession, dir: String): DataFrame = {
     graft.OracleExport.export(
-      winnowFpsPos(spark, dir), "winnowfpspos", dir, winnowKey(spark))
+      winnowFpsPos(spark, dir), "winnowfpspos", dir)
     winnowChainBlocks(spark, dir).orderBy("doc_a", "doc_b", "chain_id")
   }
 
@@ -1150,11 +1138,10 @@ object TextOps {
     * span/chain reports. */
   def qSubstringDedup(spark: SparkSession, dir: String): DataFrame = {
     graft.OracleExport.export(
-      winnowFpsPos(spark, dir), "winnowfpspos", dir, winnowKey(spark))
-    val k = winnowK(spark)
+      winnowFpsPos(spark, dir), "winnowfpspos", dir)
     val spans = winnowChainBlocks(spark, dir)
       .select(col("doc_b").as("doc_id"), col("b_start").as("s"),
-        (col("b_end") + lit(k - 1)).as("e"))
+        (col("b_end") + lit(WinnowK - 1)).as("e"))
     val w = Window.partitionBy("doc_id").orderBy(col("s"), col("e"))
     val merged = spans
       .withColumn("pmax",
@@ -1306,7 +1293,7 @@ object TextOps {
     * All-integer columns; the spec path ([[exactDupSpans]] on crafted
     * frames) is unchanged. */
   private[graft] def exactDupPos(spark: SparkSession, dir: String): DataFrame =
-    Tables.materializeSharedBy(spark, "exactdpos", s"$dir#L$ExactSubL")(
+    Tables.materializeSharedBy(spark, "exactdpos", dir)(
       exactDupPosOf(Tables(spark, dir, "documents"), ExactSubL))
 
   def qSubstringExact(spark: SparkSession, dir: String): DataFrame =
@@ -1506,7 +1493,7 @@ object TextOps {
     "q_winnow_chains" ->
       s"""WITH fp AS (SELECT doc_id, fp, pos FROM '${graft.OracleExport.oraclePath("winnowfpspos")}'),
          |g AS (SELECT fp, doc_id, MIN(pos) AS pmin FROM fp GROUP BY 1, 2),
-         |rare AS (SELECT fp FROM g GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND 50),
+         |rare AS (SELECT fp FROM g GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND $WinnowMaxDf),
          |f2 AS (SELECT g.fp, g.doc_id, g.pmin FROM g JOIN rare USING (fp)),
          |m AS (
          |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1559,14 +1546,14 @@ object TextOps {
         |  CAST(COUNT(*) AS BIGINT) AS n_windows
         |FROM g2 GROUP BY doc_id, grp
         |ORDER BY doc_id, span_start""".stripMargin,
-    // Chain blocks -> b-side char extents (b_end + k-1, k=12 at the
-    // default knobs the export key pins) -> per-doc interval merge
+    // Chain blocks -> b-side char extents (b_end + WinnowK - 1) ->
+    // per-doc interval merge
     // (window MAX over preceding rows) -> excision stats — see
     // qSubstringDedup
     "q_substring_dedup" ->
       s"""WITH fp AS (SELECT doc_id, fp, pos FROM '${graft.OracleExport.oraclePath("winnowfpspos")}'),
          |g AS (SELECT fp, doc_id, MIN(pos) AS pmin FROM fp GROUP BY 1, 2),
-         |rare AS (SELECT fp FROM g GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND 50),
+         |rare AS (SELECT fp FROM g GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND $WinnowMaxDf),
          |f2 AS (SELECT g.fp, g.doc_id, g.pmin FROM g JOIN rare USING (fp)),
          |m AS (
          |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1582,7 +1569,7 @@ object TextOps {
          |    ORDER BY apos ROWS UNBOUNDED PRECEDING) AS chain_id
          |  FROM flagged),
          |blocks AS (
-         |  SELECT doc_b AS doc_id, MIN(bpos) AS s, MAX(bpos) + 11 AS e
+         |  SELECT doc_b AS doc_id, MIN(bpos) AS s, MAX(bpos) + ${WinnowK - 1} AS e
          |  FROM chained GROUP BY doc_a, doc_b, chain_id
          |  HAVING COUNT(*) >= 4),
          |iv AS (
@@ -1615,7 +1602,7 @@ object TextOps {
       s"""WITH fp AS (SELECT doc_id, fp, pos FROM '${graft.OracleExport.oraclePath("winnowfpspos")}'),
          |g AS (SELECT fp, doc_id, MIN(pos) AS pmin, MAX(pos) AS pmax
          |      FROM fp GROUP BY 1, 2),
-         |rare AS (SELECT fp FROM g GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND 50),
+         |rare AS (SELECT fp FROM g GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND $WinnowMaxDf),
          |f2 AS (SELECT g.fp, g.doc_id, g.pmin, g.pmax FROM g JOIN rare USING (fp)),
          |p AS (
          |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1632,7 +1619,7 @@ object TextOps {
     "q_winnow_overlap" ->
       s"""WITH fps AS (SELECT doc_id, fp FROM '${graft.OracleExport.oraclePath("winnowfps")}'),
          |sz AS (SELECT doc_id, COUNT(*) AS nfp FROM fps GROUP BY 1),
-         |rare AS (SELECT fp FROM fps GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND 50),
+         |rare AS (SELECT fp FROM fps GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND $WinnowMaxDf),
          |f2 AS (SELECT fps.doc_id, fps.fp FROM fps JOIN rare USING (fp)),
          |p AS (
          |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared

@@ -55,9 +55,6 @@ object Unigram {
   private[graft] val ShiftBits = 18
   private[graft] val ScoreBias = 4 * ShiftBits // 72
 
-  private def shareKey(dir: String) =
-    s"$dir#w$MaxWordLen.p$MaxPieceLen.s$SeedTop.i2"
-
   /** The trainer's view of the corpus: the shared word-frequency table
     * capped at [[MaxWordLen]] chars. */
   private def words(spark: SparkSession, dir: String): DataFrame =
@@ -129,14 +126,14 @@ object Unigram {
       .as[(String, Long)].collect().toSeq
   }
 
-  // one training run per (corpus, knobs) per JVM; state is the bounded
+  // one training run per corpus per JVM; state is the bounded
   // piece table (like ivfCentroidCache)
   private val modelCache = new Tables.KeyedOnce[Model]
 
   /** The trained model (pieces after EM iteration 1's M-step — the
     * model the final E-step and both registered queries consume). */
   private[graft] def model(spark: SparkSession, dir: String): Model =
-    modelCache(shareKey(dir)) {
+    modelCache(dir) {
       import spark.implicits._
       val sc = seedCounts(spark, dir)
       val top = sc.orderBy(desc("cnt"), asc("p")).limit(SeedTop)
@@ -154,10 +151,10 @@ object Unigram {
     }
 
   /** Final segmentation (E-step 2) — session-shared: both registered
-    * queries read it, and the share key carries every knob. By-name:
+    * queries read it. By-name:
     * construction runs the training jobs. */
   private[graft] def sharedSeg(spark: SparkSession, dir: String): DataFrame =
-    Tables.materializeSharedBy(spark, "uniseg", shareKey(dir))(
+    Tables.materializeSharedBy(spark, "uniseg", dir)(
       eStep(spark, dir, model(spark, dir)))
 
   /** The learned vocabulary: every piece of the trained model with its

@@ -84,24 +84,11 @@ object Vectors {
       .orderBy("qid", "rank")
   }
 
-  /** Scale knobs, settable per session via spark conf (defaults match the
-    * shipped behavior; SCALE.md documents the 100 TB settings):
-    *  - spark.graft.ann.tables / .planes / .probeFlips — sign-LSH table
-    *    count L, hyperplanes per table b, and multiprobe bit flips F
-    *  - spark.graft.ivf.nlist / .nprobe / .iters — IVF coarse quantizer
-    *  - spark.graft.minhash.k / .bands — MinHash signature length / bands
-    */
-  private[graft] def intConf(spark: SparkSession, key: String, default: Int): Int =
-    spark.conf.getOption(key).map(_.toInt).getOrElse(default)
-
-  private def annTablesN(spark: SparkSession) = intConf(spark, "spark.graft.ann.tables", 8)
-  private def annPlanesN(spark: SparkSession) = intConf(spark, "spark.graft.ann.planes", 6)
-  private def annFlipsN(spark: SparkSession) = intConf(spark, "spark.graft.ann.probeFlips", 3)
-  /** Knob keys passed to OracleExport (mirror the share-key suffixes) so
-    * a mid-session sketch-knob change throws instead of desyncing the
-    * gate oracle's fixed export path. */
-  private def annKey(spark: SparkSession): String =
-    s"L${annTablesN(spark)}b${annPlanesN(spark)}f${annFlipsN(spark)}"
+  /** Sign-LSH shape: table count L, hyperplanes per table b, and
+    * multiprobe bit flips F (SCALE.md lists the 100 TB values). */
+  private val AnnTables = 8
+  private val AnnPlanes = 6
+  private val AnnFlips = 3
 
   /** The ANN candidate pair set WITH its gate export — for consumers
     * outside this file (e.g. [[Graph.qPagerank]]) whose oracles read the
@@ -109,12 +96,9 @@ object Vectors {
   private[graft] def annCandidatesExported(spark: SparkSession,
       dir: String): DataFrame = {
     val cand = annCandidates(spark, dir)
-    graft.OracleExport.export(cand, "anncand", dir, annKey(spark))
+    graft.OracleExport.export(cand, "anncand", dir)
     cand
   }
-  private def ivfKey(spark: SparkSession): String =
-    s"k${ivfListsN(spark)}.i${ivfItersN(spark)}.p${ivfProbesN(spark)}" +
-      s".t${trainMaxN(spark)}"
 
   /** Deterministic Rademacher (±1) hyperplane signs for plane p, dim d —
     * splitmix64-style bit mix so both build runs and all executors agree. */
@@ -154,11 +138,9 @@ object Vectors {
     * but raises per-table neighbor-collision probability from p^b to
     * ~p^b + F·p^(b-1)(1-p) — the standard recall knob that does NOT
     * require more tables (hashing stays L×b dots per vector). */
-  private[graft] def annTable(spark: SparkSession, dir: String): DataFrame = {
-    val (nT, nP, nF) = (annTablesN(spark), annPlanesN(spark), annFlipsN(spark))
-    Tables.materializeSharedBy(spark, "anntable", s"$dir#L${nT}b${nP}f$nF")(
-      annTableOf(sharedEmb(spark, dir), nT, nP, nF))
-  }
+  private[graft] def annTable(spark: SparkSession, dir: String): DataFrame =
+    Tables.materializeSharedBy(spark, "anntable", dir)(
+      annTableOf(sharedEmb(spark, dir), AnnTables, AnnPlanes, AnnFlips))
 
   /** [[annTable]]'s build: ONE codebook_dot per vector over the
     * (nT·nP)×64 sign matrix (row t·nP + p holds plane t·64 + p), sliced
@@ -206,16 +188,14 @@ object Vectors {
     * candidate generation runs once per corpus version, each query only
     * pays its own re-rank joins (the BENCH_r06→r7 lesson from minhash:
     * share the expensive derived table, not just its inputs). */
-  private[graft] def annCandidates(spark: SparkSession, dir: String): DataFrame = {
-    val (nT, nP, nF) = (annTablesN(spark), annPlanesN(spark), annFlipsN(spark))
-    Tables.materializeSharedBy(spark,
-      "anncand", s"$dir#L${nT}b${nP}f$nF")(annProbes(spark, dir).as("a").join(annBuckets(spark, dir).as("b"),
+  private[graft] def annCandidates(spark: SparkSession, dir: String): DataFrame =
+    Tables.materializeSharedBy(spark, "anncand", dir)(
+      annProbes(spark, dir).as("a").join(annBuckets(spark, dir).as("b"),
           col("a.t") === col("b.t") && col("a.pbucket") === col("b.bucket") &&
             col("a.vec_id") =!= col("b.vec_id"))
         .select(least(col("a.vec_id"), col("b.vec_id")).as("qid"),
           greatest(col("a.vec_id"), col("b.vec_id")).as("nid"))
         .distinct())
-  }
 
   /** Sign-random-projection LSH ANN, multi-table: 8 independent tables of
     * 6 Rademacher hyperplanes each (a single 12-bit table was measured at
@@ -239,8 +219,7 @@ object Vectors {
     * the candidate set). By-name share: the candidate build itself
     * executes jobs during construction. */
   private[graft] def annSims(spark: SparkSession, dir: String): DataFrame =
-    Tables.materializeSharedBy(spark, "annsims",
-      s"$dir#${annKey(spark)}") {
+    Tables.materializeSharedBy(spark, "annsims", dir) {
       val emb = sharedEmb(spark, dir)
       val dot2 = graft.functions.MixedDotProduct.mixedDot _
       annCandidates(spark, dir)
@@ -254,8 +233,7 @@ object Vectors {
     }
 
   def qCosineAnn(spark: SparkSession, dir: String): DataFrame = {
-    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir,
-      annKey(spark))
+    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir)
     // the symmetrize + rank window IS the prewarmed symTop10 artifact
     // (identical window spec: qid | sim DESC, nid ASC — r20 trim): the
     // timed plan reads the ranked scan and keeps the top 3 instead of
@@ -265,13 +243,14 @@ object Vectors {
       .orderBy("qid", "rank")
   }
 
-  private def ivfListsN(spark: SparkSession) = intConf(spark, "spark.graft.ivf.nlist", 16)
-  // nprobe=6 default: measured top-3 recall on the near-orthogonal sf0.01
+  /** IVF coarse quantizer: nlist centroids, Lloyd iterations. */
+  private val IvfLists = 16
+  private val IvfIters = 3
+  // nprobe=6: measured top-3 recall on the near-orthogonal sf0.01
   // fixture (the WORST case for a coarse quantizer — no cluster structure)
   // is 0.605 / 0.756 / 0.847 at nprobe 4 / 6 / 8; 6 clears the family's
   // 0.7 usability floor while scanning 6/16 of the corpus
-  private def ivfProbesN(spark: SparkSession) = intConf(spark, "spark.graft.ivf.nprobe", 6)
-  private def ivfItersN(spark: SparkSession) = intConf(spark, "spark.graft.ivf.iters", 3)
+  private val IvfProbes = 6
 
   /** The centroids as IVF distances see them: ONE float-cast matrix
     * literal and the driver-summed double norms |c|². */
@@ -300,8 +279,7 @@ object Vectors {
     * full scans for state that a few thousand vectors pin just as
     * well). Below the cap the sample IS the corpus, so small-SF results
     * (and every oracle hash) are unchanged. */
-  private def trainMaxN(spark: SparkSession) =
-    intConf(spark, "spark.graft.quantizer.trainMax", 4096)
+  private val TrainMax = 4096
 
   /** Deterministic training stratum: every vector whose 60-bit md5
     * prefix falls below a count-scaled threshold survives —
@@ -322,57 +300,58 @@ object Vectors {
     }
   }
 
-  // The quantizer is DETERMINISTIC per (dir, nlist, iters) — init = first
-  // nlist vectors by id, decimal-exact means — so the driver-side centroid
+  // The quantizer is DETERMINISTIC per corpus — init = first nlist
+  // vectors by id, decimal-exact means — so the driver-side centroid
   // array is cached JVM-wide (bounded: nlist × 64 doubles per corpus),
   // like the shared-materialization map it parallels.
   private val ivfCentroidCache =
     new graft.Tables.KeyedOnce[Array[Array[Double]]]
 
-  /** Coarse k-means quantizer: nlist centroids, nIter Lloyd iterations.
-    * Per-iteration centroids (nlist×64 doubles) are collected to the
-    * driver and rebroadcast — the canonical k-means pattern (bounded
-    * state, same as MLlib's implementation); the data-sized work stays
-    * distributed. Runs ONCE per (corpus, knobs) per session. */
-  private[graft] def ivfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
-    val (nList, nIter) = (ivfListsN(spark), ivfItersN(spark))
-    val cacheKey = s"$dir#k$nList.i$nIter.t${trainMaxN(spark)}"
-    // diskCached: bench runs read the trained centroids back from the
-    // fingerprinted prewarm cache (no Lloyd jobs); no-op elsewhere
-    ivfCentroidCache(cacheKey)(
-        Tables.diskCached(spark, "ivfcentroids", cacheKey) {
-      val emb = sharedEmb(spark, dir)
-      // deterministic init: the first nlist vectors by id
-      var centroids: Array[Array[Double]] = emb.orderBy("vec_id")
-        .limit(nList).collect()
-        .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-      // Lloyd rounds aggregate the deterministic training stratum only
-      // (identity below the cap — see trainSample)
-      val train = trainSample(emb, trainMaxN(spark))
-      (1 to nIter).foreach { _ =>
-        // decimal-exact per-dimension means -> deterministic centroids
-        val sums = withCid(train, centroids)
-          .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "x")))
-          .groupBy("cid", "pos")
-          .agg((sum(col("x").cast(El)).cast("double") / count(lit(1))).as("m"))
-          .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-        val next = centroids.zipWithIndex.map(_._1.clone())
-        sums.foreach { case (cid, pos, m) => next(cid)(pos) = m }
-        centroids = next
-      }
-      centroids
-    })
+  /** The coarse quantizer of `dir`, trained ONCE per corpus per session
+    * ([[trainCentroids]]). diskCached: bench runs read the trained
+    * centroids back from the fingerprinted prewarm cache (no Lloyd
+    * jobs); no-op elsewhere. */
+  private[graft] def ivfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
+    ivfCentroidCache(dir)(Tables.diskCached(spark, "ivfcentroids", dir)(
+      trainCentroids(sharedEmb(spark, dir))))
+
+  /** Coarse k-means quantizer over `emb` ([[sharedEmb]] shape): `nList`
+    * centroids and [[IvfIters]] Lloyd iterations over a training stratum
+    * of at most `trainMax` vectors. Per-iteration centroids (nlist×64
+    * doubles) are collected to the driver and rebroadcast — the
+    * canonical k-means pattern (bounded state, same as MLlib's
+    * implementation); the data-sized work stays distributed. Uncached:
+    * [[ivfCentroids]] is the shared accessor. */
+  private[graft] def trainCentroids(emb: DataFrame, nList: Int = IvfLists,
+      trainMax: Int = TrainMax): Array[Array[Double]] = {
+    // deterministic init: the first nlist vectors by id
+    var centroids: Array[Array[Double]] = emb.orderBy("vec_id")
+      .limit(nList).collect()
+      .map(_.getSeq[Float](1).map(_.toDouble).toArray)
+    // Lloyd rounds aggregate the deterministic training stratum only
+    // (identity below the cap — see trainSample)
+    val train = trainSample(emb, trainMax)
+    (1 to IvfIters).foreach { _ =>
+      // decimal-exact per-dimension means -> deterministic centroids
+      val sums = withCid(train, centroids)
+        .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "x")))
+        .groupBy("cid", "pos")
+        .agg((sum(col("x").cast(El)).cast("double") / count(lit(1))).as("m"))
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+      val next = centroids.zipWithIndex.map(_._1.clone())
+      sums.foreach { case (cid, pos, m) => next(cid)(pos) = m }
+      centroids = next
+    }
+    centroids
   }
 
   /** Inverted-list assignment (vec_id, embedding, norm2, cid), shared per
-    * (corpus, quantizer knobs) — the corpus-version derived table every
-    * IVF query reads; tiny on disk (one extra int per vector next to the
-    * embedding it joins with anyway). */
-  private[graft] def ivfAssigned(spark: SparkSession, dir: String): DataFrame = {
-    val (nList, nIter) = (ivfListsN(spark), ivfItersN(spark))
-    Tables.materializeSharedBy(spark,
-      "ivfassign", s"$dir#k$nList.i$nIter.t${trainMaxN(spark)}")(withCid(sharedEmb(spark, dir), ivfCentroids(spark, dir)))
-  }
+    * corpus — the corpus-version derived table every IVF query reads;
+    * tiny on disk (one extra int per vector next to the embedding it
+    * joins with anyway). */
+  private[graft] def ivfAssigned(spark: SparkSession, dir: String): DataFrame =
+    Tables.materializeSharedBy(spark, "ivfassign", dir)(
+      withCid(sharedEmb(spark, dir), ivfCentroids(spark, dir)))
 
   /** IVF-style ANN: a coarse k-means quantizer (nlist=16 centroids, 3
     * Lloyd iterations — [[ivfCentroids]], built once per corpus version)
@@ -385,7 +364,7 @@ object Vectors {
     * both queries derive the SAME candidate pair set, so both can export
     * the one ivfcand table their oracles replay from. */
   private[graft] def ivfProbes(spark: SparkSession, dir: String): DataFrame =
-    probesOf(sharedEmb(spark, dir), ivfCentroids(spark, dir), ivfProbesN(spark))
+    probesOf(sharedEmb(spark, dir), ivfCentroids(spark, dir), IvfProbes)
 
   /** [[ivfProbes]]'s build over any emb frame and centroid set. */
   private[graft] def probesOf(emb: DataFrame, cs: Array[Array[Double]],
@@ -402,8 +381,7 @@ object Vectors {
     * join can't emit a pair twice (verified identical to the distinct'd
     * variant; the removed exchange was ~10% of the query). */
   private[graft] def ivfSims(spark: SparkSession, dir: String): DataFrame =
-    Tables.materializeSharedBy(spark, "ivfsims",
-        s"$dir#${ivfKey(spark)}") {
+    Tables.materializeSharedBy(spark, "ivfsims", dir) {
       val dot2 = graft.functions.MixedDotProduct.mixedDot _
       val cands = ivfProbes(spark, dir).join(
           ivfAssigned(spark, dir).select(col("cid"),
@@ -413,8 +391,7 @@ object Vectors {
         .select(col("qid"), col("nid"),
           (dot2(col("qe"), col("ne")) / (sqrt(col("qn")) * sqrt(col("nn"))))
             .as("sim"))
-      graft.OracleExport.export(cands.select("qid", "nid"), "ivfcand",
-        dir, ivfKey(spark))
+      graft.OracleExport.export(cands.select("qid", "nid"), "ivfcand", dir)
       cands
     }
 
@@ -467,8 +444,7 @@ object Vectors {
     * assignment export. */
   def qIvfIncremental(spark: SparkSession, dir: String): DataFrame = {
     val cents = ivfCentroids(spark, dir)
-    graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir,
-      pqKey(spark))
+    graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir)
     val emb = sharedEmb(spark, dir)
     val isBatch =
       conv(substring(md5(concat(lit("ivfinc:"), col("vec_id").cast("string"))),
@@ -537,13 +513,12 @@ object Vectors {
     * session-shared assignment table. */
   def qIndexAsof(spark: SparkSession, dir: String): DataFrame = {
     val cents = ivfCentroids(spark, dir)
-    // the stats rows live at cid + 1000 in the same keyspace: a conf
-    // raising nlist to >= 1000 would silently collide centroid and
+    // the stats rows live at cid + 1000 in the same keyspace: raising
+    // IvfLists to >= 1000 would silently collide centroid and
     // stats ids and misclassify witness rows — fail loudly instead
     require(cents.length < 1000,
       s"q_index_asof keyspace split needs nlist < 1000, got ${cents.length}")
-    graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir,
-      pqKey(spark))
+    graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir)
     // repeated bench/verify passes each build a fresh two-snapshot store
     // and reclaim the previous invocation's
     val out = Tables.scratch("indexasof", dir)
@@ -602,8 +577,7 @@ object Vectors {
     val cents = ivfCentroids(spark, dir)
     require(cents.length < 1000,
       s"q_index_vacuum keyspace split needs nlist < 1000, got ${cents.length}")
-    graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir,
-      pqKey(spark))
+    graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir)
     val out = Tables.scratch("indexvac", dir)
     val centRows = centsDf(spark, cents)
       .select(col("cid").cast("long").as("doc_id"),
@@ -680,8 +654,7 @@ object Vectors {
       .join(assigned.select(col("cid"), col("vec_id").as("nid"),
         col("embedding").as("ne"), col("norm2").as("nn")), "cid")
       .filter(col("qid") =!= col("nid"))
-    graft.OracleExport.export(cands.select("qid", "nid"), "ivffiltcand",
-      dir, ivfKey(spark))
+    graft.OracleExport.export(cands.select("qid", "nid"), "ivffiltcand", dir)
     val sims = cands
       .select(col("qid"), col("nid"),
         (dot2(col("qe"), col("ne")) / (sqrt(col("qn")) * sqrt(col("nn"))))
@@ -808,8 +781,7 @@ object Vectors {
     val (k, lcm) = (10, 2520L)
     val labels = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"))
-    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir,
-      annKey(spark))
+    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir)
     // the ranked symmetric top-10 IS the shared symTop10 artifact (same
     // window order, same k) — r20 trim: no per-run ranking pass
     val top = symTop10(spark, dir).filter(col("rk") <= k)
@@ -929,8 +901,7 @@ object Vectors {
     * Hash-gated from the same exported candidate set as [[qCosineAnn]]
     * (the oracle recomputes the thresholded cosine decision view). */
   def qCosineNeardup(spark: SparkSession, dir: String): DataFrame = {
-    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir,
-      annKey(spark))
+    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir)
     annSims(spark, dir) // the shared sims frame — see annSims
       .select(col("qid").as("keep_id"), col("nid").as("dup_id"),
         col("sim"))
@@ -943,7 +914,7 @@ object Vectors {
     * into the shared IVF cells ([[ivfAssigned]] — the coarse k-means
     * quantizer doubles as the SemDeDup clusterer), (2) exact cosine over
     * WITHIN-CELL pairs only, (3) thresholding at τ
-    * (`spark.graft.semdedup.tau`), and (4) contracting the τ-graph with
+    * ([[SemTau]]), and (4) contracting the τ-graph with
     * [[Graph.connectedComponents]] so transitive near-dup chains collapse
     * to one group; the min vec_id per group survives. One row per vector:
     * (vec_id, cid, group_id, keep).
@@ -964,10 +935,8 @@ object Vectors {
   def qSemanticDedup(spark: SparkSession, dir: String): DataFrame = {
     val assigned = ivfAssigned(spark, dir)
     graft.OracleExport.export(
-      assigned.select("vec_id", "cid"), "ivfassign", dir,
-      s"k${ivfListsN(spark)}.i${ivfItersN(spark)}")
-    graft.OracleExport.export(semanticPairs(spark, dir), "sempairs", dir,
-      semKey(spark, dir))
+      assigned.select("vec_id", "cid"), "ivfassign", dir)
+    graft.OracleExport.export(semanticPairs(spark, dir), "sempairs", dir)
     val cc = semanticComponents(spark, dir)
       .select(col("node").as("vec_id"), col("label"))
     assigned.select(col("vec_id"), col("cid"))
@@ -978,40 +947,36 @@ object Vectors {
       .orderBy("vec_id")
   }
 
-  private def semKey(spark: SparkSession, dir: String): String = {
-    val tau = spark.conf.get("spark.graft.semdedup.tau", "0.25").toDouble
-    s"$dir#t$tau.k${ivfListsN(spark)}.i${ivfItersN(spark)}"
-  }
+  /** SemDeDup's within-cell cosine threshold τ. */
+  private val SemTau = 0.25
 
   /** Within-cell cosine >= tau pair set (a, b) — the SemDeDup edge list,
-    * shared per (corpus, quantizer knobs, tau). Kept as its OWN shared
-    * table (not inlined in the CC builder) so (a) the iterative CC loop
+    * shared per corpus. Kept as its OWN shared table (not inlined in
+    * the CC builder) so (a) the iterative CC loop
     * reads a columnar intermediate instead of recomputing the pairwise
     * pass, and (b) the edge list can be exported for the gate oracle. */
   private[graft] def semanticPairs(spark: SparkSession, dir: String): DataFrame = {
-    val tau = spark.conf.get("spark.graft.semdedup.tau", "0.25").toDouble
     val assigned = ivfAssigned(spark, dir)
     val dot2 = graft.functions.MixedDotProduct.mixedDot _
     val a = assigned.select(col("cid"), col("vec_id").as("a"),
       col("embedding").as("ae"), col("norm2").as("an"))
     val b = assigned.select(col("cid"), col("vec_id").as("b"),
       col("embedding").as("be"), col("norm2").as("bn"))
-    Tables.materializeSharedBy(spark,
-      "sempairs", semKey(spark, dir))(a.join(b, "cid").filter(col("a") < col("b"))
+    Tables.materializeSharedBy(spark, "sempairs", dir)(
+      a.join(b, "cid").filter(col("a") < col("b"))
         .select(col("a"), col("b"),
           (dot2(col("ae"), col("be")) / (sqrt(col("an")) * sqrt(col("bn"))))
             .as("sim"))
-        .filter(col("sim") >= tau)
+        .filter(col("sim") >= SemTau)
         .select("a", "b"))
   }
 
   /** Connected components of the [[semanticPairs]] graph — the SemDeDup
-    * group labeling, shared per (corpus, quantizer knobs, tau): the CC
-    * loop runs once per corpus version (by-name: CC executes jobs during
-    * construction). */
+    * group labeling, shared per corpus: the CC loop runs once per corpus
+    * version (by-name: CC executes jobs during construction). */
   private[graft] def semanticComponents(
       spark: SparkSession, dir: String): DataFrame =
-    Tables.materializeSharedBy(spark, "semcc", semKey(spark, dir)) {
+    Tables.materializeSharedBy(spark, "semcc", dir) {
       Graph.connectedComponents(semanticPairs(spark, dir), s"semdedup:$dir")
     }
 
@@ -1601,11 +1566,6 @@ object Vectors {
   private val PqSubs = 8
   private val PqK = 16
   private val PqIters = 4
-  /** PQ identity: its own knobs + the coarse quantizer's (residual codes
-    * are meaningless under different centroids). */
-  private def pqKey(spark: SparkSession): String =
-    s"m$PqSubs.k$PqK.i$PqIters.res.k${ivfListsN(spark)}" +
-      s".i${ivfItersN(spark)}.t${trainMaxN(spark)}"
 
   /** `assigned` + the residual column `res` = x − centroid(cid),
     * element-wise double subtraction (float widens exactly; one IEEE op
@@ -1633,14 +1593,13 @@ object Vectors {
     new graft.Tables.KeyedOnce[Array[Array[Array[Double]]]]
 
   /** Per-subspace RESIDUAL codebooks [sub][cid][dim] — deterministic per
-    * (corpus, knobs), cached JVM-wide like the IVF centroids. Lloyd
+    * corpus, cached JVM-wide like the IVF centroids. Lloyd
     * rounds aggregate over the deterministic training stratum
     * ([[trainSample]]) so the training scan is sample-sized at any
     * corpus scale. */
   private[graft] def pqBooks(spark: SparkSession,
       dir: String): Array[Array[Array[Double]]] = {
-    val cacheKey = s"$dir#${pqKey(spark)}"
-    pqBookCache(cacheKey)(Tables.diskCached(spark, "pqbooks", cacheKey) {
+    pqBookCache(dir)(Tables.diskCached(spark, "pqbooks", dir) {
       val res = pqResiduals(spark, dir)
       // deterministic init: residuals of the first PqK vectors by id,
       // subtracted driver-side with the same double arithmetic as
@@ -1654,7 +1613,7 @@ object Vectors {
         }
       var books = Array.tabulate(PqSubs)(s =>
         Array.tabulate(PqK)(c => init(c).slice(s * 8, s * 8 + 8)))
-      val train = trainSample(res, trainMaxN(spark))
+      val train = trainSample(res, TrainMax)
       (1 to PqIters).foreach { _ =>
         val assigned = train.select(col("res") +:
           (0 until PqSubs).map(s =>
@@ -1680,11 +1639,11 @@ object Vectors {
   }
 
   /** (vec_id, cid, c0..c7) coarse id + residual nibble codes, shared per
-    * (corpus, knobs) — the compressed-corpus derived table (5 bytes of
+    * corpus — the compressed-corpus derived table (5 bytes of
     * payload per vector; the cid doubles as the inverted-list key). */
   private[graft] def pqCodes(spark: SparkSession, dir: String): DataFrame = {
     val books = pqBooks(spark, dir)
-    Tables.materializeSharedBy(spark, "pqcodes", s"$dir#${pqKey(spark)}")(
+    Tables.materializeSharedBy(spark, "pqcodes", dir)(
       pqEncode(pqResiduals(spark, dir), books))
   }
 
@@ -1754,7 +1713,7 @@ object Vectors {
   /** Session-shared PQ-reconstructed cosine frame (qid, nid, sim) over
     * the symmetrized ANN candidate pairs — the decode + scoring pass of
     * [[qPqRecall]], a corpus-version artifact like [[annSims]]/hamSims
-    * (deterministic per corpus + knobs), prewarmed so the timed run
+    * (deterministic per corpus), prewarmed so the timed run
     * pays the rank window + recall rollup, not the recon projection +
     * pair fan-out. Decode + candidate-side norm are per-VECTOR (codes
     * rows), only the query-dependent dot runs per candidate pair; both
@@ -1763,7 +1722,7 @@ object Vectors {
     * left-to-right double accumulation) — measured 5.1 s → 2.2 wins,
     * zero oracle change. */
   private[graft] def pqSims(spark: SparkSession, dir: String): DataFrame =
-    Tables.materializeSharedBy(spark, "pqsims", s"$dir#${pqKey(spark)}") {
+    Tables.materializeSharedBy(spark, "pqsims", dir) {
       val emb = sharedEmb(spark, dir)
       val cand = annCandidatesExported(spark, dir)
       val sym = cand.select(col("qid"), col("nid"))
@@ -1782,11 +1741,9 @@ object Vectors {
     val books = pqBooks(spark, dir)
     val cents = ivfCentroids(spark, dir)
     val codes = pqCodes(spark, dir)
-    graft.OracleExport.export(codes, "pqcodes", dir, pqKey(spark))
-    graft.OracleExport.export(pqBooksDf(spark, books), "pqbooks", dir,
-      pqKey(spark))
-    graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir,
-      pqKey(spark))
+    graft.OracleExport.export(codes, "pqcodes", dir)
+    graft.OracleExport.export(pqBooksDf(spark, books), "pqbooks", dir)
+    graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir)
     val scored = pqSims(spark, dir)
     val wp = Window.partitionBy(col("qid")).orderBy(desc("sim"), asc("nid"))
     val pq3 = scored.withColumn("rk", row_number().over(wp))
@@ -1887,8 +1844,7 @@ object Vectors {
       .join(broadcast(qlut), "qid")
       .join(lists, "cid")
       .filter(col("qid") =!= col("nid"))
-    graft.OracleExport.export(cand.select("qid", "nid"), "ivfcand", dir,
-      ivfKey(spark))
+    graft.OracleExport.export(cand.select("qid", "nid"), "ivfcand", dir)
     val dotCol = (element_at(col("qcent"), col("cid") + 1) +:
       (0 until PqSubs).map(s =>
         element_at(col("lut"), col(s"c$s") + lit(s * PqK + 1))))
@@ -1904,14 +1860,13 @@ object Vectors {
   /** Session-shared ADC top-10 shortlist (qid, nid, sim) — the full
     * probe + compressed-domain scoring pass of [[adcScored]] reduced by
     * bounded per-query heaps, a corpus-version artifact like the code
-    * tables themselves (deterministic per corpus + knobs): prewarmed on
+    * tables themselves (deterministic per corpus): prewarmed on
     * its OWN chain (the r17 chain-hygiene rule — appending it to "ivf"
     * would stretch that chain's pole), so q_ivfadc's timed run pays the
     * two rank windows + the 10-row-per-query exact rerank, not the
     * 140k-candidate LUT scoring fan-out. */
   private[graft] def adcTopShared(spark: SparkSession, dir: String): DataFrame =
-    Tables.materializeSharedBy(spark, "ivfadc10",
-        s"$dir#${pqKey(spark)}.p${ivfProbesN(spark)}")(
+    Tables.materializeSharedBy(spark, "ivfadc10", dir)(
       graft.plans.TopKPerKey.topKPerKey(adcScored(spark, dir),
         Seq(col("qid")), Seq(col("sim").desc, col("nid").asc), 10))
 
@@ -1920,11 +1875,9 @@ object Vectors {
     val books = pqBooks(spark, dir)
     val cents = ivfCentroids(spark, dir)
     val codes = pqCodes(spark, dir)
-    graft.OracleExport.export(codes, "pqcodes", dir, pqKey(spark))
-    graft.OracleExport.export(pqBooksDf(spark, books), "pqbooks", dir,
-      pqKey(spark))
-    graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir,
-      pqKey(spark))
+    graft.OracleExport.export(codes, "pqcodes", dir)
+    graft.OracleExport.export(pqBooksDf(spark, books), "pqbooks", dir)
+    graft.OracleExport.export(centsDf(spark, cents), "ivfcent", dir)
     val fd = graft.functions.MixedDotProduct.mixedDot _
     // ADC top-10 per query — session-shared + prewarmed; BOTH stages
     // below consume it
@@ -2006,8 +1959,7 @@ object Vectors {
           / count(lit(1)).cast("double")).as("nnavg")))
 
   def qBitextMining(spark: SparkSession, dir: String): DataFrame = {
-    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir,
-      annKey(spark))
+    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir)
     val pairs = annSims(spark, dir)
     val avg3 = nnAvg3(spark, dir)
     val labels = Tables(spark, dir, "embeddings")
@@ -2070,8 +2022,7 @@ object Vectors {
     }
 
   def qMmrRerank(spark: SparkSession, dir: String): DataFrame = {
-    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir,
-      annKey(spark))
+    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir)
     // the shortlist is consumed by three stages — the session-shared
     // ranked frame (one parquet scan per stage, built at prewarm)
     val top10 = symTop10(spark, dir)
@@ -2127,8 +2078,7 @@ object Vectors {
     * ≤ 120 comparisons at any corpus size, and tau is measured exactly
     * where it matters, among each query's strongest candidates. */
   def qRankCorr(spark: SparkSession, dir: String): DataFrame = {
-    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir,
-      annKey(spark))
+    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir)
     // the shared (sim, ham) frame already carries both signals; the
     // top-16 cap commutes with the (pre-joined) code columns
     val base = graft.plans.TopKPerKey.topKPerKey(hamSims(spark, dir),
@@ -2169,8 +2119,7 @@ object Vectors {
     * the prewarmed graph: two broadcast-sized label joins + a
     * vectors-sized argmax window. */
   def qKnnClassify(spark: SparkSession, dir: String): DataFrame = {
-    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir,
-      annKey(spark))
+    graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir)
     val labels = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"))
     val votes = Graph.knnEdges(spark, dir)
@@ -2256,8 +2205,7 @@ object Vectors {
     * [[pqDecoded]] (the oracle's recon CTE verbatim: cent[d] +
     * codeword[d] double adds) on the broadcast side. */
   private[graft] def plantedAdcSims(spark: SparkSession): DataFrame =
-    Tables.materializeSharedBy(spark, "pqpadc",
-        s"$PlantedDir#${pqKey(spark)}") {
+    Tables.materializeSharedBy(spark, "pqpadc", PlantedDir) {
       val md = graft.functions.MixedDotProduct.mixedDot _
       val queries = sharedEmb(spark, PlantedDir).filter(col("vec_id") % 8 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -2277,11 +2225,9 @@ object Vectors {
     val codes = pqCodes(spark, p)
     graft.OracleExport.export(emb.select("vec_id", "embedding"),
       "plantedemb", dir)
-    graft.OracleExport.export(codes, "pqcodesp", dir, pqKey(spark))
-    graft.OracleExport.export(pqBooksDf(spark, books), "pqbooksp", dir,
-      pqKey(spark))
-    graft.OracleExport.export(centsDf(spark, cents), "ivfcentp", dir,
-      pqKey(spark))
+    graft.OracleExport.export(codes, "pqcodesp", dir)
+    graft.OracleExport.export(pqBooksDf(spark, books), "pqbooksp", dir)
+    graft.OracleExport.export(centsDf(spark, cents), "ivfcentp", dir)
     val wp = Window.partitionBy(col("qid")).orderBy(desc("sim"), asc("nid"))
     val truth3 = plantedTruth3(spark, p, "pqptruth")
     val pq3 = plantedAdcSims(spark).withColumn("rk", row_number().over(wp))
@@ -2451,9 +2397,8 @@ object Vectors {
     * quantize R·r. 3 outer rounds (Ge: a handful suffice; distortion
     * decreases monotonically). */
   private[graft] def opqTrain(spark: SparkSession, dir: String): OpqModel = {
-    val cacheKey = s"$dir#${pqKey(spark)}"
-    opqCache(cacheKey)(Tables.diskCached(spark, "opqmodel", cacheKey) {
-      val collected = trainSample(pqResiduals(spark, dir), trainMaxN(spark))
+    opqCache(dir)(Tables.diskCached(spark, "opqmodel", dir) {
+      val collected = trainSample(pqResiduals(spark, dir), TrainMax)
         .select(col("vec_id"), col("cid"), col("res")).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2).toArray))
         .sortBy(_._1)
@@ -2758,7 +2703,7 @@ object Vectors {
     * ([[qOpqRecall]]'s broadcast side), prewarmed on the "planted" chain
     * so the timed run pays scoring only — the r19 VERDICT trim. */
   private[graft] def opqPlainDecoded(spark: SparkSession): DataFrame =
-    Tables.materializeSharedBy(spark, "opqdecp", s"$OpqDir#${pqKey(spark)}")(
+    Tables.materializeSharedBy(spark, "opqdecp", OpqDir)(
       pqDecoded(spark, OpqDir))
 
   /** Session-shared OPQ decoded recon frame (nid, recon, rn2) —
@@ -2766,7 +2711,7 @@ object Vectors {
     * oracle's orr fold order exactly). Prewarmed beside
     * [[opqPlainDecoded]]. */
   private[graft] def opqOpqDecoded(spark: SparkSession): DataFrame =
-    Tables.materializeSharedBy(spark, "opqdeco", s"$OpqDir#${pqKey(spark)}") {
+    Tables.materializeSharedBy(spark, "opqdeco", OpqDir) {
       val cents = ivfCentroids(spark, OpqDir)
       val model = opqTrain(spark, OpqDir)
       val md = graft.functions.MixedDotProduct.mixedDot _
@@ -2789,7 +2734,7 @@ object Vectors {
     * lshtruth precedent: prewarm single-consumer artifacts too). */
   private[graft] def plantedTruth3(spark: SparkSession, p: String,
       name: String): DataFrame =
-    Tables.materializeSharedBy(spark, name, s"$p#${pqKey(spark)}") {
+    Tables.materializeSharedBy(spark, name, p) {
       val emb = sharedEmb(spark, p)
       val md = graft.functions.MixedDotProduct.mixedDot _
       val queries = emb.filter(col("vec_id") % 8 === 0)
@@ -2817,7 +2762,7 @@ object Vectors {
     * the materialize round-trips nothing. */
   private[graft] def opqTop3(spark: SparkSession, decoded: DataFrame,
       tag: String, hitName: String): DataFrame =
-    Tables.materializeSharedBy(spark, tag, s"$OpqDir#${pqKey(spark)}") {
+    Tables.materializeSharedBy(spark, tag, OpqDir) {
       val emb = sharedEmb(spark, OpqDir)
       val md = graft.functions.MixedDotProduct.mixedDot _
       val queries = emb.filter(col("vec_id") % 8 === 0)
@@ -2850,16 +2795,12 @@ object Vectors {
     }.toDF("vec_id", "cid", "c0", "c1", "c2", "c3", "c4", "c5", "c6", "c7")
     graft.OracleExport.export(emb.select("vec_id", "embedding"),
       "opqemb", dir)
-    graft.OracleExport.export(plainCodes, "pqcodesq", dir, pqKey(spark))
-    graft.OracleExport.export(pqBooksDf(spark, plainBooks), "pqbooksq", dir,
-      pqKey(spark))
-    graft.OracleExport.export(centsDf(spark, cents), "ivfcentq", dir,
-      pqKey(spark))
-    graft.OracleExport.export(ocodes, "opqcodes", dir, pqKey(spark))
-    graft.OracleExport.export(pqBooksDf(spark, model.books), "opqbooks", dir,
-      pqKey(spark))
-    graft.OracleExport.export(rotDf(spark, model.rot), "opqrot", dir,
-      pqKey(spark))
+    graft.OracleExport.export(plainCodes, "pqcodesq", dir)
+    graft.OracleExport.export(pqBooksDf(spark, plainBooks), "pqbooksq", dir)
+    graft.OracleExport.export(centsDf(spark, cents), "ivfcentq", dir)
+    graft.OracleExport.export(ocodes, "opqcodes", dir)
+    graft.OracleExport.export(pqBooksDf(spark, model.books), "opqbooks", dir)
+    graft.OracleExport.export(rotDf(spark, model.rot), "opqrot", dir)
     val truth3 = plantedTruth3(spark, OpqDir, "opqtruth")
     val pq3 = opqPq3(spark)
     val opq3 = opqOpq3(spark)

@@ -47,15 +47,16 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 object AutoSalt extends Rule[LogicalPlan] {
 
   val SaltCol = "__autosalt"
+  /** `n`: the ways stage 1 spreads each hot key. */
+  private val SaltN = 16
   private val Salted = TreeNodeTag[Boolean]("graft.autosalt.done")
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (conf.getConfString("spark.graft.autosalt.enabled", "false") != "true")
       plan
     else {
-      val n = conf.getConfString("spark.graft.autosalt.n", "16").toInt
       plan.transformUp {
-        case agg: Aggregate if eligible(agg) => rewrite(agg, n)
+        case agg: Aggregate if eligible(agg) => rewrite(agg)
       }
     }
   }
@@ -120,7 +121,7 @@ object AutoSalt extends Rule[LogicalPlan] {
         })
   }
 
-  private def rewrite(agg: Aggregate, n: Int): LogicalPlan = {
+  private def rewrite(agg: Aggregate): LogicalPlan = {
     val groupAttrs =
       agg.groupingExpressions.map(_.asInstanceOf[AttributeReference])
     // distinct aggregate calls (by canonical form) → one partial each
@@ -163,7 +164,7 @@ object AutoSalt extends Rule[LogicalPlan] {
               s"__p_${i}_$j")()
         })
       }.toMap
-    val saltExpr = Pmod(new Murmur3Hash(agg.child.output), Literal(n))
+    val saltExpr = Pmod(new Murmur3Hash(agg.child.output), Literal(SaltN))
     val stage1 = Aggregate(
       (groupAttrs: Seq[Expression]) :+ saltExpr,
       groupAttrs ++ partialAliases.values.flatten.toSeq.sortBy(_.name),

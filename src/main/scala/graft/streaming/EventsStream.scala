@@ -392,7 +392,7 @@ object EventsStream {
     *
     * `build` receives the session to build the stream in: the caller's
     * [[graft.Scoped]] child, whose conf adds `confs` and the stateful
-    * shuffle partition count ([[statePartitions]]) to the caller's. The
+    * shuffle partition count ([[StatePartitions]]) to the caller's. The
     * caller's own conf is never written, so batch queries planned
     * concurrently keep the session's partitions and provider, and every
     * run of a checkpointed stream plans under the same confs. Listeners
@@ -410,7 +410,7 @@ object EventsStream {
       checkpoint: Option[String] = None)(
       build: SparkSession => DataFrame): Drained = {
     val child = graft.Scoped.session(spark, confs +
-      ("spark.sql.shuffle.partitions" -> statePartitions(spark).toString))
+      ("spark.sql.shuffle.partitions" -> StatePartitions.toString))
     val name = "drain_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val df = build(child)
     require(df.sparkSession eq child, "drain: build the stream in the " +
@@ -429,17 +429,15 @@ object EventsStream {
   final case class Drained(rows: DataFrame,
       progress: Seq[StreamingQueryProgress])
 
-  /** Stateful shuffle partitions of a [[drain]] run
-    * (`spark.graft.stream.parts`, default 4). A stateful operator keeps
-    * one state store per shuffle partition and commits each store every
-    * micro-batch, so the right count tracks the operator's KEY
+  /** Stateful shuffle partitions of a [[drain]] run. A stateful
+    * operator keeps one state store per shuffle partition and commits
+    * each store every micro-batch, so the right count tracks the operator's KEY
     * cardinality, not the session's CPU count: at 32 partitions the
     * fixture's ~10³-key streams spent ~45% of their wall time on store
     * commits (5.1 s → 2.9 s at 8, `Debug confab`), and an interleaved A/B
     * at sf0.1 read 4 ≤ 8 on every gate stream. A billion-key production
-    * stream tunes it UP; batch queries keep the session's count. */
-  private[graft] def statePartitions(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.stream.parts", "4").toInt
+    * stream raises it; batch queries keep the session's count. */
+  private[graft] val StatePartitions = 4
 
   private val RocksDb = Map("spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

@@ -45,22 +45,6 @@ class OracleExportSpec extends SparkSpec
     } finally spark.conf.unset("spark.graft.oracleExport")
   }
 
-  test("re-export under a different knob key throws; same key is a no-op") {
-    import spark.implicits._
-    val dir = "/spec/knobguard"
-    val base = exportBase("/tmp/graft-oracle-export/knobtag-_spec_knobguard")
-    OracleExport.export(Seq(1L).toDF("v"), "knobtag", dir, "k12.w8")
-    // same knobs: silent reuse (the per-JVM once semantics)
-    OracleExport.export(Seq(9L).toDF("v"), "knobtag", dir, "k12.w8")
-    assert(spark.read.parquet(base).as[Long].collect().toSeq == Seq(1L))
-    // different knobs: the export path is fixed and the oracle SQL reads
-    // it — serving knob-A content to a knob-B gate must throw, not desync
-    val e = intercept[IllegalStateException] {
-      OracleExport.export(Seq(2L).toDF("v"), "knobtag", dir, "k9.w4")
-    }
-    assert(e.getMessage.contains("k12.w8") && e.getMessage.contains("k9.w4"))
-  }
-
   test("a failed export write is retried by the next caller") {
     import spark.implicits._
     val dir = "/spec/retry"
@@ -82,10 +66,7 @@ class OracleExportSpec extends SparkSpec
     // re-read export must equal the shared table it was written from
     val dir = sf("sf0.001")
     val sig = ops.Similarity.minhashSignatures(spark, dir)
-    // SAME knob key as qMinhashLsh's production export: the suites share
-    // one JVM, and the knob guard (rightly) throws if the same tag+dir
-    // is exported under two different keys in one session
-    OracleExport.export(sig, "minhsig", dir, "k=32.b=8")
+    OracleExport.export(sig, "minhsig", dir)
     val back = spark.read.parquet(
       "/tmp/graft-oracle-export/minhsig-_root_testdata_sf0.001")
     assert(back.schema == sig.schema)

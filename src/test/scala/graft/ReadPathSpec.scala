@@ -2,10 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source scan: a schema-less `.read.parquet(` in the main sources goes
-  * through [[Tables.parquet]], which infers each schema once per session.
-  * The sites below predate that read path and are allowed by count; a new
-  * site anywhere else fails this spec. */
+/** Source scans of the main sources.
+  *
+  * A schema-less `.read.parquet(` goes through [[Tables.parquet]], which
+  * infers each schema once per session. The sites below predate that read
+  * path and are allowed by count; a new site anywhere else fails this
+  * spec.
+  *
+  * The `spark.graft.*` session confs are a fixed set: an algorithm
+  * parameter is a code constant next to its one use, not a conf. */
 class ReadPathSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
   private val schemaLessRead = """\.read\s*\.parquet\(""".r
@@ -16,6 +21,14 @@ class ReadPathSpec extends AnyFunSuite {
     "graft/streaming/UpsertStream.scala" -> Some(2),
     "graft/streaming/EventsStream.scala" -> Some(2),
     "graft/Debug.scala" -> None)
+
+  // the graft confs something sets: Bench/Debug/perfbench (oracleExport),
+  // Skew's scoped session (autosalt.enabled), deployment paths, and the
+  // size switches whose other arm specs force
+  private val graftConfs = Set("oracleExport", "autosalt.enabled",
+    "materializeDir", "prewarmCache.dir", "mr.execDir",
+    "kcore.lazyMaxEdges", "pagerank.matMinEdges", "ccinc.driverMaxEdges")
+  private val graftConfLiteral = "\"spark\\.graft\\.([A-Za-z0-9_.]+)\"".r
 
   private def scalaFiles(d: java.io.File): Seq[java.io.File] =
     Option(d.listFiles()).toSeq.flatten.flatMap { f =>
@@ -40,5 +53,15 @@ class ReadPathSpec extends AnyFunSuite {
     }
     assert(bad.isEmpty,
       "schema-less parquet reads must use Tables.parquet:\n" + bad.mkString("\n"))
+  }
+
+  test("the main sources read exactly the listed spark.graft confs") {
+    assert(root.isDirectory, s"run from the repo root (${root.getAbsolutePath})")
+    val keys = scalaFiles(root).flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      graftConfLiteral.findAllMatchIn(text).map(_.group(1))
+    }.toSet
+    assert(keys === graftConfs,
+      s"new: ${keys -- graftConfs}, gone: ${graftConfs -- keys}")
   }
 }

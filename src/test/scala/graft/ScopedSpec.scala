@@ -127,7 +127,7 @@ class ScopedSpec extends SparkSpec {
     val gated = growth(assert(EventsStream.qStreamDedup(spark, dir).count() > 0))
     assert(gated === direct, s"5 gate calls added $gated buses, 5 direct runs $direct")
     val child = Scoped.session(spark, Map("spark.sql.shuffle.partitions" ->
-      EventsStream.statePartitions(spark).toString))
+      EventsStream.StatePartitions.toString))
     assert(!child.catalog.listTables().collect()
       .exists(_.name.startsWith("drain_")), "a drain left its sink view")
   }
@@ -145,7 +145,7 @@ class ScopedSpec extends SparkSpec {
     assert(d.rows.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
       .toSeq === Seq((1L, 40L), (2L, 20L)))
     assert(d.progress.flatMap(_.stateOperators).map(_.numShufflePartitions)
-      .distinct === Seq(EventsStream.statePartitions(spark).toLong))
+      .distinct === Seq(EventsStream.StatePartitions.toLong))
   }
 
   test("the child is a clone: caller confs, functions and rules reach it, including changes between calls") {

@@ -132,10 +132,12 @@ class MapReduceJobSpec extends SparkSpec {
       "part-00001" -> "a\t2\nb\t2\nc\t1\n",
       "part-00002" -> "")
     // identity, R = 2: the raw lines, so a kept '\r' or a lost last line
-    // changes the bytes
+    // changes the bytes. Tab-less lines are keyed with their newline, as
+    // the reference worker keys them: md5("a b\n"), md5("b d\n") and
+    // md5("c a\n") are all even
     val lines = Map(
-      "part-00000" -> "a b\nc a\n",
-      "part-00001" -> "b d\n")
+      "part-00000" -> "a b\nb d\nc a\n",
+      "part-00001" -> "")
 
     def native(out: String, wholeFiles: Boolean): Unit = {
       WordCount.job(in, s"$out/wc", 3).copy(wholeFiles = wholeFiles)
@@ -227,7 +229,7 @@ class MapReduceJobSpec extends SparkSpec {
       // duplicates kept
       val expected = (0 until r).map { i =>
         lines.filter(l =>
-          Md5Partitioner.partition(MapReduceJob.tabKey(l), r) == i)
+          Md5Partitioner.partition(MapReduceJob.partitionKey(l), r) == i)
           .sorted(MapReduceJob.CodePointOrder)
       }
       assert(got === expected, s"$name, R = $r")
@@ -236,20 +238,29 @@ class MapReduceJobSpec extends SparkSpec {
 
   test("CodePointOrder equals code-point sequence order, unpaired surrogates included") {
     // BMP chars on both sides of the surrogate block, both surrogate
-    // halves, and pairs (U+1F600, U+1F601, U+10000, U+10FFFF)
-    val units = "a\t\uD7FF\uD800\uDBFF\uD83D\uDC00\uDE00\uDE01\uDFFF\uE000\uFFFD"
+    // halves, pairs (U+1F600, U+1F601, U+10000, U+10FFFF), and '\t' and
+    // '\n' on both sides of a line's terminating newline
+    val units =
+      "a\t\n\u0001\uD7FF\uD800\uDBFF\uD83D\uDC00\uDE00\uDE01\uDFFF\uE000\uFFFD"
     val rnd = new scala.util.Random(11)
     def str(): String =
       Seq.fill(rnd.nextInt(6))(units(rnd.nextInt(units.length))).mkString
+    def cps(s: String) = s.codePoints().toArray
     for (_ <- 1 to 20000) {
       val (a, b) = (str(), str())
-      val want = java.util.Arrays.compare(
-        a.codePoints().toArray, b.codePoints().toArray).sign
+      // lines compare newline-terminated; plain strings (file names) as is
+      val want = java.util.Arrays.compare(cps(a + "\n"), cps(b + "\n")).sign
       assert(MapReduceJob.CodePointOrder.compare(a, b).sign === want,
         s"${a.map(_.toInt)} vs ${b.map(_.toInt)}")
+      assert(MapReduceJob.CodePointOrder.plain.compare(a, b).sign ===
+        java.util.Arrays.compare(cps(a), cps(b)).sign)
     }
     assert(MapReduceJob.CodePointOrder.lt("\uFFFD\t2", "\uD83D\uDE00\t1"))
     assert("\uFFFD\t2".compareTo("\uD83D\uDE00\t1") > 0, "UTF-16 order differs")
+    // the prefix tie: "a\tx\n" < "a\n" < "ab\n"
+    assert(MapReduceJob.CodePointOrder.lt("a\tx", "a"))
+    assert(MapReduceJob.CodePointOrder.lt("a", "ab"))
+    assert(MapReduceJob.CodePointOrder.plain.lt("a", "a\tx"))
   }
 
   test("LineCounts flushes at its caps and keeps every occurrence") {

@@ -41,9 +41,10 @@ class Md5PartitionerSpec extends AnyFunSuite {
       Md5Partitioner.partition("hello", 16))
     assert(part.getPartition("hello\tother") ===
       Md5Partitioner.partition("hello", 16))
-    // a line with no tab is its own key
+    // a line with no tab is keyed with its newline, as the reference
+    // worker splits the newline-terminated line
     assert(part.getPartition("hello world") ===
-      Md5Partitioner.partition("hello world", 16))
+      Md5Partitioner.partition("hello world\n", 16))
     // Spark compares partitioners to skip re-shuffles: same R, same one
     val twin = new Md5Partitioner(16)
     assert(part === twin)

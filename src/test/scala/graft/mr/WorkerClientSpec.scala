@@ -75,9 +75,11 @@ class WorkerClientSpec extends SparkSpec {
     val mine = lines.map(_ + "\n").toArray
     java.util.Arrays.sort(mine, MapReduceJob.CodePointOrder)
     assert(mine.toSeq === pySorted, "sort order diverges from CPython")
-    val w = new WorkerClient(port = 0, managerPort = 1) // never started
+    // unterminated lines sort as if newline-terminated
+    assert(lines.sorted(MapReduceJob.CodePointOrder) ===
+      pySorted.map(_.stripSuffix("\n")))
     val myParts = pySorted.map(l =>
-      Md5Partitioner.partition(w.lineKey(l.stripSuffix("\n")), 7))
+      Md5Partitioner.partition(MapReduceJob.partitionKey(l.stripSuffix("\n")), 7))
     assert(myParts === pyParts, "md5 key partition diverges from CPython")
   }
 
@@ -335,11 +337,9 @@ class WorkerClientSpec extends SparkSpec {
   }
 
   test("code-point order: Submit.run, native run and dispatch mode write byte-identical parts for the tricky lines") {
-    // The tricky lines that carry a tab. A tab-less line is keyed
-    // differently by the reference worker (its key keeps the newline, see
-    // WorkerClient.lineKey), so it may land in another part; that is
-    // placement, not order.
-    val lines = trickyLines.filter(_.contains('\t'))
+    // tab-less lines included: every mode keys them with their newline
+    // (MapReduceJob.partitionKey) and sorts `a\tx` before `a`
+    val lines = trickyLines
     val in = tmpDir("wkr-cp-in")
     Files.writeString(Paths.get(in, "a.txt"),
       lines.take(4).mkString("", "\n", "\n"))
@@ -378,9 +378,11 @@ class WorkerClientSpec extends SparkSpec {
         assert(parts(s"$out/native-$r", r) === expect, s"native, R = $r")
         assert(parts(wire, r) === expect, s"dispatch mode, R = $r")
       }
-      // one partition holds every line: U+FFFD sorts before U+1F600
+      // one partition holds every line: U+FFFD sorts before U+1F600,
+      // and a tab-extended line before its tab-less prefix
       val one = parts(s"$out/submit-1", 1).head
       assert(one.indexOf("�\t2") < one.indexOf("😀\t1"))
+      assert(one.indexOf("a\tx\n") < one.indexOf("\na\n"))
     } finally {
       send(srv.boundPort, """{"message_type": "shutdown"}""")
       srv.awaitTermination()

@@ -87,27 +87,25 @@ class PqSpec extends SparkSpec {
     // quantizer on the 256-cap stratum (~16 vectors per centroid) and
     // compare to full training
     val full = Vectors.ivfCentroids(spark, dir)
-    spark.conf.set("spark.graft.quantizer.trainMax", "256")
-    try {
-      val sampled = Vectors.ivfCentroids(spark, dir)
-      // the pin is QUANTIZER QUALITY, not centroid identity: on this
-      // structureless fixture individual centroids wander freely under
-      // resampling (norms ~0.3 vs vector norms 1), but the mean
-      // distance-to-assigned-centroid — the thing Lloyd minimizes and
-      // the thing probes/recall depend on — must stay within a few
-      // percent of full-corpus training or the sample is too small/
-      // biased to stand in for the corpus
-      val xs = graft.Tables(spark, dir, "embeddings").select("embedding")
-        .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      def meanQuantErr(cs: Array[Array[Double]]): Double =
-        xs.map { x =>
-          cs.map(c => x.zip(c).map { case (a, b) =>
-            (a - b) * (a - b) }.sum).min
-        }.sum / xs.length
-      val (qf, qs) = (meanQuantErr(full), meanQuantErr(sampled))
-      assert(qs <= 1.10 * qf,
-        s"sampled training degraded the quantizer: full=$qf sampled=$qs")
-    } finally spark.conf.unset("spark.graft.quantizer.trainMax")
+    val sampled = Vectors.trainCentroids(Vectors.sharedEmb(spark, dir),
+      trainMax = 256)
+    // the pin is QUANTIZER QUALITY, not centroid identity: on this
+    // structureless fixture individual centroids wander freely under
+    // resampling (norms ~0.3 vs vector norms 1), but the mean
+    // distance-to-assigned-centroid — the thing Lloyd minimizes and
+    // the thing probes/recall depend on — must stay within a few
+    // percent of full-corpus training or the sample is too small/
+    // biased to stand in for the corpus
+    val xs = graft.Tables(spark, dir, "embeddings").select("embedding")
+      .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    def meanQuantErr(cs: Array[Array[Double]]): Double =
+      xs.map { x =>
+        cs.map(c => x.zip(c).map { case (a, b) =>
+          (a - b) * (a - b) }.sum).min
+      }.sum / xs.length
+    val (qf, qs) = (meanQuantErr(full), meanQuantErr(sampled))
+    assert(qs <= 1.10 * qf,
+      s"sampled training degraded the quantizer: full=$qf sampled=$qs")
   }
 
   test("planted-fixture recall floor BINDS (r15 verdict #4)") {

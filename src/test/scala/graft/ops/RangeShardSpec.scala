@@ -51,17 +51,14 @@ class RangeShardSpec extends SparkSpec {
     // …and the MEASURED sample with a tiny target on the real fixture
     // (binomial concentration: 64-target on ~thousands of docs)
     val dir = sf("sf0.001")
-    spark.conf.set("spark.graft.rangeshard.sampleTarget", "64")
-    try {
-      val m = RangeShard.sampleOf(spark, dir).count()
-      assert(m >= 16 && m <= 192, s"measured sample $m outside [16,192]")
-      // the layout still covers the corpus with ordered shards
-      val rows = RangeShard.qRangeShard(spark, dir).collect()
-      val total = graft.Tables(spark, dir, "documents").count()
-      assert(rows.map(_.getLong(1)).sum === total)
-      rows.sliding(2).foreach { case Array(a, b) =>
-        assert(a.getLong(3) < b.getLong(2))
-      }
-    } finally spark.conf.unset("spark.graft.rangeshard.sampleTarget")
+    val m = RangeShard.sampleOf(spark, dir, 64).count()
+    assert(m >= 16 && m <= 192, s"measured sample $m outside [16,192]")
+    // the layout still covers the corpus with ordered shards
+    val rows = RangeShard.rangeShardOf(spark, dir, 64).collect()
+    val total = graft.Tables(spark, dir, "documents").count()
+    assert(rows.map(_.getLong(1)).sum === total)
+    rows.sliding(2).foreach { case Array(a, b) =>
+      assert(a.getLong(3) < b.getLong(2))
+    }
   }
 }

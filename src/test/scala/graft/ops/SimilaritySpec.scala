@@ -164,16 +164,14 @@ class SimilaritySpec extends SparkSpec {
         assert(r.getInt(3) == best._2, s"vec ${r.getLong(0)}")
       }
     }
-    spark.conf.set("spark.graft.ivf.nlist", "64")
-    try {
-      val rows = Vectors.ivfAssigned(spark, sf("sf0.01"))
-        .select("vec_id", "embedding", "norm2", "cid").collect()
-      val cs = Vectors.ivfCentroids(spark, sf("sf0.01"))
-      assert(cs.length == 64)
-      val used = rows.map(_.getInt(3)).distinct
-      assert(used.length > 4, s"degenerate quantizer: ${used.length} cells used")
-      check(rows, cs)
-    } finally spark.conf.unset("spark.graft.ivf.nlist")
+    val emb = Vectors.sharedEmb(spark, sf("sf0.01"))
+    val cs = Vectors.trainCentroids(emb, nList = 64)
+    assert(cs.length == 64)
+    val rows = Vectors.withCid(emb, cs)
+      .select("vec_id", "embedding", "norm2", "cid").collect()
+    val used = rows.map(_.getInt(3)).distinct
+    assert(used.length > 4, s"degenerate quantizer: ${used.length} cells used")
+    check(rows, cs)
     val syn = Array.tabulate(1030, 64)((i, d) =>
       Vectors.planeSign(i, d).toDouble * ((i % 7) + 1) / 7.0)
     check(Vectors.withCid(Vectors.sharedEmb(spark, dir), syn)
@@ -183,9 +181,7 @@ class SimilaritySpec extends SparkSpec {
   test("IVF probe ranking at nlist=64 is the exact top-nprobe (chunked top-k expression)") {
     // each vector's nprobe cids, in order, must equal the driver-side
     // (d, cid) sort's first six: at nlist=64, and at nlist=2048 (the
-    // 500-vector fixture's deterministic init caps it at 500 centroids),
-    // which then serves end to end through qCosineIvf. Export is off:
-    // non-default knobs would desync the gate's candidate export.
+    // 500-vector fixture's deterministic init caps it at 500 centroids)
     val emb = Vectors.sharedEmb(spark, sf("sf0.01"))
     val byId = emb.select("vec_id", "embedding", "norm2").collect()
       .map(r => r.getLong(0) -> ((r.getSeq[Float](1), r.getDouble(2))))
@@ -204,18 +200,10 @@ class SimilaritySpec extends SparkSpec {
       assert(probes === got.flatMap { case (id, cids) => cids.map((id, _)) }.toSet)
       assert(probes.size === 500 * nProbe)
     }
-    spark.conf.set("spark.graft.oracleExport", "false")
-    try {
-      for (nlist <- Seq("64", "2048")) {
-        spark.conf.set("spark.graft.ivf.nlist", nlist)
-        check(Vectors.ivfCentroids(spark, sf("sf0.01")))
-      }
-      assert(Vectors.ivfCentroids(spark, sf("sf0.01")).length === 500)
-      assert(Vectors.qCosineIvf(spark, sf("sf0.01")).collect().nonEmpty)
-    } finally {
-      spark.conf.unset("spark.graft.ivf.nlist")
-      spark.conf.unset("spark.graft.oracleExport")
-    }
+    check(Vectors.trainCentroids(emb, nList = 64))
+    val capped = Vectors.trainCentroids(emb, nList = 2048)
+    assert(capped.length === 500)
+    check(capped)
   }
 
   test("semantic dedup equals union-find over within-cell tau pairs") {

@@ -127,21 +127,16 @@ class TextOpsSpec extends SparkSpec {
     assert(out.exists(_._3 == "new"))
   }
 
-  test("winnow stop-fingerprint cap: both cap sites read spark.graft.winnow.maxdf") {
-    assert(TextOps.winnowMaxDf(spark) == 50) // documented default
+  test("winnow stop-fingerprint cap: both cap sites apply their maxDf") {
     // default cap: both derived tables non-empty on the fixture
     assert(TextOps.winnowPairs(spark, dir).limit(1).count() == 1)
     assert(TextOps.winnowMatches(spark, dir).limit(1).count() == 1)
-    // cap=1 makes the df filter (2 <= df <= maxdf) unsatisfiable — BOTH
-    // the pair table and the matches frame must go empty, pinning that
-    // the two sites share the one knob (a hardcoded 50 at either site
-    // would keep that table non-empty). Knob-suffixed share keys mean
-    // this builds fresh tables rather than serving the default's.
-    spark.conf.set("spark.graft.winnow.maxdf", "1")
-    try {
-      assert(TextOps.winnowPairs(spark, dir).count() == 0)
-      assert(TextOps.winnowMatches(spark, dir).count() == 0)
-    } finally spark.conf.unset("spark.graft.winnow.maxdf")
+    // cap=1 makes the df filter (2 <= df <= maxDf) unsatisfiable — BOTH
+    // builders must go empty, pinning that each site applies the cap it
+    // is given (a hardcoded 50 at either site would keep that table
+    // non-empty)
+    assert(TextOps.winnowPairsOf(spark, dir, maxDf = 1).count() == 0)
+    assert(TextOps.winnowMatchesOf(spark, dir, maxDf = 1).count() == 0)
   }
 
   test("lm surprisal bits match the hand computation") {
