@@ -87,12 +87,6 @@ object Bench {
       case c => c.toString
     } + "\""
 
-  /** Compact driver-facing summary: everything adjudication needs, NO
-    * per-query map. The full record (with the per-query map) is ~6 KB
-    * on one line; the driver's stdout tail capture keeps only the last
-    * 2,000 chars, so round 8 recorded rc 0 but parsed:null — the line
-    * arrived mid-dict with the leading "value" field cut off. This line is
-    * printed LAST so it always fits any tail buffer whole and parses. */
   /** Locale-pinned numeric formatting: the f"" interpolator formats
     * through the JVM default locale, and a decimal-comma locale (de_DE)
     * would render 64,123 — invalid JSON in the one line that exists
@@ -100,6 +94,12 @@ object Bench {
   private def num(pattern: String, v: Double): String =
     String.format(java.util.Locale.ROOT, pattern, Double.box(v))
 
+  /** Compact driver-facing summary: everything adjudication needs, NO
+    * per-query map. The full record (with the per-query map) is ~6 KB
+    * on one line; the driver's stdout tail capture keeps only the last
+    * 2,000 chars, so round 8 recorded rc 0 but parsed:null — the line
+    * arrived mid-dict with the leading "value" field cut off. This line is
+    * printed LAST so it always fits any tail buffer whole and parses. */
   private[graft] def summaryJson(
       total: Double, nQueries: Int, minTotal: Double, failedN: Int,
       skippedN: Int, multiSampledN: Int, passes: Int, passesCompleted: Int,

@@ -232,7 +232,7 @@ object Debug {
             clusters.filter(col("doc_id") === col("rep"))
               .select("doc_id"), "doc_id")), "shingles"))
         val cand = ops.Similarity.prefixKeys(sh, t)
-        val pairs = time("pairs+verify")(
+        time("pairs+verify")(
           ops.Similarity.verifyJaccard(
             ops.Similarity.bucketPairs(cand, Seq("sh_h")), sh, t)
             .write.mode("overwrite").format("noop").save())

@@ -10,9 +10,14 @@ import org.apache.spark.sql.functions._
   * The executable twins live in src/test/resources/mr/exec/. */
 object WordCount {
 
+  /** `String.split` compiles a multi-char regex on every call; this is
+    * the same pattern compiled once (`Pattern.split` is what
+    * `String.split` delegates to, so the words are the same). */
+  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
+
   /** wc_map: one "word\t1" line per whitespace-separated word. */
   val mapper: String => IterableOnce[String] =
-    line => line.split("\\s+").iterator.filter(_.nonEmpty).map(w => s"$w\t1")
+    line => Whitespace.split(line).iterator.filter(_.nonEmpty).map(w => s"$w\t1")
 
   /** wc_reduce: sum the values of each contiguous key group. */
   val reducer: Iterator[String] => Iterator[String] =

@@ -131,30 +131,6 @@ object Bpe {
     m.orderBy("step")
   }
 
-  /** Encode the corpus with the learned merge table: per-language token
-    * counts and chars/token (the compression a tokenizer buys). The
-    * merge folds run over the VOCABULARY (one row per distinct word —
-    * the same collapse that makes training scale), and the corpus pays
-    * ONE equi-join of word → token count: the 100 TB corpus is touched
-    * by exactly one narrow pass, never by the fold lambdas. The join is
-    * deliberately NOT hinted broadcast: the distinct-word vocabulary of
-    * a 100 TB crawl can be billions of rows (see the training scaladoc
-    * above), which no driver can collect — AQE picks broadcast at
-    * runtime when the vocabulary is actually small (it is at every test
-    * SF) and falls back to a shuffle join when it isn't, which is the
-    * only plan that survives the scale-up. The 12-row merge table is
-    * driver-collected (bounded, like the k-means centroids).
-    *
-    * Hash-gated via [[graft.OracleExport]] (promoted from rows-only):
-    * the oracle recomputes EVERYTHING downstream of the learned merges —
-    * the vocabulary, the greedy left-to-right non-overlapping merge fold
-    * itself (replayed in DuckDB on a double-space-delimited symbol
-    * string, where global string replace IS the greedy fold: each match
-    * consumes its delimiters, so overlapping candidates can't re-match,
-    * then delimiters are re-normalized per step), the corpus join, and
-    * the per-language aggregates. Only the merge TABLE is taken from the
-    * engine (iterative argmax — not single-query SQL), and BpeSpec pins
-    * that sequence against an independent reference implementation. */
   /** The full greedy encode as ONE constant-depth expression over a word
     * column `w`: an outer `aggregate` over the MERGE TABLE (spliced as a
     * constant-folded array-of-structs literal) whose lambda applies one
@@ -188,6 +164,30 @@ object Bpe {
     }
   }
 
+  /** Encode the corpus with the learned merge table: per-language token
+    * counts and chars/token (the compression a tokenizer buys). The
+    * merge folds run over the VOCABULARY (one row per distinct word —
+    * the same collapse that makes training scale), and the corpus pays
+    * ONE equi-join of word → token count: the 100 TB corpus is touched
+    * by exactly one narrow pass, never by the fold lambdas. The join is
+    * deliberately NOT hinted broadcast: the distinct-word vocabulary of
+    * a 100 TB crawl can be billions of rows (see the training scaladoc
+    * above), which no driver can collect — AQE picks broadcast at
+    * runtime when the vocabulary is actually small (it is at every test
+    * SF) and falls back to a shuffle join when it isn't, which is the
+    * only plan that survives the scale-up. The 12-row merge table is
+    * driver-collected (bounded, like the k-means centroids).
+    *
+    * Hash-gated via [[graft.OracleExport]] (promoted from rows-only):
+    * the oracle recomputes EVERYTHING downstream of the learned merges —
+    * the vocabulary, the greedy left-to-right non-overlapping merge fold
+    * itself (replayed in DuckDB on a double-space-delimited symbol
+    * string, where global string replace IS the greedy fold: each match
+    * consumes its delimiters, so overlapping candidates can't re-match,
+    * then delimiters are re-normalized per step), the corpus join, and
+    * the per-language aggregates. Only the merge TABLE is taken from the
+    * engine (iterative argmax — not single-query SQL), and BpeSpec pins
+    * that sequence against an independent reference implementation. */
   def qBpeEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.OracleExport.export(sharedMerges(spark, dir), "bpemerges", dir)

@@ -32,13 +32,6 @@ object Bucketed {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** Write `table` bucketed+sorted on `key` once per session (external
-    * table backed by a Tables.scratch dir keyed by the table name; on a
-    * real cluster the path would be shared storage and the layout built
-    * once per corpus version, not per session). Later calls reuse the
-    * catalog table. The name carries the full md5 of the cache key, so
-    * distinct (dir, key, buckets) combinations can never collide into
-    * serving each other's data (String.hashCode could). */
   /** A catalog entry only serves reuse while its backing dir still exists:
     * the table lives in a session-temp dir, and a long session can lose it
     * to an external /tmp cleaner — reusing it then fails every later scan
@@ -51,6 +44,13 @@ object Bucketed {
       loc.exists(l => !new java.io.File(new java.net.URI(l).getPath).exists())
     } catch { case scala.util.control.NonFatal(_) => false }
 
+  /** Write `table` bucketed+sorted on `key` once per session (external
+    * table backed by a Tables.scratch dir keyed by the table name; on a
+    * real cluster the path would be shared storage and the layout built
+    * once per corpus version, not per session). Later calls reuse the
+    * catalog table. The name carries the full md5 of the cache key, so
+    * distinct (dir, key, buckets) combinations can never collide into
+    * serving each other's data (String.hashCode could). */
   def bucketedTable(spark: SparkSession, dir: String, table: String,
       key: String, buckets: Int = 32): DataFrame = {
     val tname = s"b_${table}_${md5Hex(s"$dir:$table:$key:$buckets").take(16)}"

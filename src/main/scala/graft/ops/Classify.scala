@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.annotation.unused
 
 /** Multinomial Naive Bayes document classification — the trainable
   * quality/domain classifier every curation pipeline keeps beside its
@@ -82,7 +83,7 @@ object Classify {
   private def isTrain(c: org.apache.spark.sql.Column) =
     substring(md5(concat(c.cast("string"), lit(":nbsplit"))), 1, 1) < "8"
 
-  def qNbClassify(spark: SparkSession, dir: String): DataFrame = {
+  def qNbClassify(spark: SparkSession, @unused dir: String): DataFrame = {
     val g = nbGrams(spark)
     scoreNb(g.filter(!isTrain(col("doc_id"))), nbClasses(spark),
       nbModel(spark))

@@ -279,20 +279,6 @@ object Curation {
 
   private val PackB = 256 // sequence token budget (same as qSeqPack)
 
-  /** Doc-boundary-preserving sequence packing: greedy first-fit in doc_id
-    * order per language shard — a doc that would overflow the current
-    * B=256 sequence STARTS A NEW ONE instead of being cut mid-doc
-    * ([[TextOps.qSeqPack]] cuts; this variant never splits a doc, the
-    * packing used when examples must stay intact). A doc longer than B
-    * gets a sequence of its own, and the next doc starts fresh.
-    *
-    * The fold is inherently sequential per shard (each doc's placement
-    * depends on the running fill), so it runs ROW-LOCALLY over the
-    * shard's collected (doc_id, n_tokens) list — list of per-doc token
-    * COUNTS, not text, so a shard of millions of docs is tens of MB; at
-    * 100 TB the shard key is (lang, shard_id) and shards pack
-    * independently in parallel, exactly like qSeqPack's window. The
-    * DuckDB oracle expresses the same fold as a recursive CTE. */
   /** The greedy fold over a (doc_id, lang, n_tokens) frame — extracted so
     * CurationSpec can property-test it against an in-JVM reference fold
     * on arbitrary inputs. */
@@ -321,6 +307,20 @@ object Curation {
       .orderBy("doc_id")
   }
 
+  /** Doc-boundary-preserving sequence packing: greedy first-fit in doc_id
+    * order per language shard — a doc that would overflow the current
+    * B=256 sequence STARTS A NEW ONE instead of being cut mid-doc
+    * ([[TextOps.qSeqPack]] cuts; this variant never splits a doc, the
+    * packing used when examples must stay intact). A doc longer than B
+    * gets a sequence of its own, and the next doc starts fresh.
+    *
+    * The fold is inherently sequential per shard (each doc's placement
+    * depends on the running fill), so it runs ROW-LOCALLY over the
+    * shard's collected (doc_id, n_tokens) list — list of per-doc token
+    * COUNTS, not text, so a shard of millions of docs is tens of MB; at
+    * 100 TB the shard key is (lang, shard_id) and shards pack
+    * independently in parallel, exactly like qSeqPack's window. The
+    * DuckDB oracle expresses the same fold as a recursive CTE. */
   def qSeqPackGreedy(spark: SparkSession, dir: String): DataFrame =
     greedyPack(
       Tables(spark, dir, "documents")

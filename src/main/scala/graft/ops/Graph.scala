@@ -35,7 +35,6 @@ object Graph {
     * O(log n) rounds, so 25 covers any graph that fits in storage. */
   def connectedComponents(edges: DataFrame, tag: String,
       maxIter: Int = 25): DataFrame = {
-    val spark = edges.sparkSession
     val cols = edges.columns
     // per-round convergence checksums ride the materialize WRITE job via
     // observe() (the q_kcore CollectMetrics trim: one action per round,
@@ -142,28 +141,6 @@ object Graph {
       .distinct()
   }
 
-  /** Link-authority scoring (PageRank, Page et al. 1999) over the ANN
-    * similarity graph — the second distributed-ITERATIVE operator next
-    * to [[connectedComponents]], and a curation signal (centrality of a
-    * document inside its similarity neighborhood: high-authority nodes
-    * are canonical copies, low ones are periphery/noise).
-    *
-    * Hash-gated exactly because the arithmetic is FIXED-POINT INTEGER:
-    * ranks live in 1e-9 units as BIGINTs, every update is integer
-    * div/mul/sum (deterministic under any partitioning and any engine —
-    * float PageRank would diverge across summation orders), and the
-    * oracle replays the same six iterations as unrolled CTEs over the
-    * gate's anncand export with DuckDB's floor division (equal to
-    * truncation here — every quantity is non-negative).
-    *
-    * Scale shape: per iteration one join edges⋈ranks on src + one
-    * groupBy dst — two key-partitioned shuffles over the EDGE set, like
-    * a CC round; the fixture's graph is small so the six-round lineage
-    * stays unmaterialized, at 100 TB each round would ride
-    * [[graft.Tables.materialize]] like the CC loop. N (node count) is a
-    * bounded driver scalar (the k-means-state pattern). Undirected
-    * symmetrization means every node has in- and out-degree ≥ 1 — no
-    * dangling-mass redistribution term needed. */
   /** Fixed-point PageRank core over a DIRECTED edge list (col 1 → col 2;
     * callers symmetrize for undirected graphs). Returns (node, rank)
     * with rank in 1/SCALE units, for every node with in-degree ≥ 1. */
@@ -227,6 +204,26 @@ object Graph {
     r
   }
 
+  /** The reranked top-3 k-NN edge list, session-shared: the graph is a
+    * corpus-version artifact consumed by q_triangles AND q_kcore — the
+    * rerank pipeline runs once per session, not per census. */
+  private[graft] def knnEdges(spark: SparkSession, dir: String): DataFrame =
+    Tables.materializeSharedBy(spark, "knn3", dir)(
+      Vectors.qCosineAnn(spark, dir).select(col("qid"), col("nid")))
+
+  /** Canonicalized (lo < hi, distinct) undirected edge set of the k-NN
+    * graph — session-shared: q_triangles AND q_kcore both start from
+    * exactly this table, so the dedup shuffle runs once per corpus
+    * version (prewarmed), not once per census. */
+  private[graft] def knnCanonEdges(spark: SparkSession,
+      dir: String): DataFrame =
+    Tables.materializeSharedBy(spark, "knncanon", dir) {
+      val e = knnEdges(spark, dir)
+      e.select(least(col("qid"), col("nid")).as("a"),
+          greatest(col("qid"), col("nid")).as("b"))
+        .filter(col("a") =!= col("b")).distinct()
+    }
+
   /** Triangle census + global clustering coefficient of the k-NN
     * similarity graph (third graph operator; the structural-density
     * signal: near-dup clusters triangulate heavily, topical neighbor
@@ -252,26 +249,6 @@ object Graph {
     * integers (coefficient in basis points via floor division) →
     * hash-gatable; the oracle recomputes the same top-3 rerank from the
     * anncand export (the q_cosine_ann parity) and the same census. */
-  /** The reranked top-3 k-NN edge list, session-shared: the graph is a
-    * corpus-version artifact consumed by q_triangles AND q_kcore — the
-    * rerank pipeline runs once per session, not per census. */
-  private[graft] def knnEdges(spark: SparkSession, dir: String): DataFrame =
-    Tables.materializeSharedBy(spark, "knn3", dir)(
-      Vectors.qCosineAnn(spark, dir).select(col("qid"), col("nid")))
-
-  /** Canonicalized (lo < hi, distinct) undirected edge set of the k-NN
-    * graph — session-shared: q_triangles AND q_kcore both start from
-    * exactly this table, so the dedup shuffle runs once per corpus
-    * version (prewarmed), not once per census. */
-  private[graft] def knnCanonEdges(spark: SparkSession,
-      dir: String): DataFrame =
-    Tables.materializeSharedBy(spark, "knncanon", dir) {
-      val e = knnEdges(spark, dir)
-      e.select(least(col("qid"), col("nid")).as("a"),
-          greatest(col("qid"), col("nid")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-    }
-
   def qTriangles(spark: SparkSession, dir: String): DataFrame =
     triangleCensus(knnCanonEdges(spark, dir))
 
@@ -536,6 +513,28 @@ object Graph {
     Tables.materializeSharedBy(spark, "prnodes", dir)(
       pagerankEdges(spark, dir).select(col("src")).distinct())
 
+  /** Link-authority scoring (PageRank, Page et al. 1999) over the ANN
+    * similarity graph — the second distributed-ITERATIVE operator next
+    * to [[connectedComponents]], and a curation signal (centrality of a
+    * document inside its similarity neighborhood: high-authority nodes
+    * are canonical copies, low ones are periphery/noise).
+    *
+    * Hash-gated exactly because the arithmetic is FIXED-POINT INTEGER:
+    * ranks live in 1e-9 units as BIGINTs, every update is integer
+    * div/mul/sum (deterministic under any partitioning and any engine —
+    * float PageRank would diverge across summation orders), and the
+    * oracle replays the same six iterations as unrolled CTEs over the
+    * gate's anncand export with DuckDB's floor division (equal to
+    * truncation here — every quantity is non-negative).
+    *
+    * Scale shape: per iteration one join edges⋈ranks on src + one
+    * groupBy dst — two key-partitioned shuffles over the EDGE set, like
+    * a CC round; the fixture's graph is small so the six-round lineage
+    * stays unmaterialized, at 100 TB each round would ride
+    * [[graft.Tables.materialize]] like the CC loop. N (node count) is a
+    * bounded driver scalar (the k-means-state pattern). Undirected
+    * symmetrization means every node has in- and out-degree ≥ 1 — no
+    * dangling-mass redistribution term needed. */
   def qPagerank(spark: SparkSession, dir: String): DataFrame =
     // 4 oracle-pinned rounds (was 6 — the q_ppr_seeds precedent, r19
     // VERDICT-endorsed trim: each round is a join + groupBy pair of

@@ -1182,7 +1182,6 @@ object Multimodal {
     * pixels never shuffled, output one bounded row per image. */
   def qImagePixels(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import ByteReads._
     val media = mediaTable(spark, dir)
     graft.OracleExport.export(media, "media", dir)
     media.as[ImgRow].mapPartitions { rows =>

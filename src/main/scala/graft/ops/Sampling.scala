@@ -144,6 +144,17 @@ object Sampling {
       .orderBy("epoch", "shard")
   }
 
+  /** Per-language token counts — the |langs|-row corpus-stats table
+    * BOTH budget planners (q_token_budget, q_mix_waterfill) read:
+    * session-shared and prewarmed (r19 trim — each planner paid its
+    * own full tokenize pass per run before). */
+  private[graft] def langTokenCounts(spark: SparkSession,
+      dir: String): DataFrame =
+    Tables.materializeSharedBy(spark,
+      "langtok", dir)(Tables(spark, dir, "documents")
+        .select(col("lang"), explode(TextOps.tokens(col("text"))).as("t"))
+        .groupBy("lang").agg(count(lit(1)).as("n_tokens")))
+
   /** Token-budget apportionment (largest-remainder / Hamilton method):
     * split a fixed training-token budget across languages exactly
     * proportionally to their measured token counts — floors of the
@@ -156,17 +167,6 @@ object Sampling {
     * table; the apportionment itself is window arithmetic over
     * |langs| rows, so the budget solver costs nothing no matter the
     * corpus size. */
-  /** Per-language token counts — the |langs|-row corpus-stats table
-    * BOTH budget planners (q_token_budget, q_mix_waterfill) read:
-    * session-shared and prewarmed (r19 trim — each planner paid its
-    * own full tokenize pass per run before). */
-  private[graft] def langTokenCounts(spark: SparkSession,
-      dir: String): DataFrame =
-    Tables.materializeSharedBy(spark,
-      "langtok", dir)(Tables(spark, dir, "documents")
-        .select(col("lang"), explode(TextOps.tokens(col("text"))).as("t"))
-        .groupBy("lang").agg(count(lit(1)).as("n_tokens")))
-
   def qTokenBudget(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val budget = 100000L
@@ -242,28 +242,6 @@ object Sampling {
       .orderBy("lang")
   }
 
-  /** DSIR-style importance selection (Xie et al., NeurIPS 2023 — "Data
-    * Selection for Language Models via Importance Resampling"): score
-    * every raw document by how much more likely its hashed-n-gram bag
-    * is under a TARGET domain's bucket distribution than under the raw
-    * corpus's, and keep the top scorers — the standard recipe for
-    * carving a domain-matched training subset out of a web-scale crawl
-    * without training a classifier. Features are Xie'23 §3's hashed
-    * bigrams (md5 prefix → 4096 buckets, the q_feature_hash idiom);
-    * target = the English slice of the corpus, raw = everything; bucket
-    * weights are Laplace-smoothed (+1) counts.
-    *
-    * Cross-engine exactness: the true DSIR weight
-    * Σ_b c_b·(log p̂_b − log q̂_b) is libm-bound, so the score uses the
-    * repo's integer log₂ surrogate (length(bin(x))−1, the q_zipf_fit
-    * idiom) over the EXACT integer cross-products —
-    * lb(p_b·Q) − lb(q_b·P) with P = 4096 + |target grams| and
-    * Q = 4096 + |raw grams| — a monotone quantization of the same
-    * log-ratio, fully hash-gatable. Scale shape: one tokenize pass
-    * explodes (doc, bucket) counts, the bucket table is ≤4096 rows
-    * broadcast back, the score is one doc-keyed aggregation, and the
-    * selection is a global TOP-K (TakeOrdered — no window, no full
-    * sort). */
   /** Integer log₂ of the EXACT wide cross-product `a·b`, for `b` any
     * BIGINT and `a < 10¹⁸`: DECIMAL(18,0)×DECIMAL(19,0) multiplies to
     * DECIMAL(38,0) without rounding (precision 18+19+1 = 38 exactly),
@@ -312,6 +290,28 @@ object Sampling {
         .groupBy("doc_id", "lang", "b").agg(count(lit(1)).as("c"))
     }
 
+  /** DSIR-style importance selection (Xie et al., NeurIPS 2023 — "Data
+    * Selection for Language Models via Importance Resampling"): score
+    * every raw document by how much more likely its hashed-n-gram bag
+    * is under a TARGET domain's bucket distribution than under the raw
+    * corpus's, and keep the top scorers — the standard recipe for
+    * carving a domain-matched training subset out of a web-scale crawl
+    * without training a classifier. Features are Xie'23 §3's hashed
+    * bigrams (md5 prefix → 4096 buckets, the q_feature_hash idiom);
+    * target = the English slice of the corpus, raw = everything; bucket
+    * weights are Laplace-smoothed (+1) counts.
+    *
+    * Cross-engine exactness: the true DSIR weight
+    * Σ_b c_b·(log p̂_b − log q̂_b) is libm-bound, so the score uses the
+    * repo's integer log₂ surrogate (length(bin(x))−1, the q_zipf_fit
+    * idiom) over the EXACT integer cross-products —
+    * lb(p_b·Q) − lb(q_b·P) with P = 4096 + |target grams| and
+    * Q = 4096 + |raw grams| — a monotone quantization of the same
+    * log-ratio, fully hash-gatable. Scale shape: one tokenize pass
+    * explodes (doc, bucket) counts, the bucket table is ≤4096 rows
+    * broadcast back, the score is one doc-keyed aggregation, and the
+    * selection is a global TOP-K (TakeOrdered — no window, no full
+    * sort). */
   def qDsirSelect(spark: SparkSession, dir: String): DataFrame = {
     val perDoc = dsirPerDoc(spark, dir)
     val buckets = perDoc

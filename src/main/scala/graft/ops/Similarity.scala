@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -97,13 +97,6 @@ object Similarity {
       "shsurvsz", dir)(survivorShingles(spark, dir).groupBy("doc_id")
         .agg(count(lit(1)).as("n")))
 
-  /** Verified near-dup pairs among the survivor corpus at J >= [[NearDupT]]
-    * — (doc_a, doc_b, common, jac), the shared HEART of the dedup family:
-    * q_jaccard_pairs expands these rep pairs back to cluster members;
-    * q_dedup_pipeline drops every doc_b. The full prefix-filter +
-    * candidate-join + exact-verify pipeline runs once per session
-    * ([[graft.Tables.materializeSharedBy]]); the result is tiny (pair rows),
-    * so the share costs one small parquet write. */
   /** Connected components of the verified near-dup pair graph — the
     * cluster labeling is a corpus-keyed derived table like the pairs it
     * is built from, so the O(log n)-round star-contraction loop runs
@@ -115,7 +108,15 @@ object Similarity {
         survivorPairs(spark, dir).select("doc_a", "doc_b"), s"dup:$dir"))
 
   private[graft] val NearDupT = 0.8
-  /** BY-NAME share: restrictSets=true materializes the candidate set
+  /** Verified near-dup pairs among the survivor corpus at J >= [[NearDupT]]
+    * — (doc_a, doc_b, common, jac), the shared HEART of the dedup family:
+    * q_jaccard_pairs expands these rep pairs back to cluster members;
+    * q_dedup_pipeline drops every doc_b. The full prefix-filter +
+    * candidate-join + exact-verify pipeline runs once per session
+    * ([[graft.Tables.materializeSharedBy]]); the result is tiny (pair rows),
+    * so the share costs one small parquet write.
+    *
+    * BY-NAME share: restrictSets=true materializes the candidate set
     * eagerly during construction (a write job) — the strict variant
     * evaluated that outside the holder lock, so concurrent callers
     * (bench's overlapped warmup) raced on the cand intermediate's
@@ -288,24 +289,6 @@ object Similarity {
     * a fixed constant (not a conf) because the oracle hardcodes it. */
   private val ContainDfMax = 8
 
-  /** DIRECTIONAL near-containment detection — the doc-in-doc shape
-    * Jaccard misses entirely: an excerpt quoted inside a much larger
-    * host has C(excerpt→host) = |Sh(a)∩Sh(b)|/|Sh(a)| ≈ 1 while
-    * J(a,b) ≈ |a|/|b| ≈ 0, so the LSH/PPJoin dedup family never pairs
-    * them. Candidates come from RARE shingles (2 ≤ df ≤ 8): a contained
-    * excerpt shares ALL its shingles with its host, so the pair is
-    * found iff ANY of the excerpt's shingles is globally rare — content
-    * prose almost always is, while boilerplate-hot shingles (high df,
-    * the candidate-explosion risk) are excluded by the cap, bounding
-    * every shingle's pair fan-out at df² ≤ 64. Emitted: both
-    * directional containments + the small-side containment (the
-    * detection signal), exact integers in basis points → hash-gated.
-    *
-    * Scale shape: df aggregate on the shingle key → self-join on the
-    * rare-shingle key (never all-pairs) → intersection counts via one
-    * (doc, shingle) equi-join per side — every stage shuffles on a
-    * derived key; the shingle table is the session-shared corpus
-    * artifact the whole dedup family rides. */
   /** (da, db, inter) exact shared-shingle counts over the rare-shingle
     * candidate pairs — the expensive half of [[qContainment]], session-
     * shared + prewarmed like every corpus-version derived table (the
@@ -332,6 +315,24 @@ object Similarity {
         .groupBy("da", "db").agg(count(lit(1)).as("inter"))
     }
 
+  /** DIRECTIONAL near-containment detection — the doc-in-doc shape
+    * Jaccard misses entirely: an excerpt quoted inside a much larger
+    * host has C(excerpt→host) = |Sh(a)∩Sh(b)|/|Sh(a)| ≈ 1 while
+    * J(a,b) ≈ |a|/|b| ≈ 0, so the LSH/PPJoin dedup family never pairs
+    * them. Candidates come from RARE shingles (2 ≤ df ≤ 8): a contained
+    * excerpt shares ALL its shingles with its host, so the pair is
+    * found iff ANY of the excerpt's shingles is globally rare — content
+    * prose almost always is, while boilerplate-hot shingles (high df,
+    * the candidate-explosion risk) are excluded by the cap, bounding
+    * every shingle's pair fan-out at df² ≤ 64. Emitted: both
+    * directional containments + the small-side containment (the
+    * detection signal), exact integers in basis points → hash-gated.
+    *
+    * Scale shape: df aggregate on the shingle key → self-join on the
+    * rare-shingle key (never all-pairs) → intersection counts via one
+    * (doc, shingle) equi-join per side — every stage shuffles on a
+    * derived key; the shingle table is the session-shared corpus
+    * artifact the whole dedup family rides. */
   def qContainment(spark: SparkSession, dir: String): DataFrame = {
     val sh = corpusShingles(spark, dir)
     val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
@@ -352,18 +353,6 @@ object Similarity {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Sparse LEXICAL cosine — tf-idf-weighted vector similarity over the
-    * LSH candidate pairs: the classic IR duplicate signal that sits
-    * between exact Jaccard (set overlap, weight-blind) and dense
-    * embedding cosine (needs an encoder). Weights are the linear-idf
-    * w = tf·N/df (the q_tfidf_keywords surrogate — no ln crosses the
-    * oracle); the pair numerator and per-doc norms both fold over
-    * token-ORDERED lists (a plain double SUM is partition-order-
-    * dependent — the q_bitext lesson), so every value is bit-identical
-    * across engines and partitionings. Scale shape: weights derive from
-    * the shared [[TextOps.tfPostings]] index; the numerator join
-    * touches only candidate pairs' postings (token-keyed equi-joins,
-    * never all-pairs); output is pairs with cosine ≥ 0.5. */
   /** tf-idf weighted postings restricted to LSH-candidate docs — a
     * corpus-version artifact (r19: session-shared + prewarmed; it was a
     * per-invocation materialize, so every run re-derived the
@@ -388,6 +377,18 @@ object Similarity {
           (col("tf").cast("double") * col("n_docs") / col("df")).as("w"))
     }
 
+  /** Sparse LEXICAL cosine — tf-idf-weighted vector similarity over the
+    * LSH candidate pairs: the classic IR duplicate signal that sits
+    * between exact Jaccard (set overlap, weight-blind) and dense
+    * embedding cosine (needs an encoder). Weights are the linear-idf
+    * w = tf·N/df (the q_tfidf_keywords surrogate — no ln crosses the
+    * oracle); the pair numerator and per-doc norms both fold over
+    * token-ORDERED lists (a plain double SUM is partition-order-
+    * dependent — the q_bitext lesson), so every value is bit-identical
+    * across engines and partitionings. Scale shape: weights derive from
+    * the shared [[TextOps.tfPostings]] index; the numerator join
+    * touches only candidate pairs' postings (token-keyed equi-joins,
+    * never all-pairs); output is pairs with cosine ≥ 0.5. */
   def qLexCosine(spark: SparkSession, dir: String): DataFrame = {
     val cand = lshCandidates(spark, dir)
     val w = lexWeights(spark, dir)
@@ -451,16 +452,6 @@ object Similarity {
       sh.groupBy("doc_id").agg(minhashCols.head, minhashCols.tail: _*))
   }
 
-  /** Banded MinHash-LSH near-dup candidates, verified with exact Jaccard.
-    * k=32 salted xxhash64 min-hashes, 8 bands × 4 rows:
-    * P(candidate) at J=0.8 is 1-(1-0.8^4)^8 ≈ 0.99 — candidates are then
-    * exactly verified, so output precision is 1.0.
-    *
-    * Hash-gated via [[graft.OracleExport]]: the signature and shingle
-    * tables (engine-defined — xxhash64) are exported, and the DuckDB
-    * oracle recomputes the banding, bucket join, and exact-Jaccard
-    * verification from them; the hash kernel itself is pinned by the
-    * recall/subset property tests in SimilaritySpec. */
   /** (doc_id, band, sig) rows of the signature table: each band's
     * [[RowsPerBand]] min-hashes joined into one string. */
   private def bandedSignatures(minh: DataFrame): DataFrame = {
@@ -526,6 +517,16 @@ object Similarity {
       verifyJaccard(lshCandidates(spark, dir), corpusShingles(spark, dir),
         0.7).select("doc_a", "doc_b", "jac"))
 
+  /** Banded MinHash-LSH near-dup candidates, verified with exact Jaccard.
+    * k=32 salted xxhash64 min-hashes, 8 bands × 4 rows:
+    * P(candidate) at J=0.8 is 1-(1-0.8^4)^8 ≈ 0.99 — candidates are then
+    * exactly verified, so output precision is 1.0.
+    *
+    * Hash-gated via [[graft.OracleExport]]: the signature and shingle
+    * tables (engine-defined — xxhash64) are exported, and the DuckDB
+    * oracle recomputes the banding, bucket join, and exact-Jaccard
+    * verification from them; the hash kernel itself is pinned by the
+    * recall/subset property tests in SimilaritySpec. */
   def qMinhashLsh(spark: SparkSession, dir: String): DataFrame =
     lshVerified(spark, dir)
       .select("doc_a", "doc_b", "jac")

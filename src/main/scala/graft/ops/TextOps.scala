@@ -530,19 +530,6 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** Per-doc bigram NOVELTY scoring: how much of a document's distinct
-    * bigram vocabulary appears nowhere else in the corpus. High support /
-    * low novelty flags boilerplate (near-identical phrasing shared across
-    * many docs); high novelty flags unique content — the aggregate-level
-    * complement of paragraph/minhash dedup, and a standard corpus-quality
-    * signal. All outputs are integer counts plus one final int/int double
-    * division, so results are bit-deterministic under any partitioning.
-    *
-    * Scale shape: explode → distinct(doc, bigram) (partial-agg combines
-    * the explosion map-side), df = groupBy(bigram) count, then one
-    * equi-join back on the bigram key and a doc-keyed agg — every stage
-    * shuffles on a derived hash key (bigram or doc_id), never all-pairs;
-    * hot bigrams are absorbed by map-side partial aggregation. */
   /** The distinct (doc, bigram) table — session-shared: it feeds BOTH
     * the df aggregation and the join probe side of the novelty query
     * (without the share the explode+distinct subtree runs twice per
@@ -558,6 +545,19 @@ object TextOps {
           .as("bigram"))
         .distinct())
 
+  /** Per-doc bigram NOVELTY scoring: how much of a document's distinct
+    * bigram vocabulary appears nowhere else in the corpus. High support /
+    * low novelty flags boilerplate (near-identical phrasing shared across
+    * many docs); high novelty flags unique content — the aggregate-level
+    * complement of paragraph/minhash dedup, and a standard corpus-quality
+    * signal. All outputs are integer counts plus one final int/int double
+    * division, so results are bit-deterministic under any partitioning.
+    *
+    * Scale shape: explode → distinct(doc, bigram) (partial-agg combines
+    * the explosion map-side), df = groupBy(bigram) count, then one
+    * equi-join back on the bigram key and a doc-keyed agg — every stage
+    * shuffles on a derived hash key (bigram or doc_id), never all-pairs;
+    * hot bigrams are absorbed by map-side partial aggregation. */
   def qNgramNovelty(spark: SparkSession, dir: String): DataFrame = {
     val db = docBigrams(spark, dir)
     val df = db.groupBy("bigram").agg(count(lit(1)).as("df"))
@@ -619,6 +619,14 @@ object TextOps {
       .orderBy("doc_id")
   }
 
+  /** The id-keyed train/val/test assignment as one expression — shared by
+    * [[qHashSplit]] and the export sink so the split landed on disk is
+    * the split the gate checks. */
+  private[graft] def splitExpr: Column = {
+    val h2 = substring(md5(col("doc_id").cast("string")), 1, 2)
+    when(h2 < "f0", "train").when(h2 < "f8", "val").otherwise("test")
+  }
+
   /** Deterministic content-addressed split assignment: each doc lands in
     * train/val/test by a threshold on md5(doc_id) — reproducible across
     * runs, engines, and corpus re-partitions (a seeded RNG sample is
@@ -628,14 +636,6 @@ object TextOps {
     * key is the doc ID, not the text, so exact-duplicate docs can land in
     * different splits — hash `text` instead to make splits leak-proof
     * under duplication (after dedup the two coincide). */
-  /** The id-keyed train/val/test assignment as one expression — shared by
-    * [[qHashSplit]] and the export sink so the split landed on disk is
-    * the split the gate checks. */
-  private[graft] def splitExpr: Column = {
-    val h2 = substring(md5(col("doc_id").cast("string")), 1, 2)
-    when(h2 < "f0", "train").when(h2 < "f8", "val").otherwise("test")
-  }
-
   def qHashSplit(spark: SparkSession, dir: String): DataFrame = {
     val h2 = substring(md5(col("doc_id").cast("string")), 1, 2)
     Tables(spark, dir, "documents")
@@ -908,19 +908,6 @@ object TextOps {
         graft.Tables.davg(col("n_chars")).as("avg_chars"))
       .orderBy("lang", "bucket")
 
-  /** Containment / partial-overlap candidates via winnowing fingerprints
-    * ([[graft.functions.WinnowFingerprints]], MOSS-style): any shared
-    * character run of >= k + w - 1 guarantees a shared fingerprint, so
-    * asymmetric copies (a doc CONTAINING another) surface even when
-    * whole-doc Jaccard is low — the overlap class the shingle family
-    * misses. Candidate generation joins on the fingerprint (derived-key
-    * rule, never all-pairs); fingerprints in > [[WinnowMaxDf]] docs are dropped as
-    * boilerplate "stop fingerprints" (no containment signal, O(df²)
-    * pair blowup — the same hot-key hygiene as the PPJoin prefix
-    * filter). Fingerprint table materialized once per run (4 consumer
-    * branches). Rows-only by design: semantics are defined by the
-    * Karp-Rabin hash, like the minhash/simhash family; WinnowSpec pins
-    * the kernel against an independent reference implementation. */
   /** Winnowing k-gram length and window (SCALE.md lists the 100 TB
     * values). */
   private val WinnowK = 12
@@ -940,6 +927,19 @@ object TextOps {
         .select(col("doc_id"), explode(array_distinct(
           graft.functions.Winnow.winnow(col("text"), WinnowK, WinnowW))).as("fp")))
 
+  /** Containment / partial-overlap candidates via winnowing fingerprints
+    * ([[graft.functions.WinnowFingerprints]], MOSS-style): any shared
+    * character run of >= k + w - 1 guarantees a shared fingerprint, so
+    * asymmetric copies (a doc CONTAINING another) surface even when
+    * whole-doc Jaccard is low — the overlap class the shingle family
+    * misses. Candidate generation joins on the fingerprint (derived-key
+    * rule, never all-pairs); fingerprints in > [[WinnowMaxDf]] docs are dropped as
+    * boilerplate "stop fingerprints" (no containment signal, O(df²)
+    * pair blowup — the same hot-key hygiene as the PPJoin prefix
+    * filter). Fingerprint table materialized once per run (4 consumer
+    * branches). Rows-only by design: semantics are defined by the
+    * Karp-Rabin hash, like the minhash/simhash family; WinnowSpec pins
+    * the kernel against an independent reference implementation. */
   def qWinnowOverlap(spark: SparkSession, dir: String): DataFrame = {
     val fps = winnowFps(spark, dir)
     // hash-gated via the exported fingerprint table: the DuckDB oracle
@@ -995,17 +995,6 @@ object TextOps {
           col("text"), WinnowK, WinnowW)).as("s"))
         .select(col("doc_id"), col("s.fp").as("fp"), col("s.pos").as("pos")))
 
-  /** Span-level overlap report: for every candidate pair sharing >= 8
-    * rare fingerprints (the fixture's match-count distribution is
-    * bimodal: incidental phrase matches die off by ~10 shared fps,
-    * true overlapping blocks sit at 24+; 8 keeps the report tight
-    * without cutting borderline spans), the extent (min..max matched k-gram offset) of
-    * the overlap in EACH document — the where-is-the-copy answer that
-    * q_winnow_overlap's whole-doc containment ratio cannot give (an
-    * exact-span variant would chain adjacent matches; extents are the
-    * scalable first cut — one hash agg over the pair join, no per-pair
-    * sequence work). Same df-bounded stop-fingerprint filter as
-    * [[winnowPairs]]. Hash-gated via the exported positions table. */
   /** Matched-fingerprint position frame per candidate pair — the THIRD
     * shared derived table of the winnow family (after fps and pairs):
     * one row per (fp, doc_a, doc_b) carrying each side's position
@@ -1046,6 +1035,17 @@ object TextOps {
       .filter(col("doc_a") < col("doc_b"))
   }
 
+  /** Span-level overlap report: for every candidate pair sharing >= 8
+    * rare fingerprints (the fixture's match-count distribution is
+    * bimodal: incidental phrase matches die off by ~10 shared fps,
+    * true overlapping blocks sit at 24+; 8 keeps the report tight
+    * without cutting borderline spans), the extent (min..max matched k-gram offset) of
+    * the overlap in EACH document — the where-is-the-copy answer that
+    * q_winnow_overlap's whole-doc containment ratio cannot give (an
+    * exact-span variant would chain adjacent matches; extents are the
+    * scalable first cut — one hash agg over the pair join, no per-pair
+    * sequence work). Same df-bounded stop-fingerprint filter as
+    * [[winnowPairs]]. Hash-gated via the exported positions table. */
   def qWinnowSpans(spark: SparkSession, dir: String): DataFrame = {
     graft.OracleExport.export(
       winnowFpsPos(spark, dir), "winnowfpspos", dir)
@@ -1060,20 +1060,6 @@ object TextOps {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Contiguous copied-block detection: [[qWinnowSpans]]'s extents span
-    * the WHOLE overlap (two separate copied blocks read as one long
-    * span); this chains the matched fingerprints of each pair into
-    * gap-bounded runs — a new chain starts when the next match jumps
-    * more than 64 chars in EITHER document — and reports each run
-    * separately. The same window trick as sessionization, in document-
-    * position space instead of time: per-pair sort by position, lag
-    * gap flags, running sum = chain id, one hash agg per chain. Matches
-    * are one row per (fp, doc pair), so the window partitions are
-    * candidate-pair sized — bounded by the same df <= 50 stop filter,
-    * never corpus-sized. Chains need >= 4 matches (at fingerprint
-    * density 2/(w+1) ≈ 0.22/char that's a block of roughly >= 18
-    * chars of genuinely shared text). Hash-gated from the same
-    * exported positions table as q_winnow_spans. */
   /** The chain-block frame both [[qWinnowChains]] and
     * [[qSubstringDedup]] consume: gap-bounded runs of matched
     * fingerprints per pair, >= 4 matches, with position extents in both
@@ -1110,6 +1096,20 @@ object TextOps {
         .filter(col("n_matches") >= 4)
     }
 
+  /** Contiguous copied-block detection: [[qWinnowSpans]]'s extents span
+    * the WHOLE overlap (two separate copied blocks read as one long
+    * span); this chains the matched fingerprints of each pair into
+    * gap-bounded runs — a new chain starts when the next match jumps
+    * more than 64 chars in EITHER document — and reports each run
+    * separately. The same window trick as sessionization, in document-
+    * position space instead of time: per-pair sort by position, lag
+    * gap flags, running sum = chain id, one hash agg per chain. Matches
+    * are one row per (fp, doc pair), so the window partitions are
+    * candidate-pair sized — bounded by the same df <= 50 stop filter,
+    * never corpus-sized. Chains need >= 4 matches (at fingerprint
+    * density 2/(w+1) ≈ 0.22/char that's a block of roughly >= 18
+    * chars of genuinely shared text). Hash-gated from the same
+    * exported positions table as q_winnow_spans. */
   def qWinnowChains(spark: SparkSession, dir: String): DataFrame = {
     graft.OracleExport.export(
       winnowFpsPos(spark, dir), "winnowfpspos", dir)

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.Tables.{dec, dec4, dsum}
 

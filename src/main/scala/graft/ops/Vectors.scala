@@ -197,18 +197,6 @@ object Vectors {
           greatest(col("a.vec_id"), col("b.vec_id")).as("nid"))
         .distinct())
 
-  /** Sign-random-projection LSH ANN, multi-table: 8 independent tables of
-    * 6 Rademacher hyperplanes each (a single 12-bit table was measured at
-    * ~0 recall here — too many buckets for the corpus; L smaller tables is
-    * the standard recall knob). Candidates are same-(table,bucket) pairs —
-    * the 100 TB path: the shuffle key is (table, bucket), never all pairs —
-    * then exact cosine re-ranking, top-3 per query.
-    *
-    * Hash-gated via [[graft.OracleExport]]: the LSH candidate pair set
-    * (hyperplane-hash-derived, engine-specific) is exported; the DuckDB
-    * oracle recomputes symmetrization, the float-dot cosine re-rank
-    * (bit-identical — verified pairwise on the fixture), and the top-3
-    * window from it. Recall itself is floor-asserted in SimilaritySpec. */
   /** Exact float-cosine sims over the DIRECTED LSH candidate set —
     * session-shared + prewarmed: [[qCosineAnn]], [[qCosineNeardup]],
     * [[qMmrRerank]] and [[qBitextMining]] all consume exactly this frame
@@ -232,6 +220,18 @@ object Vectors {
             .as("sim"))
     }
 
+  /** Sign-random-projection LSH ANN, multi-table: 8 independent tables of
+    * 6 Rademacher hyperplanes each (a single 12-bit table was measured at
+    * ~0 recall here — too many buckets for the corpus; L smaller tables is
+    * the standard recall knob). Candidates are same-(table,bucket) pairs —
+    * the 100 TB path: the shuffle key is (table, bucket), never all pairs —
+    * then exact cosine re-ranking, top-3 per query.
+    *
+    * Hash-gated via [[graft.OracleExport]]: the LSH candidate pair set
+    * (hyperplane-hash-derived, engine-specific) is exported; the DuckDB
+    * oracle recomputes symmetrization, the float-dot cosine re-rank
+    * (bit-identical — verified pairwise on the fixture), and the top-3
+    * window from it. Recall itself is floor-asserted in SimilaritySpec. */
   def qCosineAnn(spark: SparkSession, dir: String): DataFrame = {
     graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir)
     // the symmetrize + rank window IS the prewarmed symTop10 artifact
@@ -353,12 +353,6 @@ object Vectors {
     Tables.materializeSharedBy(spark, "ivfassign", dir)(
       withCid(sharedEmb(spark, dir), ivfCentroids(spark, dir)))
 
-  /** IVF-style ANN: a coarse k-means quantizer (nlist=16 centroids, 3
-    * Lloyd iterations — [[ivfCentroids]], built once per corpus version)
-    * partitions the corpus into inverted lists ([[ivfAssigned]], shared);
-    * each query probes its nprobe=6 nearest lists and exact-reranks only
-    * those candidates (~nprobe/nlist of the corpus; recall floor asserted
-    * in SimilaritySpec). Hash-gated via the exported candidate set. */
   /** Per-query coarse-probe set (qid, qe, qn, cid) — IVF stage 1, shared
     * by [[qCosineIvf]] and [[qIvfAdc]]: identical probe selection means
     * both queries derive the SAME candidate pair set, so both can export
@@ -395,6 +389,12 @@ object Vectors {
       cands
     }
 
+  /** IVF-style ANN: a coarse k-means quantizer (nlist=16 centroids, 3
+    * Lloyd iterations — [[ivfCentroids]], built once per corpus version)
+    * partitions the corpus into inverted lists ([[ivfAssigned]], shared);
+    * each query probes its nprobe=6 nearest lists and exact-reranks only
+    * those candidates (~nprobe/nlist of the corpus; recall floor asserted
+    * in SimilaritySpec). Hash-gated via the exported candidate set. */
   def qCosineIvf(spark: SparkSession, dir: String): DataFrame =
     // hash-gated: the probe-derived candidate pair set (quantizer-
     // defined, not SQL-expressible) is exported by the shared build;
@@ -402,14 +402,6 @@ object Vectors {
     // (see qCosineAnn)
     rankTop3(ivfSims(spark, dir), native = true)
 
-  /** Final rerank stage shared by the ANN queries: top-3 neighbors per
-    * query with a deterministic rank column. `native = true` selects the
-    * bounded-heap TopKPerKeyExec and ranks the tiny 3-per-key survivor
-    * set — measured ~15-20% faster than the window on the IVF candidate
-    * volume (~n*nprobe/nlist rows); a wash on the smaller LSH candidate
-    * set, where the window's WindowGroupLimit partial pruning already
-    * bounds the shuffle, so the LSH path keeps the simpler plan
-    * (interleaved A/B, result-identical — the per-key order is total). */
   /** Incremental IVF index maintenance — the production "when do we
     * re-train the quantizer?" signal. A NEW document batch (content-keyed
     * md5 class, ~20% of the corpus — the arriving-data stand-in) is
@@ -602,6 +594,14 @@ object Vectors {
         col("id_sum"), col("cent_q"), col("stat_wsum"))
   }
 
+  /** Final rerank stage shared by the ANN queries: top-3 neighbors per
+    * query with a deterministic rank column. `native = true` selects the
+    * bounded-heap TopKPerKeyExec and ranks the tiny 3-per-key survivor
+    * set — measured ~15-20% faster than the window on the IVF candidate
+    * volume (~n*nprobe/nlist rows); a wash on the smaller LSH candidate
+    * set, where the window's WindowGroupLimit partial pruning already
+    * bounds the shuffle, so the LSH path keeps the simpler plan
+    * (interleaved A/B, result-identical — the per-key order is total). */
   private[graft] def rankTop3(cands: DataFrame, native: Boolean): DataFrame = {
     val w = Window.partitionBy("qid").orderBy(desc("sim"), asc("nid"))
     if (native) {
@@ -817,7 +817,6 @@ object Vectors {
     * floor(x + 0.5) explicitly: Spark's round is HALF_UP while DuckDB's
     * is half-away-from-zero, so the shared rounding is spelled out. */
   def qEmbQuantize(spark: SparkSession, dir: String): DataFrame = {
-    val acc = DecimalType(38, 18)
     Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         array_min(col("embedding")).cast("double").as("mn"),
@@ -1085,30 +1084,6 @@ object Vectors {
       .select(col("n_queries"), col("n_pairs"), col("n_hits"),
         expr("(n_hits * 10000L) div n_pairs").as("recall_bp"))
 
-  /** Binary-code TWO-STAGE retrieval — the compact-vector production
-    * pattern: pack each embedding's SIGN BITS into one BIGINT (64 dims
-    * → 8 bytes, 32× smaller than float32), SHORTLIST the LSH candidate
-    * set to top-10 per query by hamming distance (`bit_count(xor)` —
-    * one codegen'd integer op per pair instead of a 64-term float
-    * dot), then float-rerank only the shortlist to top-3 and measure
-    * recall against the exact float-cosine top-3 (the session-shared
-    * k-NN graph). At 100 TB the code table is a narrow
-    * 8-bytes-per-vector derived projection that fits where the float
-    * matrix cannot, and the expensive dot runs on 10 rows per query
-    * instead of the whole candidate set — this query gates BOTH stages
-    * and audits what the compression costs in end recall. Measured on
-    * the near-orthogonal fixture (the WORST case for sign codes — no
-    * cluster structure, all cosines near 0, same caveat as the IVF
-    * recall note): raw hamming top-3 reads 0.20, the 10× oversampled
-    * shortlist + float rerank reads 0.43 — the shortlist depth is the
-    * recall/IO knob, and the measured number IS the knob evidence a
-    * production corpus (clustered, high-sim neighbors) re-derives on
-    * its own distribution.
-    * All-integer output → hash-gated; the DuckDB oracle recomputes
-    * hamming as the per-dimension sign-mismatch count (no packing —
-    * packed-xor-popcount must equal it bit for bit) and both rerank
-    * stages via the proven sim CTE. Single final aggregation (no
-    * scalar cross-join, stays off the BNLJ list). */
   /** 64 sign bits packed into one BIGINT per vector — consumed by
     * [[qHammingRerank]], [[qRrfFusion]] AND [[qRankCorr]]. Session-shared
     * and prewarmed (r19 trim): the packing is an INTERPRETED HOF fold
@@ -1165,6 +1140,30 @@ object Vectors {
         .select(col("qid"), col("nid"), col("sim"))
     }
 
+  /** Binary-code TWO-STAGE retrieval — the compact-vector production
+    * pattern: pack each embedding's SIGN BITS into one BIGINT (64 dims
+    * → 8 bytes, 32× smaller than float32), SHORTLIST the LSH candidate
+    * set to top-10 per query by hamming distance (`bit_count(xor)` —
+    * one codegen'd integer op per pair instead of a 64-term float
+    * dot), then float-rerank only the shortlist to top-3 and measure
+    * recall against the exact float-cosine top-3 (the session-shared
+    * k-NN graph). At 100 TB the code table is a narrow
+    * 8-bytes-per-vector derived projection that fits where the float
+    * matrix cannot, and the expensive dot runs on 10 rows per query
+    * instead of the whole candidate set — this query gates BOTH stages
+    * and audits what the compression costs in end recall. Measured on
+    * the near-orthogonal fixture (the WORST case for sign codes — no
+    * cluster structure, all cosines near 0, same caveat as the IVF
+    * recall note): raw hamming top-3 reads 0.20, the 10× oversampled
+    * shortlist + float rerank reads 0.43 — the shortlist depth is the
+    * recall/IO knob, and the measured number IS the knob evidence a
+    * production corpus (clustered, high-sim neighbors) re-derives on
+    * its own distribution.
+    * All-integer output → hash-gated; the DuckDB oracle recomputes
+    * hamming as the per-dimension sign-mismatch count (no packing —
+    * packed-xor-popcount must equal it bit for bit) and both rerank
+    * stages via the proven sim CTE. Single final aggregation (no
+    * scalar cross-join, stays off the BNLJ list). */
   def qHammingRerank(spark: SparkSession, dir: String): DataFrame = {
     annCandidatesExported(spark, dir)
     val reranked = hamRerank10(spark, dir)
@@ -1248,22 +1247,6 @@ object Vectors {
       .orderBy("qid", "rank")
   }
 
-  /** Multi-vector LATE-INTERACTION scoring (ColBERT's MaxSim,
-    * Khattab & Zaharia SIGIR'20): score(q, d) = Σ_s max_t cos(q_s, d_t)
-    * over the two sides' sub-vector sets — the retrieval shape where a
-    * query TERM matches its best-aligned document term instead of one
-    * pooled vector. The fixture has one vector per doc, so the
-    * sub-vector view derives deterministically: 4 × 16-dim slices per
-    * embedding (the machinery — slice tables, 16 per-pair alignment
-    * cosines, row-local max/Σ, rerank — is identical under a real
-    * per-token embedder; what changes is only the slice table's
-    * provenance). Gated like the other compressed rankings: top-3
-    * MaxSim recall vs the exact full-vector k-NN truth, exact bp.
-    * Parity: each alignment cosine is one float-dot chain (bit-equal
-    * cross-engine), GREATEST of 4 is order-free, the outer Σ is a
-    * fixed 4-term left fold. Scale shape: slices are a narrow derived
-    * projection (session-shared); scoring is row-local over the shared
-    * candidate pairs. */
   /** Session-shared MaxSim score frame (qid, nid, maxsim) over the
     * symmetrized ANN candidate pairs — [[qColbertMaxsim]]'s 16
     * slice-cosine fan-out as a corpus-version artifact (the pqSims /
@@ -1289,6 +1272,22 @@ object Vectors {
         .select(col("qid"), col("nid"), col("maxsim"))
     }
 
+  /** Multi-vector LATE-INTERACTION scoring (ColBERT's MaxSim,
+    * Khattab & Zaharia SIGIR'20): score(q, d) = Σ_s max_t cos(q_s, d_t)
+    * over the two sides' sub-vector sets — the retrieval shape where a
+    * query TERM matches its best-aligned document term instead of one
+    * pooled vector. The fixture has one vector per doc, so the
+    * sub-vector view derives deterministically: 4 × 16-dim slices per
+    * embedding (the machinery — slice tables, 16 per-pair alignment
+    * cosines, row-local max/Σ, rerank — is identical under a real
+    * per-token embedder; what changes is only the slice table's
+    * provenance). Gated like the other compressed rankings: top-3
+    * MaxSim recall vs the exact full-vector k-NN truth, exact bp.
+    * Parity: each alignment cosine is one float-dot chain (bit-equal
+    * cross-engine), GREATEST of 4 is order-free, the outer Σ is a
+    * fixed 4-term left fold. Scale shape: slices are a narrow derived
+    * projection (session-shared); scoring is row-local over the shared
+    * candidate pairs. */
   def qColbertMaxsim(spark: SparkSession, dir: String): DataFrame = {
     val scored = colMaxsim(spark, dir)
     val w = Window.partitionBy("qid").orderBy(desc("maxsim"), asc("nid"))
@@ -1313,14 +1312,6 @@ object Vectors {
             Seq(sl.as(s"s$s"), dotD(sl, sl).as(s"n$s"))
           }: _*))
 
-  /** Recall CURVE of the LSH ANN ranking against the exact brute-force
-    * truth at k = 1, 3, 5 — the knob-evidence table a deployment reads
-    * before choosing its shortlist depth (a single recall@3 hides
-    * whether losses are at the top of the ranking or the tail). Truth is
-    * the decimal-exact brute force for the 20-query audit slice (the
-    * q_cosine_topk shape — a bounded broadcast, the one deliberate
-    * quadratic in the family); the ANN side is the shared candidate
-    * ranking. Output is 3 exact-bp rows. */
   /** Session-shared 20-query exact brute-force top-5 truth
     * (qid, nid, trk) of [[qAnnRecallCurve]] — the bounded-broadcast
     * decimal-exact scoring pass as a corpus-version artifact (r20; the
@@ -1343,6 +1334,14 @@ object Vectors {
         .select(col("qid"), col("vec_id").as("nid"), col("trk"))
     }
 
+  /** Recall CURVE of the LSH ANN ranking against the exact brute-force
+    * truth at k = 1, 3, 5 — the knob-evidence table a deployment reads
+    * before choosing its shortlist depth (a single recall@3 hides
+    * whether losses are at the top of the ranking or the tail). Truth is
+    * the decimal-exact brute force for the 20-query audit slice (the
+    * q_cosine_topk shape — a bounded broadcast, the one deliberate
+    * quadratic in the family); the ANN side is the shared candidate
+    * ranking. Output is 3 exact-bp rows. */
   def qAnnRecallCurve(spark: SparkSession, dir: String): DataFrame = {
     annCandidatesExported(spark, dir)
     val truth = annRcTruth(spark, dir)
@@ -1414,35 +1413,6 @@ object Vectors {
       .orderBy("qid", "kind", "rank")
   }
 
-  /** Per-dimension scalar-quantization (SQ8) retrieval audit — the FAISS
-    * SQ path: one GLOBAL (min, max) per dimension over the whole corpus
-    * (unlike [[qEmbQuantize]]'s per-vector scaling — per-dim stats are
-    * what make codes comparable ACROSS vectors), each vector compresses
-    * to 64 uint8 codes (4× smaller than float32), and the query gates
-    * BOTH scoring disciplines against the exact float-cosine k-NN truth:
-    *  - the NAIVE integer code dot Σ cᵢdᵢ (the tempting pure-int8 SIMD
-    *    loop) — measured recall ~0.07 here, because min-max coding is
-    *    AFFINE: dot(c_a, c_b) picks up −mnᵢ·Σ cross terms that swamp the
-    *    near-zero true cosines. The number is the evidence for why no
-    *    production engine ranks on raw asymmetric codes;
-    *  - the DEQUANTIZED cosine (decode x̂ᵢ = mnᵢ + cᵢ·sᵢ, then the normal
-    *    normalized dot) — what FAISS's scalar-quantizer distance computer
-    *    actually evaluates; recall recovers to the quantization-noise
-    *    floor and the gap between the two columns IS the affine
-    *    correction, measured.
-    *
-    * Scale shape: the stats pass is one 64-group aggregate (posexplode →
-    * groupBy dim — constant output); codes + dequantized vectors attach
-    * via one broadcast join of the 64-row stats table and collapse back
-    * to one array row per vector (array_sort(collect_list(struct)) —
-    * deterministic under any partitioning); scoring is row-local
-    * zip_with folds over the shared candidate pairs. All-integer output
-    * → hash-gated; the oracle replays stats, codes, both dots, and all
-    * top-3 windows from the embeddings table + anncand export. floor is
-    * spelled out (not round: Spark HALF_UP vs DuckDB half-away differ on
-    * negatives); every double op appears in the identical order both
-    * sides (((x−mn)·255)/(mx−mn); mn + c·((mx−mn)/255); ascending-index
-    * folds) — IEEE ops on identical inputs are bit-equal. */
   /** Session-shared SQ8 dual-score frame (qid, nid, idot, dsim) over
     * the symmetrized candidate pairs — the hamSims analog for the SQ8
     * signals (r20): the two code joins + both fused dots were the
@@ -1478,6 +1448,35 @@ object Vectors {
             / (sqrt(col("na")) * sqrt(col("nb")))).as("dsim"))
     }
 
+  /** Per-dimension scalar-quantization (SQ8) retrieval audit — the FAISS
+    * SQ path: one GLOBAL (min, max) per dimension over the whole corpus
+    * (unlike [[qEmbQuantize]]'s per-vector scaling — per-dim stats are
+    * what make codes comparable ACROSS vectors), each vector compresses
+    * to 64 uint8 codes (4× smaller than float32), and the query gates
+    * BOTH scoring disciplines against the exact float-cosine k-NN truth:
+    *  - the NAIVE integer code dot Σ cᵢdᵢ (the tempting pure-int8 SIMD
+    *    loop) — measured recall ~0.07 here, because min-max coding is
+    *    AFFINE: dot(c_a, c_b) picks up −mnᵢ·Σ cross terms that swamp the
+    *    near-zero true cosines. The number is the evidence for why no
+    *    production engine ranks on raw asymmetric codes;
+    *  - the DEQUANTIZED cosine (decode x̂ᵢ = mnᵢ + cᵢ·sᵢ, then the normal
+    *    normalized dot) — what FAISS's scalar-quantizer distance computer
+    *    actually evaluates; recall recovers to the quantization-noise
+    *    floor and the gap between the two columns IS the affine
+    *    correction, measured.
+    *
+    * Scale shape: the stats pass is one 64-group aggregate (posexplode →
+    * groupBy dim — constant output); codes + dequantized vectors attach
+    * via one broadcast join of the 64-row stats table and collapse back
+    * to one array row per vector (array_sort(collect_list(struct)) —
+    * deterministic under any partitioning); scoring is row-local
+    * zip_with folds over the shared candidate pairs. All-integer output
+    * → hash-gated; the oracle replays stats, codes, both dots, and all
+    * top-3 windows from the embeddings table + anncand export. floor is
+    * spelled out (not round: Spark HALF_UP vs DuckDB half-away differ on
+    * negatives); every double op appears in the identical order both
+    * sides (((x−mn)·255)/(mx−mn); mn + c·((mx−mn)/255); ascending-index
+    * folds) — IEEE ops on identical inputs are bit-equal. */
   def qSq8Recall(spark: SparkSession, dir: String): DataFrame = {
     val scored = sq8Scored(spark, dir)
     val wi = Window.partitionBy("qid").orderBy(desc("idot"), asc("nid"))
@@ -1686,30 +1685,6 @@ object Vectors {
       .withColumn("rn2", graft.functions.MixedDotProduct.mixedDot(col("recon"), col("recon")))
   }
 
-  /** PQ COMPRESSION-RECALL audit: every LSH candidate is scored by the
-    * asymmetric distance computation — exact float query × DECODED
-    * candidate (Jégou's ADC: the candidate side exists only as 4 bytes
-    * of codes; its codeword reconstruction stands in for the vector) —
-    * and the PQ top-3 per query is compared against the exact float
-    * top-3 (the session-shared k-NN graph). This is the end-to-end gate
-    * on the whole compressed-retrieval path: codebook training drifted,
-    * a nibble mis-assigned, or the decode lookup off by one all move
-    * recall. At 100 TB the codes table is 4 bytes/vector (the only
-    * per-corpus state the scoring pass touches — 25 000× smaller than
-    * the float matrix it replaces) and scoring is a narrow map over the
-    * candidate set; measured on the near-orthogonal fixture (the worst
-    * case for ANY quantizer — no cluster structure for codewords to
-    * exploit): RAW-vector codes scored 0.205 recall@3 at sf0.01 — on
-    * par with raw sign-bit hamming (0.20); RESIDUAL codes (Jégou §IV —
-    * quantize x − centroid(cid), decode as centroid + codeword, this
-    * implementation) lift that to 0.235 with recon MSE 1.0 → 0.51 —
-    * modest here because the near-orthogonal corpus gives the coarse
-    * quantizer only 11% of the variance to absorb (see the section
-    * comment). The same oversample+exact-rerank stage that
-    * lifted hamming to 0.43 applies unchanged on top. The oracle
-    * reconstructs every candidate from the EXPORTED
-    * codes/books/centroids and replays both rankings via the proven
-    * sequential-fold sim arithmetic. */
   /** Session-shared PQ-reconstructed cosine frame (qid, nid, sim) over
     * the symmetrized ANN candidate pairs — the decode + scoring pass of
     * [[qPqRecall]], a corpus-version artifact like [[annSims]]/hamSims
@@ -1736,8 +1711,31 @@ object Vectors {
         .select(col("qid"), col("nid"), col("sim"))
     }
 
+  /** PQ COMPRESSION-RECALL audit: every LSH candidate is scored by the
+    * asymmetric distance computation — exact float query × DECODED
+    * candidate (Jégou's ADC: the candidate side exists only as 4 bytes
+    * of codes; its codeword reconstruction stands in for the vector) —
+    * and the PQ top-3 per query is compared against the exact float
+    * top-3 (the session-shared k-NN graph). This is the end-to-end gate
+    * on the whole compressed-retrieval path: codebook training drifted,
+    * a nibble mis-assigned, or the decode lookup off by one all move
+    * recall. At 100 TB the codes table is 4 bytes/vector (the only
+    * per-corpus state the scoring pass touches — 25 000× smaller than
+    * the float matrix it replaces) and scoring is a narrow map over the
+    * candidate set; measured on the near-orthogonal fixture (the worst
+    * case for ANY quantizer — no cluster structure for codewords to
+    * exploit): RAW-vector codes scored 0.205 recall@3 at sf0.01 — on
+    * par with raw sign-bit hamming (0.20); RESIDUAL codes (Jégou §IV —
+    * quantize x − centroid(cid), decode as centroid + codeword, this
+    * implementation) lift that to 0.235 with recon MSE 1.0 → 0.51 —
+    * modest here because the near-orthogonal corpus gives the coarse
+    * quantizer only 11% of the variance to absorb (see the section
+    * comment). The same oversample+exact-rerank stage that
+    * lifted hamming to 0.43 applies unchanged on top. The oracle
+    * reconstructs every candidate from the EXPORTED
+    * codes/books/centroids and replays both rankings via the proven
+    * sequential-fold sim arithmetic. */
   def qPqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val emb = sharedEmb(spark, dir)
     val books = pqBooks(spark, dir)
     val cents = ivfCentroids(spark, dir)
     val codes = pqCodes(spark, dir)
@@ -1758,41 +1756,6 @@ object Vectors {
         expr("(n_hits * 10000L) div n_pairs").as("recall_bp"))
   }
 
-  /** IVFADC end-to-end retrieval (Jégou et al. TPAMI 2011 §IV — the
-    * billion-scale serving composition, the design FAISS's IndexIVFPQ
-    * ships): the coarse quantizer shortlists each query to its nprobe
-    * inverted lists, the shortlist is scored ENTIRELY in the compressed
-    * domain by asymmetric distance computation with per-query LOOKUP
-    * TABLES — each query precomputes its 8×16 subspace⋅codeword dots
-    * once (the actual "table" in ADC: scoring a candidate is then 8
-    * nibble-indexed lookups + adds, not a 64-term dot, and NO candidate
-    * float is ever touched — the inverted lists carry only (cid, nid,
-    * 4 bytes of codes)) — and the exact float rerank pays for 10 rows
-    * per query. Output: recall@3 of both stages against the exact k-NN
-    * ground truth — the compressed-domain ranking alone and the
-    * oversample+rerank production path on top of it.
-    *
-    * At 100 TB this is the shape that survives: the broadcast side is
-    * |corpus|·13 bytes of cid+nibbles (where [[qPqRecall]]'s
-    * decoded-recon join would broadcast 64 doubles/vector), per-pair
-    * work is 17 lookups + adds instead of 64 multiplies, and on a
-    * cluster the lists/codes tables co-partition by cid so stage 2 is a
-    * co-located join. RESIDUAL decomposition (§IV): x̂ = c_cid + r̂, so
-    * q·x̂ = q·c_cid + Σ_s lut[s][code_s] — the per-query state is one
-    * 16-entry centroid-dot table plus the 128-entry residual-codeword
-    * LUT ("the LUTs shift per probe" reduces to adding the probe's
-    * centroid term), and ‖x̂‖² = Σ_s ‖c_slice + codeword‖², a
-    * per-(cid, sub, code) driver literal looked up per candidate. The
-    * grouping of every double sum is mirrored exactly in the oracle:
-    * dot = ((q·c + lut_0) + lut_1) + … left-associative; norm = 8
-    * per-slice folds (each a sequential 8-term (c+r)² sum) added
-    * left-associatively. Probe selection is [[ivfProbes]], shared with
-    * [[qCosineIvf]], so the ivfcand export both oracles replay from is
-    * one table; a candidate's probe cid IS its codes-table cid (a
-    * vector lives in exactly one inverted list), so the oracle needs no
-    * extra export column. Hash-gated end to end: centroids or codebooks
-    * drifting, a nibble mis-assigned, a LUT index off by one, or
-    * premature float contact all move one of the two recall numbers. */
   /** Stage 1+2 of [[qIvfAdc]] — probe shortlist scored entirely in the
     * compressed domain, (qid, nid, sim). Extracted so PlanShapeSpec can
     * walk ITS final adaptive plan directly: inside qIvfAdc the scored
@@ -1870,6 +1833,41 @@ object Vectors {
       graft.plans.TopKPerKey.topKPerKey(adcScored(spark, dir),
         Seq(col("qid")), Seq(col("sim").desc, col("nid").asc), 10))
 
+  /** IVFADC end-to-end retrieval (Jégou et al. TPAMI 2011 §IV — the
+    * billion-scale serving composition, the design FAISS's IndexIVFPQ
+    * ships): the coarse quantizer shortlists each query to its nprobe
+    * inverted lists, the shortlist is scored ENTIRELY in the compressed
+    * domain by asymmetric distance computation with per-query LOOKUP
+    * TABLES — each query precomputes its 8×16 subspace⋅codeword dots
+    * once (the actual "table" in ADC: scoring a candidate is then 8
+    * nibble-indexed lookups + adds, not a 64-term dot, and NO candidate
+    * float is ever touched — the inverted lists carry only (cid, nid,
+    * 4 bytes of codes)) — and the exact float rerank pays for 10 rows
+    * per query. Output: recall@3 of both stages against the exact k-NN
+    * ground truth — the compressed-domain ranking alone and the
+    * oversample+rerank production path on top of it.
+    *
+    * At 100 TB this is the shape that survives: the broadcast side is
+    * |corpus|·13 bytes of cid+nibbles (where [[qPqRecall]]'s
+    * decoded-recon join would broadcast 64 doubles/vector), per-pair
+    * work is 17 lookups + adds instead of 64 multiplies, and on a
+    * cluster the lists/codes tables co-partition by cid so stage 2 is a
+    * co-located join. RESIDUAL decomposition (§IV): x̂ = c_cid + r̂, so
+    * q·x̂ = q·c_cid + Σ_s lut[s][code_s] — the per-query state is one
+    * 16-entry centroid-dot table plus the 128-entry residual-codeword
+    * LUT ("the LUTs shift per probe" reduces to adding the probe's
+    * centroid term), and ‖x̂‖² = Σ_s ‖c_slice + codeword‖², a
+    * per-(cid, sub, code) driver literal looked up per candidate. The
+    * grouping of every double sum is mirrored exactly in the oracle:
+    * dot = ((q·c + lut_0) + lut_1) + … left-associative; norm = 8
+    * per-slice folds (each a sequential 8-term (c+r)² sum) added
+    * left-associatively. Probe selection is [[ivfProbes]], shared with
+    * [[qCosineIvf]], so the ivfcand export both oracles replay from is
+    * one table; a candidate's probe cid IS its codes-table cid (a
+    * vector lives in exactly one inverted list), so the oracle needs no
+    * extra export column. Hash-gated end to end: centroids or codebooks
+    * drifting, a nibble mis-assigned, a LUT index off by one, or
+    * premature float contact all move one of the two recall numbers. */
   def qIvfAdc(spark: SparkSession, dir: String): DataFrame = {
     val emb = sharedEmb(spark, dir)
     val books = pqBooks(spark, dir)
@@ -1911,26 +1909,6 @@ object Vectors {
         expr("(rr_hits * 10000L) div n_pairs").as("rr_recall_bp"))
   }
 
-  /** Margin-based parallel-pair mining (Artetxe & Schwenk ACL 2019 —
-    * the scoring CCMatrix/CCAligned mine bitext with): a raw cosine
-    * threshold can't separate translation pairs from hubs (vectors
-    * close to EVERYTHING) or deserts (vectors far from everything), so
-    * each pair is scored RELATIVE to its endpoints' neighborhoods —
-    * margin = 2·sim(x,y) / (nnavg(x) + nnavg(y)), nnavg = mean of the
-    * vector's top-3 neighbor sims. Labels play the language role on
-    * this fixture (the embeddings table's own partition column); mined
-    * pairs are cross-label candidates whose margin clears 1.0 — i.e.
-    * the pair is at least as strong as its endpoints' average
-    * neighborhood, the ratio test that survives hubness where absolute
-    * thresholds don't.
-    *
-    * Determinism: the top-3 mean folds over the SORTED sim list
-    * (array_sort + sequential aggregate — a plain double SUM would be
-    * partition-order-dependent), then one division; margins are ratios
-    * of bit-identical doubles, so the output hashes. Scale shape: rides
-    * the shared LSH candidate set (bucketed, never all-pairs), one
-    * window over candidate-sized groups, two broadcast-sized label
-    * joins. */
   /** Symmetrized candidate ranking, capped at rk ≤ 10 per query —
     * session-shared and prewarmed (r19 trim): q_mmr_rerank's shortlist
     * and q_bitext_mining's top-3 neighborhood means both re-derived
@@ -1958,6 +1936,26 @@ object Vectors {
           "aggregate(array_sort(collect_list(sim)), 0D, (a, v) -> a + v)")
           / count(lit(1)).cast("double")).as("nnavg")))
 
+  /** Margin-based parallel-pair mining (Artetxe & Schwenk ACL 2019 —
+    * the scoring CCMatrix/CCAligned mine bitext with): a raw cosine
+    * threshold can't separate translation pairs from hubs (vectors
+    * close to EVERYTHING) or deserts (vectors far from everything), so
+    * each pair is scored RELATIVE to its endpoints' neighborhoods —
+    * margin = 2·sim(x,y) / (nnavg(x) + nnavg(y)), nnavg = mean of the
+    * vector's top-3 neighbor sims. Labels play the language role on
+    * this fixture (the embeddings table's own partition column); mined
+    * pairs are cross-label candidates whose margin clears 1.0 — i.e.
+    * the pair is at least as strong as its endpoints' average
+    * neighborhood, the ratio test that survives hubness where absolute
+    * thresholds don't.
+    *
+    * Determinism: the top-3 mean folds over the SORTED sim list
+    * (array_sort + sequential aggregate — a plain double SUM would be
+    * partition-order-dependent), then one division; margins are ratios
+    * of bit-identical doubles, so the output hashes. Scale shape: rides
+    * the shared LSH candidate set (bucketed, never all-pairs), one
+    * window over candidate-sized groups, two broadcast-sized label
+    * joins. */
   def qBitextMining(spark: SparkSession, dir: String): DataFrame = {
     graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir)
     val pairs = annSims(spark, dir)
@@ -1979,21 +1977,6 @@ object Vectors {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Diversified retrieval by Maximal Marginal Relevance (Carbonell &
-    * Goldstein SIGIR 1998) — the rerank stage between "nearest" and
-    * "useful": a plain top-k returns near-duplicates of one result,
-    * MMR picks greedily by λ·sim(q,d) − (1−λ)·max_{s∈S} sim(d,s), so
-    * every later pick is penalized by its redundancy against what's
-    * already selected (λ = 0.7). The greedy loop is UNROLLED into three
-    * declarative stages (pick-1 = plain argmax; each later stage joins
-    * the remaining shortlist against the last pick for its pairwise sim
-    * and takes the penalized argmax) — no driver loop, no typed lambda,
-    * and the per-query work is bounded by the shortlist (10), so the
-    * whole rerank is three windows + two 9-rows-per-query joins
-    * regardless of corpus size. All sims ride the proven MixedDotProduct
-    * arithmetic; scores are bit-identical double expressions on both
-    * engines, so the greedy argmax (score DESC, nid ASC) is
-    * hash-gatable. */
   /** Session-shared within-shortlist pairwise sims (qid, nid, sid,
     * psim) — every ordered pair of distinct members of a query's top-10
     * shortlist, scored with the same float-dot arithmetic the inline
@@ -2021,6 +2004,21 @@ object Vectors {
             / (sqrt(col("dn")) * sqrt(col("sn")))).as("psim"))
     }
 
+  /** Diversified retrieval by Maximal Marginal Relevance (Carbonell &
+    * Goldstein SIGIR 1998) — the rerank stage between "nearest" and
+    * "useful": a plain top-k returns near-duplicates of one result,
+    * MMR picks greedily by λ·sim(q,d) − (1−λ)·max_{s∈S} sim(d,s), so
+    * every later pick is penalized by its redundancy against what's
+    * already selected (λ = 0.7). The greedy loop is UNROLLED into three
+    * declarative stages (pick-1 = plain argmax; each later stage joins
+    * the remaining shortlist against the last pick for its pairwise sim
+    * and takes the penalized argmax) — no driver loop, no typed lambda,
+    * and the per-query work is bounded by the shortlist (10), so the
+    * whole rerank is three windows + two 9-rows-per-query joins
+    * regardless of corpus size. All sims ride the proven MixedDotProduct
+    * arithmetic; scores are bit-identical double expressions on both
+    * engines, so the greedy argmax (score DESC, nid ASC) is
+    * hash-gatable. */
   def qMmrRerank(spark: SparkSession, dir: String): DataFrame = {
     graft.OracleExport.export(annCandidates(spark, dir), "anncand", dir)
     // the shortlist is consumed by three stages — the session-shared
@@ -2191,13 +2189,6 @@ object Vectors {
     }.toDF("vec_id", "embedding")
   }
 
-  /** PQ recall on the planted fixture: exact brute-force cosine top-3
-    * (ground truth — the 3 twins) vs the decoded-code ranking, over 256
-    * query vectors × the full 2048-vector planted set. Both fan-outs are
-    * broadcast nested loops over the CONSTANT-SIZE fixture (allowlisted
-    * in GlobalPlanAuditSpec), with the expensive decode on the broadcast
-    * build side (the r14 LUT-fusion rule). The oracle replays both
-    * rankings from the planted/codes/books/centroid exports. */
   /** Session-shared PQ-reconstructed cosine frame of the PLANTED
     * fixture (qid, nid, sim) — [[qPqPlanted]]'s decode + brute scoring
     * pass as a fixture-version artifact (the pqSims precedent), so the
@@ -2217,6 +2208,13 @@ object Vectors {
         .select(col("qid"), col("nid"), col("sim"))
     }
 
+  /** PQ recall on the planted fixture: exact brute-force cosine top-3
+    * (ground truth — the 3 twins) vs the decoded-code ranking, over 256
+    * query vectors × the full 2048-vector planted set. Both fan-outs are
+    * broadcast nested loops over the CONSTANT-SIZE fixture (allowlisted
+    * in GlobalPlanAuditSpec), with the expensive decode on the broadcast
+    * build side (the r14 LUT-fusion rule). The oracle replays both
+    * rankings from the planted/codes/books/centroid exports. */
   def qPqPlanted(spark: SparkSession, dir: String): DataFrame = {
     val p = PlantedDir
     val emb = sharedEmb(spark, p)
@@ -2685,18 +2683,6 @@ object Vectors {
   }
 
 
-  /** OPQ-vs-PQ recall on the low-rank fixture: one row with both
-    * compressed rankings' recall@3 against the exact brute-force truth.
-    * Plain side reuses the standard residual-PQ pipeline's codes/books;
-    * OPQ codes quantize R·r and decode as centroid + Rᵀ·ŷ.
-    *
-    * The plain side decodes distributed ([[pqDecoded]], as in
-    * q_pq_recall). The OPQ side's decode runs DRIVER-SIDE (r16): the
-    * fixture is a CONSTANT 2048 rows and OPQ training is already
-    * driver-local, so the decoded table is a bounded-scalar driver
-    * artifact (IVF-centroid pattern) with arithmetic identical to the
-    * oracle's (elementwise adds and ascending-index dot folds over the
-    * same exported doubles). */
   /** Session-shared PLAIN-PQ decoded recon frame of the OPQ fixture
     * (nid, recon, rn2) — [[pqDecoded]], the same elementwise double adds
     * as the oracle's recon CTE. A fixture-version artifact
@@ -2782,6 +2768,18 @@ object Vectors {
   private[graft] def opqOpq3(spark: SparkSession): DataFrame =
     opqTop3(spark, opqOpqDecoded(spark), "opqopq3", "opq_hit")
 
+  /** OPQ-vs-PQ recall on the low-rank fixture: one row with both
+    * compressed rankings' recall@3 against the exact brute-force truth.
+    * Plain side reuses the standard residual-PQ pipeline's codes/books;
+    * OPQ codes quantize R·r and decode as centroid + Rᵀ·ŷ.
+    *
+    * The plain side decodes distributed ([[pqDecoded]], as in
+    * q_pq_recall). The OPQ side's decode runs DRIVER-SIDE (r16): the
+    * fixture is a CONSTANT 2048 rows and OPQ training is already
+    * driver-local, so the decoded table is a bounded-scalar driver
+    * artifact (IVF-centroid pattern) with arithmetic identical to the
+    * oracle's (elementwise adds and ascending-index dot folds over the
+    * same exported doubles). */
   def qOpqRecall(spark: SparkSession, dir: String): DataFrame = {
     val p = OpqDir
     val emb = sharedEmb(spark, p)

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
+import scala.annotation.unused
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -111,7 +112,7 @@ object DocGenQueries {
   /** Word count over the generated corpus — reads ONLY text, so the
     * connector's column pruning is on the hot path (asserted in
     * DocGenSourceSpec). `dir` is unused: the source is synthetic. */
-  def qDocgenWordcount(spark: SparkSession, dir: String): DataFrame = {
+  def qDocgenWordcount(spark: SparkSession, @unused dir: String): DataFrame = {
     exportOnce(spark)
     source(spark)
       .select(explode(split(col("text"), " ")).as("word"))
@@ -125,7 +126,7 @@ object DocGenQueries {
     * the "corpus scan" costs O(partitions) regardless of corpus size.
     * DocGenSourceSpec asserts the plan (pushed scan schema) and the
     * unsupported-aggregate fallback. */
-  def qDocgenStats(spark: SparkSession, dir: String): DataFrame = {
+  def qDocgenStats(spark: SparkSession, @unused dir: String): DataFrame = {
     exportOnce(spark)
     source(spark).filter(col("doc_id") < 3000)
       .agg(count(col("doc_id")).as("n_docs"),

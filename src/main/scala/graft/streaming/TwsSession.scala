@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
   TimeMode, TimerValues, TTLConfig, ValueState, ExpiredTimerInfo}

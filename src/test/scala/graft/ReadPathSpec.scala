@@ -10,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * spec.
   *
   * The `spark.graft.*` session confs are a fixed set: an algorithm
-  * parameter is a code constant next to its one use, not a conf. */
+  * parameter is a code constant next to its one use, not a conf.
+  *
+  * A scaladoc block directly above another documents nothing: Scaladoc
+  * attaches only the last block to the def that follows. */
 class ReadPathSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
   private val schemaLessRead = """\.read\s*\.parquet\(""".r
@@ -29,6 +32,7 @@ class ReadPathSpec extends AnyFunSuite {
     "materializeDir", "prewarmCache.dir", "mr.execDir",
     "kcore.lazyMaxEdges", "pagerank.matMinEdges", "ccinc.driverMaxEdges")
   private val graftConfLiteral = "\"spark\\.graft\\.([A-Za-z0-9_.]+)\"".r
+  private val stackedDoc = """\*/\s*\n\s*/\*\*""".r
 
   private def scalaFiles(d: java.io.File): Seq[java.io.File] =
     Option(d.listFiles()).toSeq.flatten.flatMap { f =>
@@ -63,5 +67,19 @@ class ReadPathSpec extends AnyFunSuite {
     }.toSet
     assert(keys === graftConfs,
       s"new: ${keys -- graftConfs}, gone: ${graftConfs -- keys}")
+  }
+
+  test("no scaladoc block sits directly above another") {
+    assert(root.isDirectory, s"run from the repo root (${root.getAbsolutePath})")
+    val orphans = scalaFiles(root).flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      stackedDoc.findAllMatchIn(text).map { m =>
+        val line = text.substring(0, m.start).count(_ == '\n') + 1
+        s"${root.toPath.relativize(f.toPath)}:$line"
+      }
+    }
+    assert(orphans.isEmpty,
+      "move each block onto its def or merge it into the def's doc:\n" +
+        orphans.mkString("\n"))
   }
 }
