@@ -15,11 +15,10 @@ class CodegenCacheSpec extends SparkSpec {
   private val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
 
   /** Queries whose generated code differs on every call, so no cache
-    * size serves them. */
-  private val uncacheable = Map(
-    "q_table_profile" -> ("its four countDistinct columns become one " +
-      "Expand whose projections Catalyst orders by a hash of expression " +
-      "ids, which are new on every call"))
+    * size serves them. q_table_profile: its four countDistinct columns
+    * become one Expand whose projections Catalyst orders by a hash of
+    * expression ids, which are new on every call. */
+  private val uncacheable = Set("q_table_profile")
 
   /** The JVM-wide cache, reached by reflection: Spark keeps it private. */
   private lazy val codegenCache: AnyRef = {
